@@ -96,15 +96,7 @@ object Bench {
     // the old default of 4 quietly ran official benches at 1/8 the
     // parallelism whenever the caller didn't set SPARK_GRAFT_CPUS
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     // Dev-only targeting: SPARK_GRAFT_ONLY=q63,q75 runs just the named
     // queries (comma substrings) — for eager-vs-lazy style A/B
     // measurements of one site without paying the full sweep. The

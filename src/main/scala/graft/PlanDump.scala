@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for named SparkEntry queries
   * to files — `runMain graft.PlanDump <outDir> <suffix> q27,q53` (or
   * `all`). Mirrors Bench's session configuration so the captured plans
@@ -15,15 +13,7 @@ object PlanDump {
     val subs = args(2).split(',').toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => subs.contains("all") || subs.exists(n.contains))

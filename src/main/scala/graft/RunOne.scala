@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run one named SparkEntry query repeatedly and print its
   * wall time per iteration — `runMain graft.RunOne q27_dedup_simhash
-  * /root/testdata/sf0.1 3`. Mirrors Bench's session configuration.
+  * <sfDir> 3`. Uses Bench's session ([[Session]]).
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
@@ -12,15 +10,9 @@ object RunOne {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    var builder = Session.builder(cpus)
     // experiment hook: SPARK_GRAFT_CONF="k=v,k=v" overrides any of the
-    // above for A/B timing runs without a recompile
+    // session's settings for A/B timing runs without a recompile
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',').foreach { kv =>
       kv.split("=", 2) match {
         case Array(k, v) => builder = builder.config(k.trim, v.trim)

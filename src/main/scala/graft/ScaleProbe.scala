@@ -40,15 +40,7 @@ object ScaleProbe {
       (if (organic) "organic" else "")
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
 
     val dest = new org.apache.hadoop.fs.Path(s"$outDir/documents.parquet")
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -157,7 +149,7 @@ object ScaleProbe {
             // itself is now an O(1) meta read either way. Row counts
             // stay stable across runs, keeping recorded floors
             // comparable.
-            if (!graft.similarity.AnnIndex.isComplete(s, idx))
+            if (!graft.build.GenStore.isComplete(s, idx))
               graft.similarity.AnnIndex.buildIvf(emb.filter(!isDelta), idx, nlist = 16)
             graft.similarity.AnnIndex.appendIvf(emb.filter(isDelta), idx)
             graft.similarity.AnnIndex.ivfAssignments(s, idx)
@@ -175,7 +167,7 @@ object ScaleProbe {
             val AI = graft.similarity.AnnIndex
             val idx = s"$d/ivf_upsert_idx"
             val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-            if (!AI.isComplete(s, idx)) {
+            if (!graft.build.GenStore.isComplete(s, idx)) {
               AI.buildIvf(emb, idx, nlist = 16)
               AI.appendIvf(emb.filter(col("vec_id") % 997 === 0), idx)
             }
@@ -193,7 +185,7 @@ object ScaleProbe {
             val idx = s"$d/ivfpq_index"
             val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
             val isDelta = col("vec_id") % 7 === 6
-            if (!AI.isComplete(s, idx))
+            if (!graft.build.GenStore.isComplete(s, idx))
               AI.buildIvfPq(emb.filter(!isDelta), idx, nlist = 16)
             AI.appendIvfPq(emb.filter(isDelta), idx)
             AI.ivfAssignments(s, idx)
@@ -210,7 +202,7 @@ object ScaleProbe {
             val AI = graft.similarity.AnnIndex
             val idx = s"$d/ivfpq_read_idx"
             val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-            if (!AI.isComplete(s, idx))
+            if (!graft.build.GenStore.isComplete(s, idx))
               AI.buildIvfPq(emb, idx, nlist = 16)
             val fsys = new org.apache.hadoop.fs.Path(idx)
               .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -236,7 +228,7 @@ object ScaleProbe {
             val dir = s"$d/vecs_store"
             val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
             val isDelta = col("vec_id") % 7 === 6
-            if (!AI.isComplete(s, dir))
+            if (!graft.build.GenStore.isComplete(s, dir))
               AI.buildVecs(emb.filter(!isDelta), dir)
             AI.appendVecs(emb.filter(isDelta), dir)
             AI.vecsLive(s, dir)
@@ -256,11 +248,11 @@ object ScaleProbe {
             val store = s"$d/vecs_upsert_store"
             val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
             val isDelta = col("vec_id") % 7 === 6
-            if (!AI.isComplete(s, idx)) {
+            if (!graft.build.GenStore.isComplete(s, idx)) {
               AI.buildIvfPq(emb.filter(!isDelta), idx, nlist = 16)
               AI.appendIvfPq(emb.filter(isDelta), idx) // undeclared
             }
-            if (!AI.isComplete(s, store)) {
+            if (!graft.build.GenStore.isComplete(s, store)) {
               AI.buildVecs(emb.filter(!isDelta), store)
               AI.appendVecs(emb.filter(isDelta), store) // undeclared
             }
@@ -279,7 +271,7 @@ object ScaleProbe {
             val idx = s"$d/ivfpq_read_idx"
             val vecs = s"$d/ivfpq_vecs_pb"
             val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-            if (!AI.isComplete(s, idx))
+            if (!graft.build.GenStore.isComplete(s, idx))
               AI.buildIvfPq(emb, idx, nlist = 16)
             val fsys = new org.apache.hadoop.fs.Path(vecs)
               .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -304,7 +296,7 @@ object ScaleProbe {
             val dir = s"$d/text_postings_store"
             val docs = Tables.documents(s, d).select("doc_id", "text")
             val isDelta = col("doc_id") % DA.DeltaMod === DA.DeltaRem
-            if (!PS.isComplete(s, dir))
+            if (!graft.build.GenStore.isComplete(s, dir))
               PS.build(docs.filter(!isDelta), dir)
             PS.append(docs.filter(isDelta), dir)
             PS.live(s, dir, terms = Some(Seq("merge", "join")))
@@ -322,7 +314,7 @@ object ScaleProbe {
             val DA = graft.dedup.DedupArtifacts
             val dir = s"$d/text_takedown_store"
             val docs = Tables.documents(s, d).select("doc_id", "text")
-            if (!PS.isComplete(s, dir)) PS.build(docs, dir)
+            if (!graft.build.GenStore.isComplete(s, dir)) PS.build(docs, dir)
             PS.delete(docs.filter(col("doc_id") % DA.DeltaMod === DA.DeltaRem)
               .select("doc_id"), dir)
             PS.live(s, dir, terms = Some(Seq("merge", "join")))
@@ -333,8 +325,8 @@ object ScaleProbe {
             val DA = graft.dedup.DedupArtifacts
             val dir = s"$d/ann_takedown_idx"
             val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-            if (!AI.isComplete(s, dir)) AI.buildIvf(emb, dir, nlist = 16)
-            AI.delete(emb.filter(col("vec_id") % DA.DeltaMod === DA.DeltaRem)
+            if (!graft.build.GenStore.isComplete(s, dir)) AI.buildIvf(emb, dir, nlist = 16)
+            graft.build.GenStore.delete(emb.filter(col("vec_id") % DA.DeltaMod === DA.DeltaRem)
               .select("vec_id"), dir)
             AI.ivfAssignments(s, dir, cells = Some(Seq(0L, 3L)))
           }
@@ -358,7 +350,7 @@ object ScaleProbe {
               PS.append(docs.filter(isDelta), dir)
             }
             val head = graft.build.GenStore.readMeta(s, dir).get.gen - 1
-            PS.compactThrough(s, dir, head)
+            graft.build.GenStore.compactThrough(s, dir, head)
             PS.live(s, dir, terms = Some(Seq("merge", "join")),
               asOfGen = Some(head))
           }
@@ -374,7 +366,7 @@ object ScaleProbe {
               AI.appendIvf(emb.filter(isDelta), dir)
             }
             val head = graft.build.GenStore.readMeta(s, dir).get.gen - 1
-            AI.compactThrough(s, dir, head)
+            graft.build.GenStore.compactThrough(s, dir, head)
             AI.ivfAssignments(s, dir, cells = Some(Seq(0L, 3L)),
               asOfGen = Some(head))
           }

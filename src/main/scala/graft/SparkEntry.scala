@@ -3,7 +3,7 @@ package graft
 import graft.operators._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every implemented operator from SURVEY.md §2 registers one entry in
   * `queries`; SQL-expressible ones also register a DuckDB oracle in

@@ -35,14 +35,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
     // match the stated local[32] environment unless the caller overrides
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

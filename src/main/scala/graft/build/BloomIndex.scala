@@ -113,30 +113,19 @@ object BloomIndex extends Logging {
     val stalePaths = stale.map(_.path).toSet
     val kept = existing.values.toSeq
       .filter(d => currentPaths.contains(d.sourcePath) && !stalePaths.contains(d.sourcePath))
-    IndexBuilder.writeDescriptors(spark,
-      kept ++ stale.map { f =>
-        // a file re-indexed only because a NEW column was requested is
-        // CONTENT-fresh (verified): its previous columns' gen-valid
-        // blooms survive, so the descriptor keeps the UNION (dropping
-        // them would thrash full-corpus rebuilds when builds alternate
-        // column sets). Content-stale files keep nothing.
-        val prevCols = verifiedFresh.getOrElse(f.path, None)
+    // a file re-indexed only because a NEW column was requested is
+    // CONTENT-fresh (verified): its previous columns' gen-valid blooms
+    // survive, so the descriptor keeps the UNION (dropping them would
+    // thrash full-corpus rebuilds when builds alternate column sets).
+    // Content-stale files keep nothing.
+    val refreshed = IndexBuilder.descriptorRows(spark, stale, Seq.empty,
+        withChecksums, graft.model.IndexType.BloomParquet)
+      .map { d =>
+        val prevCols = verifiedFresh.getOrElse(d.sourcePath, None)
           .map(_.columns).getOrElse(Seq.empty)
-        val (alg, sum) =
-          if (!withChecksums) ("length+mtime", "")
-          else {
-            val p = new org.apache.hadoop.fs.Path(f.path)
-            val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            IndexBuilder.fsChecksum(fs, p)
-              .getOrElse(("md5", IndexBuilder.contentMd5(fs, p)))
-          }
-        IndexBuilder.DescriptorRow(
-          f.path, f.length, f.modificationTime, (prevCols ++ columns).distinct,
-          graft.model.IndexType.BloomParquet,
-          graft.model.FileIndexDescriptor.CurrentVersion,
-          alg, sum)
-      },
-      bloomRoot)
+        d.copy(columns = (prevCols ++ columns).distinct)
+      }
+    IndexBuilder.writeDescriptors(spark, kept ++ refreshed, bloomRoot)
   }
 
   /** Drop bloom rows for deleted files and superseded generations and
@@ -167,14 +156,16 @@ object BloomIndex extends Logging {
   }
 
   /** Which files must be read for an EQ leaf: bloom-negative fresh
-    * files are pruned; stale/uncovered files fall back. */
+    * files are pruned; stale/uncovered files fall back — the listing
+    * minus [[excludedFilesForPred]]'s provably-irrelevant files. */
   def selectFiles(
       spark: SparkSession,
       dataDir: String,
       pred: Eq,
       bloomRoot: String): (Seq[String], PruneReport) = {
-    val (selected, fallback, _, report) = decide(spark, dataDir, pred, bloomRoot)
-    ((selected ++ fallback).map(_.path), report)
+    val (excluded, report) = excludedFilesForPred(spark, dataDir, pred, bloomRoot)
+    val out = excluded.map(_.path).toSet
+    (IndexBuilder.listDataFiles(spark, dataDir).map(_.path).filterNot(out), report)
   }
 
   /** Exclusion-oriented decision for the transparent rule
@@ -188,11 +179,8 @@ object BloomIndex extends Logging {
       spark: SparkSession,
       dataDir: String,
       pred: Eq,
-      bloomRoot: String): (Seq[IndexBuilder.SourceFile], PruneReport) = {
-    val (selected, fallback, all, report) = decide(spark, dataDir, pred, bloomRoot)
-    val keep = (selected ++ fallback).map(_.path).toSet
-    (all.filterNot(f => keep(f.path)), report)
-  }
+      bloomRoot: String): (Seq[IndexBuilder.SourceFile], PruneReport) =
+    excludedFilesForPred(spark, dataDir, pred, bloomRoot)
 
   /** WHOLE-PREDICATE bloom decision for the transparent rule: a file is
     * excluded when the bloom evidence PROVES the predicate tree false
@@ -266,58 +254,6 @@ object BloomIndex extends Logging {
       s"files ${report.selectedFiles}+${report.fallbackFiles}fallback/${report.totalFiles}, " +
       s"bytes ${report.selectedBytes}/${report.totalBytes} (ratio ${report.bytesRatio})")
     (excluded, report)
-  }
-
-  private def decide(
-      spark: SparkSession,
-      dataDir: String,
-      pred: Eq,
-      bloomRoot: String): (Seq[IndexBuilder.SourceFile],
-      Seq[IndexBuilder.SourceFile], Seq[IndexBuilder.SourceFile], PruneReport) = {
-    import spark.implicits._
-    val t0 = System.nanoTime()
-    val files = IndexBuilder.listDataFiles(spark, dataDir)
-    val descriptors = IndexBuilder.loadDescriptors(spark, bloomRoot)
-    // verified freshness: checksummed descriptors detect
-    // mtime-preserving rewrites (see IndexBuilder.freshDescriptorVerified)
-    val (prunable, fallback) = files.partition(f =>
-      IndexBuilder.freshDescriptorVerified(spark, descriptors, f)
-        .exists(_.columns.contains(pred.column)))
-    // gen filter as a semi-join BEFORE collect: only the live
-    // generation's ~90 KB sketches reach the driver, however many dead
-    // generations the append-only build has accumulated
-    val blooms: Map[String, BloomFilter] =
-      if (prunable.isEmpty) Map.empty
-      else {
-        val live = spark.createDataset(
-          prunable.flatMap(f => descriptors.get(f.path)
-            .map(d => (f.path, d.modificationTime))))
-          .toDF("file", "gen")
-        spark.read.parquet(bloomsDir(bloomRoot))
-          .filter(col("column") === pred.column)
-          .join(broadcast(live), Seq("file", "gen"), "left_semi")
-          .select("file", "bloom")
-          .as[(String, Array[Byte])]
-          .collect()
-          .map { case (f, bytes) =>
-            f -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)) }
-          .toMap
-      }
-    val selected = prunable.filter(f =>
-      // a fresh descriptor without its bloom row is unexpected; treat
-      // as "might contain" (never prune without positive evidence)
-      blooms.get(f.path).forall(_.mightContainString(pred.value)))
-    val report = PruneReport(
-      totalFiles = files.size,
-      selectedFiles = selected.size,
-      fallbackFiles = fallback.size,
-      totalBytes = files.map(_.length).sum,
-      selectedBytes = (selected ++ fallback).map(_.length).sum,
-      pruneTimeMs = (System.nanoTime() - t0) / 1000000)
-    logInfo(s"BloomIndex $dataDir pred=$pred: " +
-      s"files ${report.selectedFiles}+${report.fallbackFiles}fallback/${report.totalFiles}, " +
-      s"bytes ${report.selectedBytes}/${report.totalBytes} (ratio ${report.bytesRatio})")
-    (selected, fallback, files, report)
   }
 
   /** Bloom-pruned scan with the mandatory row-level residual. */

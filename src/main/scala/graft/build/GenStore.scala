@@ -12,7 +12,10 @@ import org.apache.spark.sql.functions._
   * drift between structures (the r17 verdict's unification item): one
   * definition of the meta, the generation reservation, the staged
   * compact/recover swap, the three read regimes, and the staleness
-  * counters.
+  * counters. Each structure is a [[GenTable]] descriptor plus its
+  * kernel, and every verb — [[build]], [[append]], [[delete]],
+  * [[live]], [[compactThrough]], [[retiredIds]], [[staleness]] — is
+  * derived from the descriptor here, once.
   *
   * PROTOCOL (see `AnnIndex`'s class doc for the full economics):
   *  - BUILD writes the corpus as `gen=0` and the `_INDEX_META` marker
@@ -101,7 +104,7 @@ private[graft] object GenStore {
   private val ReservedKeys =
     Set("gen", "plain", "batch", "trust", "ugens", "rows0", "rowsa")
 
-  def metaPath(dir: String): String = s"$dir/_INDEX_META"
+  private def metaPath(dir: String): String = s"$dir/_INDEX_META"
 
   private def fsOf(s: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -134,7 +137,7 @@ private[graft] object GenStore {
     * destroy the completion marker of a perfectly intact index — and
     * the next maintenance pass would treat it as partial and rebuild
     * from one micro-batch. */
-  def writeMeta(s: SparkSession, dir: String, m: Meta): Unit = {
+  private def writeMeta(s: SparkSession, dir: String, m: Meta): Unit = {
     val extra = m.params.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
     val ugens =
       if (m.upsertGens.isEmpty) Nil else Seq(s"ugens=${m.upsertGens.mkString(",")}")
@@ -173,7 +176,7 @@ private[graft] object GenStore {
     * meta — the appender needs its flags to decide whether the exact
     * dead-row count must run). A meta-less tree is a partial or legacy
     * build and must be rebuilt, not appended to — throws. */
-  def reserveGen(s: SparkSession, dir: String, newIds: Boolean,
+  private def reserveGen(s: SparkSession, dir: String, newIds: Boolean,
       batchId: Long): (Long, Meta, Meta) =
     readMeta(s, dir) match {
       case Some(m) =>
@@ -213,20 +216,10 @@ private[graft] object GenStore {
       s"no complete index at $dir (missing ${metaPath(dir)}): build it " +
         "first — a legacy/partial tree must be rebuilt, not read"))
 
-  /** Footer-only row count of a just-written generation directory. An
-    * EMPTY partitioned write leaves only _SUCCESS (no schema to infer),
-    * which must count as 0 — not crash the append: a zero-row streaming
-    * micro-batch would otherwise wedge the maintenance loop forever
-    * (the meta never advances, so the batch replays into the same
-    * failure). */
-  def countWritten(s: SparkSession, out: String): Long =
-    try s.read.parquet(out).count()
-    catch { case _: org.apache.spark.sql.AnalysisException => 0L }
-
   /** The counter-derived EXACT live append-row fraction, when the meta
     * carries the counters (see class doc; None = legacy meta, the
     * caller falls back to its O(index) scan). */
-  def metaStaleness(m: Meta): Option[Double] =
+  private def metaStaleness(m: Meta): Option[Double] =
     if (m.baseRows < 0 || m.appendRows < 0) None
     else {
       val total = m.baseRows + m.appendRows
@@ -237,7 +230,7 @@ private[graft] object GenStore {
     * the live append set; the superseded live rows (`dead` = base,
     * append split) leave theirs. Legacy counter-less metas stay
     * legacy. */
-  def appendCounters(m: Meta, written: Long, dead: (Long, Long)): Meta =
+  private def appendCounters(m: Meta, written: Long, dead: (Long, Long)): Meta =
     if (m.baseRows < 0 || m.appendRows < 0) m
     else m.copy(baseRows = m.baseRows - dead._1,
       appendRows = m.appendRows - dead._2 + written)
@@ -256,7 +249,7 @@ private[graft] object GenStore {
     * rows, 0 for sentinel/tombstone rows (class doc): a sentinel decides
     * its key's live generation but never counts as a live row, because
     * the views never serve it. */
-  def deadCounts(raw: DataFrame, keyCol: String, ids: DataFrame,
+  private def deadCounts(raw: DataFrame, keyCol: String, ids: DataFrame,
       weight: Column = lit(1L), baseGen: Long = 0L): (Long, Long) = {
     val matched = raw
       .select(col(keyCol), col("gen").cast("long").as("gen"),
@@ -280,7 +273,7 @@ private[graft] object GenStore {
     * there — content-identical re-appends after an in-stream compact).
     * Declared appends on trusted histories — the common streaming case —
     * pay nothing. */
-  def needsDeadCount(prev: Meta, newIds: Boolean): Boolean =
+  private def needsDeadCount(prev: Meta, newIds: Boolean): Boolean =
     !newIds || !prev.trusted
 
   /** The meta RESTRICTED to generations ≤ `n` — the AS-OF read
@@ -306,8 +299,8 @@ private[graft] object GenStore {
     * win); the generation clock restarting at 0 makes a post-compact
     * as-of(n) read the compacted state for every n, never a silent
     * wrong answer. A deployment with a reproducibility window keeps it
-    * open with the HORIZON compact instead (`PostingsStore
-    * .compactThrough` / `AnnIndex.compactThrough`): generations ≤ h are
+    * open with the HORIZON compact instead ([[compactThrough]]):
+    * generations ≤ h are
     * squashed into ONE resolved base generation AT clock h — tombstoned
     * keys dropped, the gen clock preserved — while every later
     * generation survives byte-identical, so `asOf(n ≥ h)` still
@@ -316,7 +309,7 @@ private[graft] object GenStore {
     * the meta records `horizon = h` and an `asOf(n < h)` THROWS (the
     * snapshot-before-compacting advice, enforced) — never a silent
     * approximation by the squashed state. */
-  def asOf(m: Meta, n: Long): Meta = {
+  private def asOf(m: Meta, n: Long): Meta = {
     val h = horizonOf(m)
     if (n < h) throw new IllegalArgumentException(
       s"as-of generation $n predates the store's compaction horizon $h: " +
@@ -346,7 +339,7 @@ private[graft] object GenStore {
     * store comes back plain-readable. Counters are set by the caller
     * (recounted from the staged tree); the streaming batch clock is
     * PRESERVED — a horizon compact must not reopen replayed batches. */
-  def horizonMeta(m: Meta, h: Long): Meta = {
+  private def horizonMeta(m: Meta, h: Long): Meta = {
     val ug = m.upsertGens.filter(_ > h)
     val headSquash = h == m.gen - 1
     m.copy(
@@ -368,7 +361,7 @@ private[graft] object GenStore {
     * LAST. Byte copy, not move: the live tree stays intact until
     * [[stagedCompact]]'s swap (object stores do this server-side; the
     * cost is tail + model I/O only, no shuffle or recompute). */
-  def horizonStage(s: SparkSession, dir: String, tmp: String,
+  private def horizonStage(s: SparkSession, dir: String, tmp: String,
       h: Long, dataSubdirs: Seq[String]): Unit = {
     val conf = s.sparkContext.hadoopConfiguration
     val fs = fsOf(s, dir)
@@ -410,11 +403,11 @@ private[graft] object GenStore {
     * existing full-compact contract — it consumes the retired set at
     * rebuild time (the corpus passed in is already takedown-filtered),
     * after which takedown durability belongs to the source pipeline. */
-  def retiredPath(dir: String): String = s"$dir/retired"
+  private def retiredPath(dir: String): String = s"$dir/retired"
 
   /** The sidecar's keys, if one exists (None on never-squashed or
     * delete-free stores — zero cost there). */
-  def readRetired(s: SparkSession, dir: String, keyCol: String): Option[DataFrame] = {
+  private def readRetired(s: SparkSession, dir: String, keyCol: String): Option[DataFrame] = {
     val p = new Path(retiredPath(dir))
     if (fsOf(s, dir).exists(p))
       Some(s.read.parquet(retiredPath(dir)).toDF(keyCol))
@@ -423,7 +416,7 @@ private[graft] object GenStore {
 
   /** Persist the sidecar into a staged tree (tiny: one row per retired
     * key, coalesced to one file). */
-  def writeRetired(keys: DataFrame, tmpDir: String): Unit =
+  private def writeRetired(keys: DataFrame, tmpDir: String): Unit =
     keys.distinct().coalesce(1)
       .write.mode("overwrite").parquet(retiredPath(tmpDir))
 
@@ -431,7 +424,7 @@ private[graft] object GenStore {
     * retired-as-of set a horizon squash must record before dropping
     * them ([[retiredPath]]). One resolution over `raw` (callers pass
     * the prefix being squashed — compact-scale). */
-  def tombstonedKeys(raw: DataFrame, keyCol: String, tomb: Column): DataFrame = {
+  private def tombstonedKeys(raw: DataFrame, keyCol: String, tomb: Column): DataFrame = {
     val r = raw.select(col(keyCol), col("gen").cast("long").as("gen"),
       tomb.as("tomb"))
     r.join(r.groupBy(keyCol).agg(max("gen").as("gen")), Seq(keyCol, "gen"))
@@ -474,31 +467,37 @@ private[graft] object GenStore {
 
   // ------------------------------------------------------- live views
 
-  /** The three-regime latest-gen-wins machinery for ONE-ROW-PER-KEY
-    * structures (IVF assignments, PQ code rows, the point-fetch vector
-    * store): plain read / BOUNDED resolution over the recorded upsert
-    * generations / full resolution, per the meta. `postFilter` follows
-    * the regime discipline — pushed into the plain and untouched
-    * branches, applied AFTER the reduce on resolving branches (pruning
-    * a superseded key's old partition out from under the reduce would
-    * resurrect its stale row); a caller whose filter is on the REDUCE
-    * KEY itself (it then commutes with the reduce) prefilters `rows`
-    * and passes identity. The reduce orders by struct(gen, dataCols):
-    * gen leads, so the trailing payload columns never decide. */
-  def liveView(meta: Meta, rows: DataFrame, keyCol: String,
-      dataCols: Seq[String], postFilter: DataFrame => DataFrame,
-      resolveAll: Boolean): DataFrame = {
-    def resolve(r: DataFrame): DataFrame = r
-      .groupBy(keyCol)
-      .agg(max(struct(col("gen") +: dataCols.map(col): _*)).as("m"))
-      .select(col(keyCol) +: dataCols.map(c => col(s"m.$c").as(c)) :+
-        col("m.gen").as("gen"): _*)
+  /** The three-regime latest-gen-wins machinery: plain read / BOUNDED
+    * resolution over the recorded upsert generations / full resolution,
+    * per the meta. `multiRow` picks the resolve: a ONE-ROW-PER-KEY
+    * table (IVF/PQ rows, the vector store, norms) reduces each key to
+    * the struct max of (gen, data columns) — gen leads, so the trailing
+    * payload never decides; a MULTI-ROW table (banded signatures,
+    * postings) keeps every row of the key's max generation by a join.
+    * `postFilter` follows the regime discipline — pushed into the plain
+    * and untouched branches, applied AFTER the resolve on resolving
+    * branches (pruning a superseded key's old partition out from under
+    * the resolve would resurrect its stale row); a filter on the key
+    * itself commutes with the resolve and belongs in the raw read
+    * instead. Output keeps `rows`' columns, gen included. */
+  private def liveView(meta: Meta, rows: DataFrame, keyCol: String, multiRow: Boolean,
+      postFilter: DataFrame => DataFrame, resolveAll: Boolean): DataFrame = {
+    def resolve(r: DataFrame): DataFrame =
+      if (multiRow)
+        r.join(r.groupBy(keyCol).agg(max("gen").as("gen")), Seq(keyCol, "gen"))
+      else {
+        val dataCols = r.columns.toSeq.filterNot(c => c == keyCol || c == "gen")
+        r.groupBy(keyCol)
+          .agg(max(struct(col("gen") +: dataCols.map(col): _*)).as("m"))
+          .select(col(keyCol) +: dataCols.map(c => col(s"m.$c").as(c)) :+
+            col("m.gen").as("gen"): _*)
+      }
     if (resolveAll) postFilter(resolve(rows))
     else if (meta.appendOnly) postFilter(rows)
     else if (meta.trusted && meta.upsertGens.nonEmpty) {
       val ug = meta.upsertGens
       // the upsert gens' directories are delta-scale: partition-pruned
-      // scans, a broadcast-small id set, a reduce bounded by them
+      // scans, a broadcast-small id set, a resolve bounded by them
       val upRows = rows.filter(col("gen").isin(ug: _*))
       val upIds = upRows.select(keyCol).distinct()
       val untouched = postFilter(rows.filter(!col("gen").isin(ug: _*)))
@@ -507,27 +506,286 @@ private[graft] object GenStore {
     } else postFilter(resolve(rows))
   }
 
-  /** [[liveView]]'s MULTI-ROW-PER-KEY twin (banded signatures: `bands`
-    * rows per vector; text postings: one row per (term, doc)): the
-    * latest generation PER KEY wins and every row of that generation
-    * survives — resolution is a join against the per-key max-gen
-    * instead of a one-row struct reduce. Same three regimes, same
-    * postFilter discipline. Output keeps all of `rows`' columns
-    * (including gen); callers project. */
-  def keyedLiveView(meta: Meta, rows: DataFrame, keyCol: String,
-      postFilter: DataFrame => DataFrame, resolveAll: Boolean): DataFrame = {
-    def resolve(r: DataFrame): DataFrame =
-      r.join(r.groupBy(keyCol).agg(max("gen").as("gen")), Seq(keyCol, "gen"))
-    if (resolveAll) postFilter(resolve(rows))
-    else if (meta.appendOnly) postFilter(rows)
-    else if (meta.trusted && meta.upsertGens.nonEmpty) {
-      val ug = meta.upsertGens
-      val upRows = rows.filter(col("gen").isin(ug: _*))
-      val upIds = upRows.select(keyCol).distinct()
-      val untouched = postFilter(rows.filter(!col("gen").isin(ug: _*)))
-        .join(broadcast(upIds), Seq(keyCol), "left_anti")
-      untouched.unionByName(postFilter(resolve(upRows)))
-    } else postFilter(resolve(rows))
+  /** Throws unless the structure the tree's meta names stores table
+    * `t` — a verb of one structure must never read or append another's
+    * rows. */
+  def requireKind(m: Meta, dir: String, t: GenTable): Unit = {
+    val held = GenTable.of(m)
+    if (!held.stores(t)) throw new IllegalArgumentException(
+      s"tree at $dir holds a '${held.marker}' store, not a '${t.marker}' " +
+        "one: use the verbs of the structure it holds")
+  }
+
+  /** The COMMITTED-GEN RAW READER: table `t`'s rows of the generations
+    * below `committedGen`, `cols` in read order plus gen as long. The
+    * commit pointer makes an orphan gen directory from a crashed,
+    * never-replayed append invisible, and since gen is a partition
+    * column its files are pruned statically, not filtered. `pre`
+    * narrows the scan before the projection (key-commuting filters:
+    * the vector store's directory pruning). */
+  private def raw(s: SparkSession, t: GenTable, dir: String, committedGen: Long,
+      cols: Seq[String], pre: DataFrame => DataFrame): DataFrame =
+    pre(s.read.parquet(t.path(dir)).filter(col("gen") < committedGen))
+      .select(cols.map(t.readCol) :+ col("gen").cast("long").as("gen"): _*)
+
+  private def raw(s: SparkSession, t: GenTable, dir: String, committedGen: Long): DataFrame =
+    raw(s, t, dir, committedGen, t.cols, identity)
+
+  /** The LIVE rows of table `t`: latest generation per key through the
+    * meta's regime ([[liveView]]), tombstones dropped after resolution
+    * ([[GenTable.dropsTombs]]), `probe` applied per the regime
+    * discipline, `cols` (plus gen) kept. `asOfGen` reads the store as
+    * of generation N ([[asOf]]); `resolveAll` forces full resolution —
+    * the audit path. A counted store that never wrote a tombstone, read
+    * current and append-only, serves the FLAT plan instead: the
+    * write-once scan under the commit pointer, no tombstone filter, no
+    * resolution — the maintained read's residual cost on a fresh or
+    * just-compacted store is zero, not "small". The count describes the
+    * FULL history, so an as-of read never takes it. */
+  def live(s: SparkSession, dir: String, t: GenTable,
+      probe: DataFrame => DataFrame, resolveAll: Boolean, asOfGen: Option[Long],
+      cols: Seq[String], pre: DataFrame => DataFrame): DataFrame = {
+    val full = metaOrThrow(s, dir)
+    requireKind(full, dir, t)
+    val meta = asOfGen.fold(full)(asOf(full, _))
+    if (!resolveAll && asOfGen.isEmpty && meta.appendOnly &&
+        t.tombCount.exists(k => full.params.get(k).contains("0")))
+      probe(pre(s.read.parquet(t.path(dir)).filter(col("gen") < meta.gen)))
+    else {
+      val post: DataFrame => DataFrame =
+        if (t.dropsTombs(full)) df => probe(df).filter(t.serving) else probe
+      liveView(meta, raw(s, t, dir, meta.gen, cols, pre), t.key, t.multiRow,
+        post, resolveAll)
+    }
+  }
+
+  def live(s: SparkSession, dir: String, t: GenTable): DataFrame =
+    live(s, dir, t, identity, resolveAll = false, asOfGen = None, t.cols, identity)
+
+  // ------------------------------------------------------------ verbs
+
+  /** The GENERATION WRITER: lay `rows` out as generation `gen` of table
+    * `t` (its [[GenLayout]]) with overwrite semantics — a replayed
+    * crash-append overwrites its own partial output — then write each
+    * derived sidecar from the rows just written (a footer-friendly
+    * re-read, never a recompute of the rows' subtree). `est` sizes a
+    * range layout's fan-out (the batch's rows; -1 = a build at session
+    * width) and is evaluated only there. Returns (serving rows,
+    * tombstone rows) of the generation in one pass. An EMPTY
+    * partitioned write leaves only _SUCCESS (no schema to read) and
+    * counts (0, 0): a zero-row streaming micro-batch must not wedge the
+    * maintenance loop on a throw. */
+  private def writeGen(t: GenTable, rows: DataFrame, dir: String, gen: Long,
+      est: => Long): (Long, Long) = {
+    val s = rows.sparkSession
+    lazy val n = est
+    val out = layOut(t, rows, dir, gen, n)
+    val written =
+      try Some(s.read.parquet(out))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    written.fold((0L, 0L)) { w =>
+      t.derived.foreach { case (d, derive) => layOut(d, derive(w), dir, gen, n) }
+      val r = w.agg(count(lit(1)), coalesce(sum(when(t.tomb, 1L)), lit(0L))).head()
+      (r.getLong(0) - r.getLong(1), r.getLong(1))
+    }
+  }
+
+  /** Write `rows` as generation `gen` of table `t` in its layout;
+    * returns the generation directory. */
+  private def layOut(t: GenTable, rows: DataFrame, dir: String, gen: Long,
+      est: => Long): String = {
+    val out = s"${t.path(dir)}/gen=$gen"
+    val writer = t.layout match {
+      case HashDirs(d, derive, parts, sortBy) =>
+        val r = derive.fold(rows)(rows.withColumn(d, _))
+        val p = parts.fold(r.repartition(col(d)))(r.repartition(_, col(d)))
+        (if (sortBy.isEmpty) p else p.sortWithinPartitions(sortBy.map(col): _*))
+          .write.mode("overwrite").partitionBy(d)
+      case RangeClustered(by, sortBy, perFile) =>
+        val width = rows.sparkSession.sessionState.conf.numShufflePartitions
+        val parts =
+          if (est < 0) width
+          else math.max(1L, math.min(width.toLong, (est + perFile - 1) / perFile)).toInt
+        rows.repartitionByRange(parts, by.map(col): _*)
+          .sortWithinPartitions(sortBy.map(col): _*)
+          .write.mode("overwrite")
+    }
+    writer.parquet(out)
+    out
+  }
+
+  /** BUILD: wipe `dir`, write gen 0 of `rows` and the meta LAST (the
+    * completion marker — a crash mid-build leaves no meta and the next
+    * build deletes the partial tree). `rows` is evaluated after the
+    * wipe: kernels lay down their model files (centroids, codebook)
+    * there. `appendOnly = false` stamps the store upsert-possible-and-
+    * untrusted ATOMICALLY in that same meta write — the in-stream
+    * compact's flag (its corpus snapshot may cover undelivered batches
+    * that later re-append as `newIds` duplicates). */
+  def build(s: SparkSession, t: GenTable, dir: String, batchId: Long,
+      appendOnly: Boolean, params: Map[String, String])(rows: => DataFrame): Unit = {
+    val fs = fsOf(s, dir)
+    if (fs.exists(new Path(dir))) fs.delete(new Path(dir), true)
+    val (n0, tombs) = writeGen(t, rows, dir, 0L, -1L)
+    writeMeta(s, dir, t.addTombs(Meta(gen = 1L, appendOnly = appendOnly,
+      batch = batchId, trusted = appendOnly, baseRows = n0, appendRows = 0L,
+      params = params ++ t.tombCount.map(_ -> "0")), tombs))
+  }
+
+  /** APPEND: reserve the next generation, let the kernel validate the
+    * meta and produce the batch — (its deduped ids, the rows to write,
+    * the row estimate sizing a range layout) — count the live rows the
+    * ids supersede when the history needs it ([[needsDeadCount]]),
+    * write the rows into their own `gen=N` directory and commit the
+    * counters. O(|delta|): nothing of the base is rewritten. */
+  def append(s: SparkSession, dir: String, newIds: Boolean, batchId: Long)
+      (batch: Meta => (DataFrame, DataFrame, Long)): Unit = {
+    val (gen, next, prev) = reserveGen(s, dir, newIds, batchId)
+    val (ids, rows, est) = batch(next)
+    val t = GenTable.of(next)
+    val dead = deadCount(s, t, dir, prev, newIds, ids)
+    val (n, tombs) = writeGen(t, rows, dir, gen, est)
+    writeMeta(s, dir, t.addTombs(appendCounters(next, n, dead), tombs))
+  }
+
+  /** The EXACT superseded-row count behind an append, when the history
+    * requires one: a column-pruned thin scan of the committed
+    * generations, semi-joined with the (broadcast, delta-scale) ids. A
+    * key-derived directory layout first prunes the scan to the ids'
+    * directories (≤ ProbePartitions values — a tiny driver collect), so
+    * an upsert micro-batch on the vector store reads only its buckets.
+    * Legacy counter-less metas pay nothing. */
+  private def deadCount(s: SparkSession, t: GenTable, dir: String, prev: Meta,
+      newIds: Boolean, ids: DataFrame): (Long, Long) =
+    if (prev.baseRows < 0 || !needsDeadCount(prev, newIds)) (0L, 0L)
+    else {
+      val keys = ids.select(t.key)
+      val pre: DataFrame => DataFrame = t.keyDirs.fold(identity[DataFrame] _) {
+        case (d, f) =>
+          val vs = keys.select(f).distinct().collect().map(_.get(0)).toSeq
+          _.filter(col(d).isin(vs: _*))
+      }
+      deadCounts(raw(s, t, dir, prev.gen, t.cols, pre), t.key, keys, t.weight,
+        baseGen = horizonOf(prev))
+    }
+
+  /** TAKEDOWN: retire the keys in `ids` (column `idCol`, default the
+    * structure's id) from every read incrementally, at delete-batch
+    * cost. One generation of the structure's TOMBSTONE rows
+    * ([[GenTable.tombRow]], typed by the stored schema), appended
+    * UNDECLARED, so every regime resolves each key to its tombstone and
+    * the views' post-resolution drop removes it (class doc). Tombstones
+    * count 0 written and the keys' live rows move out, so a deleted
+    * fraction reads as shrinkage, not staleness; the meta records the
+    * tombstones written ([[GenTable.addTombs]]). */
+  def delete(ids: DataFrame, dir: String, idCol: Option[String] = None,
+      batchId: Long = -1L): Unit = {
+    val s = ids.sparkSession
+    val (gen, next, prev) = reserveGen(s, dir, newIds = false, batchId)
+    val t = GenTable.of(next)
+    val sch = s.read.parquet(t.path(dir)).schema
+    val keys = ids.select(col(idCol.getOrElse(t.idCol))
+      .cast(sch(t.key).dataType).as(t.key)).distinct()
+    val dead = deadCount(s, t, dir, prev, newIds = false, keys)
+    val stored = sch.fieldNames.toSeq
+      .filterNot(c => c == "gen" || t.keyDirs.exists(_._1 == c))
+    val lits = keys.select(stored.map(c =>
+      if (c == t.key) col(c) else t.tombRow.getOrElse(c, lit(null)).as(c)): _*)
+    // cast only what differs from the stored type: casting an array
+    // literal would also flip its element nullability in the footer
+    val tombs = lits.select(lits.schema.fields.toSeq.map(f =>
+      if (f.dataType.simpleString == sch(f.name).dataType.simpleString) col(f.name)
+      else col(f.name).cast(sch(f.name).dataType).as(f.name)): _*)
+    val (_, n) = writeGen(t, tombs, dir, gen, keys.count())
+    writeMeta(s, dir, t.addTombs(appendCounters(next, 0L, dead), n))
+  }
+
+  /** HORIZON compact: squash generations ≤ `h` into ONE resolved base
+    * generation at clock `h`, keeping every later generation (and every
+    * model file) byte-identical — the retention-window compact ([[asOf]]
+    * doc). A full compact reclaims the history's read/storage cost by
+    * discarding it; this one reclaims the same cost for the prefix while
+    * `asOf(n ≥ h)` keeps reproducing exactly. The squashed base is the
+    * prefix's resolved serving state: tombstoned keys are dropped from
+    * it and RECORDED in the retired sidecar ([[retiredPath]]), so
+    * [[retiredIds]] keeps protecting future full compacts from
+    * resurrecting them out of the source. Needs no source corpus and no
+    * model retrain (all generations share the build-time model — that
+    * invariant is what makes the squash a pure row-level resolve); runs
+    * under the staged-swap/recover protocol. The staged meta carries
+    * recounted LIVE serving rows split at `h` and the tombstone rows
+    * that PHYSICALLY remain — physical, not live-resolved: a tail
+    * tombstone superseded by a re-add still decides its key's state for
+    * as-of reads inside the window, so the views' drop must stay on
+    * while any such row exists. Squashing the whole history (`h` = last
+    * gen) restores an untrusted store to trusted plain reads with the
+    * clock preserved ([[horizonMeta]]). */
+  def compactThrough(s: SparkSession, dir: String, h: Long): Unit = {
+    val full = metaOrThrow(s, dir)
+    val t = GenTable.of(full)
+    val h0 = horizonOf(full)
+    require(h >= h0 && h < full.gen,
+      s"horizon $h outside [$h0, ${full.gen - 1}] for the store at $dir " +
+        "(below the existing horizon the history is already squashed)")
+    stagedCompact(s, dir) { tmp =>
+      horizonStage(s, dir, tmp, h, t.subdirs)
+      val prefix = raw(s, t, dir, h + 1)
+      writeGen(t, liveView(asOf(full, h), prefix, t.key, t.multiRow,
+          _.filter(t.serving), resolveAll = true).select(t.cols.map(col): _*),
+        tmp, h, -1L)
+      val prevRetired = readRetired(s, dir, t.idCol)
+      if (prevRetired.isDefined || t.tombsPresent(full)) {
+        val dropped = tombstonedKeys(prefix, t.key, t.tomb).toDF(t.idCol)
+        writeRetired(prevRetired.fold(dropped)(_.unionByName(dropped)), tmp)
+      }
+      val staged = raw(s, t, tmp, full.gen).select(col(t.key).as("k"),
+        col("gen"), t.weight.as("w"), t.tomb.as("tomb"))
+      val r = staged
+        .join(staged.groupBy("k").agg(max("gen").as("gen")), Seq("k", "gen"))
+        .agg(coalesce(sum(when(col("gen") === h, col("w"))), lit(0L)),
+          coalesce(sum(when(col("gen") > h, col("w"))), lit(0L))).head()
+      val m1 = horizonMeta(full, h)
+      writeMeta(s, tmp, t.recountTombs(
+        m1.copy(baseRows = r.getLong(0), appendRows = r.getLong(1)),
+        staged.filter(col("tomb")).count()))
+    }
+  }
+
+  /** The RETIRED keys: present in the store's generations (or in the
+    * retired sidecar a horizon squash left) but not live — the takedown
+    * set an in-stream full compact must EXCLUDE from its source-
+    * directory rebuild, or it would resurrect deleted keys still
+    * physically present in the source. A re-add leaves the set (the
+    * anti-join is against the CURRENT live keys). One resolution scan —
+    * compact-scale callers only; stores with no tombstone and no
+    * sidecar short-circuit to empty. One column, the structure's id. */
+  def retiredIds(s: SparkSession, dir: String): DataFrame = {
+    val meta = metaOrThrow(s, dir)
+    val t = GenTable.of(meta)
+    val sidecar = readRetired(s, dir, t.idCol)
+    if (!t.tombsPresent(meta) && sidecar.isEmpty) {
+      import s.implicits._
+      Seq.empty[Long].toDF(t.idCol)
+    } else {
+      val present = raw(s, t, dir, meta.gen).select(col(t.key).as(t.idCol)).distinct()
+      sidecar.fold(present)(sc => present.unionByName(sc).distinct())
+        .join(live(s, dir, t).select(col(t.key).as(t.idCol)).distinct(),
+          Seq(t.idCol), "left_anti")
+    }
+  }
+
+  /** Fraction of LIVE serving rows that arrived by append — the drift /
+    * fan-out signal a deployment compacts on. O(1) from the meta's
+    * exact counters (class doc), so a per-micro-batch compaction
+    * decision never scans the store; a legacy counter-less meta falls
+    * back to aggregating the live view. */
+  def staleness(s: SparkSession, dir: String): Double = {
+    val meta = metaOrThrow(s, dir)
+    metaStaleness(meta).getOrElse {
+      val r = live(s, dir, GenTable.of(meta))
+        .agg(count(lit(1)), sum(when(col("gen") > 0, 1L).otherwise(0L))).head()
+      if (r.getLong(0) == 0) 0.0 else r.getLong(1).toDouble / r.getLong(0)
+    }
   }
 
   // ------------------------------------------------ artifact discipline

@@ -337,9 +337,11 @@ object IndexBuilder {
   def invalidateDescriptorCache(indexRoot: String): Unit =
     descriptorCache.remove(indexRoot)
 
-  private def descriptorRows(
+  /** One descriptor row per file of an index of type `indexType`
+    * (postings or bloom), with the content checksum when asked. */
+  private[build] def descriptorRows(
       spark: SparkSession, files: Seq[SourceFile], columns: Seq[String],
-      withChecksums: Boolean): Seq[DescriptorRow] =
+      withChecksums: Boolean, indexType: String): Seq[DescriptorRow] =
     files.map { f =>
       val (alg, sum) =
         if (!withChecksums) ("length+mtime", "")
@@ -349,8 +351,7 @@ object IndexBuilder {
           fsChecksum(fs, p).getOrElse(("md5", contentMd5(fs, p)))
         }
       DescriptorRow(
-        f.path, f.length, f.modificationTime, columns,
-        graft.model.IndexType.PostingsParquet,
+        f.path, f.length, f.modificationTime, columns, indexType,
         graft.model.FileIndexDescriptor.CurrentVersion,
         alg, sum)
     }
@@ -386,7 +387,8 @@ object IndexBuilder {
     if (!overwrite && isFresh(spark, dataDir, indexRoot, names)) return
     val files = listDataFiles(spark, dataDir)
     writePostings(postingsFor(spark, files, keys, capBytes), indexRoot, SaveMode.Overwrite)
-    writeDescriptors(spark, descriptorRows(spark, files, names, withChecksums), indexRoot)
+    writeDescriptors(spark, descriptorRows(spark, files, names, withChecksums,
+      graft.model.IndexType.PostingsParquet), indexRoot)
   }
 
   /** Incrementally index only the files with no fresh descriptor (new
@@ -438,7 +440,8 @@ object IndexBuilder {
     // gen-valid (same mtime), and dropping the names would silently
     // turn those columns' queries into full scans. Content-STALE files
     // keep nothing: their old postings describe the previous bytes.
-    val refreshed = descriptorRows(spark, stale, Seq.empty, withChecksums)
+    val refreshed = descriptorRows(spark, stale, Seq.empty, withChecksums,
+        graft.model.IndexType.PostingsParquet)
       .map { d =>
         val prevCols = verifiedFresh.getOrElse(d.sourcePath, None)
           .map(_.columns).getOrElse(Seq.empty)

@@ -183,12 +183,15 @@ object DedupArtifacts {
     *     by construction. */
   private[graft] val Version = 13
 
-  /** Artifact base directory — `SPARK_GRAFT_ARTIFACT_DIR` relocates all
-    * persisted state (a production deployment points it next to the
-    * corpus on the distributed filesystem); the default is the
-    * harness-local target dir. */
+  /** Artifact base directory, the ONE root of every persisted artifact
+    * (dedup, ANN, text stores, the indexed demo copies, bench history)
+    * — `SPARK_GRAFT_ARTIFACT_DIR` relocates all of it (a production
+    * deployment points it next to the corpus on the distributed
+    * filesystem); the default is `target/` under the working directory,
+    * so a run from a copy of the repo writes into that copy. */
   private[graft] def artifactBase: String =
-    sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_DIR", "/root/repo/target")
+    sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_DIR",
+      java.nio.file.Paths.get("target").toAbsolutePath.toString)
 
   /** Corpus key: readable basename + a hash of the FULL canonical path,
     * so two corpora that share a directory name (e.g. staging copies)

@@ -31,7 +31,7 @@ object IndexedQueries extends QueryModule {
 
   private def root(sfDir: String): String = {
     val sfName = new java.io.File(sfDir).getName
-    s"/root/repo/target/graft_demo/v$DemoLayoutVersion/$sfName"
+    s"${graft.dedup.DedupArtifacts.artifactBase}/graft_demo/v$DemoLayoutVersion/$sfName"
   }
   private def dataDir(sfDir: String): String = s"${root(sfDir)}/events_data"
   private def indexRoot(sfDir: String): String = s"${root(sfDir)}/events_index"

@@ -393,7 +393,7 @@ object SimilarityQueries extends QueryModule {
     * TAKEDOWN (r19 — the delete verb under the oracle): the artifact's
     * `ivfd` history indexes the FULL corpus at gen 0, then the standard
     * delta batch's ids arrive as a DELETED-IDS batch
-    * ([[graft.similarity.AnnIndex.delete]] — ONE tombstone generation,
+    * ([[graft.build.GenStore.delete]] — ONE tombstone generation,
     * no compact, no corpus rewrite). The probe must see exactly the
     * corpus minus the takedowns: the bounded regime anti-joins the
     * deleted ids out of the plain branch and the resolution drops each

@@ -30,7 +30,7 @@ object TextQueries extends QueryModule {
 
   private def root(sfDir: String): String = {
     val sfName = new java.io.File(sfDir).getName
-    s"/root/repo/target/graft_demo/v${IndexedQueries.DemoLayoutVersion}/$sfName"
+    s"${DedupArtifacts.artifactBase}/graft_demo/v${IndexedQueries.DemoLayoutVersion}/$sfName"
   }
 
   /** Artifact epoch: bump to rebuild the postings stores alone.
@@ -269,10 +269,8 @@ object TextQueries extends QueryModule {
     * docs containing a term via the term->byte-range index over a
     * multi-file copy of documents; oracle is the plain contains filter. */
   private def q38TextBlockScan(s: SparkSession, dir: String): DataFrame = {
-    val sfName = new java.io.File(dir).getName
-    val root = s"/root/repo/target/graft_demo/v${IndexedQueries.DemoLayoutVersion}/$sfName"
-    val dataDir = s"$root/docs_data"
-    val indexRoot = s"$root/docs_text_index"
+    val dataDir = s"${root(dir)}/docs_data"
+    val indexRoot = s"${root(dir)}/docs_text_index"
     synchronized {
       val p = new Path(dataDir)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -432,7 +430,7 @@ object TextQueries extends QueryModule {
           docs.filter(isDelta)
             .withColumn("text",
               concat(col("text"), lit(" graftmark graftmark"))), d)
-        PostingsStore.compactThrough(s, d, 1L)
+        GenStore.compactThrough(s, d, 1L)
       }
     }
     d
@@ -529,7 +527,7 @@ object TextQueries extends QueryModule {
   /** SEARCH AS-OF THROUGH A HORIZON-COMPACTED HISTORY (r19 — the
     * retention-window compact under the DuckDB gate): the store's gens
     * 0–1 were SQUASHED into one resolved base generation at clock 1
-    * ([[PostingsStore.compactThrough]]) after a gen-2 re-ingest landed
+    * ([[GenStore.compactThrough]]) after a gen-2 re-ingest landed
     * on top — so the `asOf(1)` read is served from the squashed base
     * with gen 2 partition-pruned away. The oracle recomputes from the
     * corpus WITH the gen-1 modification applied (each delta doc one

@@ -1,7 +1,7 @@
 package graft.similarity
 
 import graft.Tables
-import graft.build.MetaIO
+import graft.build.{GenStore, MetaIO}
 import graft.dedup.DedupArtifacts
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -123,7 +123,7 @@ object AnnArtifacts {
 
   /** The TAKEDOWN history (r19 — the delete verb under the oracle):
     * gen 0 indexes the FULL corpus, then the standard delta batch's ids
-    * arrive as a DELETED-IDS batch ([[AnnIndex.delete]] — one tombstone
+    * arrive as a DELETED-IDS batch ([[GenStore.delete]] — one tombstone
     * generation, no compact). q177 probes through it and must see the
     * corpus-minus-takedowns exactly. */
   def ivfDeleteDir(sfDir: String): String = s"${root(sfDir)}/ivfd"
@@ -169,7 +169,7 @@ object AnnArtifacts {
     def dirOf(name: String) = s"${root(sfDir)}/$name"
     def fresh(name: String, params: String): Boolean =
       MetaIO.read(conf, histMeta(name)).contains(fp(name, params)) &&
-        AnnIndex.isComplete(s, dirOf(name))
+        GenStore.isComplete(s, dirOf(name))
     // wipe-then-build-then-mark, ONE copy of the crash discipline: the
     // stale tree AND its marker go before the rebuild (a crash
     // mid-build must not leave a fresh-looking marker over a partial
@@ -220,7 +220,7 @@ object AnnArtifacts {
     }
     build("ivfd", ivfParams) { d =>
       AnnIndex.buildIvf(e, d, nlist = IvfNlist)
-      AnnIndex.delete(delta.select("vec_id"), d) // takedown batch, gen 1
+      GenStore.delete(delta.select("vec_id"), d) // takedown batch, gen 1
     }
     build("ivfb", ivfParams) { d =>
       AnnIndex.buildIvf(base, d, nlist = IvfNlist)

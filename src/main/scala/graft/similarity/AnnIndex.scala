@@ -1,8 +1,7 @@
 package graft.similarity
 
-import graft.build.GenStore
+import graft.build.{GenStore, GenTable, Layout}
 import graft.functions.Vectors
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    `add` does not move centroids) — into its own `gen=N` directory;
   *    a re-ingested id supersedes its older rows (latest gen wins);
   *  - COMPACT retrains on the current corpus and rewrites gen 0 when
-  *    [[staleness]] (the delta fraction) says the model has drifted —
+  *    [[GenStore.staleness]] (the delta fraction) says the model has drifted —
   *    the posting-compaction step of the same lifecycle.
   *
   * Append ≡ rebuild is EXACT, not approximate: assignment under a fixed
@@ -50,7 +49,7 @@ import org.apache.spark.sql.functions._
   * history flags, the MODEL PARAMETERS, and the last applied streaming
   * batch id. The meta is the completion marker: a crash between the
   * centroid and assignment writes (or mid-append) leaves no meta
-  * update, and [[isComplete]] reports the index absent/unfinished so
+  * update, and [[GenStore.isComplete]] reports the index absent/unfinished so
   * the next build deletes the partial state and rebuilds — never the
   * permanent append-onto-missing-state failure a path-probe invited.
   * Appends are additionally FILE-idempotent: each lands in its own
@@ -99,60 +98,26 @@ import org.apache.spark.sql.functions._
   */
 object AnnIndex extends org.apache.spark.internal.Logging {
 
+  import GenTable.{Banded, Ivf, Pq, Vecs}
+
   private def centroidsPath(dir: String) = s"$dir/centroids"
-  private def assignPath(dir: String) = s"$dir/assignments"
-  private def bandedPath(dir: String) = s"$dir/banded"
-
-  // ------------------------------------------------------ meta protocol
-  // One protocol for every gen-stamped structure in the engine —
-  // extracted to graft.build.GenStore in r18 (shared with the text
-  // postings store) so the meta, the reservation bookkeeping, the
-  // staged compact, and the read regimes have exactly one definition.
-
-  private type Meta = GenStore.Meta
-  private def Meta = GenStore.Meta
-
-  private def fsOf(s: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private def readMeta(s: SparkSession, dir: String): Option[Meta] =
-    GenStore.readMeta(s, dir)
-  private def writeMeta(s: SparkSession, dir: String, m: Meta): Unit =
-    GenStore.writeMeta(s, dir, m)
-
-  /** Whether a COMPLETE index lives at `dir` — true only once the
-    * build's meta (written after every data file) landed. A partially
-    * built tree (crash between writes) reports false, and the next
-    * build deletes and rebuilds it. */
-  def isComplete(s: SparkSession, dir: String): Boolean =
-    GenStore.isComplete(s, dir)
-
-  /** The last streaming batch id applied to the index (-1 when none) —
-    * the replay guard for exactly-once foreachBatch maintenance. The
-    * batch id rides the SAME meta write as the append's gen/flag
-    * update (`batchId` on build/append), so "recorded" always means
-    * "fully applied": there is no window where the data landed but a
-    * replay would re-append it under a new generation. */
-  def lastAppliedBatch(s: SparkSession, dir: String): Long =
-    GenStore.lastAppliedBatch(s, dir)
-
-  private def reserveGen(s: SparkSession, dir: String, newIds: Boolean,
-      batchId: Long): (Long, Meta, Meta) =
-    GenStore.reserveGen(s, dir, newIds, batchId)
-
-  private def requireParam(m: Meta, dir: String, key: String, expected: Long): Unit =
-    GenStore.requireParam(m, dir, key, expected)
+  private def codebookPath(dir: String) = s"$dir/codebook"
 
   // ------------------------------------------------------------- IVF
+  // The lifecycle (build, append, delete, horizon compact, live views,
+  // staleness) is GenStore's, derived from the GenTable descriptors;
+  // this object keeps the kernels — the centroid/PQ/plane models that
+  // assign rows, and the probe readers.
 
   /** Train centroids on `corpus` (the [[Ann.trainCentroids]] bounded
     * deterministic sample) and write the full index: centroids
     * (cell, c), assignments under `gen=0` partitioned by cell, meta
-    * LAST. `appendOnly = false` stamps the index upsert-possible-and-
-    * untrusted ATOMICALLY in that same meta write — the in-stream
-    * compact's flag (its corpus snapshot may cover undelivered batches
-    * that later re-append as `newIds` duplicates), with no second
-    * meta write for a crash to fall between. */
+    * LAST ([[GenStore.build]]; `appendOnly = false` is the in-stream
+    * compact's untrusted stamp). "vecs" marks a vector-carrying index
+    * (every gen stores v): the probe path may serve vectors from the
+    * index partitions instead of joining the corpus. Legacy trees lack
+    * the key and keep the corpus-join read; appends must match the
+    * build's schema either way. */
   def buildIvf(
       corpus: DataFrame, indexDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -160,81 +125,47 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       appendOnly: Boolean = true): Unit = {
     val s = corpus.sparkSession
     val cs = Ann.trainCentroids(corpus, idCol, vecCol, nlist, lloydIters)
-    val fs = fsOf(s, indexDir)
-    if (fs.exists(new Path(indexDir))) fs.delete(new Path(indexDir), true)
+    GenStore.build(s, Ivf, indexDir, batchId, appendOnly,
+        Map("nlist" -> nlist.toString, "vecs" -> "1")) {
+      writeCentroids(s, indexDir, cs)
+      assignWith(buildRows(corpus, idCol, vecCol, batchId), cs, "vec_id", "v")
+    }
+  }
+
+  private def writeCentroids(s: SparkSession, dir: String,
+      cs: Array[Array[Double]]): Unit = {
     import s.implicits._
     cs.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }
-      .toDF("cell", "c").write.parquet(centroidsPath(indexDir))
-    val n0 = writeAssignGen(
-      assignWith(buildRows(corpus, idCol, vecCol, batchId), cs, "vec_id", "v"),
-      indexDir, 0L)
-    // "vecs" marks a vector-carrying index (every gen stores v): the
-    // probe path may serve vectors from the index partitions instead of
-    // joining the corpus. Legacy trees lack the key and keep the
-    // corpus-join read; appends must match the build's schema either way.
-    writeMeta(s, indexDir, Meta(gen = 1L, appendOnly = appendOnly,
-      batch = batchId, trusted = appendOnly, baseRows = n0, appendRows = 0L,
-      params = Map("nlist" -> nlist.toString, "vecs" -> "1")))
+      .toDF("cell", "c").write.parquet(centroidsPath(dir))
   }
 
   /** Assign ONLY the delta under the persisted centroids and write it
-    * into the next `gen=N` directory. Map-only: the centroid model is a
-    * plan-time constant, the delta is the only thing read or written —
-    * and the generation comes from the meta, so nothing of the base is
-    * scanned either. `newIds = true` declares the batch's ids new by
-    * construction (dated ingest), keeping the plain-read live view; the
-    * default records the generation as an upsert, which routes readers
-    * through the BOUNDED resolution (see class doc). Overwrite of the
-    * reserved gen dir makes a replayed crash-append idempotent at the
-    * file level. */
+    * into the next `gen=N` directory ([[GenStore.append]]). Map-only:
+    * the centroid model is a plan-time constant, the delta is the only
+    * thing read or written. `newIds = true` declares the batch's ids
+    * new by construction (dated ingest), keeping the plain-read live
+    * view; the default records the generation as an upsert, which
+    * routes readers through the BOUNDED resolution (see class doc). */
   def appendIvf(
       delta: DataFrame, indexDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       newIds: Boolean = false, batchId: Long = -1L): Unit = {
     val s = delta.sparkSession
-    val (gen, next, prev) = reserveGen(s, indexDir, newIds, batchId)
-    if (next.params.contains("pq")) throw new IllegalArgumentException(
-      s"index at $indexDir is a PQ index (code-carrying rows): append " +
-        "with appendIvfPq — a raw-vector generation would break the " +
-        "partitioned read's schema")
-    if (next.params.contains("pfetch")) throw new IllegalArgumentException(
-      s"tree at $indexDir is a point-fetch vector store: append with " +
-        "appendVecs")
     val one = onePerId(delta, idCol, vecCol)
-    val dead = deadFor(prev, newIds,
-      rawAssignments(s, indexDir, prev.gen), "vec_id", one, weight = cellWeight)
-    val assigned = assignWith(one, centroidArray(s, indexDir), "vec_id", "v")
-    // a generation must match the BUILD's row schema: a legacy
-    // (pre-vector-carrying) tree gets plain (vec_id, cell) appends —
-    // mixing schemas across gen dirs would break the partitioned read
-    val na = writeAssignGen(
-      if (next.params.contains("vecs")) assigned
-      else assigned.select("vec_id", "cell"),
-      indexDir, gen)
-    writeMeta(s, indexDir, GenStore.appendCounters(next, na, dead))
+    GenStore.append(s, indexDir, newIds, batchId) { m =>
+      if (m.params.contains("pq")) throw new IllegalArgumentException(
+        s"index at $indexDir is a PQ index (code-carrying rows): append " +
+          "with appendIvfPq — a raw-vector generation would break the " +
+          "partitioned read's schema")
+      GenStore.requireKind(m, indexDir, Ivf)
+      val assigned = assignWith(one, centroidArray(s, indexDir), "vec_id", "v")
+      // a generation must match the BUILD's row schema: a legacy
+      // (pre-vector-carrying) tree gets plain (vec_id, cell) appends —
+      // mixing schemas across gen dirs would break the partitioned read
+      (one, if (m.params.contains("vecs")) assigned
+        else assigned.select("vec_id", "cell"), -1L)
+    }
   }
-
-  /** One generation's assignment files: `gen=N/cell=C/part-*` —
-    * repartitioned by cell first so each cell's rows land in few files
-    * (at 100 TB the repartition width scales with the batch; the
-    * per-cell file grouping is what the probe-side partition pruning
-    * skips against). Returns the written row count (a zero-column
-    * footer read of the just-written generation, O(gen files) — the
-    * meta's staleness counters). */
-  private def writeAssignGen(assigned: DataFrame, indexDir: String, gen: Long): Long = {
-    val out = s"${assignPath(indexDir)}/gen=$gen"
-    assigned
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(out)
-    countWritten(assigned.sparkSession, out)
-  }
-
-  /** Footer-only row count of a just-written generation directory —
-    * [[GenStore.countWritten]] (zero-row micro-batches count 0, never
-    * throw and wedge the maintenance loop). */
-  private def countWritten(s: SparkSession, out: String): Long =
-    GenStore.countWritten(s, out)
 
   /** One coherent row (vec_id, v) per id — the at-least-once batch
     * surface: a delta carrying the same id twice (a replayed or
@@ -262,30 +193,8 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     if (batchId >= 0) onePerId(corpus, idCol, vecCol)
     else corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
 
-  /** The EXACT superseded-row count for an append, when the history
-    * requires one ([[GenStore.needsDeadCount]]: undeclared appends
-    * always, declared appends only on untrusted histories): one
-    * broadcast semi-join of the deduped batch's ids against the
-    * committed generations' (key, gen) columns — a column-pruned thin
-    * scan with O(|delta|) output, paid only on the upsert path.
-    * Declared appends on trusted histories (the common streaming case)
-    * and legacy counter-less metas pay nothing. */
-  private def deadFor(prev: Meta, newIds: Boolean, raw: => DataFrame,
-      keyCol: String, ids: DataFrame,
-      weight: org.apache.spark.sql.Column = lit(1L)): (Long, Long) =
-    if (prev.baseRows >= 0 && GenStore.needsDeadCount(prev, newIds))
-      GenStore.deadCounts(raw, keyCol, ids, weight,
-        baseGen = GenStore.horizonOf(prev))
-    else (0L, 0L)
-
-  /** Tombstone weights for [[deadFor]]: a superseded TOMBSTONE row must
-    * count zero (it was never live — GenStore class doc). */
-  private def cellWeight = when(col("cell") < 0L, 0L).otherwise(1L)
-  private def bandWeight = when(col("band") < 0, 0L).otherwise(1L)
-  private def vecWeight = when(col("v").isNull, 0L).otherwise(1L)
-
   /** Retrain on the current corpus and rewrite the whole index at
-    * gen 0 — the compaction step once [[staleness]] crosses the
+    * gen 0 — the compaction step once [[GenStore.staleness]] crosses the
     * deployment's drift budget. A batch-side compact (default) resets
     * the history flags: one generation, trivially plain-readable. An
     * IN-STREAM compact passes `appendOnly = false`, and the
@@ -301,20 +210,20 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     * the deleted-old/half-new state an in-place rewrite risks, which a
     * streaming replay would "recover" by rebuilding from one micro-batch
     * (losing every earlier batch). The delete→rename gap is covered by
-    * [[recover]]: a complete tmp beside a missing/partial index is
+    * [[GenStore.recover]]: a complete tmp beside a missing/partial index is
     * adopted by rename. */
   def compactIvf(
       corpus: DataFrame, indexDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       nlist: Int = 16, lloydIters: Int = 2, batchId: Long = -1L,
       appendOnly: Boolean = true): Unit =
-    stagedCompact(corpus.sparkSession, indexDir)(tmp =>
+    GenStore.stagedCompact(corpus.sparkSession, indexDir)(tmp =>
       buildIvf(corpus, tmp, idCol, vecCol, nlist, lloydIters, batchId, appendOnly))
 
   /** [[compactIvf]]'s banded twin: re-band the current corpus under the
     * same (or retuned) parameters and rewrite the whole index at gen 0
     * via the SAME staged-swap/recover protocol — the compaction step
-    * once [[bandedStaleness]] (or small-file pressure from many append
+    * once its [[GenStore.staleness]] (or small-file pressure from many append
     * generations) crosses the deployment's budget. Resets the history
     * flags: a compacted index is one generation, trivially
     * plain-readable. */
@@ -323,299 +232,9 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       idCol: String = "vec_id", vecCol: String = "embedding",
       nPlanes: Int = 16, bands: Int = 8, seed: Long = 42L,
       batchId: Long = -1L, appendOnly: Boolean = true): Unit =
-    stagedCompact(corpus.sparkSession, indexDir)(tmp =>
+    GenStore.stagedCompact(corpus.sparkSession, indexDir)(tmp =>
       buildBanded(corpus, tmp, idCol, vecCol, nPlanes, bands, seed,
         batchId, appendOnly))
-
-  /** The shared staged-swap protocol behind both compacts
-    * ([[GenStore.stagedCompact]]): rebuild in a sibling `.compact.tmp`
-    * tree (meta last), then swap. */
-  private def stagedCompact(s: SparkSession, indexDir: String)
-      (build: String => Unit): Unit =
-    GenStore.stagedCompact(s, indexDir)(build)
-
-  /** Adopt a completed-but-unswapped compaction ([[GenStore.recover]]):
-    * if the index tree is missing/partial while a COMPLETE
-    * `.compact.tmp` sits beside it (crash between the swap's delete and
-    * rename), rename it in. Returns whether a recovery happened. Safe
-    * to call any time — no-op unless exactly that state is found. */
-  def recover(s: SparkSession, indexDir: String): Boolean =
-    GenStore.recover(s, indexDir)
-
-  /** TAKEDOWN on the vector structures — the GenStore delete verb
-    * (class doc there): retire `ids` from every read incrementally, at
-    * delete-batch cost (a GDPR/opt-out list must not force a corpus
-    * compact). One generation of TOMBSTONE rows, appended UNDECLARED so
-    * the existing three regimes resolve each deleted id to its
-    * tombstone and the views' post-resolution drop removes it —
-    * encodings per structure (IVF/PQ assignments: `cell = -1` with a
-    * null payload; banded: `band = -1`; point-fetch store: a null
-    * vector), dispatched on the tree's own meta. The delete stamps the
-    * meta's `del` marker, which switches the views' tombstone drop on —
-    * delete-free indexes keep their exact pre-delete plans. Counters
-    * stay exact (tombstones weigh 0 and count 0 written; the ids' live
-    * rows move out, so a deleted corpus fraction reads as shrinkage,
-    * not staleness); compact from the corpus-minus-takedowns drops the
-    * tombstone generations. Re-adding a deleted id later MUST be an
-    * undeclared append (GenStore class doc — a `newIds` declaration
-    * would strand the re-add behind the delete generation's anti-join).
-    * Text stores delete through [[graft.text.PostingsStore.delete]]
-    * (the sentinel encoding). */
-  def delete(ids: DataFrame, indexDir: String, idCol: String = "vec_id",
-      batchId: Long = -1L): Unit = {
-    val s = ids.sparkSession
-    val (gen, next, prev) = reserveGen(s, indexDir, newIds = false, batchId)
-    if (next.params.contains("text")) throw new IllegalArgumentException(
-      s"tree at $indexDir is a text postings store: delete through " +
-        "PostingsStore.delete")
-    val one = ids.select(col(idCol).cast("long").as("vec_id")).distinct()
-    val dead =
-      if (next.params.contains("pfetch")) {
-        val pp = graft.build.Layout.ProbePartitions
-        val buckets = one.select(col("vec_id").as("bucket"))
-        // same pb-directory pruning as appendVecs' dead count: the
-        // takedown batch reads only its ids' buckets
-        val d = deadFor(prev, newIds = false, {
-          val pbs = buckets
-            .select(pmod(col("bucket"), lit(pp)).cast("int").as("pb"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-          s.read.parquet(vecsDataPath(indexDir))
-            .filter(col("gen") < prev.gen && col("pb").isin(pbs: _*))
-            .select(col("bucket"), col("gen"), col("v"))
-        }, "bucket", buckets, weight = vecWeight)
-        val vType = s.read.parquet(vecsDataPath(indexDir)).schema("v").dataType
-        writeVecsGen(buckets.select(col("bucket"),
-          lit(null).cast(vType).as("v")), indexDir, gen): Unit
-        d
-      } else if (next.params.contains("np")) {
-        val sch = s.read.parquet(bandedPath(indexDir)).schema
-        val d = deadFor(prev, newIds = false,
-          rawBanded(s, indexDir, prev.gen), "vec_id", one, weight = bandWeight)
-        writeBandedGen(one.select(col("vec_id"),
-            lit(-1).cast(sch("band").dataType).as("band"),
-            lit(0).cast(sch("bucket").dataType).as("bucket")),
-          indexDir, gen, estimatedRows = one.count()): Unit
-        d
-      } else if (next.params.contains("nlist")) {
-        val d = deadFor(prev, newIds = false,
-          rawAssignments(s, indexDir, prev.gen), "vec_id", one,
-          weight = cellWeight)
-        // the generation must match the build's row schema (the
-        // append-path rule): payload column nulled per index kind
-        val payload =
-          if (next.params.contains("pq")) Seq("codes")
-          else if (next.params.contains("vecs")) Seq("v")
-          else Nil
-        val sch = s.read.parquet(assignPath(indexDir)).schema
-        val cols = col("vec_id") +: payload.map(c =>
-          lit(null).cast(sch(c).dataType).as(c)) :+ lit(-1L).as("cell")
-        writeAssignGen(one.select(cols: _*), indexDir, gen): Unit
-        d
-      } else throw new IllegalArgumentException(
-        s"tree at $indexDir carries none of the known structure markers " +
-          "(pfetch/np/nlist): not a deletable index")
-    writeMeta(s, indexDir, GenStore.appendCounters(next, 0L, dead)
-      .copy(params = next.params + ("del" -> "1")))
-  }
-
-  /** HORIZON compact on the vector structures — [[graft.text
-    * .PostingsStore.compactThrough]]'s twin, dispatched on the tree's
-    * own meta like [[delete]]: squash generations ≤ `h` into ONE
-    * resolved base generation at clock `h` (tombstoned ids dropped
-    * from the base and recorded in the retired sidecar —
-    * [[GenStore.retiredPath]] — so [[retiredIds]] keeps protecting
-    * future full compacts from resurrecting them out of the source),
-    * byte-copy everything else — the centroid model / PQ codebook and
-    * every later generation survive bit-identical, so `asOf(n ≥ h)`
-    * probes keep reproducing exactly while the prefix's read/storage
-    * cost is reclaimed. Model files are COPIED, never retrained: all
-    * generations share the build-time model (that invariant is what
-    * makes the squash a pure row-level resolve). Needs no source
-    * corpus; same staged-swap/recover protocol; `asOf(n < h)` THROWS
-    * afterwards (meta `horizon` marker). Squashing the whole history
-    * (`h` = last gen) restores an untrusted store to trusted plain
-    * reads with the clock preserved. If no tombstones remain in the
-    * tail, the `del` marker is dropped and the views return to their
-    * exact pre-delete plans. */
-  def compactThrough(s: SparkSession, indexDir: String, h: Long): Unit = {
-    val full = metaOrThrow(s, indexDir)
-    if (full.params.contains("text")) throw new IllegalArgumentException(
-      s"tree at $indexDir is a text postings store: horizon-compact " +
-        "through PostingsStore.compactThrough")
-    val h0 = GenStore.horizonOf(full)
-    require(h >= h0 && h < full.gen,
-      s"horizon $h outside [$h0, ${full.gen - 1}] for the index at " +
-        s"$indexDir (below the existing horizon the history is already " +
-        "squashed)")
-    GenStore.stagedCompact(s, indexDir) { tmp =>
-      if (full.params.contains("pfetch")) {
-        GenStore.horizonStage(s, indexDir, tmp, h, Seq("data"))
-        writeVecsGen(
-          vecsLive(s, indexDir, resolveAll = true, asOfGen = Some(h))
-            .select("bucket", "v"),
-          tmp, h): Unit
-        recordRetired(s, indexDir, tmp, full, GenStore.tombstonedKeys(
-          s.read.parquet(vecsDataPath(indexDir)).filter(col("gen") <= h)
-            .select(col("bucket").as("vec_id"), col("gen"), col("v")),
-          "vec_id", col("v").isNull))
-        horizonFinish(s, tmp, full, h,
-          s.read.parquet(vecsDataPath(tmp)).filter(col("gen") < full.gen)
-            .select(col("bucket").as("k"), col("gen"),
-              vecWeight.as("w"), col("v").isNull.as("tomb")))
-      } else if (full.params.contains("np")) {
-        GenStore.horizonStage(s, indexDir, tmp, h, Seq("banded"))
-        writeBandedGen(
-          bandedRowsLive(s, indexDir, asOfGen = Some(h)),
-          tmp, h): Unit
-        recordRetired(s, indexDir, tmp, full, GenStore.tombstonedKeys(
-          rawBanded(s, indexDir, h + 1), "vec_id", col("band") < 0))
-        horizonFinish(s, tmp, full, h,
-          rawBanded(s, tmp, full.gen)
-            .select(col("vec_id").as("k"), col("gen"),
-              bandWeight.as("w"), (col("band") < 0).as("tomb")))
-      } else if (full.params.contains("nlist")) {
-        GenStore.horizonStage(s, indexDir, tmp, h, Seq("assignments"))
-        val payload =
-          if (full.params.contains("pq")) Seq("codes")
-          else if (full.params.contains("vecs")) Seq("v")
-          else Nil
-        writeAssignGen(
-          assignmentsView(s, indexDir, cells = None, resolveAll = true,
-            payload = payload, asOfGen = Some(h))
-            .select(col("vec_id") +: payload.map(col) :+ col("cell"): _*),
-          tmp, h): Unit
-        recordRetired(s, indexDir, tmp, full, GenStore.tombstonedKeys(
-          rawAssignments(s, indexDir, h + 1), "vec_id", col("cell") < 0L))
-        horizonFinish(s, tmp, full, h,
-          rawAssignments(s, tmp, full.gen)
-            .select(col("vec_id").as("k"), col("gen"),
-              cellWeight.as("w"), (col("cell") < 0L).as("tomb")))
-      } else throw new IllegalArgumentException(
-        s"tree at $indexDir carries none of the known structure markers " +
-          "(pfetch/np/nlist): not a horizon-compactable index")
-    }
-  }
-
-  /** Record the takedowns a horizon squash is about to absorb (keys
-    * whose resolved prefix state is a tombstone) into the staged
-    * tree's retired sidecar, unioned with any prior sidecar — without
-    * it, dropping the tombstones would also destroy the only durable
-    * takedown record and the next full in-stream compact would rebuild
-    * from the unfiltered source and RESURRECT them
-    * ([[GenStore.retiredPath]] doc). Delete-free stores skip — zero
-    * cost on the common path. */
-  private def recordRetired(s: SparkSession, dir: String, tmp: String,
-      full: Meta, tombstoned: => DataFrame): Unit = {
-    val prev = GenStore.readRetired(s, dir, "vec_id")
-    if (prev.isDefined || full.params.contains("del"))
-      GenStore.writeRetired(
-        prev.fold(tombstoned)(_.unionByName(tombstoned)), tmp)
-  }
-
-  /** The staged tree's meta for a horizon compact: recounted LIVE
-    * serving rows split at the new base gen `h` (the shape
-    * [[GenStore.deadCounts]] keeps exact from here on), and the `del`
-    * marker dropped iff no tombstone row PHYSICALLY remains in the
-    * staged tree — physical, not live-resolved: a tail tombstone
-    * superseded by a later re-add is invisible to the live view but
-    * still decides its key's state for every as-of read INSIDE the
-    * delete window, so the views' tombstone filter must stay on while
-    * any such row exists. `rows` must carry (k, gen, w = serving
-    * weight, tomb). */
-  private def horizonFinish(s: SparkSession, tmp: String,
-      full: Meta, h: Long, rows: DataFrame): Unit = {
-    val m1 = GenStore.horizonMeta(full, h)
-    val r0 = rows.select(col("k"), col("gen").cast("long").as("gen"),
-      col("w").cast("long").as("w"), col("tomb"))
-    val live = r0.join(
-      r0.groupBy("k").agg(max("gen").as("gen")), Seq("k", "gen"))
-    val r = live.agg(
-      coalesce(sum(when(col("gen") === h, col("w"))), lit(0L)),
-      coalesce(sum(when(col("gen") > h, col("w"))), lit(0L))).head()
-    val anyTomb = r0.filter(col("tomb")).limit(1).count() > 0
-    val params =
-      if (full.params.contains("del") && !anyTomb) m1.params - "del"
-      else m1.params
-    GenStore.writeMeta(s, tmp, m1.copy(
-      baseRows = r.getLong(0), appendRows = r.getLong(1), params = params))
-  }
-
-  /** The RETIRED ids: keys present in the tree's generations whose live
-    * state is a tombstone — the takedown set an in-stream compact must
-    * EXCLUDE from its source-directory rebuild (the source still
-    * physically holds deleted ids' rows; compacting from it unfiltered
-    * would resurrect them). Dispatches on the meta like [[delete]];
-    * returns a one-column `vec_id` frame. Delete-free trees short-
-    * circuit to empty. One resolution scan — compact-scale callers
-    * only. */
-  def retiredIds(s: SparkSession, indexDir: String): DataFrame = {
-    val meta = metaOrThrow(s, indexDir)
-    import s.implicits._
-    // the sidecar holds takedowns whose tombstones a horizon squash
-    // absorbed — it must be consulted even after the squash dropped
-    // the del marker (no physical tombstone left, yet the keys stay
-    // retired until re-added)
-    val sidecar = GenStore.readRetired(s, indexDir, "vec_id")
-    if (!meta.params.contains("del") && sidecar.isEmpty)
-      return Seq.empty[Long].toDF("vec_id")
-    val (all, live) =
-      if (meta.params.contains("pfetch"))
-        (s.read.parquet(vecsDataPath(indexDir))
-          .filter(col("gen") < meta.gen).select(col("bucket").as("vec_id")),
-          vecsLive(s, indexDir).select(col("bucket").as("vec_id")))
-      else if (meta.params.contains("np"))
-        (rawBanded(s, indexDir, meta.gen).select("vec_id"),
-          bandedRowsLive(s, indexDir).select("vec_id"))
-      else
-        (rawAssignments(s, indexDir, meta.gen).select("vec_id"),
-          ivfAssignments(s, indexDir).select("vec_id"))
-    val present = all.distinct()
-    sidecar.fold(present)(sc => present.unionByName(sc).distinct())
-      .join(live.distinct(), Seq("vec_id"), "left_anti")
-  }
-
-  /** Fraction of LIVE index rows that arrived by append — the drift
-    * signal a deployment compacts on. O(1): read from the meta's
-    * live-row counters, so the per-micro-batch compaction decision in
-    * `IndexMaintenance` never scans the index. EXACT on every history
-    * shape since r18 (the r17 ≤2× upsert band is gone): undeclared
-    * appends move the rows they supersede out of the counters at
-    * append time via one delta-bounded semi-join count
-    * ([[GenStore]] class doc), so a full-corpus undeclared re-ingest
-    * reads 1.0, not 0.5. A legacy meta without counters falls back to
-    * aggregating the live view (the pre-r17 O(index) plan). */
-  def staleness(s: SparkSession, indexDir: String): Double =
-    GenStore.metaStaleness(metaOrThrow(s, indexDir)).getOrElse {
-      val r = ivfAssignments(s, indexDir)
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("gen") > 0, 1L).otherwise(0L)).as("d"))
-        .head()
-      if (r.getLong(0) == 0) 0.0 else r.getLong(1).toDouble / r.getLong(0)
-    }
-
-  /** The meta as the READ-SIDE contract ([[GenStore.metaOrThrow]]): a
-    * meta-less tree is partial or legacy and must not be silently
-    * served (a legacy multi-gen upsert history read "plain" would
-    * return superseded duplicates). */
-  private def metaOrThrow(s: SparkSession, dir: String): Meta =
-    GenStore.metaOrThrow(s, dir)
-
-  /** Raw partitioned read; gen/cell are partition columns (discovered
-    * as ints when small) — normalize to the long schema the flat
-    * layout had. The meta's gen counter is the COMMIT POINTER: only
-    * generations below it are visible, so an orphan gen directory from
-    * a crashed, never-replayed append (data landed, meta didn't) stays
-    * invisible instead of leaking stale duplicates into plain reads —
-    * the filter is on the partition column, so the orphan's files are
-    * statically pruned, not just filtered. */
-  private def rawAssignments(s: SparkSession, indexDir: String, committedGen: Long,
-      payload: Seq[String] = Nil): DataFrame = {
-    val base = s.read.parquet(assignPath(indexDir))
-      .filter(col("gen") < committedGen)
-    val cols = Seq(col("vec_id")) ++ payload.map(col) ++
-      Seq(col("cell").cast("long").as("cell"), col("gen").cast("long").as("gen"))
-    base.select(cols: _*)
-  }
 
   /** The LIVE assignment (vec_id, cell, gen): latest generation wins
     * per id, so a re-ingested vector supersedes its older rows — the
@@ -635,42 +254,18 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     assignmentsView(s, indexDir, cells, resolveAll, payload = Nil,
       asOfGen = asOfGen)
 
-  /** The three-regime live view over the assignment rows, optionally
-    * CARRYING stored payload columns (the vector `v` for
+  /** The live view over the assignment rows ([[GenStore.live]]),
+    * optionally CARRYING stored payload columns (the vector `v` for
     * vector-carrying indexes, the PQ `codes` for code-carrying ones —
-    * the probe path's self-contained read). One definition of the
-    * regimes for every schema, so they cannot diverge. */
+    * the probe path's self-contained read). The `cells` probe is not on
+    * the key, so it is pushed into the plain and untouched branches and
+    * applied after resolution elsewhere. */
   private def assignmentsView(s: SparkSession, indexDir: String,
       cells: Option[Seq[Long]], resolveAll: Boolean,
-      payload: Seq[String], asOfGen: Option[Long] = None): DataFrame = {
-    val full = metaOrThrow(s, indexDir)
-    // AS-OF read (time-travel): the meta restricted to the prefix —
-    // GenStore.asOf re-derives the regime for gens ≤ N and the commit-
-    // pointer filter below partition-prunes the later gens' files away
-    val meta = asOfGen.fold(full)(GenStore.asOf(full, _))
-    val raw = rawAssignments(s, indexDir, meta.gen, payload)
-    // the tombstone drop (cell = -1 delete rows, post-resolution per
-    // the regime discipline) applies only to delete-bearing stores —
-    // the meta's `del` marker — so delete-free indexes keep their
-    // exact pre-delete plans
-    def cellFilter(df: DataFrame): DataFrame = {
-      val probed = cells.fold(df)(cs => df.filter(col("cell").isin(cs: _*)))
-      if (full.params.contains("del")) probed.filter(col("cell") >= 0L)
-      else probed
-    }
-    liveView(meta, raw, "vec_id", payload :+ "cell", cellFilter, resolveAll)
-  }
-
-  /** The three-regime latest-gen-wins machinery for ONE-ROW-PER-KEY
-    * structures — [[GenStore.liveView]] (raw/coded assignments and the
-    * point-fetch vector store; the multi-row banded table reads through
-    * [[GenStore.keyedLiveView]] in [[bandedRowsLive]], and the text
-    * postings store shares that same definition). See GenStore for the
-    * postFilter discipline. */
-  private def liveView(meta: Meta, rows: DataFrame, keyCol: String,
-      dataCols: Seq[String], postFilter: DataFrame => DataFrame,
-      resolveAll: Boolean): DataFrame =
-    GenStore.liveView(meta, rows, keyCol, dataCols, postFilter, resolveAll)
+      payload: Seq[String], asOfGen: Option[Long] = None): DataFrame =
+    GenStore.live(s, indexDir, Ivf,
+      df => cells.fold(df)(cs => df.filter(col("cell").isin(cs: _*))),
+      resolveAll, asOfGen, "vec_id" +: payload :+ "cell", identity)
 
   /** Persisted centroids as the driver-side array (cell-ordered),
     * shared by append-time assignment and query-time probing. The sort
@@ -777,7 +372,7 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       k: Int, nprobe: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
       asOfGen: Option[Long] = None): DataFrame = {
-    val meta = metaOrThrow(s, indexDir)
+    val meta = GenStore.metaOrThrow(s, indexDir)
     // centroid read and query collect are INDEPENDENT driver jobs —
     // overlap them (guide §2.6) instead of serializing; they were two
     // of the 3-4 sequential actions each maintained read paid
@@ -856,32 +451,26 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       appendOnly: Boolean = true): Unit = {
     val s = corpus.sparkSession
     val cs = Ann.trainCentroids(corpus, idCol, vecCol, nlist, lloydIters)
-    val fs = fsOf(s, indexDir)
-    if (fs.exists(new Path(indexDir))) fs.delete(new Path(indexDir), true)
-    import s.implicits._
-    cs.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }
-      .toDF("cell", "c").write.parquet(centroidsPath(indexDir))
-    // the lowest nCent ids PRESENT (pqCodebookPresent), not `id < nCent`
-    // — a build whose corpus lacks the low ids (delta-keyed ingest, a
-    // streaming first batch) would otherwise persist an EMPTY or
-    // partial codebook and the inner join would silently code nothing
-    Ann.pqCodebookPresent(corpus, nSub, subDim, nCent, idCol, vecCol)
-      .write.parquet(codebookPath(indexDir))
-    val cb = s.read.parquet(codebookPath(indexDir))
-    if (cb.isEmpty) throw new IllegalArgumentException(
-      s"PQ build at $indexDir trained an empty codebook — the corpus is empty")
-    // gen 0 assigns under the PERSISTED codebook (read back), the same
-    // table every append will read — not the in-memory derivation.
-    // The PQ build pays onePerId unconditionally (code packing needs
-    // id-coherent rows even on curated corpora)
-    val n0 = writeAssignGen(
-      assignPqWith(onePerId(corpus, idCol, vecCol), cs, cb, nSub, subDim),
-      indexDir, 0L)
-    writeMeta(s, indexDir, Meta(gen = 1L, appendOnly = appendOnly,
-      batch = batchId, trusted = appendOnly, baseRows = n0, appendRows = 0L,
-      params = Map("nlist" -> nlist.toString, "pq" -> "1",
-        "pq_nsub" -> nSub.toString, "pq_subdim" -> subDim.toString,
-        "pq_ncent" -> nCent.toString)))
+    GenStore.build(s, Pq, indexDir, batchId, appendOnly,
+        Map("nlist" -> nlist.toString, "pq" -> "1",
+          "pq_nsub" -> nSub.toString, "pq_subdim" -> subDim.toString,
+          "pq_ncent" -> nCent.toString)) {
+      writeCentroids(s, indexDir, cs)
+      // the lowest nCent ids PRESENT (pqCodebookPresent), not `id < nCent`
+      // — a build whose corpus lacks the low ids (delta-keyed ingest, a
+      // streaming first batch) would otherwise persist an EMPTY or
+      // partial codebook and the inner join would silently code nothing
+      Ann.pqCodebookPresent(corpus, nSub, subDim, nCent, idCol, vecCol)
+        .write.parquet(codebookPath(indexDir))
+      val cb = s.read.parquet(codebookPath(indexDir))
+      if (cb.isEmpty) throw new IllegalArgumentException(
+        s"PQ build at $indexDir trained an empty codebook — the corpus is empty")
+      // gen 0 assigns under the PERSISTED codebook (read back), the same
+      // table every append will read — not the in-memory derivation.
+      // The PQ build pays onePerId unconditionally (code packing needs
+      // id-coherent rows even on curated corpora)
+      assignPqWith(onePerId(corpus, idCol, vecCol), cs, cb, nSub, subDim)
+    }
   }
 
   /** [[appendIvf]]'s PQ twin: assign the delta's cells under the
@@ -894,16 +483,12 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       idCol: String = "vec_id", vecCol: String = "embedding",
       newIds: Boolean = false, batchId: Long = -1L): Unit = {
     val s = delta.sparkSession
-    val (gen, next, prev) = reserveGen(s, indexDir, newIds, batchId)
-    val (nSub, subDim) = pqParamsOrThrow(next, indexDir)
     val one = onePerId(delta, idCol, vecCol)
-    val dead = deadFor(prev, newIds,
-      rawAssignments(s, indexDir, prev.gen), "vec_id", one, weight = cellWeight)
-    val na = writeAssignGen(
-      assignPqWith(one, centroidArray(s, indexDir),
-        s.read.parquet(codebookPath(indexDir)), nSub, subDim),
-      indexDir, gen)
-    writeMeta(s, indexDir, GenStore.appendCounters(next, na, dead))
+    GenStore.append(s, indexDir, newIds, batchId) { m =>
+      val (nSub, subDim) = pqParamsOrThrow(m, indexDir)
+      (one, assignPqWith(one, centroidArray(s, indexDir),
+        s.read.parquet(codebookPath(indexDir)), nSub, subDim), -1L)
+    }
   }
 
   /** [[compactIvf]]'s PQ twin: retrain centroids AND codebook on the
@@ -916,13 +501,11 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       nlist: Int = 16, nSub: Int = 8, subDim: Int = 8, nCent: Int = 16,
       lloydIters: Int = 2, batchId: Long = -1L,
       appendOnly: Boolean = true): Unit =
-    stagedCompact(corpus.sparkSession, indexDir)(tmp =>
+    GenStore.stagedCompact(corpus.sparkSession, indexDir)(tmp =>
       buildIvfPq(corpus, tmp, idCol, vecCol, nlist, nSub, subDim, nCent,
         lloydIters, batchId, appendOnly))
 
-  private def codebookPath(dir: String) = s"$dir/codebook"
-
-  private def pqParamsOrThrow(m: Meta, dir: String): (Int, Int) =
+  private def pqParamsOrThrow(m: GenStore.Meta, dir: String): (Int, Int) =
     (for {
       nSub <- m.params.get("pq_nsub").flatMap(_.toIntOption)
       subDim <- m.params.get("pq_subdim").flatMap(_.toIntOption)
@@ -986,7 +569,7 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     * PQ params, the (localized) query relation, the driver-computed
     * probe cells, and the (localized) codebook. */
   private final case class PqProbe(
-      meta: Meta, nSub: Int, subDim: Int, qdf: DataFrame,
+      meta: GenStore.Meta, nSub: Int, subDim: Int, qdf: DataFrame,
       probeCells: Seq[Long], codebook: DataFrame)
 
   /** Probe prep shared by both PQ read paths: the three independent
@@ -1000,7 +583,7 @@ object AnnIndex extends org.apache.spark.internal.Logging {
   private def pqProbePrep(
       s: SparkSession, indexDir: String, queries: DataFrame,
       nprobe: Int, idCol: String, vecCol: String): PqProbe = {
-    val meta = metaOrThrow(s, indexDir)
+    val meta = GenStore.metaOrThrow(s, indexDir)
     val (nSub, subDim) = pqParamsOrThrow(meta, indexDir)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
@@ -1027,7 +610,7 @@ object AnnIndex extends org.apache.spark.internal.Logging {
 
   /** [[ivfPqTopKFromIndex]] with the refine fetch served by POINT
     * LOOKUPS against an id-bucketed vectors table (a
-    * [[graft.build.Layout.writeBucketDirs]] layout over
+    * [[Layout.writeBucketDirs]] layout over
     * `bucket = vec_id`, schema `(bucket, <vecCol>)`) instead of a full
     * corpus scan. The ADC
     * shortlist is driver-bounded by construction (|queries| ×
@@ -1111,11 +694,11 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       ids: Option[Seq[Long]], vecCol: String): DataFrame = {
     import s.implicits._
     val vecRows =
-      if (readMeta(s, vecsDir).exists(_.params.contains("pfetch")))
+      if (GenStore.readMeta(s, vecsDir).exists(Vecs.holds))
         vecsLive(s, vecsDir, ids = ids)
           .select(col("bucket"), col("v").as(vecCol))
       else ids match {
-        case Some(is) => graft.build.Layout.pruneToProbe(
+        case Some(is) => Layout.pruneToProbe(
           s.read.parquet(vecsDir), is.toDF("bucket"))
         case None => s.read.parquet(vecsDir)
       }
@@ -1172,14 +755,12 @@ object AnnIndex extends org.apache.spark.internal.Logging {
 
   // ------------------------------------------- point-fetch vector store
 
-  private def vecsDataPath(dir: String) = s"$dir/data"
-
   /** Build the id-bucketed POINT-FETCH VECTOR STORE — the refine-fetch
     * table behind [[ivfPqTopKPointFetch]] — under the SAME
     * build → gen-append → compact lifecycle and meta protocol as the
     * index structures. Layout per generation: `gen=N/pb=M/part-*` with
     * `pb = pmod(id, ProbePartitions)` directories and id-sorted rows
-    * (the [[graft.build.Layout.writeBucketDirs]] geometry, gen-stamped)
+    * (the [[Layout.writeBucketDirs]] geometry, gen-stamped)
     * — a shortlist's vector reads prune to its ids' directories, the
     * reference's MapFile point-lookup economics
     * (`BlockIndexedFileInputFormat.java:419-431`).
@@ -1196,105 +777,57 @@ object AnnIndex extends org.apache.spark.internal.Logging {
   def buildVecs(
       corpus: DataFrame, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      batchId: Long = -1L, appendOnly: Boolean = true): Unit = {
-    val s = corpus.sparkSession
-    val fs = fsOf(s, dir)
-    if (fs.exists(new Path(dir))) fs.delete(new Path(dir), true)
-    val n0 = writeVecsGen(
+      batchId: Long = -1L, appendOnly: Boolean = true): Unit =
+    GenStore.build(corpus.sparkSession, Vecs, dir, batchId, appendOnly,
+        Map("pfetch" -> "1", "pbmod" -> Layout.ProbePartitions.toString))(
       buildRows(corpus, idCol, vecCol, batchId)
-        .select(col("vec_id").as("bucket"), col("v")), dir, 0L)
-    writeMeta(s, dir, Meta(gen = 1L, appendOnly = appendOnly,
-      batch = batchId, trusted = appendOnly, baseRows = n0, appendRows = 0L,
-      params = Map("pfetch" -> "1",
-        "pbmod" -> graft.build.Layout.ProbePartitions.toString)))
-  }
+        .select(col("vec_id").as("bucket"), col("v")))
 
   /** Write ONLY the delta batch's vectors into the next `gen=N`
     * directory — O(|delta|): the id→pb mapping is a pure per-row
     * function, nothing of the base is read or written. `newIds`/replay
-    * semantics exactly as [[appendIvf]]. */
+    * semantics exactly as [[appendIvf]]. Same within-batch dedup as
+    * every other append: two rows for one id in a declared batch would
+    * BOTH survive the plain regime and the point-fetch rerank would
+    * rank that neighbor twice. */
   def appendVecs(
       delta: DataFrame, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       newIds: Boolean = false, batchId: Long = -1L): Unit = {
-    val s = delta.sparkSession
-    val (gen, next, prev) = reserveGen(s, dir, newIds, batchId)
-    if (!next.params.contains("pfetch")) throw new IllegalArgumentException(
-      s"tree at $dir is not a point-fetch vector store (no pfetch in its " +
-        "meta): append with the matching index append, or build it with " +
-        "buildVecs")
-    requireParam(next, dir, "pbmod", graft.build.Layout.ProbePartitions.toLong)
-    // same within-batch dedup as every other append: two rows for one
-    // id in a declared batch would BOTH survive the plain regime and
-    // the point-fetch rerank would rank that neighbor twice
     val one = onePerId(delta, idCol, vecCol)
       .select(col("vec_id").as("bucket"), col("v"))
-    // the dead-row count on the store prunes by the delta's pb
-    // directories first (≤ ProbePartitions values — a tiny driver
-    // collect), so an upsert micro-batch reads only its ids' buckets
-    val dead = deadFor(prev, newIds, {
-      val pp = graft.build.Layout.ProbePartitions
-      val pbs = one.select(pmod(col("bucket"), lit(pp)).cast("int").as("pb"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      s.read.parquet(vecsDataPath(dir))
-        .filter(col("gen") < prev.gen && col("pb").isin(pbs: _*))
-        .select(col("bucket"), col("gen"), col("v"))
-    }, "bucket", one, weight = vecWeight)
-    val na = writeVecsGen(one, dir, gen)
-    writeMeta(s, dir, GenStore.appendCounters(next, na, dead))
+    GenStore.append(delta.sparkSession, dir, newIds, batchId) { m =>
+      GenStore.requireKind(m, dir, Vecs)
+      GenStore.requireParam(m, dir, "pbmod", Layout.ProbePartitions.toLong)
+      (one, one, -1L)
+    }
   }
 
   /** Rewrite the store at gen 0 from the current corpus under the
     * shared staged-swap/recover protocol — the compaction step once
-    * [[staleness]] (the same meta counters) or upsert-history read cost
-    * crosses the budget. */
+    * the store's staleness or upsert-history read cost crosses the
+    * budget. */
   def compactVecs(
       corpus: DataFrame, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       batchId: Long = -1L, appendOnly: Boolean = true): Unit =
-    stagedCompact(corpus.sparkSession, dir)(tmp =>
+    GenStore.stagedCompact(corpus.sparkSession, dir)(tmp =>
       buildVecs(corpus, tmp, idCol, vecCol, batchId, appendOnly))
 
-  /** One generation of the store: pb-partitioned, id-sorted files. File
-    * fan-out self-scales with the batch: rows hash to their pb value,
-    * so a generation holds one file per pb directory PRESENT in the
-    * batch — a micro-batch of k ids writes ≤ k files, a corpus build
-    * fans out to all [[graft.build.Layout.ProbePartitions]] dirs.
-    * Returns the written row count (footer read — the staleness
-    * counters). */
-  private def writeVecsGen(rows: DataFrame, dir: String, gen: Long): Long = {
-    val pp = graft.build.Layout.ProbePartitions
-    val out = s"${vecsDataPath(dir)}/gen=$gen"
-    rows
-      .withColumn("pb", pmod(col("bucket"), lit(pp)).cast("int"))
-      .repartition(pp, col("pb"))
-      .sortWithinPartitions("bucket")
-      .write.mode("overwrite").partitionBy("pb")
-      .parquet(out)
-    countWritten(rows.sparkSession, out)
-  }
-
-  /** The LIVE vectors (bucket, v, gen), latest generation per id — the
-    * same three regimes as [[ivfAssignments]] via the shared
-    * [[liveView]], with ONE structural advantage: the probe filter is
-    * on `bucket = id`, the REDUCE KEY itself, so it COMMUTES with
-    * latest-gen resolution (an upserted id's newer generation lives in
-    * the same bucket — prefiltering can never resurrect a superseded
-    * row). The `ids` filter therefore pushes into the scan as `pb`
-    * directory pruning + an exact bucket IN-list in EVERY regime —
-    * even an untrusted history's point fetch reads and reduces only
-    * the probed ids' rows, never the corpus. */
+  /** The LIVE vectors (bucket, v, gen), latest generation per id
+    * ([[GenStore.live]]), with ONE structural advantage over the other
+    * views: the probe filter is on `bucket = id`, the REDUCE KEY itself,
+    * so it COMMUTES with latest-gen resolution (an upserted id's newer
+    * generation lives in the same bucket — prefiltering can never
+    * resurrect a superseded row). The `ids` filter therefore pushes into
+    * the scan as `pb` directory pruning + an exact bucket IN-list in
+    * EVERY regime — even an untrusted history's point fetch reads and
+    * reduces only the probed ids' rows, never the corpus. */
   def vecsLive(s: SparkSession, dir: String,
       ids: Option[Seq[Long]] = None, resolveAll: Boolean = false,
       asOfGen: Option[Long] = None): DataFrame = {
-    val full = metaOrThrow(s, dir)
-    val meta = asOfGen.fold(full)(GenStore.asOf(full, _))
-    if (!meta.params.contains("pfetch")) throw new IllegalArgumentException(
-      s"tree at $dir is not a point-fetch vector store (no pfetch in its " +
-        "meta): read it with the matching index reader")
-    val pp = graft.build.Layout.ProbePartitions
-    val all = s.read.parquet(vecsDataPath(dir)).filter(col("gen") < meta.gen)
-    val probed = ids.fold(all) { is =>
+    val pp = Layout.ProbePartitions
+    def probed(all: DataFrame): DataFrame = ids.fold(all) { is =>
       val pbs = is.map(b => (((b % pp) + pp) % pp).toInt).distinct
       val dirPruned = all.filter(col("pb").isin(pbs: _*))
       // small id sets push an exact IN-list into the scan (row-group
@@ -1304,21 +837,14 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       // the exact filter becomes a broadcast semi-join behind the
       // ≤ ProbePartitions-value directory filter instead (the same
       // decline rationale as Layout.pruneToProbe)
-      if (is.size <= graft.build.Layout.ProbeKeyCap)
+      if (is.size <= Layout.ProbeKeyCap)
         dirPruned.filter(col("bucket").isin(is: _*))
       else {
         import s.implicits._
         dirPruned.join(broadcast(is.toDF("bucket")), Seq("bucket"), "left_semi")
       }
     }
-    val raw = probed.select(col("bucket"), col("v"),
-      col("gen").cast("long").as("gen"))
-    // delete-bearing stores drop tombstones (null v) after resolution;
-    // delete-free stores keep their exact pre-delete plans
-    val postFilter: DataFrame => DataFrame =
-      if (full.params.contains("del")) _.filter(col("v").isNotNull)
-      else identity
-    liveView(meta, raw, "bucket", Seq("v"), postFilter, resolveAll)
+    GenStore.live(s, dir, Vecs, identity, resolveAll, asOfGen, Vecs.cols, probed)
   }
 
   // ------------------------------------------------------ sign-LSH
@@ -1342,158 +868,58 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       idCol: String = "vec_id", vecCol: String = "embedding",
       nPlanes: Int = 16, bands: Int = 8, seed: Long = 42L,
       batchId: Long = -1L, appendOnly: Boolean = true): Unit = {
-    val s = corpus.sparkSession
-    val fs = fsOf(s, indexDir)
-    if (fs.exists(new Path(indexDir))) fs.delete(new Path(indexDir), true)
     // one bounded action at BUILD time (first row's vector width) — the
     // price of a read path that never needs a corpus action
     val dim = corpus.select(size(col(vecCol))).head().getInt(0)
-    val n0 = writeBandedGen(
+    GenStore.build(corpus.sparkSession, Banded, indexDir, batchId, appendOnly,
+        Map("dim" -> dim.toString, "np" -> nPlanes.toString,
+          "nb" -> bands.toString, "seed" -> seed.toString))(
       Ann.bandedRows(buildRows(corpus, idCol, vecCol, batchId),
           "vec_id", "v", Ann.hyperplanes(nPlanes, dim, seed), bands)
-        .select("vec_id", "band", "bucket"),
-      indexDir, 0L)
-    writeMeta(s, indexDir, Meta(gen = 1L, appendOnly = appendOnly,
-      batch = batchId, trusted = appendOnly, baseRows = n0, appendRows = 0L,
-      params = Map("dim" -> dim.toString, "np" -> nPlanes.toString,
-        "nb" -> bands.toString, "seed" -> seed.toString)))
+        .select("vec_id", "band", "bucket"))
   }
 
   /** Band ONLY the delta under the same seeded planes and write it into
-    * the next `gen=N` directory (gen from the meta — O(1); planes from
-    * the meta's persisted (dim, nPlanes, bands, seed), validated
-    * against the caller's — a mismatch THROWS, it never silently bands
-    * a delta under different planes). Banded rows are per-vector, so
-    * append ≡ rebuild is exact by construction. `newIds` as in
-    * [[appendIvf]]. */
+    * the next `gen=N` directory (planes from the meta's persisted (dim,
+    * nPlanes, bands, seed), validated against the caller's — a mismatch
+    * THROWS, it never silently bands a delta under different planes).
+    * Banded rows are per-vector, so append ≡ rebuild is exact by
+    * construction. One coherent row per id first (a same-id /
+    * different-content duplicate would band BOTH versions); its count
+    * sizes the range write's fan-out, so a micro-batch lands in one
+    * file. `newIds` as in [[appendIvf]]. */
   def appendBanded(
       delta: DataFrame, indexDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       nPlanes: Int = 16, bands: Int = 8, seed: Long = 42L,
       newIds: Boolean = false, batchId: Long = -1L): Unit = {
-    val s = delta.sparkSession
-    val (gen, next, prev) = reserveGen(s, indexDir, newIds, batchId)
-    if (next.params.contains("pq") || next.params.contains("pfetch"))
-      throw new IllegalArgumentException(
-        s"tree at $indexDir is not a banded index: append with the " +
-          "matching appendIvfPq/appendVecs")
-    requireParam(next, indexDir, "np", nPlanes)
-    requireParam(next, indexDir, "nb", bands)
-    requireParam(next, indexDir, "seed", seed)
-    val dim = next.params("dim").toInt
-    // one coherent row per id first (the at-least-once batch surface —
-    // a same-id/different-content duplicate would band BOTH versions);
-    // then the deduped cardinality sizes the write fan-out
-    // (micro-batches land in one file, not numShufflePartitions shards)
-    // — one count over the batch being written anyway
     val one = onePerId(delta, idCol, vecCol)
-    val deltaRows = one.count()
-    val dead = deadFor(prev, newIds,
-      rawBanded(s, indexDir, prev.gen), "vec_id", one, weight = bandWeight)
-    val na = writeBandedGen(
-      Ann.bandedRows(one, "vec_id", "v",
-          Ann.hyperplanes(nPlanes, dim, seed), bands)
-        .select("vec_id", "band", "bucket"),
-      indexDir, gen, estimatedRows = deltaRows * bands)
-    writeMeta(s, indexDir, GenStore.appendCounters(next, na, dead))
-  }
-
-  /** Rows-per-file target for banded APPEND generations: small enough
-    * that local fixtures still fan out, large enough that a streaming
-    * micro-batch lands in ONE file instead of numShufflePartitions
-    * shards (the r15 advisor's small-file finding — per-gen file count
-    * must scale with the batch, or O(|delta|) ingest economics erode
-    * under file-count pressure until the next compact). */
-  private val BandedAppendRowsPerFile = 4096L
-
-  /** One generation's banded files, RANGE-CLUSTERED by bucket
-    * (repartitionByRange gives files disjoint bucket ranges;
-    * sortWithinPartitions gives row groups tight min-max stats), so a
-    * probe's bucket IN-list skips whole files/row groups at the parquet
-    * layer — the (band, bucket)-keyed twin of the IVF cell
-    * partitioning. Builds use the session's full shuffle width (the
-    * corpus-sized generation wants the fan-out); appends pass their
-    * batch cardinality and write ceil(rows/target) files, capped at the
-    * session width. */
-  private def writeBandedGen(banded: DataFrame, indexDir: String, gen: Long,
-      estimatedRows: Long = -1L): Long = {
-    val sessionWidth = banded.sparkSession.sessionState.conf.numShufflePartitions
-    // explicit partition count either way: an AQE-coalesced range
-    // shuffle would collapse small generations into one wide-range file
-    // and erase the min-max selectivity the probe prunes against
-    val parts =
-      if (estimatedRows < 0) sessionWidth
-      else math.max(1L, math.min(sessionWidth.toLong,
-        (estimatedRows + BandedAppendRowsPerFile - 1) / BandedAppendRowsPerFile)).toInt
-    val out = s"${bandedPath(indexDir)}/gen=$gen"
-    banded
-      .repartitionByRange(parts, col("bucket"))
-      .sortWithinPartitions("bucket", "band")
-      .write.mode("overwrite").parquet(out)
-    // countWritten (not a bare read.count): a zero-row banded append
-    // currently happens to leave a schema-bearing empty file, but that
-    // is a layout accident — the guarded count is the contract every
-    // other generation writer follows (empty batch = 0, never a throw
-    // that wedges the streaming loop)
-    countWritten(banded.sparkSession, out)
-  }
-
-  /** [[staleness]]'s banded twin: the fraction of LIVE banded rows that
-    * arrived by append — the drift/small-file signal a deployment runs
-    * [[compactBanded]] on. (Banded rows never drift geometrically —
-    * planes are fixed by seed — so the pressure here is
-    * append-generation fan-out and upsert-history cost, not recall.)
-    * O(1) from the meta's live-row counters and EXACT on every history
-    * shape, same contract as [[staleness]]; only a legacy counter-less
-    * meta pays the index scan. */
-  def bandedStaleness(s: SparkSession, indexDir: String): Double = {
-    val meta = metaOrThrow(s, indexDir)
-    GenStore.metaStaleness(meta).getOrElse {
-      // legacy meta without row counters: the pre-r17 O(index) signal
-      // (an index scan plus a groupBy-max self-join per call)
-      val raw = rawBanded(s, indexDir, meta.gen)
-      val live = raw.join(
-        raw.groupBy("vec_id").agg(max("gen").as("gen")), Seq("vec_id", "gen"))
-      val r = live.agg(count(lit(1)).as("n"),
-        sum(when(col("gen") > 0, 1L).otherwise(0L)).as("d")).head()
-      if (r.getLong(0) == 0) 0.0 else r.getLong(1).toDouble / r.getLong(0)
+    GenStore.append(delta.sparkSession, indexDir, newIds, batchId) { m =>
+      GenStore.requireKind(m, indexDir, Banded)
+      GenStore.requireParam(m, indexDir, "np", nPlanes)
+      GenStore.requireParam(m, indexDir, "nb", bands)
+      GenStore.requireParam(m, indexDir, "seed", seed)
+      val planes = Ann.hyperplanes(nPlanes, m.params("dim").toInt, seed)
+      (one, Ann.bandedRows(one, "vec_id", "v", planes, bands)
+        .select("vec_id", "band", "bucket"), one.count() * bands)
     }
   }
 
-  /** Same commit-pointer read as [[rawAssignments]]. */
-  private def rawBanded(s: SparkSession, indexDir: String, committedGen: Long): DataFrame =
-    s.read.parquet(bandedPath(indexDir))
-      .filter(col("gen") < committedGen)
-      .select(col("vec_id"), col("band"), col("bucket"),
-        col("gen").cast("long").as("gen"))
-
   /** The LIVE banded rows (vec_id, band, bucket): a re-ingested id's
-    * latest generation supersedes its older band rows. Same three
-    * regimes as [[ivfAssignments]] via the shared MULTI-ROW-PER-KEY
-    * machinery ([[GenStore.keyedLiveView]] — one definition with the
-    * text postings store, the r17 verdict's unification item): plain
+    * latest generation supersedes its older band rows — the multi-row
+    * [[GenStore.live]] view shared with the text postings store: plain
     * read with the optional (band, bucket)-superset probe filter pushed
     * into the scan / BOUNDED resolution over the recorded upsert
     * generations / full latest-gen resolution with the filter strictly
     * after (the resurrect hazard). */
   def bandedRowsLive(s: SparkSession, indexDir: String,
       probe: Option[(Seq[Int], Seq[Long])] = None,
-      asOfGen: Option[Long] = None): DataFrame = {
-    val full = metaOrThrow(s, indexDir)
-    val meta = asOfGen.fold(full)(GenStore.asOf(full, _))
-    // probe + (on delete-bearing stores) the band = -1 tombstone drop,
-    // post-resolution per the regime discipline
-    def probeFilter(df: DataFrame): DataFrame = {
-      val probed = probe.fold(df) { case (bs, ks) =>
+      asOfGen: Option[Long] = None): DataFrame =
+    GenStore.live(s, indexDir, Banded,
+      df => probe.fold(df) { case (bs, ks) =>
         df.filter(col("band").isin(bs: _*) && col("bucket").isin(ks: _*))
-      }
-      if (full.params.contains("del")) probed.filter(col("band") >= 0)
-      else probed
-    }
-    val raw = rawBanded(s, indexDir, meta.gen)
-    GenStore.keyedLiveView(meta, raw, "vec_id", probeFilter, resolveAll = false)
+      }, resolveAll = false, asOfGen, Banded.cols, identity)
       .select("vec_id", "band", "bucket")
-  }
 
   /** [[Ann.lshTopK]] through the MAINTAINED banded index: corpus-side
     * bands from the persisted table (joined to the vectors by id),
@@ -1511,10 +937,10 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       s: SparkSession, indexDir: String, corpus: DataFrame, queries: DataFrame,
       k: Int, idCol: String = "vec_id", vecCol: String = "embedding",
       nPlanes: Int = 16, bands: Int = 8, seed: Long = 42L): DataFrame = {
-    val meta = metaOrThrow(s, indexDir)
-    requireParam(meta, indexDir, "np", nPlanes)
-    requireParam(meta, indexDir, "nb", bands)
-    requireParam(meta, indexDir, "seed", seed)
+    val meta = GenStore.metaOrThrow(s, indexDir)
+    GenStore.requireParam(meta, indexDir, "np", nPlanes)
+    GenStore.requireParam(meta, indexDir, "nb", bands)
+    GenStore.requireParam(meta, indexDir, "seed", seed)
     val dim = meta.params("dim").toInt
     val planes = Ann.hyperplanes(nPlanes, dim, seed)
     val qBand = Ann.bandedRows(

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import graft.build.IndexBuilder
+import graft.build.{GenStore, IndexBuilder}
+import graft.similarity.AnnIndex
+import graft.text.PostingsStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -66,8 +68,8 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     * `head - retainGens` instead of the full source rebuild — the
     * stream maintains a REPRODUCIBILITY WINDOW: the last `retainGens`
     * generations stay readable as-of while the prefix's read/storage
-    * cost is reclaimed (`compactThrough`, dispatched text-vs-vector on
-    * the store's own meta). The squash never touches the source
+    * cost is reclaimed ([[GenStore.compactThrough]], whose descriptor
+    * the store's own meta names). The squash never touches the source
     * directory, so the undelivered-batch hazard that forces the full
     * in-stream compact to stamp itself untrusted does not apply, and
     * tombstones/takedowns resolve by construction (state-at-h is the
@@ -82,18 +84,69 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
   private def compactOrSquash(spark: SparkSession, dir: String,
       retainGens: Int, batchId: Long, what: String)(full: => Unit): Unit =
     if (retainGens > 0) {
-      val GS = graft.build.GenStore
-      val m = GS.metaOrThrow(spark, dir)
+      val m = GenStore.metaOrThrow(spark, dir)
       val h = m.gen - 1 - retainGens
-      if (h > GS.horizonOf(m)) {
-        if (m.params.contains("text"))
-          graft.text.PostingsStore.compactThrough(spark, dir, h)
-        else graft.similarity.AnnIndex.compactThrough(spark, dir, h)
+      if (h > GenStore.horizonOf(m)) {
+        GenStore.compactThrough(spark, dir, h)
         logInfo(s"IndexMaintenance $what batch $batchId: horizon-squashed " +
           s"through gen $h (retained window $retainGens)")
       } else logInfo(s"IndexMaintenance $what batch $batchId: squash " +
         s"skipped — history no deeper than the $retainGens-gen window")
     } else full
+
+  /** The maintenance loop every maintained store shares: each
+    * micro-batch of `srcDir` first adopts a crash-interrupted staged
+    * compact ([[GenStore.recover]]), then
+    *  - BUILDS against a missing store — decided by the `_INDEX_META`
+    *    completion marker the build writes LAST, so a crash mid-build
+    *    replays as a build (which deletes the partial tree), never as an
+    *    append onto missing state;
+    *  - SKIPS a batch already recorded in the meta (the checkpoint
+    *    commits after the meta, so a recorded batch is fully applied);
+    *  - otherwise APPENDS (a crash between the gen-dir write and the
+    *    meta update replays into the SAME reserved generation directory
+    *    with overwrite semantics — file-idempotent), and once the O(1)
+    *    staleness counters reach `compactAt > 0`, compacts in-stream:
+    *    a staged rebuild over the source as present NOW minus the
+    *    store's retired keys, stamped with this batch id so a post-swap
+    *    crash replays as a skip. The snapshot may cover batches the
+    *    checkpoint has not delivered (they re-append later as `newIds`
+    *    duplicates), so `compact` must stamp upserts-possible-and-
+    *    untrusted IN ITS OWN meta (`appendOnly = false`), atomic under
+    *    the staged swap — a separate post-swap flag write would leave a
+    *    crash window where a replay sees the batch recorded, skips, and
+    *    the flag never lands. `retainGens > 0` squashes instead
+    *    ([[compactOrSquash]]). */
+  private def maintain(spark: SparkSession, srcDir: String, storeDir: String,
+      checkpointDir: String, idCol: String, what: String, compactAt: Double,
+      retainGens: Int)(build: (DataFrame, Long) => Unit,
+      append: (DataFrame, Long) => Unit,
+      compact: (DataFrame, Long) => Unit): StreamingQuery = {
+    val schema = spark.read.parquet(srcDir).schema
+    spark.readStream.schema(schema).parquet(srcDir).writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (GenStore.recover(spark, storeDir))
+          logInfo(s"IndexMaintenance $what batch $batchId: adopted staged compact")
+        if (!GenStore.isComplete(spark, storeDir)) {
+          build(batch, batchId)
+          logInfo(s"IndexMaintenance $what batch $batchId: build")
+        } else if (batchId <= GenStore.lastAppliedBatch(spark, storeDir)) {
+          logInfo(s"IndexMaintenance $what batch $batchId: replay, skipped")
+        } else {
+          append(batch, batchId)
+          logInfo(s"IndexMaintenance $what batch $batchId: append")
+          if (compactAt > 0 && GenStore.staleness(spark, storeDir) >= compactAt)
+            compactOrSquash(spark, storeDir, retainGens, batchId, what) {
+              compact(compactCorpus(spark, srcDir, idCol,
+                GenStore.retiredIds(spark, storeDir)), batchId)
+              logInfo(s"IndexMaintenance $what batch $batchId: compacted (staged)")
+            }
+        }
+      }
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+  }
 
   def runAvailableNow(
       spark: SparkSession,
@@ -123,7 +176,7 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     * The first batch against a missing index trains and builds it.
     *
     * Exactly-once composition, crash case by crash case:
-    *  - build-vs-append is decided by `AnnIndex.isComplete` — the
+    *  - build-vs-append is decided by `GenStore.isComplete` — the
     *    `_INDEX_META` completion marker buildIvf writes LAST — so a
     *    crash between the centroid and assignment writes replays as a
     *    BUILD (which deletes the partial tree first), never as an
@@ -140,7 +193,7 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     * conservatively routes readers through upsert resolution.
     *
     * `compactAt > 0` closes the lifecycle in-stream: after an append
-    * pushes [[graft.similarity.AnnIndex.staleness]] (the append-row
+    * pushes [[GenStore.staleness]] (the append-row
     * fraction — O(1) from the meta's row counters since r17, so the
     * per-batch decision never scans the index) past the threshold, the
     * index is retrained and rewritten
@@ -150,7 +203,7 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     * STAGED (`AnnIndex.compactIvf` builds beside the index and swaps):
     * a crash mid-rebuild leaves the old index intact and its batch
     * bookkeeping replays the trigger batch as a skip; the swap's
-    * delete→rename gap is adopted by `AnnIndex.recover`, which runs at
+    * delete→rename gap is adopted by `GenStore.recover`, which runs at
     * the top of every micro-batch. Because the vecDir snapshot may
     * include files of batches the checkpoint has not yet delivered —
     * which will later re-append as duplicate content — an in-stream
@@ -169,47 +222,14 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
       nlist: Int = 16,
       assumeNewIds: Boolean = false,
       compactAt: Double = 0.0,
-      retainGens: Int = 0): StreamingQuery = {
-    val schema = spark.read.parquet(vecDir).schema
-    val stream = spark.readStream.schema(schema).parquet(vecDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val AI = graft.similarity.AnnIndex
-        if (AI.recover(spark, indexDir))
-          logInfo(s"IndexMaintenance IVF batch $batchId: adopted staged compact")
-        if (!AI.isComplete(spark, indexDir)) {
-          AI.buildIvf(batch, indexDir, idCol, vecCol, nlist, batchId = batchId)
-          logInfo(s"IndexMaintenance IVF batch $batchId: build")
-        } else if (batchId <= AI.lastAppliedBatch(spark, indexDir)) {
-          logInfo(s"IndexMaintenance IVF batch $batchId: replay, skipped")
-        } else {
-          AI.appendIvf(batch, indexDir, idCol, vecCol,
-            newIds = assumeNewIds, batchId = batchId)
-          logInfo(s"IndexMaintenance IVF batch $batchId: append")
-          if (compactAt > 0 && AI.staleness(spark, indexDir) >= compactAt) {
-            // staged rebuild over the corpus as present NOW, stamped
-            // with this batchId so a post-swap crash replays as a skip.
-            // The snapshot may cover undelivered batches (they'll
-            // re-append later as `newIds` duplicates), so the compact
-            // stamps upserts-possible-and-untrusted IN ITS OWN meta
-            // (`appendOnly = false`), atomic under the staged swap —
-            // the reduce view collapses the content-identical
-            // duplicates. A separate post-swap flag write would leave
-            // a crash window where a replay sees the batch recorded,
-            // skips, and the flag never lands (the r15 advisor hole).
-            compactOrSquash(spark, indexDir, retainGens, batchId, "IVF") {
-              AI.compactIvf(compactCorpus(spark, vecDir, idCol,
-                AI.retiredIds(spark, indexDir)), indexDir,
-                idCol, vecCol, nlist, batchId = batchId, appendOnly = false)
-              logInfo(s"IndexMaintenance IVF batch $batchId: compacted (staged)")
-            }
-          }
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      retainGens: Int = 0): StreamingQuery =
+    maintain(spark, vecDir, indexDir, checkpointDir, idCol, "IVF", compactAt,
+        retainGens)(
+      (b, id) => AnnIndex.buildIvf(b, indexDir, idCol, vecCol, nlist, batchId = id),
+      (b, id) => AnnIndex.appendIvf(b, indexDir, idCol, vecCol,
+        newIds = assumeNewIds, batchId = id),
+      (c, id) => AnnIndex.compactIvf(c, indexDir, idCol, vecCol, nlist,
+        batchId = id, appendOnly = false))
 
   /** Streaming maintenance of the CODE-CARRYING IVF-PQ index — the
     * storage-bounded twin of [[runIvfAvailableNow]] (FAISS IVFADC:
@@ -238,39 +258,15 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
       nCent: Int = 16,
       assumeNewIds: Boolean = false,
       compactAt: Double = 0.0,
-      retainGens: Int = 0): StreamingQuery = {
-    val schema = spark.read.parquet(vecDir).schema
-    val stream = spark.readStream.schema(schema).parquet(vecDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val AI = graft.similarity.AnnIndex
-        if (AI.recover(spark, indexDir))
-          logInfo(s"IndexMaintenance IVF-PQ batch $batchId: adopted staged compact")
-        if (!AI.isComplete(spark, indexDir)) {
-          AI.buildIvfPq(batch, indexDir, idCol, vecCol, nlist, nSub, subDim,
-            nCent, batchId = batchId)
-          logInfo(s"IndexMaintenance IVF-PQ batch $batchId: build")
-        } else if (batchId <= AI.lastAppliedBatch(spark, indexDir)) {
-          logInfo(s"IndexMaintenance IVF-PQ batch $batchId: replay, skipped")
-        } else {
-          AI.appendIvfPq(batch, indexDir, idCol, vecCol,
-            newIds = assumeNewIds, batchId = batchId)
-          logInfo(s"IndexMaintenance IVF-PQ batch $batchId: append")
-          if (compactAt > 0 && AI.staleness(spark, indexDir) >= compactAt) {
-            compactOrSquash(spark, indexDir, retainGens, batchId, "IVF-PQ") {
-              AI.compactIvfPq(compactCorpus(spark, vecDir, idCol,
-                AI.retiredIds(spark, indexDir)), indexDir,
-                idCol, vecCol, nlist, nSub, subDim, nCent,
-                batchId = batchId, appendOnly = false)
-              logInfo(s"IndexMaintenance IVF-PQ batch $batchId: compacted (staged)")
-            }
-          }
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      retainGens: Int = 0): StreamingQuery =
+    maintain(spark, vecDir, indexDir, checkpointDir, idCol, "IVF-PQ", compactAt,
+        retainGens)(
+      (b, id) => AnnIndex.buildIvfPq(b, indexDir, idCol, vecCol, nlist, nSub,
+        subDim, nCent, batchId = id),
+      (b, id) => AnnIndex.appendIvfPq(b, indexDir, idCol, vecCol,
+        newIds = assumeNewIds, batchId = id),
+      (c, id) => AnnIndex.compactIvfPq(c, indexDir, idCol, vecCol, nlist, nSub,
+        subDim, nCent, batchId = id, appendOnly = false))
 
   /** Streaming maintenance of the POINT-FETCH VECTOR STORE — the r17
     * twin completing the set: every persisted structure (postings,
@@ -298,37 +294,14 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
       vecCol: String = "embedding",
       assumeNewIds: Boolean = false,
       compactAt: Double = 0.0,
-      retainGens: Int = 0): StreamingQuery = {
-    val schema = spark.read.parquet(vecDir).schema
-    val stream = spark.readStream.schema(schema).parquet(vecDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val AI = graft.similarity.AnnIndex
-        if (AI.recover(spark, storeDir))
-          logInfo(s"IndexMaintenance vecs batch $batchId: adopted staged compact")
-        if (!AI.isComplete(spark, storeDir)) {
-          AI.buildVecs(batch, storeDir, idCol, vecCol, batchId = batchId)
-          logInfo(s"IndexMaintenance vecs batch $batchId: build")
-        } else if (batchId <= AI.lastAppliedBatch(spark, storeDir)) {
-          logInfo(s"IndexMaintenance vecs batch $batchId: replay, skipped")
-        } else {
-          AI.appendVecs(batch, storeDir, idCol, vecCol,
-            newIds = assumeNewIds, batchId = batchId)
-          logInfo(s"IndexMaintenance vecs batch $batchId: append")
-          if (compactAt > 0 && AI.staleness(spark, storeDir) >= compactAt) {
-            compactOrSquash(spark, storeDir, retainGens, batchId, "vecs") {
-              AI.compactVecs(compactCorpus(spark, vecDir, idCol,
-                AI.retiredIds(spark, storeDir)), storeDir,
-                idCol, vecCol, batchId = batchId, appendOnly = false)
-              logInfo(s"IndexMaintenance vecs batch $batchId: compacted (staged)")
-            }
-          }
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      retainGens: Int = 0): StreamingQuery =
+    maintain(spark, vecDir, storeDir, checkpointDir, idCol, "vecs", compactAt,
+        retainGens)(
+      (b, id) => AnnIndex.buildVecs(b, storeDir, idCol, vecCol, batchId = id),
+      (b, id) => AnnIndex.appendVecs(b, storeDir, idCol, vecCol,
+        newIds = assumeNewIds, batchId = id),
+      (c, id) => AnnIndex.compactVecs(c, storeDir, idCol, vecCol,
+        batchId = id, appendOnly = false))
 
   /** Streaming maintenance of the TEXT POSTINGS STORE — the r18 twin
     * completing the set again after `PostingsStore` brought the text
@@ -356,36 +329,14 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
       assumeNewIds: Boolean = false,
       compactAt: Double = 0.0,
       retainGens: Int = 0): StreamingQuery = {
-    val PS = graft.text.PostingsStore
     val fields = Seq("text" -> textCol)
-    val schema = spark.read.parquet(docsDir).schema
-    val stream = spark.readStream.schema(schema).parquet(docsDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (PS.recover(spark, storeDir))
-          logInfo(s"IndexMaintenance text batch $batchId: adopted staged compact")
-        if (!PS.isComplete(spark, storeDir)) {
-          PS.build(batch, storeDir, idCol, fields, batchId = batchId)
-          logInfo(s"IndexMaintenance text batch $batchId: build")
-        } else if (batchId <= PS.lastAppliedBatch(spark, storeDir)) {
-          logInfo(s"IndexMaintenance text batch $batchId: replay, skipped")
-        } else {
-          PS.append(batch, storeDir, idCol, fields,
-            newIds = assumeNewIds, batchId = batchId)
-          logInfo(s"IndexMaintenance text batch $batchId: append")
-          if (compactAt > 0 && PS.staleness(spark, storeDir) >= compactAt) {
-            compactOrSquash(spark, storeDir, retainGens, batchId, "text") {
-              PS.compact(compactCorpus(spark, docsDir, idCol,
-                PS.retiredIds(spark, storeDir)), storeDir, idCol,
-                fields, batchId = batchId, appendOnly = false)
-              logInfo(s"IndexMaintenance text batch $batchId: compacted (staged)")
-            }
-          }
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    maintain(spark, docsDir, storeDir, checkpointDir, idCol, "text", compactAt,
+        retainGens)(
+      (b, id) => PostingsStore.build(b, storeDir, idCol, fields, batchId = id),
+      (b, id) => PostingsStore.append(b, storeDir, idCol, fields,
+        newIds = assumeNewIds, batchId = id),
+      (c, id) => PostingsStore.compact(c, storeDir, idCol, fields,
+        batchId = id, appendOnly = false))
   }
 
   /** Streaming maintenance of the BANDED (sign-LSH) ANN index — the
@@ -405,8 +356,8 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     * compact is adopted by `recover` at the top of every batch).
     * Append generations size their file fan-out to the batch, so a
     * micro-batch writes one file — `compactAt > 0` then bounds the
-    * long-run generation/file count via [[graft.similarity.AnnIndex
-    * .bandedStaleness]] + `compactBanded` (banded rows never drift
+    * long-run generation/file count via [[GenStore.staleness]] +
+    * `compactBanded` (banded rows never drift
     * geometrically — planes are seed-fixed — so the pressure compacted
     * away here is append fan-out and upsert-history read cost, not
     * recall). An in-stream compact marks the result
@@ -424,48 +375,22 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
       seed: Long = 42L,
       assumeNewIds: Boolean = false,
       compactAt: Double = 0.0,
-      retainGens: Int = 0): StreamingQuery = {
-    val schema = spark.read.parquet(vecDir).schema
-    val stream = spark.readStream.schema(schema).parquet(vecDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val AI = graft.similarity.AnnIndex
-        if (AI.recover(spark, indexDir))
-          logInfo(s"IndexMaintenance banded batch $batchId: adopted staged compact")
-        if (!AI.isComplete(spark, indexDir)) {
-          AI.buildBanded(batch, indexDir, idCol, vecCol, nPlanes, bands, seed,
-            batchId = batchId)
-          logInfo(s"IndexMaintenance banded batch $batchId: build")
-        } else if (batchId <= AI.lastAppliedBatch(spark, indexDir)) {
-          logInfo(s"IndexMaintenance banded batch $batchId: replay, skipped")
-        } else {
-          AI.appendBanded(batch, indexDir, idCol, vecCol, nPlanes, bands, seed,
-            newIds = assumeNewIds, batchId = batchId)
-          logInfo(s"IndexMaintenance banded batch $batchId: append")
-          if (compactAt > 0 && AI.bandedStaleness(spark, indexDir) >= compactAt) {
-            compactOrSquash(spark, indexDir, retainGens, batchId, "banded") {
-              AI.compactBanded(compactCorpus(spark, vecDir, idCol,
-                AI.retiredIds(spark, indexDir)), indexDir,
-                idCol, vecCol, nPlanes, bands, seed, batchId = batchId,
-                appendOnly = false)
-              logInfo(s"IndexMaintenance banded batch $batchId: compacted (staged)")
-            }
-          }
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      retainGens: Int = 0): StreamingQuery =
+    maintain(spark, vecDir, indexDir, checkpointDir, idCol, "banded", compactAt,
+        retainGens)(
+      (b, id) => AnnIndex.buildBanded(b, indexDir, idCol, vecCol, nPlanes,
+        bands, seed, batchId = id),
+      (b, id) => AnnIndex.appendBanded(b, indexDir, idCol, vecCol, nPlanes,
+        bands, seed, newIds = assumeNewIds, batchId = id),
+      (c, id) => AnnIndex.compactBanded(c, indexDir, idCol, vecCol, nPlanes,
+        bands, seed, batchId = id, appendOnly = false))
 
   /** Streaming TAKEDOWN maintenance — the deletes twin completing the
     * lifecycle's last CRUD verb (r19): a deletes directory (files of id
     * rows — an opt-out/GDPR feed) streams in, and each micro-batch
     * retires its ids from the target store incrementally
-    * ([[graft.text.PostingsStore.delete]] for text stores,
-    * [[graft.similarity.AnnIndex.delete]] for the four vector
-    * structures — dispatched on the store's own meta, tombstone
-    * encodings per structure). The replay guard is the feed's OWN
+    * ([[GenStore.delete]]: the store's own meta names its descriptor,
+    * which names its tombstone encoding). The replay guard is the feed's OWN
     * sibling marker, not the store meta's batch field — that clock
     * belongs to the ingest maintenance stream, and two independent
     * streams sharing it would silently skip each other's batches (see
@@ -502,25 +427,19 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     val conf = spark.sparkContext.hadoopConfiguration
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val GS = graft.build.GenStore
-        if (GS.recover(spark, storeDir))
+        if (GenStore.recover(spark, storeDir))
           logInfo(s"IndexMaintenance deletes batch $batchId: adopted staged compact")
-        val meta = GS.readMeta(spark, storeDir).getOrElse(
+        if (!GenStore.isComplete(spark, storeDir))
           throw new IllegalStateException(
             s"deletes stream against a missing/partial store at $storeDir: " +
-              "build the store first — a takedown must never be silently dropped"))
+              "build the store first — a takedown must never be silently dropped")
         val applied = graft.build.MetaIO.read(conf, marker)
           .flatMap(_.toLongOption).getOrElse(-1L)
         if (batchId <= applied) {
           logInfo(s"IndexMaintenance deletes batch $batchId: replay, skipped")
         } else {
-          if (meta.params.contains("text")) {
-            graft.text.PostingsStore.delete(batch, storeDir, idCol)
-            logInfo(s"IndexMaintenance deletes batch $batchId: text takedown")
-          } else {
-            graft.similarity.AnnIndex.delete(batch, storeDir, idCol)
-            logInfo(s"IndexMaintenance deletes batch $batchId: vector takedown")
-          }
+          GenStore.delete(batch, storeDir, Some(idCol))
+          logInfo(s"IndexMaintenance deletes batch $batchId: takedown")
           graft.build.MetaIO.write(conf, marker, batchId.toString)
         }
       }

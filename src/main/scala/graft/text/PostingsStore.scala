@@ -1,7 +1,6 @@
 package graft.text
 
-import graft.build.GenStore
-import org.apache.hadoop.fs.Path
+import graft.build.{GenStore, GenTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,7 +25,7 @@ import org.apache.spark.sql.functions._
   * postings rows are per-(field, term, doc), and tokenization under the
   * fixed analyzer is a pure per-document function — the banded table's
   * argument. RE-INGESTED documents resolve at the DOCUMENT level (the
-  * multi-row [[GenStore.keyedLiveView]], key = doc_id): every postings
+  * multi-row [[GenStore.liveView]], key = doc_id): every postings
   * row of the doc's latest generation wins, so a term the new version
   * DROPPED disappears (its row simply doesn't exist in the winning
   * generation — no tombstones needed). Documents whose re-ingest has NO
@@ -35,7 +34,9 @@ import org.apache.spark.sql.functions._
   * supersession — without it an emptied doc would vanish from the
   * upsert-id set and its stale rows would survive the anti-join. The
   * sentinel never matches a query term (the analyzer drops empties) and
-  * [[live]] filters it out after resolution.
+  * [[live]] filters it out after resolution. The store is the
+  * [[graft.build.GenTable.Postings]] descriptor (with its norms sidecar)
+  * plus this kernel: tokenization, the sentinels and the readers.
   *
   * PHYSICAL LAYOUT: each generation's rows are range-clustered by
   * (field, term) with (field, term, doc_id)-sorted row groups, so a
@@ -72,8 +73,7 @@ import org.apache.spark.sql.functions._
   */
 object PostingsStore {
 
-  private def dataPath(dir: String) = s"$dir/data"
-  private def normsPath(dir: String) = s"$dir/norms"
+  import GenTable.{Norms, Postings}
 
   /** Analyzer/layout epoch persisted in the meta: bump when the
     * tokenizer or row schema changes, so appends under a different
@@ -89,15 +89,6 @@ object PostingsStore {
   private[graft] def fieldsKey(fields: Seq[(String, String)]): String =
     fields.map { case (n, c) => s"$n:$c" }.mkString(",")
 
-  private def parseFieldsKey(key: String): Seq[(String, String)] =
-    key.split(',').toSeq.map { kv =>
-      kv.split(':') match {
-        case Array(n, c) => (n, c)
-        case _ => throw new IllegalStateException(
-          s"unparseable pfields entry '$kv' in postings meta")
-      }
-    }
-
   /** One coherent (doc_id, columns...) row per doc id — the
     * at-least-once batch surface, same deterministic whole-struct pick
     * as the vector appends. `dedup = false` skips the shuffle for
@@ -111,240 +102,65 @@ object PostingsStore {
       .select(col("doc_id") +: cols.map(c => col(s"m.$c").as(c)): _*)
   }
 
-  /** The batch's postings rows + the empty-doc sentinels (class doc). */
+  /** The batch's postings rows + the empty-doc sentinels (class doc) —
+    * the descriptor's tombstone row, one per doc without tokens. */
   private def postingsRows(docs: DataFrame,
       fields: Seq[(String, String)]): DataFrame = {
     val p = TextIndex.buildFieldedPostings(docs, "doc_id", fields)
     val sentinels = docs.select(col("doc_id"))
       .join(p.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      .select(lit("").as("term"), col("doc_id"), lit(0L).as("tf"),
-        typedLit(Seq.empty[Int]).as("positions"), lit("").as("field"))
+      .select(col("doc_id") +: Postings.tombRow.map { case (c, v) => v.as(c) }.toSeq: _*)
     p.unionByName(sentinels)
   }
 
-  /** Rows-per-file scaling for append generations (the banded writer's
-    * discipline): a micro-batch of docs lands in few files, a corpus
-    * build fans out to the session width. Postings rows per doc vary,
-    * so the proxy is docs-per-file. */
-  private val AppendDocsPerFile = 256L
-
-  /** Write one generation's postings + norms sidecar. Returns
-    * (servingRows, sentinelRows): the staleness counters track only
-    * SERVING rows (what [[live]] returns — the GenStore sentinel
-    * contract), while sentinel rows accumulate in the meta's `sent`
-    * param, whose 0 is what licenses the flat fast path. */
-  private def writeGen(rows: DataFrame, dir: String, gen: Long,
-      estDocs: Long = -1L): (Long, Long) = {
-    val s = rows.sparkSession
-    val width = s.sessionState.conf.numShufflePartitions
-    // explicit partition count: an AQE-coalesced range shuffle would
-    // collapse small generations into one wide-range file and erase the
-    // min-max selectivity term probes prune against
-    val parts =
-      if (estDocs < 0) width
-      else math.max(1L, math.min(width.toLong,
-        (estDocs + AppendDocsPerFile - 1) / AppendDocsPerFile)).toInt
-    val out = s"${dataPath(dir)}/gen=$gen"
-    rows
-      .repartitionByRange(parts, col("field"), col("term"))
-      .sortWithinPartitions("field", "term", "doc_id")
-      .write.mode("overwrite").parquet(out)
-    // the NORMS SIDECAR (Lucene's norms file): per-gen (doc_id, dl)
-    // document lengths, derived from the generation JUST WRITTEN (a
-    // footer-friendly re-read — never a recompute of the tokenize
-    // subtree), so scored retrieval reads a tiny one-row-per-doc table
-    // instead of re-aggregating every postings row per query. Sentinel
-    // rows contribute dl = 0, keeping emptied docs present for
-    // supersession in the norms view too. Derived data: norms rows ride
-    // the generation but never enter the staleness counters.
-    val written =
-      try s.read.parquet(out) catch {
-        case _: org.apache.spark.sql.AnalysisException => null
-      }
-    if (written == null) (0L, 0L)
-    else {
-      written.groupBy("doc_id").agg(sum("tf").as("dl"))
-        .repartitionByRange(parts, col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(s"${normsPath(dir)}/gen=$gen")
-      // one footer-friendly pass splits serving rows from sentinels:
-      // counters must match what live() serves (sentinels are
-      // supersession machinery, not rows — the r18 advisor's finding:
-      // counting them made staleness deviate from the documented exact
-      // live append-row fraction on batches with emptied docs)
-      val r = written.agg(
-        coalesce(sum(when(col("term") =!= "", 1L)), lit(0L)),
-        coalesce(sum(when(col("term") === "", 1L)), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-  }
-
-  /** Build the postings store from a corpus: gen 0, meta LAST
-    * (completion marker — the [[GenStore]] protocol, crash cases
+  /** Build the postings store from a corpus: gen 0 (postings + norms
+    * sidecar), meta LAST (the [[GenStore.build]] protocol, crash cases
     * included). A stream-invoked build (`batchId >= 0`) dedups
-    * duplicate-id first batches like every other structure. */
+    * duplicate-id first batches like every other structure. "norms"
+    * marks a store whose every generation carries the sidecar (stores
+    * from before it fall back to the aggregate). */
   def build(docs: DataFrame, dir: String,
       idCol: String = "doc_id",
       fields: Seq[(String, String)] = Seq("text" -> "text"),
       batchId: Long = -1L, appendOnly: Boolean = true): Unit = {
     require(fields.nonEmpty, "at least one (fieldName, column) pair")
-    val s = docs.sparkSession
-    val p = new Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    val one = normalized(docs, idCol, fields, dedup = batchId >= 0)
-    val (n0, s0) = writeGen(postingsRows(one, fields), dir, 0L)
-    GenStore.writeMeta(s, dir, GenStore.Meta(gen = 1L, appendOnly = appendOnly,
-      batch = batchId, trusted = appendOnly, baseRows = n0, appendRows = 0L,
-      // "norms" marks a store whose every generation carries the
-      // sidecar (stores from before it fall back to the aggregate);
-      // "sent" is the cumulative sentinel-row count — 0 licenses the
-      // flat fast path (no sentinel filter needed)
-      params = Map("text" -> "1", "tok" -> TokenizerEpoch.toString,
-        "norms" -> "1", "sent" -> s0.toString,
-        "pfields" -> fieldsKey(fields))))
+    GenStore.build(docs.sparkSession, Postings, dir, batchId, appendOnly,
+      Map("text" -> "1", "tok" -> TokenizerEpoch.toString, "norms" -> "1",
+        "pfields" -> fieldsKey(fields)))(
+      postingsRows(normalized(docs, idCol, fields, dedup = batchId >= 0), fields))
   }
 
   /** Tokenize ONLY the delta batch under the persisted analyzer epoch
     * and write its postings into the next `gen=N` directory —
-    * O(|delta|). `newIds`/replay/counter semantics exactly as the
-    * vector appends (undeclared appends pay the exact dead-row count;
-    * declared ones pay nothing). */
+    * O(|delta|) ([[GenStore.append]]: undeclared appends pay the exact
+    * dead-row count; declared ones pay nothing). The normalized delta
+    * is cached: it feeds the fan-out count, the dead-row semi-join and
+    * the tokenize — one dedup shuffle, not one per consumer. */
   def append(delta: DataFrame, dir: String,
       idCol: String = "doc_id",
       fields: Seq[(String, String)] = Seq("text" -> "text"),
       newIds: Boolean = false, batchId: Long = -1L): Unit = {
-    val s = delta.sparkSession
-    val (gen, next, prev) = GenStore.reserveGen(s, dir, newIds, batchId)
-    requireText(next, dir)
-    GenStore.requireParam(next, dir, "tok", TokenizerEpoch)
-    if (!next.params.get("pfields").contains(fieldsKey(fields)))
-      throw new IllegalArgumentException(
-        s"postings store at $dir was built with fields " +
-          s"${next.params.getOrElse("pfields", "<none>")}, caller passed " +
-          s"${fieldsKey(fields)} — fields are fixed at build time; " +
-          "compact/rebuild to change them")
-    // cached: the normalized delta feeds three delta-scale consumers
-    // (the fan-out count, the dead-row semi-join, the tokenize) — one
-    // dedup shuffle, not one per consumer
     val one = normalized(delta, idCol, fields, dedup = true).cache()
-    try {
-      val nDocs = one.count()
-      val dead =
-        if (prev.baseRows >= 0 && GenStore.needsDeadCount(prev, newIds))
-          GenStore.deadCounts(raw(s, dir, prev.gen), "doc_id", one,
-            weight = when(col("term") === "", 0L).otherwise(1L),
-            baseGen = GenStore.horizonOf(prev))
-        else (0L, 0L)
-      val (na, sa) = writeGen(postingsRows(one, fields), dir, gen, estDocs = nDocs)
-      val sent = next.params.get("sent").flatMap(_.toLongOption)
-        .map(p => Map("sent" -> (p + sa).toString)).getOrElse(Map.empty)
-      GenStore.writeMeta(s, dir, GenStore.appendCounters(next, na, dead)
-        .copy(params = next.params ++ sent))
+    try GenStore.append(delta.sparkSession, dir, newIds, batchId) { m =>
+      GenStore.requireKind(m, dir, Postings)
+      GenStore.requireParam(m, dir, "tok", TokenizerEpoch)
+      if (!m.params.get("pfields").contains(fieldsKey(fields)))
+        throw new IllegalArgumentException(
+          s"postings store at $dir was built with fields " +
+            s"${m.params.getOrElse("pfields", "<none>")}, caller passed " +
+            s"${fieldsKey(fields)} — fields are fixed at build time; " +
+            "compact/rebuild to change them")
+      (one, postingsRows(one, fields), one.count())
     } finally one.unpersist()
   }
 
-  /** TAKEDOWN: retire `ids` from search incrementally — the GenStore
-    * delete verb (a GDPR/opt-out batch must not force a corpus
-    * compact). A delete IS an empty re-ingest: one generation of
-    * sentinel rows for the deleted docs (plus dl = 0 norms), appended
-    * UNDECLARED so every read regime resolves the docs to their
-    * tokenless latest generation and drops them after resolution — the
-    * exact mechanism an emptied re-crawl already used, exposed as the
-    * verb. Counters stay exact (sentinels weigh 0: the docs' live rows
-    * move out, nothing moves in); compact from the corpus-minus-
-    * takedowns drops the tombstone generations. Re-ingesting a deleted
-    * doc later must be an undeclared append (GenStore class doc). */
+  /** TAKEDOWN ([[GenStore.delete]]): one generation of sentinel rows
+    * (plus dl = 0 norms) for the deleted docs — exactly what an emptied
+    * re-crawl writes. Re-ingesting a deleted doc later must be an
+    * undeclared append (GenStore class doc). */
   def delete(ids: DataFrame, dir: String, idCol: String = "doc_id",
-      batchId: Long = -1L): Unit = {
-    val s = ids.sparkSession
-    val meta = GenStore.metaOrThrow(s, dir)
-    requireText(meta, dir)
-    val fields = parseFieldsKey(meta.params.getOrElse("pfields",
-      throw new IllegalStateException(
-        s"postings store at $dir has no persisted pfields (pre-params " +
-          "legacy tree): rebuild it before deleting")))
-    val empties = ids.select(col(idCol)).distinct()
-      .select(col(idCol) +:
-        fields.map(_._2).distinct.map(c => lit("").as(c)): _*)
-    append(empties, dir, idCol, fields, newIds = false, batchId = batchId)
-  }
-
-  /** HORIZON compact: squash generations ≤ `h` into ONE resolved base
-    * generation at clock `h`, keeping every later generation
-    * byte-identical — the retention-window compact ([[GenStore]] class
-    * doc). A full [[compact]] reclaims the history's read/storage cost
-    * by discarding it (the gen clock resets, as-of reads of the old
-    * history are gone); this one reclaims the SAME cost for the prefix
-    * while `asOf(n ≥ h)` keeps reproducing exactly — "compact
-    * yesterday's history, keep this week's reproducible". The squashed
-    * base is the prefix's RESOLVED state: doc-level latest-gen rows,
-    * retired docs (sentinel-only live state) dropped from the base —
-    * their sentinels existed to supersede older generations that no
-    * longer exist — and RECORDED in the retired sidecar
-    * ([[GenStore.retiredPath]]): the sentinel was also the durable
-    * takedown record, and [[retiredIds]] must keep excluding those
-    * docs from future full in-stream compacts or the source directory
-    * (which still physically holds them) would resurrect them. Needs
-    * no source corpus (it squashes the store's own rows —
-    * unlike [[compact]] it never re-tokenizes) and runs under the same
-    * staged-swap/recover crash protocol. `asOf(n < h)` reads THROW
-    * afterwards (meta `horizon` marker) — never a silent approximation.
-    * Squashing the whole history (`h = last gen`) additionally restores
-    * an UNTRUSTED store to trusted plain reads, like a full compact,
-    * with the clock preserved. */
-  def compactThrough(s: SparkSession, dir: String, h: Long): Unit = {
-    val full = GenStore.metaOrThrow(s, dir)
-    requireText(full, dir)
-    val h0 = GenStore.horizonOf(full)
-    require(h >= h0 && h < full.gen,
-      s"horizon $h outside [$h0, ${full.gen - 1}] for the store at $dir " +
-        "(below the existing horizon the history is already squashed)")
-    GenStore.stagedCompact(s, dir) { tmp =>
-      // stage: byte-copy the tree (tail gens + norms), strip the copied
-      // meta and the squashed prefix's gen dirs, then write the
-      // resolved base at gen=h (writeGen lays down data AND norms)
-      GenStore.horizonStage(s, dir, tmp, h, Seq("data", "norms"))
-      val prefix = GenStore.asOf(full, h)
-      val resolved = GenStore
-        .keyedLiveView(prefix, raw(s, dir, prefix.gen), "doc_id",
-          identity, resolveAll = true)
-      val serving = resolved.filter(col("term") =!= "")
-        .select("field", "term", "doc_id", "tf", "positions")
-      writeGen(serving, tmp, h): Unit
-      // RECORD the keys the squash is about to drop (docs whose
-      // resolved prefix state is the sentinel — retired takedowns):
-      // without the sidecar the next full in-stream compact would
-      // rebuild from the source dir with an empty retired set and
-      // RESURRECT them (GenStore.retiredPath doc)
-      val prevRetired = GenStore.readRetired(s, dir, "doc_id")
-      if (prevRetired.isDefined || full.params.get("sent").exists(_ != "0")) {
-        val dropped = resolved.filter(col("term") === "")
-          .select("doc_id").distinct()
-        GenStore.writeRetired(
-          prevRetired.fold(dropped)(_.unionByName(dropped)), tmp)
-      }
-      // recount over the staged tree: counters are LIVE serving rows
-      // split at the new base gen; `sent` is the sentinel rows that
-      // still physically exist (tail generations only — the squash
-      // writes none), whose 0 relicenses the flat fast path
-      val rawNew = s.read.parquet(dataPath(tmp))
-        .filter(col("gen") < full.gen)
-        .select(col("doc_id"), col("term"),
-          col("gen").cast("long").as("gen"))
-      val sent = rawNew.filter(col("term") === "").count()
-      val m1 = GenStore.horizonMeta(full, h)
-      val r = GenStore
-        .keyedLiveView(m1, rawNew, "doc_id",
-          df => df.filter(col("term") =!= ""), resolveAll = true)
-        .agg(
-          coalesce(sum(when(col("gen") === h, 1L)), lit(0L)),
-          coalesce(sum(when(col("gen") > h, 1L)), lit(0L))).head()
-      GenStore.writeMeta(s, tmp, m1.copy(
-        baseRows = r.getLong(0), appendRows = r.getLong(1),
-        params = m1.params + ("sent" -> sent.toString)))
-    }
-  }
+      batchId: Long = -1L): Unit =
+    GenStore.delete(ids, dir, Some(idCol), batchId)
 
   /** Re-tokenize the current corpus and rewrite at gen 0 under the
     * shared staged-swap/recover protocol — the compaction step once
@@ -356,130 +172,48 @@ object PostingsStore {
     GenStore.stagedCompact(docs.sparkSession, dir)(tmp =>
       build(docs, tmp, idCol, fields, batchId, appendOnly))
 
-  private def requireText(m: GenStore.Meta, dir: String): Unit =
-    if (!m.params.contains("text")) throw new IllegalArgumentException(
-      s"tree at $dir is not a postings store (no text marker in its " +
-        "meta): build it with PostingsStore.build")
-
-  private def raw(s: SparkSession, dir: String, committedGen: Long): DataFrame =
-    s.read.parquet(dataPath(dir))
-      .filter(col("gen") < committedGen)
-      .select(col("field"), col("term"), col("doc_id"), col("tf"),
-        col("positions"), col("gen").cast("long").as("gen"))
-
   /** The LIVE postings (field, term, doc_id, tf, positions): document-
-    * level latest-generation resolution through the shared
-    * [[GenStore.keyedLiveView]] — plain read on append-only histories
-    * (term/field probe filters push into the range-clustered scan) /
-    * BOUNDED resolution over the recorded upsert generations / full
-    * resolution, per the meta. Sentinel rows are dropped AFTER
-    * resolution (they exist only to keep emptied docs in their
-    * generation's id set). The output is drop-in for every
-    * [[TextIndex]] reader and [[QueryLang]] (which scope by `field`). */
+    * level latest-generation resolution through [[GenStore.live]] —
+    * plain read on append-only histories (term/field probe filters push
+    * into the range-clustered scan), BOUNDED resolution over the
+    * recorded upsert generations, or full resolution, per the meta;
+    * the flat write-once plan while no sentinel was ever written.
+    * Sentinel rows are dropped AFTER resolution. The output is drop-in
+    * for every [[TextIndex]] reader and [[QueryLang]] (which scope by
+    * `field`). */
   def live(s: SparkSession, dir: String,
       field: Option[String] = None, terms: Option[Seq[String]] = None,
       resolveAll: Boolean = false, asOfGen: Option[Long] = None): DataFrame = {
-    val full = GenStore.metaOrThrow(s, dir)
-    requireText(full, dir)
-    val meta = asOfGen.fold(full)(GenStore.asOf(full, _))
     def probe(df: DataFrame): DataFrame = {
       val f1 = field.fold(df)(f => df.filter(col("field") === f))
       terms.fold(f1)(ts =>
         f1.filter(col("term").isin(ts.map(_.toLowerCase): _*)))
     }
-    // FLAT FAST PATH (staleness-protocol-free): an append-only history
-    // that never wrote a sentinel serves the write-once flat plan — the
-    // commit-pointer partition filter stays (orphan gens must not
-    // leak), but the whole-history sentinel filter goes: the maintained
-    // read's residual protocol cost on a fresh or just-compacted store
-    // is zero, not "small". `sent` describes the FULL history, so an
-    // as-of read never takes it on a store whose later gens differ.
-    if (!resolveAll && asOfGen.isEmpty && meta.appendOnly &&
-        full.params.get("sent").contains("0"))
-      probe(s.read.parquet(dataPath(dir)).filter(col("gen") < meta.gen))
-        .select("field", "term", "doc_id", "tf", "positions")
-    else
-      GenStore.keyedLiveView(meta, raw(s, dir, meta.gen), "doc_id",
-          df => probe(df).filter(col("term") =!= ""), resolveAll)
-        .select("field", "term", "doc_id", "tf", "positions")
+    GenStore.live(s, dir, Postings, probe, resolveAll, asOfGen, Postings.cols, identity)
+      .select("field", "term", "doc_id", "tf", "positions")
   }
 
   /** The LIVE document norms (doc_id, doc_len) — the persisted
     * Lucene-norms-file parity: scored retrieval ([[TextIndex
     * .searchScoredWith]]) reads this tiny one-row-per-doc sidecar
-    * through the shared ONE-ROW live view instead of re-aggregating
-    * every postings row per query (measured 0.453 → the aggregate was
-    * the whole overhead of the maintained read on the BM25 shape).
-    * Emptied docs (dl = 0 sentinels) participate in resolution, then
-    * drop — exactly the old derive-from-postings semantics, where an
-    * empty doc had no rows. A store from before the sidecar (no
-    * `norms` param) falls back to aggregating the live postings. */
+    * through the ONE-ROW live view instead of re-aggregating every
+    * postings row per query (measured 0.453 → the aggregate was the
+    * whole overhead of the maintained read on the BM25 shape). Emptied
+    * docs (dl = 0 sentinels) participate in resolution, then drop —
+    * exactly the old derive-from-postings semantics, where an empty doc
+    * had no rows. A store from before the sidecar (no `norms` param)
+    * falls back to aggregating the live postings. */
   def normsLive(s: SparkSession, dir: String,
-      resolveAll: Boolean = false, asOfGen: Option[Long] = None): DataFrame = {
-    val full = GenStore.metaOrThrow(s, dir)
-    requireText(full, dir)
-    val meta = asOfGen.fold(full)(GenStore.asOf(full, _))
-    if (full.params.contains("norms")) {
-      // flat fast path, [[live]]'s twin: no sentinels ever written →
-      // no dl = 0 rows to drop, no resolution protocol to pay
-      if (!resolveAll && asOfGen.isEmpty && meta.appendOnly &&
-          full.params.get("sent").contains("0"))
-        s.read.parquet(normsPath(dir)).filter(col("gen") < meta.gen)
-          .select(col("doc_id"), col("dl").as("doc_len"))
-      else {
-        val raw = s.read.parquet(normsPath(dir))
-          .filter(col("gen") < meta.gen)
-          .select(col("doc_id"), col("dl"), col("gen").cast("long").as("gen"))
-        GenStore.liveView(meta, raw, "doc_id", Seq("dl"),
-            df => df.filter(col("dl") > 0), resolveAll)
-          .select(col("doc_id"), col("dl").as("doc_len"))
-      }
-    } else
+      resolveAll: Boolean = false, asOfGen: Option[Long] = None): DataFrame =
+    if (GenStore.metaOrThrow(s, dir).params.contains("norms"))
+      GenStore.live(s, dir, Norms, identity, resolveAll, asOfGen, Norms.cols, identity)
+        .select(col("doc_id"), col("dl").as("doc_len"))
+    else
       live(s, dir, resolveAll = resolveAll, asOfGen = asOfGen)
         .groupBy("doc_id").agg(sum("tf").as("doc_len"))
-  }
 
-  /** Fraction of LIVE postings rows that arrived by append — O(1) from
-    * the meta's exact live-row counters (the [[GenStore]] contract); a
-    * legacy counter-less meta pays a doc-level resolution scan. */
-  def staleness(s: SparkSession, dir: String): Double = {
-    val meta = GenStore.metaOrThrow(s, dir)
-    GenStore.metaStaleness(meta).getOrElse {
-      // legacy counter-less meta: derive from the live view — SERVED
-      // rows only (sentinels resolve supersession but are never live)
-      val r = GenStore.keyedLiveView(meta, raw(s, dir, meta.gen), "doc_id",
-          df => df.filter(col("term") =!= ""), resolveAll = false)
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("gen") > 0, 1L).otherwise(0L)).as("d")).head()
-      if (r.getLong(0) == 0) 0.0 else r.getLong(1).toDouble / r.getLong(0)
-    }
-  }
-
-  /** The RETIRED doc ids: docs present in the store's generations whose
-    * live state is a tombstone (their latest generation is sentinel-
-    * only) — the takedown set an in-stream compact must EXCLUDE from
-    * its source-directory rebuild, or the compact would resurrect
-    * deleted docs still physically present in the source (the
-    * maintenance loop's deletes-vs-compact hazard). One resolution
-    * scan — compact-scale callers only. */
-  def retiredIds(s: SparkSession, dir: String): DataFrame = {
-    val meta = GenStore.metaOrThrow(s, dir)
-    requireText(meta, dir)
-    // keys present in the generations but not live, UNION the retired
-    // sidecar (takedowns a horizon squash absorbed — their sentinel
-    // rows no longer exist in any generation); a re-add leaves the set
-    // because the anti-join is against the CURRENT live keys
-    val present = raw(s, dir, meta.gen).select("doc_id").distinct()
-    GenStore.readRetired(s, dir, "doc_id")
-      .fold(present)(sc => present.unionByName(sc).distinct())
-      .join(live(s, dir).select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-  }
-
-  /** [[GenStore]] protocol delegates — the streaming twin's surface. */
-  def isComplete(s: SparkSession, dir: String): Boolean =
-    GenStore.isComplete(s, dir)
-  def lastAppliedBatch(s: SparkSession, dir: String): Long =
-    GenStore.lastAppliedBatch(s, dir)
-  def recover(s: SparkSession, dir: String): Boolean =
-    GenStore.recover(s, dir)
+  /** Fraction of LIVE postings rows that arrived by append
+    * ([[GenStore.staleness]]: O(1) from the meta's exact counters). */
+  def staleness(s: SparkSession, dir: String): Double =
+    GenStore.staleness(s, dir)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.build.GenStore
 import graft.similarity.{Ann, AnnIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -56,7 +57,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(appended == rebuilt,
       s"append diverged from rebuild: ${(appended -- rebuilt).take(3)} / ${(rebuilt -- appended).take(3)}")
     // and the staleness signal reflects the delta fraction
-    val st = AnnIndex.staleness(spark, idx)
+    val st = GenStore.staleness(spark, idx)
     val frac = emb.filter(isDelta).count().toDouble / emb.count()
     assert(math.abs(st - frac) < 1e-9, s"staleness $st != delta fraction $frac")
   }
@@ -86,7 +87,7 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.buildIvf(emb.filter(!isDelta), idx, nlist = 16)
     AnnIndex.appendIvf(emb.filter(isDelta), idx)
     AnnIndex.compactIvf(emb, idx, nlist = 16)
-    assert(AnnIndex.staleness(spark, idx) == 0.0)
+    assert(GenStore.staleness(spark, idx) == 0.0)
     val q = emb.filter(col("vec_id") < 3)
     val fromIndex = topk(
       AnnIndex.ivfTopKFromIndex(spark, idx, emb, q, 5, nprobe = 8))
@@ -124,16 +125,16 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("durability: the meta marker is written last, and a partial tree reports incomplete") {
     val idx = s"$work/ivf_partial"
-    assert(!AnnIndex.isComplete(spark, idx), "missing index must report incomplete")
+    assert(!GenStore.isComplete(spark, idx), "missing index must report incomplete")
     AnnIndex.buildIvf(emb.filter(!isDelta), idx, nlist = 16)
-    assert(AnnIndex.isComplete(spark, idx))
+    assert(GenStore.isComplete(spark, idx))
     // simulate a crash between the data writes and the meta write:
     // delete the marker — the index must stop claiming completeness and
     // REFUSE appends (a partial tree rebuilds, it is never appended to)
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_INDEX_META"), false)
-    assert(!AnnIndex.isComplete(spark, idx),
+    assert(!GenStore.isComplete(spark, idx),
       "post-crash partial tree must report incomplete")
     intercept[IllegalStateException] {
       AnnIndex.appendIvf(emb.filter(isDelta), idx)
@@ -146,7 +147,7 @@ class AnnIndexSpec extends AnyFunSuite {
     }
     // and a rebuild recovers cleanly over the partial state
     AnnIndex.buildIvf(emb.filter(!isDelta), idx, nlist = 16)
-    assert(AnnIndex.isComplete(spark, idx))
+    assert(GenStore.isComplete(spark, idx))
   }
 
   test("streaming replay: a batch recorded in the meta is fully applied; a crashed append replays into the same gen") {
@@ -156,10 +157,10 @@ class AnnIndexSpec extends AnyFunSuite {
       (1L, Array(1f, 0f, 0f, 0f)), (2L, Array(0f, 1f, 0f, 0f)))
       .toDF("vec_id", "embedding")
     AnnIndex.buildIvf(base, idx, nlist = 2, lloydIters = 0, batchId = 0L)
-    assert(AnnIndex.lastAppliedBatch(spark, idx) == 0L)
+    assert(GenStore.lastAppliedBatch(spark, idx) == 0L)
     val delta = Seq((3L, Array(0f, 0f, 1f, 0f))).toDF("vec_id", "embedding")
     AnnIndex.appendIvf(delta, idx, newIds = true, batchId = 1L)
-    assert(AnnIndex.lastAppliedBatch(spark, idx) == 1L)
+    assert(GenStore.lastAppliedBatch(spark, idx) == 1L)
     // crash-between-append-and-meta: replaying the SAME delta re-reserves
     // the same generation and overwrites it — appending it again (as a
     // foreachBatch replay would after a meta-less crash) must not
@@ -179,7 +180,7 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.appendIvf(delta, idx, newIds = true, batchId = 1L) // the replay
     assert(AnnIndex.ivfAssignments(spark, idx).count() == before,
       "replayed append must overwrite its gen dir, not duplicate rows")
-    assert(AnnIndex.lastAppliedBatch(spark, idx) == 1L)
+    assert(GenStore.lastAppliedBatch(spark, idx) == 1L)
   }
 
   test("staged compaction: a crash between swap steps is adopted by recover, old index never half-deleted") {
@@ -191,16 +192,16 @@ class AnnIndexSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$idx.compact.tmp/centroids"))
-    assert(!AnnIndex.recover(spark, idx))
-    assert(AnnIndex.isComplete(spark, idx))
+    assert(!GenStore.recover(spark, idx))
+    assert(GenStore.isComplete(spark, idx))
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx.compact.tmp"), true)
     // crash between the swap's delete and rename: complete tmp, missing
     // index — recover adopts it and the content equals the compaction
     AnnIndex.buildIvf(emb, s"$idx.compact.tmp", nlist = 16) // the staged rebuild
     fs.delete(new org.apache.hadoop.fs.Path(idx), true)     // the crash point
-    assert(AnnIndex.recover(spark, idx), "recover must adopt the staged compact")
-    assert(AnnIndex.isComplete(spark, idx))
-    assert(AnnIndex.staleness(spark, idx) == 0.0)
+    assert(GenStore.recover(spark, idx), "recover must adopt the staged compact")
+    assert(GenStore.isComplete(spark, idx))
+    assert(GenStore.staleness(spark, idx) == 0.0)
     val adopted = rows3(AnnIndex.ivfAssignments(spark, idx)
       .select(col("vec_id"), col("cell"), lit(0L)))
     val idx2 = s"$work/ivf_staged_cmp"
@@ -210,7 +211,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(adopted == fresh)
     // and a normal compactIvf over the recovered index still works
     AnnIndex.compactIvf(emb, idx, nlist = 16)
-    assert(AnnIndex.staleness(spark, idx) == 0.0)
+    assert(GenStore.staleness(spark, idx) == 0.0)
   }
 
   test("append-only live view is a PLAIN read (no shuffle) and equals the reduce view") {
@@ -455,7 +456,7 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.buildIvfPq(emb.filter(!isDelta), idx, nlist = 16)
     AnnIndex.appendIvfPq(emb.filter(isDelta), idx) // undeclared upsert history
     AnnIndex.compactIvfPq(emb, idx, nlist = 16)
-    assert(AnnIndex.staleness(spark, idx) == 0.0, "compact must reset staleness")
+    assert(GenStore.staleness(spark, idx) == 0.0, "compact must reset staleness")
     val q = emb.filter(col("vec_id") < 3)
     val viaIndex = AnnIndex.ivfPqTopKFromIndex(
       spark, idx, emb, q, 5, nprobe = 16, shortlist = 50)
@@ -611,7 +612,7 @@ class AnnIndexSpec extends AnyFunSuite {
       // history (r18): undeclared appends move the rows they supersede
       // out of the live counters, so the signal equals the true live
       // append-row fraction at every step — no ≤2x band
-      val st = AnnIndex.staleness(spark, idx)
+      val st = GenStore.staleness(spark, idx)
       val expSt = liveGen.count(_._2 > 0L).toDouble / liveGen.size
       assert(math.abs(st - expSt) < 1e-9,
         s"step $step: staleness $st != exact live append fraction $expSt")
@@ -659,7 +660,7 @@ class AnnIndexSpec extends AnyFunSuite {
       // carries `bands` rows per generation, so the live append-row
       // fraction is the live append-ID fraction
       delta.foreach { case (i, _) => liveGen(i) = step.toLong }
-      val st = AnnIndex.bandedStaleness(spark, idx)
+      val st = GenStore.staleness(spark, idx)
       val expSt = liveGen.count(_._2 > 0L).toDouble / liveGen.size
       assert(math.abs(st - expSt) < 1e-9,
         s"step $step: banded staleness $st != exact live append fraction $expSt")
@@ -704,49 +705,73 @@ class AnnIndexSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
   }
 
+  /** The file scans of an executed plan (AQE stages unwrapped; a
+    * ReusedExchange re-executes nothing — counting its subtree would
+    * double-count the original exchange's scan). */
+  private def scans(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      scans(a.executedPlan)
+    case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+      scans(qs.plan)
+    case _: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => Nil
+    case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
+    case other => other.children.flatMap(scans)
+  }
+
+  private def scanPath(f: org.apache.spark.sql.execution.FileSourceScanExec): String =
+    f.relation.location.rootPaths.mkString(",")
+
   test("vector-carrying index: the probe serves vectors from the index partitions, never the corpus") {
     val idx = s"$work/ivf_selfserve"
     AnnIndex.buildIvf(emb, idx, nlist = 16)
     val q = emb.filter(col("vec_id") < 3)
     val fromIndex = AnnIndex.ivfTopKFromIndex(spark, idx, emb, q, 5, nprobe = 8)
     fromIndex.collect()
-    // the ONLY embeddings scan in the probe plan is the broadcast-small
-    // query side; the corpus side reads its vectors from the index's
-    // probed partitions (pre-r16: a second corpus scan + id-keyed join)
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scans(a.executedPlan)
-      case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scans(qs.plan)
-      // a ReusedExchange re-executes nothing — counting its subtree
-      // would double-count the original exchange's scan
-      case _: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => Nil
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
+    // a query set under the localize cap becomes a local relation, and
+    // the corpus side reads its vectors from the index's probed
+    // partitions (pre-r16: a corpus scan + id-keyed join), so the probe
+    // plan scans no embeddings at all
     val all = scans(fromIndex.queryExecution.executedPlan)
-    def path(f: org.apache.spark.sql.execution.FileSourceScanExec): String =
-      f.relation.location.rootPaths.mkString(",")
-    val embScans = all.count(path(_).contains("embeddings.parquet"))
-    val idxScans = all.count(path(_).contains("ivf_selfserve"))
-    assert(embScans == 1,
-      s"probe must scan the corpus ONCE (the query side), got $embScans:\n" +
-        all.map(path).mkString("\n"))
+    val embScans = all.count(scanPath(_).contains("embeddings.parquet"))
+    val idxScans = all.count(scanPath(_).contains("ivf_selfserve"))
+    assert(embScans == 0,
+      s"probe under the localize cap must not scan the corpus, got $embScans:\n" +
+        all.map(scanPath).mkString("\n"))
     assert(idxScans >= 1, "probe must read vectors from the index partitions")
     // and the self-served probe equals the registered q45 in-query build
     assert(topk(fromIndex) == topk(Ann.ivfTopK(emb, q, 5, nlist = 16, nprobe = 8)),
       "index-served vectors diverged from the registered build")
   }
 
+  test("vector-carrying index past the query-localize cap: the probe keeps the distributed shape") {
+    val idx = s"$work/ivf_selfserve_cap"
+    AnnIndex.buildIvf(emb, idx, nlist = 16)
+    // more than 4096 query rows (the cap) from ONE embeddings scan: the
+    // query set is never collected, so that scan stays in the probe
+    // plan as its query side
+    val reps = 4096 / emb.count() + 1
+    val q = emb.crossJoin(spark.range(reps).toDF("rep"))
+      .select((col("vec_id") * reps + col("rep")).as("vec_id"), col("embedding"))
+    assert(q.count() > 4096)
+    val fromIndex = AnnIndex.ivfTopKFromIndex(spark, idx, emb, q, 5, nprobe = 8)
+    val all = scans(fromIndex.queryExecution.executedPlan)
+    val embScans = all.count(scanPath(_).contains("embeddings.parquet"))
+    assert(embScans == 1,
+      s"probe past the localize cap must scan the corpus ONCE (the query " +
+        s"side), got $embScans:\n" + all.map(scanPath).mkString("\n"))
+    assert(all.exists(scanPath(_).contains("ivf_selfserve_cap")),
+      "probe must read vectors from the index partitions")
+  }
+
   test("banded compact reproduces the from-scratch build bit-for-bit and resets staleness") {
     val idx = s"$work/lsh_compact"
     AnnIndex.buildBanded(emb.filter(!isDelta), idx, nPlanes = 16, bands = 8)
     AnnIndex.appendBanded(emb.filter(isDelta), idx, nPlanes = 16, bands = 8)
-    assert(AnnIndex.bandedStaleness(spark, idx) > 0.0,
+    assert(GenStore.staleness(spark, idx) > 0.0,
       "append must register as banded staleness")
     AnnIndex.compactBanded(emb, idx, nPlanes = 16, bands = 8)
-    assert(AnnIndex.bandedStaleness(spark, idx) == 0.0,
+    assert(GenStore.staleness(spark, idx) == 0.0,
       "compacted banded index must be one generation")
     val compacted = rows3(AnnIndex.bandedRowsLive(spark, idx)
       .select(col("vec_id"), col("band").cast("long"), col("bucket")))

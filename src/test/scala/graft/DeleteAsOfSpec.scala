@@ -1,5 +1,6 @@
 package graft
 
+import graft.build.GenStore
 import graft.similarity.{Ann, AnnIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,7 +46,7 @@ class DeleteAsOfSpec extends AnyFunSuite {
     AnnIndex.buildIvf(emb, d, nlist = 8)
     val before = assignSet(d)
     val delIds = deletedIds.collect().map(_.getLong(0)).toSet
-    AnnIndex.delete(deletedIds, d)
+    GenStore.delete(deletedIds, d)
     // delete ≡ the pre-delete view minus exactly the deleted ids —
     // nothing else moved, nothing leaked (bounded regime)...
     val after = assignSet(d)
@@ -58,7 +59,7 @@ class DeleteAsOfSpec extends AnyFunSuite {
       .select("vec_id").collect().map(_.getLong(0)).toSet
       .intersect(delIds).isEmpty)
     // counters: deletes move rows out, add none — staleness stays 0
-    assert(AnnIndex.staleness(spark, d) == 0.0)
+    assert(GenStore.staleness(spark, d) == 0.0)
     // RE-ADD after delete must be an UNDECLARED append (GenStore doc)
     val one = emb.filter(col("vec_id").isin(delIds.head)).limit(1)
     AnnIndex.appendIvf(one, d)
@@ -69,7 +70,7 @@ class DeleteAsOfSpec extends AnyFunSuite {
     // here: nprobe = nlist probes every cell)
     val d2 = s"$work/ivf_del2"
     AnnIndex.buildIvf(emb, d2, nlist = 8)
-    AnnIndex.delete(deletedIds, d2)
+    GenStore.delete(deletedIds, d2)
     val q = emb.filter(col("vec_id") < 3)
     val viaIndex = AnnIndex.ivfTopKFromIndex(spark, d2, emb, q, 5, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -82,7 +83,7 @@ class DeleteAsOfSpec extends AnyFunSuite {
   test("ivf-pq delete: the two-stage probe never returns a deleted id") {
     val d = s"$work/pq_del"
     AnnIndex.buildIvfPq(emb, d, nlist = 8)
-    AnnIndex.delete(deletedIds, d)
+    GenStore.delete(deletedIds, d)
     val delIds = deletedIds.collect().map(_.getLong(0)).toSet
     val q = emb.filter(col("vec_id") < 3)
     val res = AnnIndex.ivfPqTopKFromIndex(spark, d, emb, q, 5, nprobe = 8)
@@ -94,7 +95,7 @@ class DeleteAsOfSpec extends AnyFunSuite {
   test("banded delete ≡ compact over the corpus-minus-takedowns, row-for-row") {
     val d = s"$work/lsh_del"
     AnnIndex.buildBanded(emb, d, nPlanes = 8, bands = 4)
-    AnnIndex.delete(deletedIds, d)
+    GenStore.delete(deletedIds, d)
     // planes are seed-fixed (no training), so the equality is exact
     val c = s"$work/lsh_c"
     AnnIndex.buildBanded(emb.filter(!isDelta), c, nPlanes = 8, bands = 4)
@@ -106,7 +107,7 @@ class DeleteAsOfSpec extends AnyFunSuite {
   test("vecs delete ≡ compact-minus-ids; point reads prune and drop tombstones in every regime") {
     val d = s"$work/vecs_del"
     AnnIndex.buildVecs(emb, d)
-    AnnIndex.delete(deletedIds, d)
+    GenStore.delete(deletedIds, d)
     val c = s"$work/vecs_c"
     AnnIndex.buildVecs(emb.filter(!isDelta), c)
     def rows(dir: String, ids: Option[Seq[Long]] = None) =
@@ -129,7 +130,7 @@ class DeleteAsOfSpec extends AnyFunSuite {
     snaps += assignSet(d)
     AnnIndex.appendIvf(delta.limit(3), d) // gen 2, undeclared upsert
     snaps += assignSet(d)
-    AnnIndex.delete(delta.limit(2).select("vec_id"), d) // gen 3, takedown
+    GenStore.delete(delta.limit(2).select("vec_id"), d) // gen 3, takedown
     snaps += assignSet(d)
     snaps.zipWithIndex.foreach { case (snap, n) =>
       assert(assignSet(d, asOfGen = Some(n.toLong)) == snap,
@@ -174,13 +175,13 @@ class DeleteAsOfSpec extends AnyFunSuite {
     AnnIndex.buildIvf(emb, d, nlist = 8, appendOnly = false)
     val before = assignSet(d)
     val delIds = deletedIds.collect().map(_.getLong(0)).toSet
-    AnnIndex.delete(deletedIds, d)
+    GenStore.delete(deletedIds, d)
     assert(assignSet(d) == before.filterNot(r => delIds(r._1)),
       "untrusted-regime delete leaked or over-deleted")
     // vecs twin: untrusted store, pruned point read of a deleted id
     val v = s"$work/vecs_del_untrusted"
     AnnIndex.buildVecs(emb, v, appendOnly = false)
-    AnnIndex.delete(deletedIds, v)
+    GenStore.delete(deletedIds, v)
     val delId = delIds.head
     assert(AnnIndex.vecsLive(spark, v, ids = Some(Seq(delId))).count() == 0,
       "untrusted-regime point read served a deleted id")
@@ -206,7 +207,7 @@ class DeleteAsOfSpec extends AnyFunSuite {
           AnnIndex.appendIvf(pool(p), d)
         case _ => // takedown of some present ids
           val p = seen(rnd.nextInt(seen.size))
-          AnnIndex.delete(pool(p).select("vec_id").limit(5), d)
+          GenStore.delete(pool(p).select("vec_id").limit(5), d)
       }
       snaps += assignSet(d)
     }
@@ -233,11 +234,11 @@ class DeleteAsOfSpec extends AnyFunSuite {
     val live = AnnIndex.vecsLive(spark, store).select("bucket").collect()
       .map(_.getLong(0)).toSet
     assert(live.intersect(delIds.toSet).isEmpty)
-    val before = AnnIndex.lastAppliedBatch(spark, store)
+    val before = GenStore.lastAppliedBatch(spark, store)
     val q2 = graft.streaming.IndexMaintenance.runDeletesAvailableNow(
       spark, delDir, store, ckpt)
     q2.awaitTermination()
-    assert(AnnIndex.lastAppliedBatch(spark, store) == before,
+    assert(GenStore.lastAppliedBatch(spark, store) == before,
       "a drained deletes re-run must be a no-op")
   }
 
@@ -246,14 +247,14 @@ class DeleteAsOfSpec extends AnyFunSuite {
     val d = s"$work/retired_ivf"
     AnnIndex.buildIvf(emb, d, nlist = 8)
     // delete-free stores short-circuit to empty
-    assert(AnnIndex.retiredIds(spark, d).count() == 0)
+    assert(GenStore.retiredIds(spark, d).count() == 0)
     val delIds = deletedIds.limit(4).collect().map(_.getLong(0)).toSeq
-    AnnIndex.delete(delIds.toDF("vec_id"), d)
-    assert(AnnIndex.retiredIds(spark, d).collect().map(_.getLong(0)).toSet ==
+    GenStore.delete(delIds.toDF("vec_id"), d)
+    assert(GenStore.retiredIds(spark, d).collect().map(_.getLong(0)).toSet ==
       delIds.toSet)
     // an undeclared re-add takes the id back out of the retired set
     AnnIndex.appendIvf(emb.filter(col("vec_id") === delIds.head), d)
-    assert(AnnIndex.retiredIds(spark, d).collect().map(_.getLong(0)).toSet ==
+    assert(GenStore.retiredIds(spark, d).collect().map(_.getLong(0)).toSet ==
       delIds.tail.toSet)
   }
 

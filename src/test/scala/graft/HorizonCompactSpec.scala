@@ -76,7 +76,7 @@ class HorizonCompactSpec extends AnyFunSuite {
     val normsBefore = PostingsStore.normsLive(spark, d).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-    PostingsStore.compactThrough(spark, d, 2L)
+    GenStore.compactThrough(spark, d, 2L)
 
     assert(liveSet(d) == snaps.last, "live view changed by the horizon squash")
     assert(PostingsStore.normsLive(spark, d).collect()
@@ -108,7 +108,7 @@ class HorizonCompactSpec extends AnyFunSuite {
     val before = liveSet(d)
     // head squash: the whole history collapses to one generation at
     // clock 2 — the deleted doc and every sentinel are gone for good
-    PostingsStore.compactThrough(spark, d, 2L)
+    GenStore.compactThrough(spark, d, 2L)
     assert(liveSet(d) == before)
     assert(!before.exists(_._3 == 2L))
     val m = GenStore.readMeta(spark, d).get
@@ -129,7 +129,7 @@ class HorizonCompactSpec extends AnyFunSuite {
     PostingsStore.build(docsDF(Seq(
       1L -> "alpha beta", 2L -> "gamma delta", 3L -> "epsilon")), d)
     PostingsStore.append(docsDF(Seq(4L -> "zeta eta")), d, newIds = true)
-    PostingsStore.compactThrough(spark, d, 1L) // base is now gen 1, not 0
+    GenStore.compactThrough(spark, d, 1L) // base is now gen 1, not 0
     // undeclared re-ingest superseding doc 1 (2 old rows out, 1 new in)
     PostingsStore.append(docsDF(Seq(1L -> "theta")), d)
     val live = liveSet(d)
@@ -150,10 +150,10 @@ class HorizonCompactSpec extends AnyFunSuite {
     AnnIndex.buildIvf(base, d, nlist = 8)
     AnnIndex.appendIvf(delta, d, newIds = true)        // gen 1
     AnnIndex.appendIvf(delta.limit(3), d)              // gen 2 upsert
-    AnnIndex.delete(delta.limit(2).select("vec_id"), d) // gen 3 takedown
+    GenStore.delete(delta.limit(2).select("vec_id"), d) // gen 3 takedown
     val snap2 = assignSet(asOfGen = Some(2L))
     val snap3 = assignSet()
-    AnnIndex.compactThrough(spark, d, 3L) // head squash incl. the takedown
+    GenStore.compactThrough(spark, d, 3L) // head squash incl. the takedown
     assert(assignSet() == snap3, "live assignments changed by the squash")
     assert(assignSet(asOfGen = Some(3L)) == snap3)
     intercept[IllegalArgumentException](assignSet(asOfGen = Some(2L)): Unit)
@@ -166,7 +166,7 @@ class HorizonCompactSpec extends AnyFunSuite {
     // append after the squash: counters split at the horizon base
     AnnIndex.appendIvf(delta.limit(2), d) // undeclared re-add of takedowns
     val n = assignSet().size.toDouble
-    assert(AnnIndex.staleness(spark, d) == 2.0 / n,
+    assert(GenStore.staleness(spark, d) == 2.0 / n,
       "post-horizon ivf staleness must be the exact live append fraction")
   }
 
@@ -176,11 +176,11 @@ class HorizonCompactSpec extends AnyFunSuite {
     val delta = emb.filter(col("vec_id") % 7 === 6)
     AnnIndex.buildIvf(base, d, nlist = 8)
     AnnIndex.appendIvf(delta, d, newIds = true)          // gen 1
-    AnnIndex.delete(delta.limit(2).select("vec_id"), d)  // gen 2 (tail)
+    GenStore.delete(delta.limit(2).select("vec_id"), d)  // gen 2 (tail)
     val before = AnnIndex.ivfAssignments(spark, d)
       .select("vec_id", "cell").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    AnnIndex.compactThrough(spark, d, 1L) // squash below the takedown
+    GenStore.compactThrough(spark, d, 1L) // squash below the takedown
     val after = AnnIndex.ivfAssignments(spark, d)
       .select("vec_id", "cell").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -202,7 +202,7 @@ class HorizonCompactSpec extends AnyFunSuite {
     def bandedSet(dir: String) = AnnIndex.bandedRowsLive(spark, dir).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val bBefore = bandedSet(b)
-    AnnIndex.compactThrough(spark, b, 2L)
+    GenStore.compactThrough(spark, b, 2L)
     assert(bandedSet(b) == bBefore, "banded squash changed the live rows")
     assert(GenStore.readMeta(spark, b).get.appendOnly)
     // point-fetch vector store, interior squash
@@ -215,7 +215,7 @@ class HorizonCompactSpec extends AnyFunSuite {
         .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
     val vBefore = vecsMap()
     val probeId = delta.limit(1).collect().head.getLong(0)
-    AnnIndex.compactThrough(spark, v, 1L)
+    GenStore.compactThrough(spark, v, 1L)
     assert(vecsMap() == vBefore, "vecs squash changed the live rows")
     assert(vecsMap(Some(Seq(probeId))) ==
       vBefore.filter(_._1 == probeId), "pruned point read diverged")
@@ -246,7 +246,7 @@ class HorizonCompactSpec extends AnyFunSuite {
         snaps += liveSet(d)
       }
       val h = 1 + rnd.nextInt(4) // squash point in [1, 4]
-      PostingsStore.compactThrough(spark, d, h.toLong)
+      GenStore.compactThrough(spark, d, h.toLong)
       assert(liveSet(d) == snaps.last, s"trial $trial: live changed (h=$h)")
       (h to 5).foreach { n =>
         assert(asOfSet(d, n.toLong) == snaps(n),
@@ -262,7 +262,7 @@ class HorizonCompactSpec extends AnyFunSuite {
     val delta = emb.filter(col("vec_id") % 7 === 6)
     AnnIndex.buildIvf(base, d, nlist = 8)
     AnnIndex.appendIvf(delta, d, newIds = true)          // gen 1
-    AnnIndex.delete(delta.limit(3).select("vec_id"), d)  // gen 2 takedown
+    GenStore.delete(delta.limit(3).select("vec_id"), d)  // gen 2 takedown
     AnnIndex.appendIvf(delta.limit(3), d)                // gen 3 re-add
     def assigns(asOf: Option[Long]) =
       AnnIndex.ivfAssignments(spark, d, asOfGen = asOf)
@@ -270,7 +270,7 @@ class HorizonCompactSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val asOf2 = assigns(Some(2L))
     val liveBefore = assigns(None)
-    AnnIndex.compactThrough(spark, d, 1L) // squash BELOW the window
+    GenStore.compactThrough(spark, d, 1L) // squash BELOW the window
     // the gen-2 tombstones are live-invisible (superseded by the gen-3
     // re-add) but physically present in the copied tail — the del
     // filter must stay on, or asOf(2) would serve cell = -1 phantoms
@@ -289,13 +289,13 @@ class HorizonCompactSpec extends AnyFunSuite {
     PostingsStore.build(docsDF(Seq(
       1L -> "alpha beta", 2L -> "gamma", 3L -> "delta")), t)
     PostingsStore.delete(Seq(2L, 3L).toDF("doc_id"), t)
-    PostingsStore.compactThrough(spark, t, 1L) // head squash
-    assert(PostingsStore.retiredIds(spark, t).as[Long].collect().toSet ==
+    GenStore.compactThrough(spark, t, 1L) // head squash
+    assert(GenStore.retiredIds(spark, t).as[Long].collect().toSet ==
       Set(2L, 3L),
       "the takedown record must survive the squash that dropped its sentinels")
     // a re-ingested doc leaves the retired set (it is live again)
     PostingsStore.append(docsDF(Seq(3L -> "delta back")), t)
-    assert(PostingsStore.retiredIds(spark, t).as[Long].collect().toSet ==
+    assert(GenStore.retiredIds(spark, t).as[Long].collect().toSet ==
       Set(2L))
     // vector twin: head squash drops del (no physical tombstone) but
     // the sidecar keeps feeding retiredIds
@@ -303,17 +303,17 @@ class HorizonCompactSpec extends AnyFunSuite {
     AnnIndex.buildIvf(emb, v, nlist = 8)
     val delIds = emb.filter(col("vec_id") % 7 === 6)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    AnnIndex.delete(emb.filter(col("vec_id") % 7 === 6).select("vec_id"), v)
-    AnnIndex.compactThrough(spark, v, 1L)
+    GenStore.delete(emb.filter(col("vec_id") % 7 === 6).select("vec_id"), v)
+    GenStore.compactThrough(spark, v, 1L)
     val m = GenStore.readMeta(spark, v).get
     assert(!m.params.contains("del"))
-    assert(AnnIndex.retiredIds(spark, v).as[Long].collect().toSet == delIds,
+    assert(GenStore.retiredIds(spark, v).as[Long].collect().toSet == delIds,
       "retiredIds must keep protecting full compacts after the squash")
     // and a second squash carries the sidecar forward
     AnnIndex.appendIvf(emb.filter(col("vec_id") % 11 === 0)
       .withColumn("vec_id", col("vec_id") + 1000000L), v, newIds = true)
-    AnnIndex.compactThrough(spark, v, 2L)
-    assert(AnnIndex.retiredIds(spark, v).as[Long].collect().toSet == delIds,
+    GenStore.compactThrough(spark, v, 2L)
+    assert(GenStore.retiredIds(spark, v).as[Long].collect().toSet == delIds,
       "the sidecar must survive subsequent squashes")
   }
 
@@ -407,16 +407,14 @@ class HorizonCompactSpec extends AnyFunSuite {
     val d = s"$work/g1"
     PostingsStore.build(docsDF(Seq(1L -> "alpha")), d)
     intercept[IllegalArgumentException](
-      PostingsStore.compactThrough(spark, d, 1L)) // == gen: not committed
-    intercept[IllegalArgumentException](
-      AnnIndex.compactThrough(spark, d, 0L)) // text store via the ann verb
+      GenStore.compactThrough(spark, d, 1L)) // == gen: not committed
     PostingsStore.append(docsDF(Seq(2L -> "beta")), d, newIds = true)
-    PostingsStore.compactThrough(spark, d, 1L)
+    GenStore.compactThrough(spark, d, 1L)
     intercept[IllegalArgumentException](
-      PostingsStore.compactThrough(spark, d, 0L)) // below the horizon
+      GenStore.compactThrough(spark, d, 0L)) // below the horizon
     // and a second, higher squash on the same store still works
     PostingsStore.append(docsDF(Seq(3L -> "gamma")), d, newIds = true)
-    PostingsStore.compactThrough(spark, d, 2L)
+    GenStore.compactThrough(spark, d, 2L)
     assert(liveSet(d).map(_._3) == Set(1L, 2L, 3L))
     assert(GenStore.horizonOf(GenStore.readMeta(spark, d).get) == 2L)
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.build.GenStore
 import graft.text.{PostingsStore, TextIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -353,11 +354,11 @@ class PostingsStoreSpec extends AnyFunSuite {
     PostingsStore.delete(Seq(2L).toDF("doc_id"), twin)
     assert(liveSet(store) == liveSet(twin), "stream delete diverged from batch")
     // drained re-run: no new generation
-    val before = PostingsStore.lastAppliedBatch(spark, store)
+    val before = GenStore.lastAppliedBatch(spark, store)
     val q2 = graft.streaming.IndexMaintenance.runDeletesAvailableNow(
       spark, delDir, store, ckpt, idCol = "doc_id")
     q2.awaitTermination()
-    assert(PostingsStore.lastAppliedBatch(spark, store) == before)
+    assert(GenStore.lastAppliedBatch(spark, store) == before)
     assert(liveSet(store) == liveSet(twin))
   }
 
@@ -380,11 +381,11 @@ class PostingsStoreSpec extends AnyFunSuite {
     PostingsStore.append(docsDF(Seq(3L -> "merge join spark")), b, newIds = true)
     assert(liveSet(store) == liveSet(b), "stream diverged from batch")
     // a re-run with no new files must not append anything
-    val genBefore = PostingsStore.lastAppliedBatch(spark, store)
+    val genBefore = GenStore.lastAppliedBatch(spark, store)
     val q3 = graft.streaming.IndexMaintenance.runTextAvailableNow(
       spark, docsDir, store, ckpt, assumeNewIds = true)
     q3.awaitTermination()
-    assert(PostingsStore.lastAppliedBatch(spark, store) == genBefore)
+    assert(GenStore.lastAppliedBatch(spark, store) == genBefore)
     assert(liveSet(store) == liveSet(b), "a drained re-run must be a no-op")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.build.IndexBuilder
+import graft.build.{GenStore, IndexBuilder}
 import graft.query.{Eq, PrunedScanner}
 import graft.streaming.IndexMaintenance
 import org.apache.spark.sql.SparkSession
@@ -138,14 +138,14 @@ class StreamingIndexSpec extends AnyFunSuite {
     IndexMaintenance.runIvfAvailableNow(
       spark, vecDir, idx, s"$work/ivfc_ckpt", compactAt = 0.1)
       .awaitTermination()
-    assert(AnnIndex.staleness(spark, idx) == 0.0)
+    assert(GenStore.staleness(spark, idx) == 0.0)
     // delta batch: appends ~1/7 of the corpus, pushing staleness past
     // the 0.1 budget -> the stream compacts back to one generation
     emb.filter(isDelta).coalesce(1).write.mode("append").parquet(vecDir)
     IndexMaintenance.runIvfAvailableNow(
       spark, vecDir, idx, s"$work/ivfc_ckpt", compactAt = 0.1)
       .awaitTermination()
-    assert(AnnIndex.staleness(spark, idx) == 0.0,
+    assert(GenStore.staleness(spark, idx) == 0.0,
       "post-compact index must be one generation")
     // and the compacted index equals a from-scratch full build
     val batchIdx = s"$work/ivfc_full"
@@ -180,12 +180,12 @@ class StreamingIndexSpec extends AnyFunSuite {
     IndexMaintenance.runIvfPqAvailableNow(
       spark, vecDir, idx, s"$work/pqc_ckpt", compactAt = 0.1)
       .awaitTermination()
-    assert(AnnIndex.staleness(spark, idx) == 0.0)
+    assert(GenStore.staleness(spark, idx) == 0.0)
     emb.filter(isDelta).coalesce(1).write.mode("append").parquet(vecDir)
     IndexMaintenance.runIvfPqAvailableNow(
       spark, vecDir, idx, s"$work/pqc_ckpt", compactAt = 0.1)
       .awaitTermination()
-    assert(AnnIndex.staleness(spark, idx) == 0.0,
+    assert(GenStore.staleness(spark, idx) == 0.0,
       "post-compact PQ index must be one generation")
     // the compact retrained BOTH models (centroids + codebook) on the
     // full corpus inside the staged tree, so the probed read reproduces
@@ -224,12 +224,12 @@ class StreamingIndexSpec extends AnyFunSuite {
     IndexMaintenance.runBandedAvailableNow(
       spark, vecDir, idx, s"$work/lshm_ckpt", compactAt = 0.1)
       .awaitTermination()
-    assert(AnnIndex.bandedStaleness(spark, idx) == 0.0)
+    assert(GenStore.staleness(spark, idx) == 0.0)
     emb.filter(isDelta).coalesce(1).write.mode("append").parquet(vecDir)
     IndexMaintenance.runBandedAvailableNow(
       spark, vecDir, idx, s"$work/lshm_ckpt", compactAt = 0.1)
       .awaitTermination()
-    assert(AnnIndex.bandedStaleness(spark, idx) == 0.0,
+    assert(GenStore.staleness(spark, idx) == 0.0,
       "post-compact banded index must be one generation")
     def live(d: String): Set[(Long, Long, Long)] =
       AnnIndex.bandedRowsLive(spark, d)
@@ -263,12 +263,12 @@ class StreamingIndexSpec extends AnyFunSuite {
     IndexMaintenance.runVecsAvailableNow(
       spark, vecDir, store, s"$work/vstore_ckpt", compactAt = 0.1)
       .awaitTermination()
-    assert(AnnIndex.staleness(spark, store) == 0.0)
+    assert(GenStore.staleness(spark, store) == 0.0)
     emb.filter(isDelta).coalesce(1).write.mode("append").parquet(vecDir)
     IndexMaintenance.runVecsAvailableNow(
       spark, vecDir, store, s"$work/vstore_ckpt", compactAt = 0.1)
       .awaitTermination()
-    assert(AnnIndex.staleness(spark, store) == 0.0,
+    assert(GenStore.staleness(spark, store) == 0.0,
       "post-compact store must be one generation")
     // the compacted store equals a from-scratch full build, content-wise
     val batchStore = s"$work/vstore_full"

@@ -1,5 +1,6 @@
 package graft
 
+import graft.build.GenStore
 import graft.similarity.{Ann, AnnIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,7 +55,7 @@ class VecStoreSpec extends AnyFunSuite {
       "append-only vecs store must serve a plain read")
     // and the staleness counters reflect the delta fraction, O(1)
     val frac = emb.filter(isDelta).count().toDouble / emb.count()
-    assert(math.abs(AnnIndex.staleness(spark, a) - frac) < 1e-9)
+    assert(math.abs(GenStore.staleness(spark, a) - frac) < 1e-9)
   }
 
   test("vecs: an upserted id's latest vector wins; the id filter commutes with the reduce in every regime") {
@@ -101,9 +102,9 @@ class VecStoreSpec extends AnyFunSuite {
     val dir = s"$work/vecs_compact"
     AnnIndex.buildVecs(emb.filter(!isDelta), dir)
     AnnIndex.appendVecs(emb.filter(isDelta), dir) // undeclared upsert
-    assert(AnnIndex.staleness(spark, dir) > 0.0)
+    assert(GenStore.staleness(spark, dir) > 0.0)
     AnnIndex.compactVecs(emb, dir)
-    assert(AnnIndex.staleness(spark, dir) == 0.0)
+    assert(GenStore.staleness(spark, dir) == 0.0)
     val cmp = s"$work/vecs_compact_cmp"
     AnnIndex.buildVecs(emb, cmp)
     assert(liveRows(dir).view.mapValues(_._1).toMap ==
@@ -244,7 +245,7 @@ class VecStoreSpec extends AnyFunSuite {
     // staleness counters)
     AnnIndex.appendVecs(base.filter(col("vec_id") < 0), vdir, newIds = true)
     assert(AnnIndex.vecsLive(spark, vdir).count() == 2)
-    assert(AnnIndex.staleness(spark, vdir) == 0.0,
+    assert(GenStore.staleness(spark, vdir) == 0.0,
       "zero appended rows must not register as drift")
     // duplicate id within ONE declared batch: exactly one row survives,
     // picked deterministically (max-struct: 0.9 > 0.1 at index 0)
