@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Graft.read(spark, data).filter($"event_type" === "login")  // pruned
   * }}}
   *
-  * `read` is plain `spark.read.parquet`; pruning happens in the
+  * `read` is plain `spark.read.parquet` (schema from one footer, see
+  * `read`); pruning happens in the
   * optimizer (GraftPruneRule), so every downstream DataFrame/SQL
   * operation composes normally. We deliberately do NOT ship a DSv2
   * `format("graft")`: the rule rewrites the standard parquet relation's
@@ -71,9 +72,13 @@ object Graft {
       updated.map { case (d, i) => s"$d=$i" }.mkString(";"))
   }
 
+  /** The schema comes from one footer on the driver
+    * (`IndexBuilder.dataSchema`), so the read launches no schema
+    * inference job; with `spark.sql.parquet.mergeSchema` on it is
+    * Spark's merged inference. */
   def read(spark: SparkSession, dataDir: String): DataFrame = {
     enable(spark)
-    spark.read.parquet(dataDir)
+    spark.read.schema(graft.build.IndexBuilder.dataSchema(spark, dataDir)).parquet(dataDir)
   }
 
   /** Capability discovery — which columns can the index answer for this

@@ -263,7 +263,7 @@ object BloomIndex extends Logging {
     // prune is a pruned scan and must show up in the per-run rollup
     // (it was silently absent before — q46 published no telemetry)
     graft.query.PruneStats.record(report)
-    val schema = spark.read.parquet(dataDir).schema
+    val schema = IndexBuilder.dataSchema(spark, dataDir)
     val df =
       if (toRead.isEmpty)
         spark.createDataFrame(

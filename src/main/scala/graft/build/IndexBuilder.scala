@@ -1,8 +1,23 @@
 package graft.build
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.intervals.Block
+import graft.query.{Between, Eq, Pred}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SchemaBridge
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Builds the engine's sparse secondary index over a parquet dataset:
   * for every indexed column, for every distinct (stringified) value, the
@@ -161,18 +176,21 @@ object IndexBuilder {
       .sortBy(_._1)
     val cached = descriptorCache.get(indexRoot)
     if (cached != null && cached._1 == sig) return cached._2
-    import spark.implicits._
-    // descriptors written before the checksum fields existed read back
-    // with the length+mtime defaults (no rebuild required)
-    val raw = spark.read.parquet(descriptorsDir(indexRoot))
-    val compat = Seq(
-      "checksumAlgorithm" -> lit("length+mtime"),
-      "checksum" -> lit("")
-    ).foldLeft(raw) { case (df, (c, d)) =>
-      if (df.columns.contains(c)) df else df.withColumn(c, d)
+    // read on the driver, no Spark job; descriptors written before the
+    // checksum fields existed read back with the length+mtime defaults
+    // (no rebuild required)
+    val rows = Seq.newBuilder[DescriptorRow]
+    readParts(spark, descPath, FilterCompat.NOOP, more = true) { g =>
+      def opt(f: String, default: String) =
+        if (g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0) g.getString(f, 0)
+        else default
+      rows += DescriptorRow(
+        g.getString("sourcePath", 0), g.getLong("length", 0), g.getLong("modificationTime", 0),
+        listOf(g, "columns").map(_.getString(0, 0)),
+        g.getString("indexType", 0), g.getInteger("indexVersion", 0),
+        opt("checksumAlgorithm", "length+mtime"), opt("checksum", ""))
     }
-    val loaded = compat.as[DescriptorRow].collect()
-      .map(d => d.sourcePath -> d).toMap
+    val loaded = rows.result().map(d => d.sourcePath -> d).toMap
     descriptorCache.put(indexRoot, (sig, loaded))
     loaded
   }
@@ -455,6 +473,131 @@ object IndexBuilder {
     * index-as-input verification path, `ScanUsingIndexJob.java:218-224`). */
   def postings(spark: SparkSession, indexRoot: String): DataFrame =
     spark.read.parquet(postingsDir(indexRoot))
+
+  /** One postings row: the byte ranges of `file` that hold `value` of
+    * `column`, stamped with the file's generation at build time. */
+  final case class Posting(file: String, column: String, value: String, ranges: Seq[Block], gen: Long)
+
+  /** The postings rows matching any of `leaves` (EQ/BETWEEN), read on
+    * the driver with no Spark job — the reference's `getSplits` opens
+    * its MapFile index readers the same way
+    * (`BlockIndexedFileInputFormat.java:110-187`). Only the
+    * `column=<c>` directories the leaves name are opened; EQ values are
+    * pushed to parquet as one IN filter per column, so row-group min/max
+    * and dictionary skipping work on the value-sorted files. A column
+    * with a BETWEEN leaf is read unfiltered. Every row is re-checked
+    * with the exact [[Pred.leafMatches]] before it counts toward
+    * `limit`; reading stops once `limit` rows are held, so a caller that
+    * passes `cap + 1` sees an overflow as `cap + 1` rows. Generations
+    * are NOT filtered here.
+    *
+    * None when the postings root itself is missing (a compaction caught
+    * between its two renames): that is "unknown", never "no match". A
+    * missing `column=<c>` directory means the column only holds nulls
+    * and contributes no rows. */
+  def lookupPostings(
+      spark: SparkSession, indexRoot: String, leaves: Seq[Pred], limit: Int): Option[Seq[Posting]] = {
+    val root = new Path(postingsDir(indexRoot))
+    if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root)) return None
+    val out = IndexedSeq.newBuilder[Posting]
+    var n = 0
+    val byColumn = leaves.groupBy {
+      case Eq(c, _)               => c
+      case Between(c, _, _, _, _) => c
+      case other                  => sys.error(s"not a leaf: $other")
+    }
+    for ((c, ls) <- byColumn.toSeq.sortBy(_._1)) {
+      val filter =
+        if (ls.exists(_.isInstanceOf[Between])) FilterCompat.NOOP
+        else FilterCompat.get(FilterApi.in(FilterApi.binaryColumn("value"),
+          ls.collect { case Eq(_, v) => Binary.fromString(v) }.toSet.asJava))
+      readParts(spark, new Path(root, s"column=${ExternalCatalogUtils.escapePathName(c)}"),
+          filter, more = n < limit) { g =>
+        val value = g.getString("value", 0)
+        if (ls.exists(Pred.leafMatches(_, value))) {
+          val ranges = listOf(g, "ranges").map(_.getGroup(0, 0))
+            .map(b => Block(b.getLong("start", 0), b.getLong("end", 0)))
+          out += Posting(g.getString("file", 0), c, value, ranges, g.getLong("gen", 0))
+          n += 1
+        }
+      }
+    }
+    Some(out.result())
+  }
+
+  /** Read the parquet part-files directly under `dir` (none when it is
+    * missing) on the driver, row by row as parquet-mr groups, while
+    * `more` holds. */
+  private def readParts(spark: SparkSession, dir: Path, filter: FilterCompat.Filter,
+      more: => Boolean)(row: Group => Unit): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = dir.getFileSystem(conf)
+    val parts =
+      if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.map(_.getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .sortBy(_.getName)
+    for (part <- parts if more) {
+      val reader = ParquetReader.builder(new GroupReadSupport, part)
+        .withConf(conf).withFilter(filter).build()
+      try {
+        var g = reader.read()
+        while (g != null && more) {
+          row(g)
+          g = reader.read()
+        }
+      } finally reader.close()
+    }
+  }
+
+  /** The items of list field `f` of a Spark-written row, in either of
+    * Spark's list layouts (`list/element` or the legacy `bag/array`):
+    * the per-item group whose field 0 is the element. */
+  private def listOf(g: Group, f: String): Seq[Group] =
+    if (g.getFieldRepetitionCount(f) == 0) Nil
+    else {
+      val list = g.getGroup(f, 0)
+      (0 until list.getFieldRepetitionCount(0)).map(list.getGroup(0, _))
+    }
+
+  /** The data schema of the parquet dataset at `dataDir` from ONE
+    * footer read on the driver, with no Spark job: the file Spark's own
+    * inference touches when schema merging is off (`_common_metadata`,
+    * else `_metadata`, else the first data file by path), converted by
+    * Spark's converter. Equals `spark.read.parquet(dataDir).schema`
+    * without hive-partition columns (the reader adds those from the
+    * paths). With `spark.sql.parquet.mergeSchema` on, or when there is
+    * no file to read (Spark then raises its own error), it is Spark's
+    * inference. */
+  def dataSchema(spark: SparkSession, dataDir: String): StructType = {
+    val sqlConf = spark.sessionState.conf
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dataDir)
+    val fs = root.getFileSystem(conf)
+    // the listing rule of Spark's file index: skip `_`/`.` names except
+    // partition directories and the two summary files
+    def listed(name: String): Boolean =
+      name.startsWith("_common_metadata") || name.startsWith("_metadata") ||
+        !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+          name.endsWith("._COPYING_"))
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter(s => listed(s.getPath.getName)).flatMap(leaves)
+    val files =
+      if (sqlConf.isParquetSchemaMergingEnabled || !fs.exists(root)) Nil
+      else leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    named("_common_metadata")
+      .orElse(named("_metadata"))
+      .orElse(files.find(f => f.getPath.getName != "_common_metadata" && f.getPath.getName != "_metadata"))
+      .map { st =>
+        val footer = new Footer(st.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        SchemaBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+          footer, new ParquetToSparkSchemaConverter(sqlConf)))
+      }
+      .getOrElse(spark.read.parquet(dataDir).schema)
+  }
 
   /** Compact the append-only postings: drop rows for deleted files and
     * rows whose gen no longer matches the live descriptor (superseded

@@ -150,7 +150,7 @@ object IndexedQueries extends QueryModule {
     val (files, _) = PrunedScanner.selectFiles(
       s, dataDir(sfDir), pred, indexRoot(sfDir), capBytes = CapBytes)
     if (files.isEmpty) return Some((0L, 0L))
-    val schema = s.read.parquet(dataDir(sfDir)).schema
+    val schema = IndexBuilder.dataSchema(s, dataDir(sfDir))
     graft.query.ScanMetrics.observed(
         s.read.schema(schema).parquet(files: _*),
         pred.toColumnFor(schema), name = "graft_bench_probe")

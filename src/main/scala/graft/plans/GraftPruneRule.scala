@@ -85,10 +85,12 @@ final class GraftPrunedFileIndex(
   * Soundness: non-translatable predicates leave the plan untouched
   * (full scan); per-file freshness fallbacks are part of the pruning
   * decision (`PrunedScanner`); exclusion-oriented subtraction keeps any
-  * file the decision didn't enumerate. Idempotence under the fixed-point
-  * optimizer batch is ensured with a TreeNodeTag (set even when nothing
-  * could be pruned, so the driver-side index lookup runs once, not once
-  * per fixed-point iteration).
+  * file the decision didn't enumerate. The decision launches no Spark
+  * job: descriptors, postings and footers are read on the driver, as
+  * the reference's `getSplits` opens its index readers. Idempotence
+  * under the fixed-point optimizer batch is ensured with a TreeNodeTag
+  * (set even when nothing could be pruned, so the index lookup's file
+  * reads happen once, not once per fixed-point iteration).
   *
   * Usage:
   * {{{
@@ -219,8 +221,8 @@ case class GraftPruneRule(spark: SparkSession) extends Rule[LogicalPlan] with Lo
               excl.foreach(sf => excluded(sf.path) = sf.length)
             }
           }
-          // tag even when nothing was excluded: the pruning decision is
-          // a driver-side job and must not rerun per fixed-point pass.
+          // tag even when nothing was excluded: the pruning decision
+          // reads index files and must not rerun per fixed-point pass.
           // The no-op tag goes on the FILTER (a shared relation node may
           // still be prunable under a different filter elsewhere).
           if (excluded.isEmpty) {

@@ -86,13 +86,15 @@ object PruneStats {
   * checksum-mismatch path (`:338-386`). Pruning can only *drop* work
   * for provably-non-matching files, never rows.
   *
-  * Scale shape: the pruning decision runs ONE small Spark job over the
-  * postings table (partition-pruned to the predicate's columns,
-  * value-pruned by parquet min/max thanks to the sorted write) and
-  * collects per-file posting lists to the driver — the same place the
-  * reference prunes (driver-side getSplits). The subsequent data read
-  * lists only surviving files, so at 1000x the files the scan plan
-  * never touches pruned files' footers at all.
+  * Scale shape: the pruning decision launches no Spark job. The driver
+  * reads the postings files of the predicate's columns directly
+  * (`IndexBuilder.lookupPostings`: value-pruned by parquet min/max and
+  * dictionaries thanks to the sorted write) and the data schema from one
+  * footer (`IndexBuilder.dataSchema`) — the same place and the same way
+  * the reference prunes (driver-side getSplits opening its MapFile
+  * readers). The subsequent data read lists only surviving files, so at
+  * 1000x the files the scan plan never touches pruned files' footers at
+  * all.
   */
 object PrunedScanner extends Logging {
 
@@ -166,14 +168,16 @@ object PrunedScanner extends Logging {
 
   /** Like [[selectFilesBatch]] but keeps index-selected and
     * freshness-fallback files apart — [[verifyCounts]] needs the
-    * distinction to avoid materializing values x fallback pairs. */
+    * distinction to avoid materializing values x fallback pairs.
+    * `maxPostings` is the postings-lookup cap; only specs lower it. */
   private[query] def selectFilesDetailed(
       spark: SparkSession,
       dataDir: String,
       preds: Seq[Pred],
       indexRoot: String,
-      capBytes: Long): (Seq[IndexBuilder.SourceFile], Seq[(Seq[String], Seq[String], PruneReport)]) = {
-    import spark.implicits._
+      capBytes: Long,
+      maxPostings: Int = MaxCollectedPostings)
+      : (Seq[IndexBuilder.SourceFile], Seq[(Seq[String], Seq[String], PruneReport)]) = {
     val t0 = System.nanoTime()
 
     val files = IndexBuilder.listDataFiles(spark, dataDir)
@@ -190,65 +194,50 @@ object PrunedScanner extends Logging {
       freshCache.getOrElseUpdate(f.path,
         IndexBuilder.freshDescriptorVerified(spark, descriptors, f))
 
-    // One postings lookup for ALL leaves of ALL predicates at once: the
-    // partition filter on `column` prunes index directories; the value
-    // filter hits parquet min/max on the sorted postings files. EQ
-    // leaves push an exact key; BETWEEN leaves push a decimal-cast
-    // range as a PREFILTER only — the authoritative bound check is the
-    // driver-side exact BigDecimal test in Pred.leafMatches (integral
-    // keys always fit decimal(38,12), so the prefilter never drops a
-    // matching key).
+    // One postings lookup for ALL leaves of ALL predicates at once, on
+    // the driver (IndexBuilder.lookupPostings): only the predicate
+    // columns' directories are opened, EQ values hit parquet min/max and
+    // dictionaries of the sorted postings files, and the exact leaf test
+    // is Pred.leafMatches.
     val allLeaves = preds.flatMap(_.leaves).distinct
     val anyPrunable = files.exists(f => fresh(f).isDefined)
-    def leafFilter(l: Pred): org.apache.spark.sql.Column = l match {
-      case Eq(c, v) => col("column") === c && col("value") === v
-      case Between(c, lo, hi, _, _) =>
-        val dec = col("value").cast(org.apache.spark.sql.types.DecimalType(38, 12))
-        val conds = lo.map(b => dec >= lit(b.underlying)).toSeq ++
-          hi.map(b => dec <= lit(b.underlying)).toSeq
-        conds.foldLeft(col("column") === c)(_ && _)
-      case other => sys.error(s"not a leaf: $other")
-    }
     // gen must match the live descriptor: rebuilt files leave stale
     // postings rows behind (append-only index); a mismatched gen means
     // the row describes a previous incarnation of the file.
-    // Bounded collect: a wide range over a high-cardinality column can
+    // Bounded lookup: a wide range over a high-cardinality column can
     // match O(files x distinct values) postings rows; past the cap the
     // batch degrades to a full scan (sound, never partial) instead of
     // an unbounded driver collect. IN lists are separately capped at
-    // translation time (Pred.MaxInValues).
-    var overflow = false
+    // translation time (Pred.MaxInValues). A missing postings root (a
+    // compaction caught between its renames) degrades the same way: it
+    // says nothing about which files match.
+    var fullScan = false
     val hits: Map[(String, Pred), Seq[Block]] =
       if (allLeaves.isEmpty || !anyPrunable) Map.empty
-      else {
-        val collected = IndexBuilder.postings(spark, indexRoot)
-          .filter(allLeaves.map(leafFilter).reduce(_ || _))
-          .select("file", "column", "value", "ranges", "gen")
-          .limit(MaxCollectedPostings + 1)
-          .as[(String, String, String, Seq[Block], Long)]
-          .collect()
-        overflow = collected.length > MaxCollectedPostings
-        if (overflow) {
-          logWarning(s"PrunedScan $dataDir: postings lookup exceeded " +
-            s"$MaxCollectedPostings rows for ${allLeaves.size} leaves — " +
+      else IndexBuilder.lookupPostings(spark, indexRoot, allLeaves, maxPostings + 1) match {
+        case None =>
+          logWarning(s"PrunedScan $dataDir: postings root of $indexRoot is missing — " +
             "falling back to a full scan for this batch")
-        }
-        val rows = collected
-          .filter { case (f, _, _, _, g) =>
-            descriptors.get(f).exists(_.modificationTime == g) }
-        val byColumn = allLeaves.groupBy {
-          case Eq(c, _)               => c
-          case Between(c, _, _, _, _) => c
-          case other                  => sys.error(s"not a leaf: $other")
-        }
-        rows.flatMap { case (f, c, v, ranges, _) =>
-          byColumn.getOrElse(c, Nil)
-            .filter(Pred.leafMatches(_, v))
-            .map(l => (f, l) -> ranges)
-        }
-          .groupBy(_._1)
-          .view.mapValues(rs => IntervalOps.normalize(rs.flatMap(_._2).toSeq))
-          .toMap
+          fullScan = true
+          Map.empty
+        case Some(collected) =>
+          fullScan = collected.length > maxPostings
+          if (fullScan) {
+            logWarning(s"PrunedScan $dataDir: postings lookup exceeded " +
+              s"$maxPostings rows for ${allLeaves.size} leaves — " +
+              "falling back to a full scan for this batch")
+          }
+          val byColumn = allLeaves.groupBy(_.columns.head)
+          collected
+            .filter(p => descriptors.get(p.file).exists(_.modificationTime == p.gen))
+            .flatMap { p =>
+              byColumn.getOrElse(p.column, Nil)
+                .filter(Pred.leafMatches(_, p.value))
+                .map(l => (p.file, l) -> p.ranges)
+            }
+            .groupBy(_._1)
+            .view.mapValues(rs => IntervalOps.normalize(rs.flatMap(_._2)))
+            .toMap
       }
     // shared listing/lookup time amortized across the batch so summing
     // per-pred pruneTimeMs over a 1000-key sweep doesn't report the one
@@ -263,7 +252,7 @@ object PrunedScanner extends Logging {
     files -> preds.map { pred =>
       val tp = System.nanoTime()
       val (prunable, fallback) = splitByColumns.getOrElseUpdate(pred.columns,
-        if (overflow) (Seq.empty, files)
+        if (fullScan) (Seq.empty, files)
         else files.partition(f =>
           fresh(f).exists(d => pred.columns.forall(d.columns.contains))))
       val leaves = pred.leaves.distinct
@@ -297,7 +286,7 @@ object PrunedScanner extends Logging {
       indexRoot: String,
       capBytes: Long = IndexBuilder.DefaultCapBytes,
       residual: Option[org.apache.spark.sql.Column] = None): (DataFrame, PruneReport) = {
-    val schema = spark.read.parquet(dataDir).schema
+    val schema = IndexBuilder.dataSchema(spark, dataDir)
     // Between pruning is proven sound only for INTEGRAL columns (their
     // stringified keys round-trip exactly through BigDecimal); on any
     // other column type — or one absent from the schema — skip pruning
@@ -381,7 +370,7 @@ object PrunedScanner extends Logging {
     val fallbackFiles = sets.headOption.map(_._2).getOrElse(Nil)
     val selFiles = sets.flatMap(_._1).distinct
     val valuesDf = spark.createDataset(values).toDF("value")
-    val schema = spark.read.parquet(dataDir).schema
+    val schema = IndexBuilder.dataSchema(spark, dataDir)
     val canon = selFiles.headOption
       .map(p => IndexBuilder.canonicalizeExpr(spark,
         IndexBuilder.SourceFile(p, 0L, 0L)))

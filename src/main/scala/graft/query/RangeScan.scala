@@ -28,7 +28,6 @@ object RangeScan {
   def readPosting(
       spark: SparkSession, indexRoot: String,
       file: String, column: String, value: String): DataFrame = {
-    import spark.implicits._
     import graft.build.IndexBuilder
     // Postings store canonical (scheme-less) paths; a scheme-qualified
     // caller path (file:///...) must be canonicalized for BOTH the
@@ -36,12 +35,12 @@ object RangeScan {
     val canonicalFile = IndexBuilder.canonicalPath(file)
     val liveGen = IndexBuilder.loadDescriptors(spark, indexRoot)
       .get(canonicalFile).map(_.modificationTime)
-    val ranges = IndexBuilder.postings(spark, indexRoot)
-      .filter(col("column") === column && col("value") === value &&
-        col("file") === canonicalFile &&
-        liveGen.map(col("gen") === _).getOrElse(lit(false)))
-      .select("ranges").as[Seq[graft.intervals.Block]]
-      .collect().flatten
+    val postings = IndexBuilder.lookupPostings(spark, indexRoot, Seq(Eq(column, value)), Int.MaxValue)
+      .getOrElse(throw new java.io.FileNotFoundException(
+        s"no postings under $indexRoot"))
+    val ranges = postings
+      .filter(p => p.file == canonicalFile && liveGen.contains(p.gen))
+      .flatMap(_.ranges)
     if (ranges.isEmpty) return spark.read.parquet(file).limit(0)
     val df = spark.read.parquet(file)
       .withColumn("_bs", col("_metadata.file_block_start"))

@@ -12,3 +12,11 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
 }
+
+/** Bridge to `private[spark]` schema helpers: a relation's data schema
+  * is the inferred schema with every field nullable, as Spark's
+  * `DataSource` resolves it. */
+object SchemaBridge {
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+}

@@ -18,7 +18,7 @@ class BlockTextSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val work = s"/root/repo/target/test_btext_${System.nanoTime()}"
+  private val work = java.nio.file.Files.createTempDirectory("test_btext").toString
 
   test("term scan prunes files whose vocabulary lacks the term") {
     import spark.implicits._

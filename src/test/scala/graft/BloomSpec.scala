@@ -19,7 +19,7 @@ class BloomSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val work = s"/root/repo/target/test_bloom_${System.nanoTime()}"
+  private val work = java.nio.file.Files.createTempDirectory("test_bloom").toString
   private val dataDir = s"$work/data"
   private val bloomRoot = s"$work/bloom"
 

@@ -17,7 +17,7 @@ class BucketingSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force the join strategy question
-    .config("spark.sql.warehouse.dir", s"/root/repo/target/test_warehouse_${System.nanoTime()}")
+    .config("spark.sql.warehouse.dir", java.nio.file.Files.createTempDirectory("test_warehouse").toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

@@ -22,7 +22,7 @@ class ChecksumSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val work = s"/root/repo/target/test_checksum_${System.nanoTime()}"
+  private val work = java.nio.file.Files.createTempDirectory("test_checksum").toString
 
   test("mtime-preserving rewrite is detected as stale, fingerprint-only is fooled") {
     val dataDir = s"$work/data"

@@ -22,7 +22,7 @@ class ExciteShapeSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val work = s"/root/repo/target/test_excite_${System.nanoTime()}"
+  private val work = java.nio.file.Files.createTempDirectory("test_excite").toString
 
   /** Synthetic excite-log-shaped rows: uid \t bignum \t query. */
   private def fixture = {

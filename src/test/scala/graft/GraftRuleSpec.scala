@@ -25,7 +25,7 @@ class GraftRuleSpec extends AnyFunSuite {
     s
   }
 
-  private val work = s"/root/repo/target/test_rule_${System.nanoTime()}"
+  private val work = java.nio.file.Files.createTempDirectory("test_rule").toString
   private val dataDir = s"$work/data"
   private val indexRoot = s"$work/index"
 

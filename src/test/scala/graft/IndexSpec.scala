@@ -21,7 +21,7 @@ class IndexSpec extends AnyFunSuite {
     .getOrCreate()
 
   private val sfDir = "/root/testdata/sf0.001"
-  private val work = s"/root/repo/target/test_idx_${System.nanoTime()}"
+  private val work = java.nio.file.Files.createTempDirectory("test_idx").toString
   private def dataDir = s"$work/data"
   private def indexRoot = s"$work/index"
 

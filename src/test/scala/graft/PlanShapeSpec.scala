@@ -77,7 +77,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("pruned-scan residuals on typed columns reach PushedFilters") {
     import graft.query.{And, Eq, PrunedScanner}
     import graft.build.IndexBuilder
-    val work = s"/root/repo/target/test_planresid_${System.nanoTime()}"
+    val work = java.nio.file.Files.createTempDirectory("test_planresid").toString
     Tables.events(spark, sfDir).repartition(2).write.parquet(s"$work/data")
     IndexBuilder.build(spark, s"$work/data", Seq("event_type", "user_id"), s"$work/index")
     val df = PrunedScanner.scan(spark, s"$work/data",
@@ -92,7 +92,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // build a small index, then check the lookup scan carries a
     // partition filter on `column`
     import graft.build.IndexBuilder
-    val work = s"/root/repo/target/test_plan_${System.nanoTime()}"
+    val work = java.nio.file.Files.createTempDirectory("test_plan").toString
     Tables.events(spark, sfDir).repartition(2).write.parquet(s"$work/data")
     IndexBuilder.build(spark, s"$work/data", Seq("event_type"), s"$work/index")
     val lookup = IndexBuilder.postings(spark, s"$work/index")
@@ -262,7 +262,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("build-scan path canonicalization is a codegen expression, not a scalar UDF") {
     import graft.build.IndexBuilder
-    val work = s"/root/repo/target/test_canon_${System.nanoTime()}"
+    val work = java.nio.file.Files.createTempDirectory("test_canon").resolve("data").toString
     Tables.events(spark, sfDir).limit(100).write.parquet(work)
     val probe = IndexBuilder.listDataFiles(spark, work).head
     val canon = IndexBuilder.canonicalizeExpr(spark, probe)

@@ -21,7 +21,7 @@ class ScanMetricsSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val work = s"/root/repo/target/test_metrics_${System.nanoTime()}"
+  private val work = java.nio.file.Files.createTempDirectory("test_metrics").toString
 
   test("PruneStats aggregates pruning reports into one summary line") {
     graft.query.PruneStats.reset()

@@ -22,7 +22,7 @@ class StreamingIndexSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val work = s"/root/repo/target/test_stream_${System.nanoTime()}"
+  private val work = java.nio.file.Files.createTempDirectory("test_stream").toString
   private val dataDir = s"$work/data"
   private val indexRoot = s"$work/index"
 

@@ -20,7 +20,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val work = s"/root/repo/target/test_stream_ops_${System.nanoTime()}"
+  private val work = java.nio.file.Files.createTempDirectory("test_stream_ops").toString
 
   test("windowed counts over a file stream match the batch computation") {
     import spark.implicits._
