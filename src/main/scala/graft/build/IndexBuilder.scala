@@ -2,6 +2,7 @@ package graft.build
 
 import graft.intervals.Block
 import graft.query.{Between, Eq, Pred}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
@@ -155,32 +156,19 @@ object IndexBuilder {
     walk(path)
   }
 
-  // Driver-side descriptor cache, invalidated by the descriptor
-  // directory's LISTING signature (names + sizes + mtimes) — the
-  // standard metadata-cache shape (cf. Spark's FileStatusCache, Delta
-  // snapshot caching): repeated index queries in one session skip the
-  // re-read; any rewrite of the descriptors changes the signature.
-  private val descriptorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], Map[String, DescriptorRow])]()
-
   /** THE freshness rule, in one place (every query-side fallback and
     * build-side skip decision routes through these two helpers — the
     * checksum-mismatch semantics of `BlockIndexedFileInputFormat
     * .java:338-386`). */
   def loadDescriptors(spark: SparkSession, indexRoot: String): Map[String, DescriptorRow] = {
+    val conf = spark.sessionState.newHadoopConf()
     val descPath = new Path(descriptorsDir(indexRoot))
-    val fs = descPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(descPath)) return Map.empty
-    val sig = fs.listStatus(descPath).toSeq
-      .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
-      .sortBy(_._1)
-    val cached = descriptorCache.get(indexRoot)
-    if (cached != null && cached._1 == sig) return cached._2
+    if (!descPath.getFileSystem(conf).exists(descPath)) return Map.empty
     // read on the driver, no Spark job; descriptors written before the
     // checksum fields existed read back with the length+mtime defaults
     // (no rebuild required)
     val rows = Seq.newBuilder[DescriptorRow]
-    readParts(spark, descPath, FilterCompat.NOOP, more = true) { g =>
+    readParts(conf, descPath, FilterCompat.NOOP, more = true) { g =>
       def opt(f: String, default: String) =
         if (g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0) g.getString(f, 0)
         else default
@@ -190,9 +178,7 @@ object IndexBuilder {
         g.getString("indexType", 0), g.getInteger("indexVersion", 0),
         opt("checksumAlgorithm", "length+mtime"), opt("checksum", ""))
     }
-    val loaded = rows.result().map(d => d.sourcePath -> d).toMap
-    descriptorCache.put(indexRoot, (sig, loaded))
-    loaded
+    rows.result().map(d => d.sourcePath -> d).toMap
   }
 
   /** The filesystem's NATIVE content checksum for a file, as
@@ -344,16 +330,7 @@ object IndexBuilder {
     import spark.implicits._
     spark.createDataset(descriptors).coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(descriptorsDir(indexRoot))
-    // Explicit invalidation: the listing-signature check would also catch
-    // this rewrite (part-file names embed a job UUID), but don't lean on
-    // that implementation detail — and drop the stale entry's memory now.
-    invalidateDescriptorCache(indexRoot)
   }
-
-  /** Drop the cached descriptors for `indexRoot` (call after any write
-    * to the descriptors directory from outside [[writeDescriptors]]). */
-  def invalidateDescriptorCache(indexRoot: String): Unit =
-    descriptorCache.remove(indexRoot)
 
   /** One descriptor row per file of an index of type `indexType`
     * (postings or bloom), with the content checksum when asked. */
@@ -475,8 +452,10 @@ object IndexBuilder {
     spark.read.parquet(postingsDir(indexRoot))
 
   /** One postings row: the byte ranges of `file` that hold `value` of
-    * `column`, stamped with the file's generation at build time. */
-  final case class Posting(file: String, column: String, value: String, ranges: Seq[Block], gen: Long)
+    * `column`, stamped with the file's generation at build time, with
+    * the lookup leaves that `value` matches. */
+  final case class Posting(
+      file: String, column: String, value: String, ranges: Seq[Block], gen: Long, leaves: Seq[Pred])
 
   /** The postings rows matching any of `leaves` (EQ/BETWEEN), read on
     * the driver with no Spark job — the reference's `getSplits` opens
@@ -491,14 +470,15 @@ object IndexBuilder {
     * passes `cap + 1` sees an overflow as `cap + 1` rows. Generations
     * are NOT filtered here.
     *
-    * None when the postings root itself is missing (a compaction caught
-    * between its two renames): that is "unknown", never "no match". A
-    * missing `column=<c>` directory means the column only holds nulls
-    * and contributes no rows. */
+    * The postings root is listed ONCE: a column absent from that
+    * listing only holds nulls and contributes no rows. None when the
+    * root is missing, or when a directory or file of that listing
+    * vanishes during the read (a compaction's swap caught between or
+    * under the reads): that is "unknown", never "no match". */
   def lookupPostings(
       spark: SparkSession, indexRoot: String, leaves: Seq[Pred], limit: Int): Option[Seq[Posting]] = {
+    val conf = spark.sessionState.newHadoopConf()
     val root = new Path(postingsDir(indexRoot))
-    if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root)) return None
     val out = IndexedSeq.newBuilder[Posting]
     var n = 0
     val byColumn = leaves.groupBy {
@@ -506,37 +486,37 @@ object IndexBuilder {
       case Between(c, _, _, _, _) => c
       case other                  => sys.error(s"not a leaf: $other")
     }
-    for ((c, ls) <- byColumn.toSeq.sortBy(_._1)) {
-      val filter =
-        if (ls.exists(_.isInstanceOf[Between])) FilterCompat.NOOP
-        else FilterCompat.get(FilterApi.in(FilterApi.binaryColumn("value"),
-          ls.collect { case Eq(_, v) => Binary.fromString(v) }.toSet.asJava))
-      readParts(spark, new Path(root, s"column=${ExternalCatalogUtils.escapePathName(c)}"),
-          filter, more = n < limit) { g =>
-        val value = g.getString("value", 0)
-        if (ls.exists(Pred.leafMatches(_, value))) {
-          val ranges = listOf(g, "ranges").map(_.getGroup(0, 0))
-            .map(b => Block(b.getLong("start", 0), b.getLong("end", 0)))
-          out += Posting(g.getString("file", 0), c, value, ranges, g.getLong("gen", 0))
-          n += 1
+    try {
+      val present = root.getFileSystem(conf).listStatus(root).map(_.getPath.getName).toSet
+      for ((c, ls) <- byColumn.toSeq.sortBy(_._1)) {
+        val dir = s"column=${ExternalCatalogUtils.escapePathName(c)}"
+        val filter =
+          if (ls.exists(_.isInstanceOf[Between])) FilterCompat.NOOP
+          else FilterCompat.get(FilterApi.in(FilterApi.binaryColumn("value"),
+            ls.collect { case Eq(_, v) => Binary.fromString(v) }.toSet.asJava))
+        if (present(dir)) readParts(conf, new Path(root, dir), filter, more = n < limit) { g =>
+          val value = g.getString("value", 0)
+          val matched = ls.filter(Pred.leafMatches(_, value))
+          if (matched.nonEmpty) {
+            val ranges = listOf(g, "ranges").map(_.getGroup(0, 0))
+              .map(b => Block(b.getLong("start", 0), b.getLong("end", 0)))
+            out += Posting(g.getString("file", 0), c, value, ranges, g.getLong("gen", 0), matched)
+            n += 1
+          }
         }
       }
-    }
-    Some(out.result())
+      Some(out.result())
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** Read the parquet part-files directly under `dir` (none when it is
-    * missing) on the driver, row by row as parquet-mr groups, while
-    * `more` holds. */
-  private def readParts(spark: SparkSession, dir: Path, filter: FilterCompat.Filter,
+  /** Read the parquet part-files directly under `dir` on the driver, row
+    * by row as parquet-mr groups, while `more` holds. A missing `dir` or
+    * part-file throws `FileNotFoundException`. */
+  private def readParts(conf: Configuration, dir: Path, filter: FilterCompat.Filter,
       more: => Boolean)(row: Group => Unit): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = dir.getFileSystem(conf)
-    val parts =
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq.map(_.getPath)
-        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-        .sortBy(_.getName)
+    val parts = dir.getFileSystem(conf).listStatus(dir).toSeq.map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .sortBy(_.getName)
     for (part <- parts if more) {
       val reader = ParquetReader.builder(new GroupReadSupport, part)
         .withConf(conf).withFilter(filter).build()

@@ -208,15 +208,15 @@ object PrunedScanner extends Logging {
     // match O(files x distinct values) postings rows; past the cap the
     // batch degrades to a full scan (sound, never partial) instead of
     // an unbounded driver collect. IN lists are separately capped at
-    // translation time (Pred.MaxInValues). A missing postings root (a
-    // compaction caught between its renames) degrades the same way: it
-    // says nothing about which files match.
+    // translation time (Pred.MaxInValues). A postings root that is
+    // missing or swapped during the read (a compaction's renames)
+    // degrades the same way: it says nothing about which files match.
     var fullScan = false
     val hits: Map[(String, Pred), Seq[Block]] =
       if (allLeaves.isEmpty || !anyPrunable) Map.empty
       else IndexBuilder.lookupPostings(spark, indexRoot, allLeaves, maxPostings + 1) match {
         case None =>
-          logWarning(s"PrunedScan $dataDir: postings root of $indexRoot is missing — " +
+          logWarning(s"PrunedScan $dataDir: postings of $indexRoot are missing or moved — " +
             "falling back to a full scan for this batch")
           fullScan = true
           Map.empty
@@ -227,14 +227,9 @@ object PrunedScanner extends Logging {
               s"$maxPostings rows for ${allLeaves.size} leaves — " +
               "falling back to a full scan for this batch")
           }
-          val byColumn = allLeaves.groupBy(_.columns.head)
           collected
             .filter(p => descriptors.get(p.file).exists(_.modificationTime == p.gen))
-            .flatMap { p =>
-              byColumn.getOrElse(p.column, Nil)
-                .filter(Pred.leafMatches(_, p.value))
-                .map(l => (p.file, l) -> p.ranges)
-            }
+            .flatMap(p => p.leaves.map(l => (p.file, l) -> p.ranges))
             .groupBy(_._1)
             .view.mapValues(rs => IntervalOps.normalize(rs.flatMap(_._2)))
             .toMap

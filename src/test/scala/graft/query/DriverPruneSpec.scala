@@ -2,7 +2,7 @@ package graft.query
 
 import graft.Graft
 import graft.build.IndexBuilder
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -90,14 +90,12 @@ class DriverPruneSpec extends AnyFunSuite {
   test("the prune decision and transparent planning launch no Spark job") {
     prepared
     val pred = And(Eq("event_type", "t2"), Eq("user_id", "4"))
-    // cold: descriptors, postings and the data schema are all read on the driver
-    IndexBuilder.invalidateDescriptorCache(indexRoot)
+    // descriptors, postings and the data schema are all read on the driver
     var selected: Seq[String] = Nil
     assert(jobsDuring { selected = PrunedScanner.selectFiles(spark, dataDir, pred, indexRoot)._1 } == 0)
     assert(selected.nonEmpty && selected.size < IndexBuilder.listDataFiles(spark, dataDir).size)
     Graft.registerIndex(spark, dataDir, indexRoot)
     try {
-      IndexBuilder.invalidateDescriptorCache(indexRoot)
       var q: DataFrame = null
       assert(jobsDuring {
         q = Graft.read(spark, dataDir).filter(col("event_type") === "t2" && col("user_id") === 4)
@@ -142,6 +140,32 @@ class DriverPruneSpec extends AnyFunSuite {
     assert(tagDf.collect().toSeq == spark.read.parquet(dataDir).filter(tagPred.toColumn).collect().toSeq)
   }
 
+  test("postings swapped between two column reads fall back to a full scan, never no match") {
+    prepared
+    val raced = s"$work/index_raced"
+    IndexBuilder.build(spark, dataDir, Columns, raced)
+    // the index is read through `racefs`, known only to the session's
+    // conf (the FS cache is off, so no instance outlives the conf)
+    spark.conf.set("fs.racefs.impl", classOf[RaceFs].getName)
+    spark.conf.set("fs.racefs.impl.disable.cache", "true")
+    try {
+      // compact's first rename lands after the root listing and the
+      // event_type read, just before user_id's directory is listed
+      RaceFs.moveAsideOnList(s"${IndexBuilder.postingsDir(raced)}/column=user_id",
+        IndexBuilder.postingsDir(raced), s"$raced/postings_old")
+      val pred: Pred = And(Eq("event_type", "t2"), Eq("user_id", "4"))
+      val (_, Seq((sel, fb, report))) = PrunedScanner.selectFilesDetailed(
+        spark, dataDir, Seq(pred), s"racefs://$raced", IndexBuilder.DefaultCapBytes)
+      assert(RaceFs.fired)
+      assert(sel.isEmpty && report.fallbackFiles == report.totalFiles)
+      assert(ids(spark.read.parquet(fb: _*).filter(pred.toColumn)) == fullScanIds(pred))
+      assert(fullScanIds(pred).nonEmpty)
+    } finally {
+      spark.conf.unset("fs.racefs.impl")
+      spark.conf.unset("fs.racefs.impl.disable.cache")
+    }
+  }
+
   test("RangeScan.readPosting serves the live postings through the driver lookup") {
     prepared
     val file = IndexBuilder.listDataFiles(spark, dataDir)
@@ -150,5 +174,34 @@ class DriverPruneSpec extends AnyFunSuite {
     assert(ids(rows.filter(col("user_id") === 3)) ==
       ids(spark.read.parquet(file).filter(col("user_id") === 3)))
     assert(RangeScan.readPosting(spark, indexRoot, file, "user_id", "999").isEmpty)
+  }
+}
+
+/** The local filesystem under the `racefs` scheme. Armed with
+  * [[RaceFs.moveAsideOnList]], it renames one directory aside the first
+  * time a chosen directory is listed — a rename racing a reader. */
+class RaceFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("racefs:///")
+  override def listStatus(f: Path): Array[FileStatus] = {
+    RaceFs.onList(f.toUri.getPath)
+    super.listStatus(f)
+  }
+}
+
+object RaceFs {
+  private var armed: Option[(String, String, String)] = None
+  @volatile var fired = false
+
+  def moveAsideOnList(listed: String, from: String, to: String): Unit = synchronized {
+    armed = Some((listed, from, to))
+    fired = false
+  }
+
+  private def onList(path: String): Unit = synchronized {
+    armed.filter(_._1 == path).foreach { case (_, from, to) =>
+      java.nio.file.Files.move(java.nio.file.Paths.get(from), java.nio.file.Paths.get(to))
+      armed = None
+      fired = true
+    }
   }
 }
