@@ -1,6 +1,9 @@
 package graft.build
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,8 +31,11 @@ import org.apache.spark.sql.functions._
   *    applied streaming batch — atomically ([[MetaIO.write]]);
   *  - READS resolve through three regimes decided by the meta: PLAIN
   *    (append-only history — no shuffle, probe filters push into the
-  *    scan), BOUNDED tracked-upsert (resolution bounded by the recorded
-  *    upsert generations), UNTRUSTED (full latest-gen resolution);
+  *    scan), BOUNDED tracked-upsert (the recorded upsert generations'
+  *    keys are read on the driver and folded into one literal filter
+  *    over the same scan — no shuffle, no join, no Spark job before the
+  *    query's own; past a cap on distinct upsert keys, full resolution),
+  *    UNTRUSTED (full latest-gen resolution);
   *  - COMPACT rebuilds at gen 0 in a sibling `.compact.tmp` tree and
   *    swaps (delete + rename); the delete→rename crash gap is adopted
   *    by [[recover]].
@@ -68,17 +74,18 @@ import org.apache.spark.sql.functions._
   * (text: the sentinel row `term = ""`; IVF/PQ assignments: `cell = -1`
   * with a null payload; banded: `band = -1`; point-fetch vecs: a null
   * vector). Deletion then falls out of the existing regimes: the delete
-  * generation is recorded as an upsert gen, so the bounded read's
-  * anti-join removes the deleted keys from the untouched branch, the
-  * resolve picks the tombstone as the key's latest row, and the
-  * post-resolution filter drops it — no read path changes shape.
+  * generation is recorded as an upsert gen, so the bounded read's filter
+  * keeps only the deleted keys' tombstones (their winning generation),
+  * full resolution picks the tombstone as the key's latest row, and the
+  * post-selection filter drops it — no read path changes shape.
   * Tombstones count `written = 0` and move the rows they supersede out
   * of the counters (`weight` above), so staleness stays exact; compact
   * rebuilds from the caller's corpus (minus the takedowns) and drops
   * them. RE-ADDING a deleted key MUST be an undeclared append: a
   * `newIds = true` declaration means never-before-seen — a re-add under
   * it would land in a non-upsert generation and the bounded regime's
-  * anti-join (keyed by the delete gen's ids) would remove the new row.
+  * filter (which keeps a delete gen's keys only in that gen) would
+  * remove the new row.
   * Deletes add no live rows, so they don't raise staleness; a
   * delete-heavy deployment compacts on tracked-generation count
   * (`upsertGens.size`) instead.
@@ -163,7 +170,7 @@ private[graft] object GenStore {
 
   /** Upsert generations tracked for bounded resolution before the
     * history degrades to untrusted full resolution: past this many
-    * undeclared appends the per-read isin/anti-join machinery stops
+    * undeclared appends the per-read driver key read and its filter stop
     * paying relative to one resolve (and staleness should have
     * compacted long before). */
   val MaxTrackedUpsertGens = 64
@@ -467,43 +474,73 @@ private[graft] object GenStore {
 
   // ------------------------------------------------------- live views
 
-  /** The three-regime latest-gen-wins machinery: plain read / BOUNDED
-    * resolution over the recorded upsert generations / full resolution,
-    * per the meta. `multiRow` picks the resolve: a ONE-ROW-PER-KEY
-    * table (IVF/PQ rows, the vector store, norms) reduces each key to
-    * the struct max of (gen, data columns) — gen leads, so the trailing
-    * payload never decides; a MULTI-ROW table (banded signatures,
-    * postings) keeps every row of the key's max generation by a join.
-    * `postFilter` follows the regime discipline — pushed into the plain
-    * and untouched branches, applied AFTER the resolve on resolving
-    * branches (pruning a superseded key's old partition out from under
-    * the resolve would resurrect its stale row); a filter on the key
-    * itself commutes with the resolve and belongs in the raw read
-    * instead. Output keeps `rows`' columns, gen included. */
-  private def liveView(meta: Meta, rows: DataFrame, keyCol: String, multiRow: Boolean,
-      postFilter: DataFrame => DataFrame, resolveAll: Boolean): DataFrame = {
-    def resolve(r: DataFrame): DataFrame =
-      if (multiRow)
-        r.join(r.groupBy(keyCol).agg(max("gen").as("gen")), Seq(keyCol, "gen"))
-      else {
-        val dataCols = r.columns.toSeq.filterNot(c => c == keyCol || c == "gen")
-        r.groupBy(keyCol)
-          .agg(max(struct(col("gen") +: dataCols.map(col): _*)).as("m"))
-          .select(col(keyCol) +: dataCols.map(c => col(s"m.$c").as(c)) :+
-            col("m.gen").as("gen"): _*)
+  /** Latest-generation-wins over `rows` (gen included): a ONE-ROW-PER-
+    * KEY table (IVF/PQ rows, the vector store, norms) reduces each key
+    * to the struct max of (gen, data columns) — gen leads, so the
+    * trailing payload never decides; a MULTI-ROW table (banded
+    * signatures, postings) keeps every row of the key's max generation
+    * by a join. Output keeps `rows`' columns. */
+  private def resolve(rows: DataFrame, keyCol: String, multiRow: Boolean): DataFrame =
+    if (multiRow)
+      rows.join(rows.groupBy(keyCol).agg(max("gen").as("gen")), Seq(keyCol, "gen"))
+    else {
+      val dataCols = rows.columns.toSeq.filterNot(c => c == keyCol || c == "gen")
+      rows.groupBy(keyCol)
+        .agg(max(struct(col("gen") +: dataCols.map(col): _*)).as("m"))
+        .select(col(keyCol) +: dataCols.map(c => col(s"m.$c").as(c)) :+
+          col("m.gen").as("gen"): _*)
+    }
+
+  /** Distinct upsert keys the bounded regime folds into its literal
+    * filter; past it the read takes full resolution. */
+  private val MaxUpsertKeys = 1 << 16
+
+  /** The BOUNDED regime's row selection, resolved on the driver: the
+    * key column of every upsert generation `ug` is read with parquet-mr
+    * (no Spark job), each key's winning generation is its latest upsert
+    * generation, and the selection is one literal filter
+    * `(gen ∉ ug ∧ key ∉ K) ∨ ⋁_g (gen = g ∧ key ∈ K_g)` — the untouched
+    * generations minus every upsert key, plus each key's rows of its
+    * winning generation. On a trusted history a key outside the upsert
+    * generations lives in exactly one untouched generation, so this is
+    * latest-gen resolution. For one-row tables it equals the struct max
+    * because writers leave one row per (key, gen) (batches are deduped
+    * by id, deletes write one tombstone per key; LiveViewSpec pins it).
+    * None — the caller resolves in full — past `cap` distinct keys, on a
+    * null key or a key type other than int/long/string, and when an
+    * upsert generation's directory or file is missing or vanishes during
+    * the read: an unreadable generation is unknown, never "no keys",
+    * which would resurrect every key it deleted. A generation directory
+    * holding only `_SUCCESS` (a zero-row batch) is a known empty set. */
+  private def upsertFilter(s: SparkSession, t: GenTable, dir: String, ug: Seq[Long],
+      cap: Int): Option[Column] = {
+    val conf = s.sessionState.newHadoopConf()
+    val win = scala.collection.mutable.HashMap.empty[Any, Long]
+    var known = true
+    try for (g <- ug.sorted if known && win.size <= cap)
+      IndexBuilder.readParts(conf, new Path(s"${t.path(dir)}/gen=$g"), FilterCompat.NOOP,
+          more = known && win.size <= cap, columns = Seq(t.key)) { r =>
+        val f = r.getType.getType(0).asPrimitiveType
+        if (r.getFieldRepetitionCount(0) == 0) known = false
+        else f.getPrimitiveTypeName match {
+          case PrimitiveTypeName.INT64 => win(r.getLong(0, 0)) = g
+          case PrimitiveTypeName.INT32 => win(r.getInteger(0, 0)) = g
+          case PrimitiveTypeName.BINARY if f.getLogicalTypeAnnotation ==
+              LogicalTypeAnnotation.stringType => win(r.getString(0, 0)) = g
+          case _ => known = false
+        }
       }
-    if (resolveAll) postFilter(resolve(rows))
-    else if (meta.appendOnly) postFilter(rows)
-    else if (meta.trusted && meta.upsertGens.nonEmpty) {
-      val ug = meta.upsertGens
-      // the upsert gens' directories are delta-scale: partition-pruned
-      // scans, a broadcast-small id set, a resolve bounded by them
-      val upRows = rows.filter(col("gen").isin(ug: _*))
-      val upIds = upRows.select(keyCol).distinct()
-      val untouched = postFilter(rows.filter(!col("gen").isin(ug: _*)))
-        .join(broadcast(upIds), Seq(keyCol), "left_anti")
-      untouched.unionByName(postFilter(resolve(upRows)))
-    } else postFilter(resolve(rows))
+    catch { case _: java.io.FileNotFoundException => known = false }
+    if (!known || win.size > cap) None
+    else {
+      val order: Ordering[Any] = (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+      val gen = col("gen")
+      val key = col(t.key)
+      val untouched = !gen.isin(ug: _*) && (key.isNull || !key.isin(win.keys.toSeq.sorted(order): _*))
+      Some(win.toSeq.groupBy(_._2).toSeq.sortBy(_._1).foldLeft(untouched) {
+        case (f, (g, kv)) => f || (gen === g && key.isin(kv.map(_._1).sorted(order): _*))
+      })
+    }
   }
 
   /** Throws unless the structure the tree's meta names stores table
@@ -516,6 +553,13 @@ private[graft] object GenStore {
         "one: use the verbs of the structure it holds")
   }
 
+  /** Table `t`'s files as one relation, gen and any directory column
+    * discovered from the paths. The data schema comes from one footer
+    * read on the driver ([[IndexBuilder.dataSchema]]), not from Spark's
+    * schema-inference job. */
+  private def scan(s: SparkSession, t: GenTable, dir: String): DataFrame =
+    s.read.schema(IndexBuilder.dataSchema(s, t.path(dir))).parquet(t.path(dir))
+
   /** The COMMITTED-GEN RAW READER: table `t`'s rows of the generations
     * below `committedGen`, `cols` in read order plus gen as long. The
     * commit pointer makes an orphan gen directory from a crashed,
@@ -525,37 +569,54 @@ private[graft] object GenStore {
     * the vector store's directory pruning). */
   private def raw(s: SparkSession, t: GenTable, dir: String, committedGen: Long,
       cols: Seq[String], pre: DataFrame => DataFrame): DataFrame =
-    pre(s.read.parquet(t.path(dir)).filter(col("gen") < committedGen))
+    pre(scan(s, t, dir).filter(col("gen") < committedGen))
       .select(cols.map(t.readCol) :+ col("gen").cast("long").as("gen"): _*)
 
   private def raw(s: SparkSession, t: GenTable, dir: String, committedGen: Long): DataFrame =
     raw(s, t, dir, committedGen, t.cols, identity)
 
-  /** The LIVE rows of table `t`: latest generation per key through the
-    * meta's regime ([[liveView]]), tombstones dropped after resolution
-    * ([[GenTable.dropsTombs]]), `probe` applied per the regime
-    * discipline, `cols` (plus gen) kept. `asOfGen` reads the store as
-    * of generation N ([[asOf]]); `resolveAll` forces full resolution —
-    * the audit path. A counted store that never wrote a tombstone, read
-    * current and append-only, serves the FLAT plan instead: the
+  /** The LIVE rows of table `t`: latest generation per key, through the
+    * regime the meta decides —
+    *  - PLAIN (append-only history): the committed scan, `probe` pushed
+    *    into it;
+    *  - BOUNDED (trusted, with recorded upsert generations): the same
+    *    scan under one driver-resolved literal filter ([[upsertFilter]]),
+    *    `probe` pushed into every generation — row selection no longer
+    *    depends on the probe, so no probe can resurrect a superseded row;
+    *    past `maxUpsertKeys` distinct upsert keys, or when an upsert
+    *    generation cannot be read, it resolves in full instead;
+    *  - FULL (untrusted history, or `resolveAll` — the audit path):
+    *    [[resolve]] over every committed row, `probe` applied after it
+    *    (pruning a superseded key's old partition out from under the
+    *    resolve would resurrect its stale row; a filter on the key itself
+    *    commutes with the resolve and belongs in `pre`).
+    * Tombstones are dropped after the selection ([[GenTable.dropsTombs]]);
+    * `cols` (plus gen) are kept. `asOfGen` reads the store as of
+    * generation N ([[asOf]]). A counted store that never wrote a
+    * tombstone, read current and append-only, serves the FLAT plan: the
     * write-once scan under the commit pointer, no tombstone filter, no
-    * resolution — the maintained read's residual cost on a fresh or
+    * projection — the maintained read's residual cost on a fresh or
     * just-compacted store is zero, not "small". The count describes the
     * FULL history, so an as-of read never takes it. */
   def live(s: SparkSession, dir: String, t: GenTable,
       probe: DataFrame => DataFrame, resolveAll: Boolean, asOfGen: Option[Long],
-      cols: Seq[String], pre: DataFrame => DataFrame): DataFrame = {
+      cols: Seq[String], pre: DataFrame => DataFrame,
+      maxUpsertKeys: Int = MaxUpsertKeys): DataFrame = {
     val full = metaOrThrow(s, dir)
     requireKind(full, dir, t)
     val meta = asOfGen.fold(full)(asOf(full, _))
     if (!resolveAll && asOfGen.isEmpty && meta.appendOnly &&
         t.tombCount.exists(k => full.params.get(k).contains("0")))
-      probe(pre(s.read.parquet(t.path(dir)).filter(col("gen") < meta.gen)))
+      probe(pre(scan(s, t, dir).filter(col("gen") < meta.gen)))
     else {
       val post: DataFrame => DataFrame =
         if (t.dropsTombs(full)) df => probe(df).filter(t.serving) else probe
-      liveView(meta, raw(s, t, dir, meta.gen, cols, pre), t.key, t.multiRow,
-        post, resolveAll)
+      val plain = !resolveAll && meta.appendOnly
+      val bounded =
+        if (plain || resolveAll || !meta.trusted || meta.upsertGens.isEmpty) None
+        else upsertFilter(s, t, dir, meta.upsertGens, maxUpsertKeys)
+      val rows = raw(s, t, dir, meta.gen, cols, pre)
+      post(if (plain) rows else bounded.fold(resolve(rows, t.key, t.multiRow))(f => rows.filter(f)))
     }
   }
 
@@ -581,7 +642,7 @@ private[graft] object GenStore {
     lazy val n = est
     val out = layOut(t, rows, dir, gen, n)
     val written =
-      try Some(s.read.parquet(out))
+      try Some(s.read.schema(IndexBuilder.dataSchema(s, out)).parquet(out))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     written.fold((0L, 0L)) { w =>
       t.derived.foreach { case (d, derive) => layOut(d, derive(w), dir, gen, n) }
@@ -683,19 +744,23 @@ private[graft] object GenStore {
     val s = ids.sparkSession
     val (gen, next, prev) = reserveGen(s, dir, newIds = false, batchId)
     val t = GenTable.of(next)
-    val sch = s.read.parquet(t.path(dir)).schema
+    val sch = IndexBuilder.dataSchema(s, t.path(dir))
     val keys = ids.select(col(idCol.getOrElse(t.idCol))
       .cast(sch(t.key).dataType).as(t.key)).distinct()
     val dead = deadCount(s, t, dir, prev, newIds = false, keys)
-    val stored = sch.fieldNames.toSeq
-      .filterNot(c => c == "gen" || t.keyDirs.exists(_._1 == c))
+    // the stored data columns, plus a stored hash-directory column (its
+    // value only names the directory)
+    val stored = sch.fieldNames.toSeq ++ (t.layout match {
+      case HashDirs(d, None, _, _) => Seq(d)
+      case _ => Nil
+    })
     val lits = keys.select(stored.map(c =>
       if (c == t.key) col(c) else t.tombRow.getOrElse(c, lit(null)).as(c)): _*)
     // cast only what differs from the stored type: casting an array
     // literal would also flip its element nullability in the footer
     val tombs = lits.select(lits.schema.fields.toSeq.map(f =>
-      if (f.dataType.simpleString == sch(f.name).dataType.simpleString) col(f.name)
-      else col(f.name).cast(sch(f.name).dataType).as(f.name)): _*)
+      sch.find(_.name == f.name).filter(_.dataType.simpleString != f.dataType.simpleString)
+        .fold(col(f.name))(st => col(f.name).cast(st.dataType).as(f.name))): _*)
     val (_, n) = writeGen(t, tombs, dir, gen, keys.count())
     writeMeta(s, dir, t.addTombs(appendCounters(next, 0L, dead), n))
   }
@@ -730,9 +795,8 @@ private[graft] object GenStore {
     stagedCompact(s, dir) { tmp =>
       horizonStage(s, dir, tmp, h, t.subdirs)
       val prefix = raw(s, t, dir, h + 1)
-      writeGen(t, liveView(asOf(full, h), prefix, t.key, t.multiRow,
-          _.filter(t.serving), resolveAll = true).select(t.cols.map(col): _*),
-        tmp, h, -1L)
+      writeGen(t, resolve(prefix, t.key, t.multiRow).filter(t.serving)
+        .select(t.cols.map(col): _*), tmp, h, -1L)
       val prevRetired = readRetired(s, dir, t.idCol)
       if (prevRetired.isDefined || t.tombsPresent(full)) {
         val dropped = tombstonedKeys(prefix, t.key, t.tomb).toDF(t.idCol)

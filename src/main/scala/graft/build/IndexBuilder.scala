@@ -9,9 +9,11 @@ import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetReader}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
@@ -509,16 +511,29 @@ object IndexBuilder {
     } catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** Read the parquet part-files directly under `dir` on the driver, row
-    * by row as parquet-mr groups, while `more` holds. A missing `dir` or
-    * part-file throws `FileNotFoundException`. */
-  private def readParts(conf: Configuration, dir: Path, filter: FilterCompat.Filter,
-      more: => Boolean)(row: Group => Unit): Unit = {
-    val parts = dir.getFileSystem(conf).listStatus(dir).toSeq.map(_.getPath)
-      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-      .sortBy(_.getName)
-    for (part <- parts if more) {
-      val reader = ParquetReader.builder(new GroupReadSupport, part)
+  /** Read the parquet part-files under `dir` (and its subdirectories) on
+    * the driver, row by row as parquet-mr groups, while `more` holds.
+    * `columns` projects each file to the named columns it has (Nil = all
+    * of them). Names starting with `_` or `.` are skipped, so a
+    * directory holding only `_SUCCESS` reads as no rows. A missing `dir`,
+    * subdirectory or part-file throws `FileNotFoundException`. */
+  private[graft] def readParts(conf: Configuration, dir: Path, filter: FilterCompat.Filter,
+      more: => Boolean, columns: Seq[String] = Nil)(row: Group => Unit): Unit = {
+    val (subdirs, parts) = dir.getFileSystem(conf).listStatus(dir).toSeq
+      .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .partition(_.isDirectory)
+    val support =
+      if (columns.isEmpty) new GroupReadSupport
+      else new GroupReadSupport {
+        override def init(ctx: InitContext): ReadSupport.ReadContext = {
+          val fileSchema = ctx.getFileSchema
+          new ReadSupport.ReadContext(new MessageType(fileSchema.getName,
+            columns.filter(fileSchema.containsField).map(c => fileSchema.getType(fileSchema.getFieldIndex(c))): _*))
+        }
+      }
+    for (part <- parts.map(_.getPath) if more) {
+      val reader = ParquetReader.builder(support, part)
         .withConf(conf).withFilter(filter).build()
       try {
         var g = reader.read()
@@ -528,6 +543,7 @@ object IndexBuilder {
         }
       } finally reader.close()
     }
+    for (sub <- subdirs.map(_.getPath) if more) readParts(conf, sub, filter, more, columns)(row)
   }
 
   /** The items of list field `f` of a Spark-written row, in either of

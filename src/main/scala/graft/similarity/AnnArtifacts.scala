@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   *    delta batch (id ≡ DeltaRem mod DeltaMod) is RE-INGESTED as a
   *    gen-1 UPSERT (the re-embedded-documents scenario) — q164 reads
   *    through the BOUNDED tracked-upsert resolution (the meta records
-  *    gen 1 as the upsert generation; untouched ids stay a pruned plain
-  *    read behind a broadcast anti-join, gen 1 alone is reduced).
+  *    gen 1 as the upsert generation; the driver reads gen 1's ids and
+  *    the view is one filtered scan: untouched ids from gen 0, the
+  *    re-ingested ones from gen 1).
   *    Assignment under a fixed model is a pure per-row function, so the
   *    resolved view is bit-identical to the gen-0 build and q45's
   *    recall bound holds deterministically.

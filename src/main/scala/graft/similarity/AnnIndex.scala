@@ -73,18 +73,18 @@ import org.apache.spark.sql.functions._
   *    BOUNDED by the upsert generations instead of O(index). The
   *    invariant that makes it exact: an upserted id's LATEST row lives
   *    in its latest upsert generation (newIds appends never re-add an
-  *    existing id, by declaration), so the view is
-  *      plain rows of the non-upsert gens, probe filters pushed into
-  *        the scan, ANTI-JOINED against the (broadcast, delta-scale)
-  *        upserted-id set — removes superseded old rows;
-  *      ∪ latest-gen resolution over ONLY the upsert gens' rows —
-  *        partition-pruned to those few small directories, with probe
-  *        filters applied AFTER the reduce (pruning a superseded id's
-  *        old partition out from under the reduce would resurrect its
-  *        stale row — AnnIndexSpec pins the hazard).
-  *    One undeclared day-batch no longer costs every reader a
-  *    full-index shuffle until compact; it costs one broadcast
-  *    anti-join plus a delta-sized reduce.
+  *    existing id, by declaration), so the driver reads the upsert
+  *    gens' (delta-scale) id column, takes each id's latest upsert
+  *    generation, and the view is ONE filtered scan:
+  *      rows of the non-upsert gens whose id was not upserted,
+  *      ∪ each upserted id's rows of its winning generation,
+  *    with probe filters pushed into every generation (row selection
+  *    does not depend on the probe, so pruning can't resurrect a
+  *    superseded row — AnnIndexSpec pins the hazard). One undeclared
+  *    day-batch costs every reader a driver read of the batch's ids
+  *    and a literal filter — no shuffle, no join; past a cap on
+  *    distinct upserted ids the read resolves in full
+  *    ([[GenStore.live]]).
   *  - UNTRUSTED (an in-stream compact ran: its corpus snapshot may
   *    cover batches the checkpoint has not delivered, which later
   *    re-append as duplicate content UNDER `newIds = true` — so the
@@ -240,9 +240,9 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     * per id, so a re-ingested vector supersedes its older rows — the
     * postings `gen` convention. Three regimes per the meta (class doc):
     * plain read (probe filter pushed into the scan) / BOUNDED
-    * resolution over the recorded upsert generations (probe filter
-    * pushed on the untouched branch, applied post-reduce on the upsert
-    * branch) / full resolution (probe filter strictly post-reduce —
+    * resolution over the recorded upsert generations (one driver-
+    * resolved filter, probe filter pushed into every generation) /
+    * full resolution (probe filter strictly post-reduce —
     * pruning first could read a superseded row whose newer generation
     * lives in an unprobed cell and resurrect it). `resolveAll` forces
     * the full-resolution plan regardless of the flags — the audit path
@@ -258,8 +258,8 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     * optionally CARRYING stored payload columns (the vector `v` for
     * vector-carrying indexes, the PQ `codes` for code-carrying ones —
     * the probe path's self-contained read). The `cells` probe is not on
-    * the key, so it is pushed into the plain and untouched branches and
-    * applied after resolution elsewhere. */
+    * the key, so it is pushed into the plain and bounded scans and
+    * applied after full resolution. */
   private def assignmentsView(s: SparkSession, indexDir: String,
       cells: Option[Seq[Long]], resolveAll: Boolean,
       payload: Seq[String], asOfGen: Option[Long] = None): DataFrame =
@@ -910,8 +910,8 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     * [[GenStore.live]] view shared with the text postings store: plain
     * read with the optional (band, bucket)-superset probe filter pushed
     * into the scan / BOUNDED resolution over the recorded upsert
-    * generations / full latest-gen resolution with the filter strictly
-    * after (the resurrect hazard). */
+    * generations (the filter pushed too) / full latest-gen resolution
+    * with the filter strictly after (the resurrect hazard). */
   def bandedRowsLive(s: SparkSession, indexDir: String,
       probe: Option[(Seq[Int], Seq[Long])] = None,
       asOfGen: Option[Long] = None): DataFrame =

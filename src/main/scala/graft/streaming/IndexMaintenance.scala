@@ -122,7 +122,7 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
       retainGens: Int)(build: (DataFrame, Long) => Unit,
       append: (DataFrame, Long) => Unit,
       compact: (DataFrame, Long) => Unit): StreamingQuery = {
-    val schema = spark.read.parquet(srcDir).schema
+    val schema = IndexBuilder.dataSchema(spark, srcDir)
     spark.readStream.schema(schema).parquet(srcDir).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (GenStore.recover(spark, storeDir))
@@ -155,7 +155,7 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
       indexRoot: String,
       checkpointDir: String,
       capBytes: Long = IndexBuilder.DefaultCapBytes): StreamingQuery = {
-    val schema = spark.read.parquet(dataDir).schema
+    val schema = IndexBuilder.dataSchema(spark, dataDir)
     val stream = spark.readStream.schema(schema).parquet(dataDir)
     stream.writeStream
       .foreachBatch { (_: DataFrame, batchId: Long) =>
@@ -409,7 +409,7 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
       storeDir: String,
       checkpointDir: String,
       idCol: String = "vec_id"): StreamingQuery = {
-    val schema = spark.read.parquet(delDir).schema
+    val schema = IndexBuilder.dataSchema(spark, delDir)
     val stream = spark.readStream.schema(schema).parquet(delDir)
     // The deletes stream keeps its OWN replay clock, a sibling marker
     // beside the store (atomic MetaIO writes): the store meta's `batch`

@@ -226,13 +226,15 @@ class AnnIndexSpec extends AnyFunSuite {
     val rows = rows3(plainView.select(col("vec_id"), col("cell"), lit(0L)))
     val idx2 = s"$work/ivf_plain_cmp"
     AnnIndex.buildIvf(emb.filter(!isDelta), idx2, nlist = 16)
-    AnnIndex.appendIvf(emb.filter(isDelta), idx2) // undeclared: reduce path
-    assert(AnnIndex.ivfAssignments(spark, idx2)
-      .queryExecution.executedPlan.toString.contains("Exchange"),
-      "undeclared append must route readers through upsert resolution")
-    val reduced = rows3(AnnIndex.ivfAssignments(spark, idx2)
-      .select(col("vec_id"), col("cell"), lit(0L)))
+    AnnIndex.appendIvf(emb.filter(isDelta), idx2) // undeclared: an upsert gen
+    val reduce = AnnIndex.ivfAssignments(spark, idx2, resolveAll = true)
+    assert(reduce.queryExecution.executedPlan.toString.contains("Exchange"),
+      "full resolution must reduce by key")
+    val reduced = rows3(reduce.select(col("vec_id"), col("cell"), lit(0L)))
     assert(rows == reduced)
+    // the bounded view of the upsert history serves the same rows
+    assert(rows3(AnnIndex.ivfAssignments(spark, idx2)
+      .select(col("vec_id"), col("cell"), lit(0L))) == reduced)
   }
 
   test("IVF probe prunes to the probe cells' partitions (append-only), files measured") {

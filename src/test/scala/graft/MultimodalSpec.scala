@@ -17,6 +17,9 @@ class MultimodalSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Fixture datasets live under a fresh directory per run. */
+  private lazy val fixtures = java.nio.file.Files.createTempDirectory("multimodal").toString
+
   test("decodeImage recovers the generated dimensions") {
     val png = Multimodal.Codecs.syntheticPng(37, 21, seed = 7L)
     assert(Multimodal.Codecs.decodeImage(png) == Some((37, 21, 1)))
@@ -132,8 +135,8 @@ class MultimodalSpec extends AnyFunSuite {
     Seq((1L, "same words here", "s"), (2L, "same words here", "s"),
         (3L, "a different doc", "s"))
       .toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet("target/test_phash_docs/documents.parquet")
-    val got = SparkEntry.queries("q129_phash_buckets")(spark, "target/test_phash_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_phash_docs/documents.parquet")
+    val got = SparkEntry.queries("q129_phash_buckets")(spark, s"$fixtures/test_phash_docs")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(2L -> 1L, 1L -> 1L),
       s"one bucket of two identical payloads, one singleton: $got")

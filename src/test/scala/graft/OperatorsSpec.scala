@@ -23,6 +23,9 @@ class OperatorsSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** Fixture datasets live under a fresh directory per run. */
+  private lazy val fixtures = java.nio.file.Files.createTempDirectory("operators").toString
+
   test("wordShingles: fewer than n tokens yields empty, shingles distinct") {
     import spark.implicits._
     val df = Seq("a b", "a b c d", "x x x x").toDF("text")
@@ -391,8 +394,8 @@ class OperatorsSpec extends AnyFunSuite {
       (2L, blk("s") + " " + blk("u2")),
       (3L, blk("u3")),
       (4L, blk("rep") + " " + blk("rep"))).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_para_docs/documents.parquet")
-    val got = SparkEntry.queries("q75_para_dedup")(spark, "target/test_para_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_para_docs/documents.parquet")
+    val got = SparkEntry.queries("q75_para_dedup")(spark, s"$fixtures/test_para_docs")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got(1L) == ((2L, 1L)) && got(2L) == ((2L, 1L)),
       "the shared block must be dropped from BOTH carriers (boilerplate, not canonical-copy)")
@@ -406,8 +409,8 @@ class OperatorsSpec extends AnyFunSuite {
     Seq(
       (1L, "alpha alpha alpha", "en"),
       (2L, "beta beta beta", "fr")).toDF("doc_id", "text", "lang")
-      .write.mode("overwrite").parquet("target/test_dsir_docs/documents.parquet")
-    val got = SparkEntry.queries("q76_dsir_weights")(spark, "target/test_dsir_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_dsir_docs/documents.parquet")
+    val got = SparkEntry.queries("q76_dsir_weights")(spark, s"$fixtures/test_dsir_docs")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // alpha's bucket: target count 3 of 3, raw 3 of 6 -> ratio > 1 -> positive;
     // beta's bucket: target count 0 (smoothed) -> ratio < 1 -> negative
@@ -420,9 +423,9 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     // 'zzz' appears once in a 4-token corpus; 'the' three times
     Seq((1L, "the the the"), (2L, "zzz")).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_lm_docs/documents.parquet")
+      .write.mode("overwrite").parquet(s"$fixtures/test_lm_docs/documents.parquet")
     // q74 reads the documents table from a dir; point it at the fixture
-    val fixture = "target/test_lm_docs"
+    val fixture = s"$fixtures/test_lm_docs"
     val got = SparkEntry.queries("q74_unigram_lm")(spark, fixture)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // -ln(3/4) ~= 0.2877 ; -ln(1/4) ~= 1.3863
@@ -434,8 +437,8 @@ class OperatorsSpec extends AnyFunSuite {
   test("train split partitions the corpus 90/5/5 into bounded shards") {
     import spark.implicits._
     (0L until 1000L).map(i => (i, 10L)).toDF("doc_id", "n_chars")
-      .write.mode("overwrite").parquet("target/test_split_docs/documents.parquet")
-    val rows = SparkEntry.queries("q81_train_split")(spark, "target/test_split_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_split_docs/documents.parquet")
+    val rows = SparkEntry.queries("q81_train_split")(spark, s"$fixtures/test_split_docs")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(rows.map(_._3).sum == 1000L, "splits must partition every doc exactly once")
     assert(rows.map(_._4).sum == 10000L)
@@ -452,8 +455,8 @@ class OperatorsSpec extends AnyFunSuite {
       (1L, "apple apple apple common"),
       (2L, "common banana"),
       (3L, "common common")).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_tfidf_docs/documents.parquet")
-    val got = SparkEntry.queries("q82_tfidf_terms")(spark, "target/test_tfidf_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_tfidf_docs/documents.parquet")
+    val got = SparkEntry.queries("q82_tfidf_terms")(spark, s"$fixtures/test_tfidf_docs")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
     // only (d1, apple) clears tf >= 3; common has tf <= 2 everywhere
     assert(got.toSeq == Seq((1L, "apple", 3L, 1L, 3.295837)),
@@ -466,8 +469,8 @@ class OperatorsSpec extends AnyFunSuite {
     // ab=3, ba=2 -> top = aa. Applying: 'aaa' takes ONE aa merge
     // (greedy left-to-right), so n_types=1, n_apply = 1 * 5.
     Seq((1L, "aaa aaa aaa aaa aaa ab ab ab ba ba")).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_bpe_docs/documents.parquet")
-    val got = SparkEntry.queries("q86_bpe_merge")(spark, "target/test_bpe_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_bpe_docs/documents.parquet")
+    val got = SparkEntry.queries("q86_bpe_merge")(spark, s"$fixtures/test_bpe_docs")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got.toSeq == Seq(("aa", 10L, 1L, 5L)),
       s"expected the hand-computed merge report, got ${got.toSeq}")
@@ -485,8 +488,8 @@ class OperatorsSpec extends AnyFunSuite {
     //          \ue001a (2 ids, NOT 1 — 'aaa' takes ONE aa merge)
     //  cd   -> \ue003
     Seq((7L, "abab abab aaa cd")).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_bpe_enc/documents.parquet")
-    val got = SparkEntry.queries("q159_bpe_encode")(spark, "target/test_bpe_enc")
+      .write.mode("overwrite").parquet(s"$fixtures/test_bpe_enc/documents.parquet")
+    val got = SparkEntry.queries("q159_bpe_encode")(spark, s"$fixtures/test_bpe_enc")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     val seq = Seq("\ue000\ue000", "\ue000\ue000", "\ue001a", "\ue003")
       .mkString(" ")
@@ -503,8 +506,8 @@ class OperatorsSpec extends AnyFunSuite {
     // fold is a no-op, and the encode must degrade to the normalized
     // token stream itself (n_ids = n_toks here, one char per token)
     Seq((3L, "a b c"), (4L, "   ")).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_bpe_id/documents.parquet")
-    val got = SparkEntry.queries("q159_bpe_encode")(spark, "target/test_bpe_id")
+      .write.mode("overwrite").parquet(s"$fixtures/test_bpe_id/documents.parquet")
+    val got = SparkEntry.queries("q159_bpe_encode")(spark, s"$fixtures/test_bpe_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     val md = java.security.MessageDigest.getInstance("MD5")
     val expectDigest = md.digest("a b c".getBytes("UTF-8"))
@@ -526,8 +529,8 @@ class OperatorsSpec extends AnyFunSuite {
       (11L, local, "en", "siteC"),
       (20L, (1 to 30).map(i => s"c$i").mkString(" "), "en", "siteD")) // singleton
       .toDF("doc_id", "text", "lang", "source")
-      .write.mode("overwrite").parquet("target/test_synd_docs/documents.parquet")
-    val got = SparkEntry.queries("q85_syndication")(spark, "target/test_synd_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_synd_docs/documents.parquet")
+    val got = SparkEntry.queries("q85_syndication")(spark, s"$fixtures/test_synd_docs")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got == Map(1L -> ((3L, 2L, 2L)), 10L -> ((2L, 1L, 1L))),
       s"expected the two planted clusters keyed by min doc_id, got $got")
@@ -542,8 +545,8 @@ class OperatorsSpec extends AnyFunSuite {
       (1L, bigDoc, "big"), (2L, bigDoc, "big"), (3L, bigDoc, "big"),
       (4L, (1 to 100).map(_ => "v").mkString(" "), "small"))
       .toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet("target/test_mix_docs/documents.parquet")
-    val got = SparkEntry.queries("q84_mix_budget")(spark, "target/test_mix_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_mix_docs/documents.parquet")
+    val got = SparkEntry.queries("q84_mix_budget")(spark, s"$fixtures/test_mix_docs")
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4), r.getDouble(5)))).toMap
     // total_alloc = 20000 + 100 = 20100
@@ -568,8 +571,8 @@ class OperatorsSpec extends AnyFunSuite {
       (101L, (1 to 10).map(i => s"z$i").mkString(" ")), // unrelated corpus doc
       (102L, "x1 x2 x3 x4 x5"), (103L, "x1 x2 x3 x4 x5") // corpus-corpus dup, excluded
     ).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_decontam_docs/documents.parquet")
-    val got = SparkEntry.queries("q83_decontam_minhash")(spark, "target/test_decontam_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_decontam_docs/documents.parquet")
+    val got = SparkEntry.queries("q83_decontam_minhash")(spark, s"$fixtures/test_decontam_docs")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 100L), (2L, 100L)),
       s"only eval-to-corpus pairs may surface, got $got")
@@ -581,8 +584,8 @@ class OperatorsSpec extends AnyFunSuite {
     // token counts 1, 3, 512, 513 -> buckets 0, 1, 9, 9
     Seq((1L, words(1)), (2L, words(3)), (3L, words(512)), (4L, words(513)))
       .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_pack_docs/documents.parquet")
-    val got = SparkEntry.queries("q88_pack_efficiency")(spark, "target/test_pack_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_pack_docs/documents.parquet")
+    val got = SparkEntry.queries("q88_pack_efficiency")(spark, s"$fixtures/test_pack_docs")
       .collect().map(r => r.getInt(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(got == Map(
@@ -607,8 +610,8 @@ class OperatorsSpec extends AnyFunSuite {
       (105L, e(10f, 5f), 3),
       (106L, e(10f, 6f), 3))         // 6th best — cut by k=5
       .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet("target/test_hardneg_emb/embeddings.parquet")
-    val got = SparkEntry.queries("q89_hard_negatives")(spark, "target/test_hardneg_emb")
+      .write.mode("overwrite").parquet(s"$fixtures/test_hardneg_emb/embeddings.parquet")
+    val got = SparkEntry.queries("q89_hard_negatives")(spark, s"$fixtures/test_hardneg_emb")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     assert(got.sortBy(_._3).toSeq ==
       Seq((0L, 101L, 1), (0L, 102L, 2), (0L, 103L, 3), (0L, 104L, 4), (0L, 105L, 5)),
@@ -621,8 +624,8 @@ class OperatorsSpec extends AnyFunSuite {
     // strictly decreasing in i -> ascending-score order is 6,5,4,3,2,1
     val docs = (1 to 6).map(i => (i.toLong, (1 to i).map(_ => s"u$i").mkString(" "), "s"))
     docs.toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet("target/test_tercile_docs/documents.parquet")
-    val got = SparkEntry.queries("q90_ppl_terciles")(spark, "target/test_tercile_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_tercile_docs/documents.parquet")
+    val got = SparkEntry.queries("q90_ppl_terciles")(spark, s"$fixtures/test_tercile_docs")
       .collect().map(r => r.getInt(1) -> ((r.getLong(2), r.getLong(3)))).toMap
     // tier1 = docs {6,5} (11 tokens), tier2 = {4,3} (7), tier3 = {2,1} (3)
     assert(got == Map(1 -> ((2L, 11L)), 2 -> ((2L, 7L)), 3 -> ((2L, 3L))),
@@ -633,9 +636,9 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     val base = (1 to 100).map(i => s"tok$i").mkString(" ")
     Seq((1L, base), (2L, base)).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_cdc_docs/documents.parquet")
+      .write.mode("overwrite").parquet(s"$fixtures/test_cdc_docs/documents.parquet")
     val Array((chunks, unique, dup)) =
-      SparkEntry.queries("q92_cdc_chunks")(spark, "target/test_cdc_docs")
+      SparkEntry.queries("q92_cdc_chunks")(spark, s"$fixtures/test_cdc_docs")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // every digest's count doubles (two identical docs), so chunk count
     // is even, no digest is unique, and the dedup savings cover at
@@ -650,9 +653,9 @@ class OperatorsSpec extends AnyFunSuite {
     // most of the shared suffix still dedups (a fixed-width chunker
     // would share nothing). Deterministic for this fixed content.
     Seq((1L, base), (2L, "edit edit edit " + base)).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_cdc_docs2/documents.parquet")
+      .write.mode("overwrite").parquet(s"$fixtures/test_cdc_docs2/documents.parquet")
     val Array((_, _, dup2)) =
-      SparkEntry.queries("q92_cdc_chunks")(spark, "target/test_cdc_docs2")
+      SparkEntry.queries("q92_cdc_chunks")(spark, s"$fixtures/test_cdc_docs2")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(dup2 > base.length / 2,
       s"chunking must re-synchronize after the insertion, shared=$dup2 of ${base.length}")
@@ -666,8 +669,8 @@ class OperatorsSpec extends AnyFunSuite {
       (3L, "q r s"),     // fully novel singleton
       (4L, "a b c"))     // its only shingle is shared -> n_novel 0
       .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_novel_docs/documents.parquet")
-    val got = SparkEntry.queries("q95_novelty")(spark, "target/test_novel_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_novel_docs/documents.parquet")
+    val got = SparkEntry.queries("q95_novelty")(spark, s"$fixtures/test_novel_docs")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == Map(1L -> ((2L, 1L)), 2L -> ((2L, 1L)),
       3L -> ((1L, 1L)), 4L -> ((1L, 0L))),
@@ -682,15 +685,15 @@ class OperatorsSpec extends AnyFunSuite {
       (20L, "z1 z2 z3"),    // no lexical overlap, semantic rank 1
       (30L, "a b c q r"))   // lexical rank 2, semantic rank 3
       .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_rrf/documents.parquet")
+      .write.mode("overwrite").parquet(s"$fixtures/test_rrf/documents.parquet")
     Seq(
       (0L, Array(1f, 0f, 0f), 0),
       (10L, Array(1f, 0.3f, 0f), 0), // cosine ~0.96
       (20L, Array(2f, 0f, 0f), 0),   // cosine 1.0
       (30L, Array(0f, 0f, 1f), 0))   // cosine 0
       .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet("target/test_rrf/embeddings.parquet")
-    val got = SparkEntry.queries("q96_hybrid_rrf")(spark, "target/test_rrf")
+      .write.mode("overwrite").parquet(s"$fixtures/test_rrf/embeddings.parquet")
+    val got = SparkEntry.queries("q96_hybrid_rrf")(spark, s"$fixtures/test_rrf")
       .collect().map(r => (r.getInt(2), r.getLong(1))).sortBy(_._1).map(_._2).toSeq
     // RRF: doc10 = 1/61+1/62, doc30 = 1/62+1/63, doc20 = 1/61 alone
     assert(got == Seq(10L, 30L, 20L),
@@ -704,8 +707,8 @@ class OperatorsSpec extends AnyFunSuite {
       (2L, Array(0f, -1f, 0.5f), 0),  // |.| sums: dim2 = 4, dim3 = 0.5
       (3L, Array(2f, 0f, 2f), 1))     // dim1 == dim3: tie -> dim 1
       .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet("target/test_dims/embeddings.parquet")
-    val got = SparkEntry.queries("q102_label_dims")(spark, "target/test_dims")
+      .write.mode("overwrite").parquet(s"$fixtures/test_dims/embeddings.parquet")
+    val got = SparkEntry.queries("q102_label_dims")(spark, s"$fixtures/test_dims")
       .collect().map(r => r.getInt(0) -> ((r.getInt(1), r.getDouble(2)))).toMap
     assert(got == Map(0 -> ((2, 4.0)), 1 -> ((1, 2.0))),
       s"argmax/tie-break mismatch: $got")
@@ -721,8 +724,8 @@ class OperatorsSpec extends AnyFunSuite {
       (4L, at(4), 1L, "view", 1.0, "{}"),   // gap -> NOT returning on day 4
       (5L, at(2), 2L, "view", 1.0, "{}"))   // first-ever day -> not returning
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet("target/test_ret_events/events.parquet")
-    val got = SparkEntry.queries("q103_retention")(spark, "target/test_ret_events")
+      .write.mode("overwrite").parquet(s"$fixtures/test_ret_events/events.parquet")
+    val got = SparkEntry.queries("q103_retention")(spark, s"$fixtures/test_ret_events")
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == Map("2024-01-01" -> ((1L, 0L)), "2024-01-02" -> ((2L, 1L)),
       "2024-01-04" -> ((1L, 0L))),
@@ -738,8 +741,8 @@ class OperatorsSpec extends AnyFunSuite {
       (3L, t, 1L, "view", 1.0, "{}"),            // missing key -> NULL
       (4L, t, 1L, "view", 1.0, """{"k": null}""")) // explicit null
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet("target/test_json_events/events.parquet")
-    val got = SparkEntry.queries("q104_json_extract")(spark, "target/test_json_events")
+      .write.mode("overwrite").parquet(s"$fixtures/test_json_events/events.parquet")
+    val got = SparkEntry.queries("q104_json_extract")(spark, s"$fixtures/test_json_events")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(got.toSeq == Seq(("view", 2L, 12L, 5L, 7L)),
       s"null payloads must not enter the aggregates, got ${got.toSeq}")
@@ -756,8 +759,8 @@ class OperatorsSpec extends AnyFunSuite {
       (1L, (1 to 40).map(i => s"w$i").mkString(" ")), // 2 full blocks
       (2L, (1 to 7).map(i => s"v$i").mkString(" ")))  // too short: no span
       .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_span_docs/documents.parquet")
-    val got = SparkEntry.queries("q101_span_corruption")(spark, "target/test_span_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_span_docs/documents.parquet")
+    val got = SparkEntry.queries("q101_span_corruption")(spark, s"$fixtures/test_span_docs")
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     // independent reimplementation of the mask rule for doc 1
@@ -776,8 +779,8 @@ class OperatorsSpec extends AnyFunSuite {
       (2L, "a b c x", "en", "srcB"),  // {a b c, b c x} -> shares 1 with A
       (3L, "q r s", "en", "srcC"))    // disjoint -> no row
       .toDF("doc_id", "text", "lang", "source")
-      .write.mode("overwrite").parquet("target/test_overlap/documents.parquet")
-    val got = SparkEntry.queries("q105_source_overlap")(spark, "target/test_overlap")
+      .write.mode("overwrite").parquet(s"$fixtures/test_overlap/documents.parquet")
+    val got = SparkEntry.queries("q105_source_overlap")(spark, s"$fixtures/test_overlap")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
     assert(got.toSeq == Seq(("srcA", "srcB", 1L, 2L, 2L)),
@@ -797,8 +800,8 @@ class OperatorsSpec extends AnyFunSuite {
                                  // the intersection with the exact stage
                                  // must still drop doc 6
       .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_funnel_docs/documents.parquet")
-    val got = SparkEntry.queries("q100_dedup_funnel")(spark, "target/test_funnel_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_funnel_docs/documents.parquet")
+    val got = SparkEntry.queries("q100_dedup_funnel")(spark, s"$fixtures/test_funnel_docs")
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == Map(
       "raw" -> ((6L, 104L)),      // 30+30+30+10+2+2 tokens
@@ -817,7 +820,7 @@ class OperatorsSpec extends AnyFunSuite {
       (4L, (1 to 30).map(i => s"d$i").mkString(" ")), // semantic pair only
       (5L, copyB), (6L, copyB))   // both lexical and semantic
       .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_agree/documents.parquet")
+      .write.mode("overwrite").parquet(s"$fixtures/test_agree/documents.parquet")
     // one-hot axes: every non-planted cosine is exactly 0 (q28's 0.45
     // threshold would otherwise catch diagonal near-pairs)
     def axis(i: Int, scale: Float) =
@@ -827,8 +830,8 @@ class OperatorsSpec extends AnyFunSuite {
       (3L, axis(2, 1f), 0), (4L, axis(2, 2f), 0),
       (5L, axis(3, 1f), 0), (6L, axis(3, 2f), 0))
       .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet("target/test_agree/embeddings.parquet")
-    val got = SparkEntry.queries("q93_dedup_agreement")(spark, "target/test_agree")
+      .write.mode("overwrite").parquet(s"$fixtures/test_agree/embeddings.parquet")
+    val got = SparkEntry.queries("q93_dedup_agreement")(spark, s"$fixtures/test_agree")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("both" -> 1L, "lexical_only" -> 1L, "semantic_only" -> 1L),
       s"expected one planted pair per bucket, got $got")
@@ -849,8 +852,8 @@ class OperatorsSpec extends AnyFunSuite {
       (8L, at(10), 3L, "view", 1.0, ""),
       (9L, at(20), 3L, "purchase", 1.0, "")) // ...so no qualifying click -> no stage 3
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet("target/test_funnel_events/events.parquet")
-    val got = SparkEntry.queries("q94_funnel")(spark, "target/test_funnel_events")
+      .write.mode("overwrite").parquet(s"$fixtures/test_funnel_events/events.parquet")
+    val got = SparkEntry.queries("q94_funnel")(spark, s"$fixtures/test_funnel_events")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).head
     assert(got == ((3L, 2L, 1L)),
       s"expected (3 viewers, 2 ordered clickers, 1 ordered purchaser), got $got")
@@ -866,8 +869,8 @@ class OperatorsSpec extends AnyFunSuite {
       (3L, at(90), 1L, "click", 40.0, ""),  // 60 min after ev2: still IN (inclusive bound)
       (4L, at(10), 1L, "view", 99.0, ""))   // other type: separate partition
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet("target/test_move_events/events.parquet")
-    val got = SparkEntry.queries("q97_moving_stats")(spark, "target/test_move_events")
+      .write.mode("overwrite").parquet(s"$fixtures/test_move_events/events.parquet")
+    val got = SparkEntry.queries("q97_moving_stats")(spark, s"$fixtures/test_move_events")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(got == Map(
       1L -> ((1L, 10.0)), 2L -> ((2L, 15.0)),
@@ -886,8 +889,8 @@ class OperatorsSpec extends AnyFunSuite {
       (3L, at(50), 1L, "view", 1.0, ""),   // 40min gap — new session
       (4L, at(0), 2L, "view", 1.0, ""))    // user 2, singleton
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet("target/test_sess_events/events.parquet")
-    val got = SparkEntry.queries("q91_sessionize")(spark, "target/test_sess_events")
+      .write.mode("overwrite").parquet(s"$fixtures/test_sess_events/events.parquet")
+    val got = SparkEntry.queries("q91_sessionize")(spark, s"$fixtures/test_sess_events")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got == Map(1L -> ((2L, 2L, 600L)), 2L -> ((1L, 1L, 0L))),
       s"expected 2 sessions for user 1 (best of 2 events, 600 s in-session), got $got")
@@ -908,8 +911,8 @@ class OperatorsSpec extends AnyFunSuite {
       (5L, t("t", 10) + " " + t("e", 6)),
       (6L, t("t", 10) + " " + t("f", 6)))
       .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_dupsub_docs/documents.parquet")
-    val got = SparkEntry.queries("q106_dup_substring")(spark, "target/test_dupsub_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_dupsub_docs/documents.parquet")
+    val got = SparkEntry.queries("q106_dup_substring")(spark, s"$fixtures/test_dupsub_docs")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got(1L) == ((9L, 1L, 1L)), s"d1: only its first window is shared, got ${got(1L)}")
     assert(got(2L) == ((9L, 1L, 1L)))
@@ -934,8 +937,8 @@ class OperatorsSpec extends AnyFunSuite {
     val toks = Seq("alpha", "bravo", "charlie", "delta")
     Seq((1L, toks.mkString(" ")), (2L, toks.head))
       .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_cls_docs/documents.parquet")
-    val got = SparkEntry.queries("q107_hash_classifier")(spark, "target/test_cls_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_cls_docs/documents.parquet")
+    val got = SparkEntry.queries("q107_hash_classifier")(spark, s"$fixtures/test_cls_docs")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getBoolean(3)))).toMap
     val m1 = toks.map(w).sum
     val (n1, s1, k1) = got(1L)
@@ -966,8 +969,8 @@ class OperatorsSpec extends AnyFunSuite {
       (19L, head("h3") + " only"),
       (24L, "too short"))
       .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_incr_docs/documents.parquet")
-    val got = SparkEntry.queries("q109_incr_dedup")(spark, "target/test_incr_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_incr_docs/documents.parquet")
+    val got = SparkEntry.queries("q109_incr_dedup")(spark, s"$fixtures/test_incr_docs")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(4L -> "dup_base", 9L -> "new", 14L -> "dup_delta", 19L -> "new"),
       s"planted delta classifications mismatch: $got")
@@ -987,8 +990,8 @@ class OperatorsSpec extends AnyFunSuite {
     // write in REVERSED order: the checksum must not care
     rows.reverse.toDF("doc_id", "text", "lang", "source", "n_chars")
       .repartition(3)
-      .write.mode("overwrite").parquet("target/test_cksum_docs/documents.parquet")
-    val got = SparkEntry.queries("q110_table_checksum")(spark, "target/test_cksum_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_cksum_docs/documents.parquet")
+    val got = SparkEntry.queries("q110_table_checksum")(spark, s"$fixtures/test_cksum_docs")
       .collect().head
     val fps = rows.map(fp)
     assert(got.getLong(0) == 2L)
@@ -1008,8 +1011,8 @@ class OperatorsSpec extends AnyFunSuite {
       case i => (i, s"u$i v$i w$i")
     }
     docs.toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_growth_docs/documents.parquet")
-    val got = SparkEntry.queries("q111_vocab_growth")(spark, "target/test_growth_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_growth_docs/documents.parquet")
+    val got = SparkEntry.queries("q111_vocab_growth")(spark, s"$fixtures/test_growth_docs")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got(0L) == ((1L, 1L, 1L)))
     assert(got(5L) == ((2L, 1L, 6L)),
@@ -1026,8 +1029,8 @@ class OperatorsSpec extends AnyFunSuite {
       (2L, None: Option[String], Some("en"), Some("web"), None: Option[Long]),
       (3L, Some("a"), Some("en"), None: Option[String], Some(7L)))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet("target/test_profile_docs/documents.parquet")
-    val got = SparkEntry.queries("q112_table_profile")(spark, "target/test_profile_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_profile_docs/documents.parquet")
+    val got = SparkEntry.queries("q112_table_profile")(spark, s"$fixtures/test_profile_docs")
       .collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4), r.getString(5))))
@@ -1042,7 +1045,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("ref integrity counts orphans incl. NULL child keys; dup parent keys never inflate") {
     import spark.implicits._
-    val dir = "target/test_ri"
+    val dir = s"$fixtures/test_ri"
     Seq((Some(1L), 1.0), (Some(2L), 1.0), (Some(3L), 1.0), (None: Option[Long], 1.0))
       .toDF("l_orderkey", "l_quantity")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -1076,8 +1079,8 @@ class OperatorsSpec extends AnyFunSuite {
       (4L, at(2), 1L, "view", 1.0, ""),
       (5L, at(0), 2L, "view", 1.0, ""))   // user 2: too short for a triple
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet("target/test_paths_events/events.parquet")
-    val got = SparkEntry.queries("q114_event_paths")(spark, "target/test_paths_events")
+      .write.mode("overwrite").parquet(s"$fixtures/test_paths_events/events.parquet")
+    val got = SparkEntry.queries("q114_event_paths")(spark, s"$fixtures/test_paths_events")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("view>click>purchase" -> 1L, "click>purchase>view" -> 1L),
       s"expected the two tiebreak-ordered triples of user 1 only: $got")
@@ -1089,8 +1092,8 @@ class OperatorsSpec extends AnyFunSuite {
     // TV(A) = 1/2 (|2/3-2/5| + |1/3-2/5| + 1/5) = 4/15; TV(B) = 0.4
     Seq((1L, "x x y", "A"), (2L, "y z", "B"))
       .toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet("target/test_tv_docs/documents.parquet")
-    val got = SparkEntry.queries("q115_source_divergence")(spark, "target/test_tv_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_tv_docs/documents.parquet")
+    val got = SparkEntry.queries("q115_source_divergence")(spark, s"$fixtures/test_tv_docs")
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(got("A")._1 == 3L && got("B")._1 == 2L)
     assert(math.abs(got("A")._2 - 0.266667) < 1e-9, s"TV(A) must be 4/15 rounded: ${got("A")}")
@@ -1106,8 +1109,8 @@ class OperatorsSpec extends AnyFunSuite {
     val docs = Seq((1L, base), (2L, base + " extratoken"), (3L, "totally different words here"))
     docs.map { case (id, t) => (id, t, t.length.toLong) }
       .toDF("doc_id", "text", "n_chars")
-      .write.mode("overwrite").parquet("target/test_qcanon_docs/documents.parquet")
-    val got = SparkEntry.queries("q117_quality_canonical")(spark, "target/test_qcanon_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_qcanon_docs/documents.parquet")
+    val got = SparkEntry.queries("q117_quality_canonical")(spark, s"$fixtures/test_qcanon_docs")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got(1L) == ((2L, 2L, docs(1)._2.length.toLong)),
       s"cluster {1,2} must keep doc 2 (longer), got ${got(1L)}")
@@ -1121,8 +1124,8 @@ class OperatorsSpec extends AnyFunSuite {
     // (changed); id 1 is in both, identical (unchanged)
     Seq((1L, "same"), (3L, "marked"), (9L, "gone"), (10L, "fresh"))
       .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_snap_docs/documents.parquet")
-    val got = SparkEntry.queries("q116_snapshot_diff")(spark, "target/test_snap_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_snap_docs/documents.parquet")
+    val got = SparkEntry.queries("q116_snapshot_diff")(spark, s"$fixtures/test_snap_docs")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("unchanged" -> 1L, "changed" -> 1L, "removed" -> 1L, "added" -> 1L),
       s"one id per class expected: $got")
@@ -1131,8 +1134,8 @@ class OperatorsSpec extends AnyFunSuite {
   test("range shards split a uniform length distribution into exact quartiles") {
     import spark.implicits._
     (1L to 100L).map(i => (i, "x", i)).toDF("doc_id", "text", "n_chars")
-      .write.mode("overwrite").parquet("target/test_shard_docs/documents.parquet")
-    val got = SparkEntry.queries("q108_range_shards")(spark, "target/test_shard_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_shard_docs/documents.parquet")
+    val got = SparkEntry.queries("q108_range_shards")(spark, s"$fixtures/test_shard_docs")
       .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
     assert(got == Map(
@@ -1151,8 +1154,8 @@ class OperatorsSpec extends AnyFunSuite {
     val rows = (1L to 40L).map(i => (i, "x", "big")) ++
       (100L to 102L).map(i => (i, "x", "tiny"))
     rows.toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet("target/test_quota_docs/documents.parquet")
-    val got = SparkEntry.queries("q118_group_quota_sample")(spark, "target/test_quota_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_quota_docs/documents.parquet")
+    val got = SparkEntry.queries("q118_group_quota_sample")(spark, s"$fixtures/test_quota_docs")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2)))
     // independent reimplementation of the selection rule: md5-rank the
     // ids per source, take the first 10
@@ -1172,8 +1175,8 @@ class OperatorsSpec extends AnyFunSuite {
       (2L, "bad � byte and bell  here", "a"),
       (3L, "café naïve 世界", "b"))
       .toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet("target/test_charset_docs/documents.parquet")
-    val got = SparkEntry.queries("q119_charset_audit")(spark, "target/test_charset_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_charset_docs/documents.parquet")
+    val got = SparkEntry.queries("q119_charset_audit")(spark, s"$fixtures/test_charset_docs")
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
     // source a: 2 docs, 1 with U+FFFD; the bell is the one control char;
@@ -1193,8 +1196,8 @@ class OperatorsSpec extends AnyFunSuite {
       "A second keeper stays here!"     // kept
     ).mkString("\n")
     Seq((7L, text, "s")).toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet("target/test_c4_docs/documents.parquet")
-    val r = SparkEntry.queries("q120_line_filter")(spark, "target/test_c4_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_c4_docs/documents.parquet")
+    val r = SparkEntry.queries("q120_line_filter")(spark, s"$fixtures/test_c4_docs")
       .collect().head
     val (nLines, nShort, nNopunct, nMarker, nKept) =
       (r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5))
@@ -1212,8 +1215,8 @@ class OperatorsSpec extends AnyFunSuite {
     val t = (0 until 12).map(i => s"w$i").mkString(" ")
     Seq((1L, t), (2L, t), (3L, t), (4L, "entirely different words over here yes"))
       .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_degree_docs/documents.parquet")
-    val got = SparkEntry.queries("q122_dup_degree_hist")(spark, "target/test_degree_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_degree_docs/documents.parquet")
+    val got = SparkEntry.queries("q122_dup_degree_hist")(spark, s"$fixtures/test_degree_docs")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(2L -> 3L, 0L -> 1L),
       s"identical triple = triangle (three degree-2), unique doc degree 0: $got")
@@ -1227,8 +1230,8 @@ class OperatorsSpec extends AnyFunSuite {
     val rows = (0 until 16).map(j => (j.toLong, Array.fill(64)(j.toFloat), 0)) ++
       Seq((16L, Array.fill(64)(3.2f), 0), (17L, Array.fill(64)(4.5f), 0))
     rows.toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet("target/test_pq_embeddings/embeddings.parquet")
-    val got = SparkEntry.queries("q123_pq_codes")(spark, "target/test_pq_embeddings")
+      .write.mode("overwrite").parquet(s"$fixtures/test_pq_embeddings/embeddings.parquet")
+    val got = SparkEntry.queries("q123_pq_codes")(spark, s"$fixtures/test_pq_embeddings")
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getInt(2)).toMap
     assert(got.size == 18 * 8, s"8 codes per vector expected, got ${got.size}")
     (0 until 8).foreach { sub =>
@@ -1245,8 +1248,8 @@ class OperatorsSpec extends AnyFunSuite {
     val rows = Seq((1L, "x", "de", "a"), (2L, "x", "de", "a"), (3L, "x", "en", "a"),
       (4L, "x", "en", "b"), (5L, "x", "en", "b"), (6L, "x", "fr", "b"), (7L, "x", "fr", "b"))
     rows.toDF("doc_id", "text", "lang", "source")
-      .write.mode("overwrite").parquet("target/test_mode_docs/documents.parquet")
-    val got = SparkEntry.queries("q139_group_mode")(spark, "target/test_mode_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_mode_docs/documents.parquet")
+    val got = SparkEntry.queries("q139_group_mode")(spark, s"$fixtures/test_mode_docs")
       .collect().map(r => r.getString(0) ->
         ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got("a") == (("de", 2L, 3L)), s"a: ${got("a")}")
@@ -1265,8 +1268,8 @@ class OperatorsSpec extends AnyFunSuite {
       "the codegen expression must compose e+U+0301 into U+00E9")
     Seq((1L, decomposed, "a"), (2L, "plain ascii", "a"), (3L, composed, "b"))
       .toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet("target/test_nfc_docs/documents.parquet")
-    val got = SparkEntry.queries("q133_nfc_audit")(spark, "target/test_nfc_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_nfc_docs/documents.parquet")
+    val got = SparkEntry.queries("q133_nfc_audit")(spark, s"$fixtures/test_nfc_docs")
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     // source a: decomposed doc flagged, 5 cp -> 4; ascii 11 cp unchanged
@@ -1313,8 +1316,8 @@ class OperatorsSpec extends AnyFunSuite {
     val rows = (1L to 6L).map(i => (i, t, 7L, "click", 1.0, "")) ++
       (1L to 4L).map(i => (10 + i, t, i, "view", 1.0, ""))
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet("target/test_skew_events/events.parquet")
-    val got = SparkEntry.queries("q132_skew_report")(spark, "target/test_skew_events")
+      .write.mode("overwrite").parquet(s"$fixtures/test_skew_events/events.parquet")
+    val got = SparkEntry.queries("q132_skew_report")(spark, s"$fixtures/test_skew_events")
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(got(7L) == ((6L, 600000L, 5L, 3000L)), s"hot key: ${got(7L)}")
@@ -1331,8 +1334,8 @@ class OperatorsSpec extends AnyFunSuite {
         (3L, t2h, 1L, "click", 1.0, ""), (4L, ts(5), 2L, "view", 1.0, ""),
         (5L, ts(6), 1L, "view", 1.0, ""))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet("target/test_horizon_events/events.parquet")
-    val got = SparkEntry.queries("q131_horizon_dedup")(spark, "target/test_horizon_events")
+      .write.mode("overwrite").parquet(s"$fixtures/test_horizon_events/events.parquet")
+    val got = SparkEntry.queries("q131_horizon_dedup")(spark, s"$fixtures/test_horizon_events")
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == Map("click" -> ((3L, 2L)), "view" -> ((2L, 2L))), s"$got")
   }
@@ -1342,8 +1345,8 @@ class OperatorsSpec extends AnyFunSuite {
     import java.security.MessageDigest
     Seq((1L, Array(1.0f, -0.5f, 0.25f, 0.0f), 0), (2L, Array(0.0f, 0.0f), 0))
       .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet("target/test_quant_embeddings/embeddings.parquet")
-    val got = SparkEntry.queries("q130_int8_quant")(spark, "target/test_quant_embeddings")
+      .write.mode("overwrite").parquet(s"$fixtures/test_quant_embeddings/embeddings.parquet")
+    val got = SparkEntry.queries("q130_int8_quant")(spark, s"$fixtures/test_quant_embeddings")
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), r.getLong(2), r.getInt(3), r.getInt(4), r.getString(5)))).toMap
     def md5(s: String) = MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
@@ -1364,8 +1367,8 @@ class OperatorsSpec extends AnyFunSuite {
     val text = (0 until 300).map(i => s"w$i").mkString(" ")
     val rows = (1L to 10L).map(i => (i, text, "s"))
     rows.toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet("target/test_budget_docs/documents.parquet")
-    val got = SparkEntry.queries("q128_budget_sample")(spark, "target/test_budget_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_budget_docs/documents.parquet")
+    val got = SparkEntry.queries("q128_budget_sample")(spark, s"$fixtures/test_budget_docs")
       .collect().map(r => (r.getLong(1), r.getInt(2), r.getLong(3)))
     def md5hex(v: String) = MessageDigest.getInstance("MD5").digest(v.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -1383,8 +1386,8 @@ class OperatorsSpec extends AnyFunSuite {
     // ("hsh"/"hah") so it reaches candidates and must die in the verify
     Seq((1L, "hash hast"), (2L, "ash hsah"), (3L, "hash"))
       .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet("target/test_fuzzy_docs/documents.parquet")
-    val got = SparkEntry.queries("q126_fuzzy_terms")(spark, "target/test_fuzzy_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_fuzzy_docs/documents.parquet")
+    val got = SparkEntry.queries("q126_fuzzy_terms")(spark, s"$fixtures/test_fuzzy_docs")
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got == Map(("hash", "hash") -> 2L, ("hash", "hast") -> 1L,
       ("hash", "ash") -> 1L),
@@ -1398,8 +1401,8 @@ class OperatorsSpec extends AnyFunSuite {
     Seq((1L, t, 10L, "click", 300.0, ""), (2L, t, 10L, "click", 300.0, ""),
         (3L, t, 11L, "view", 100.0, ""))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet("target/test_salted_events/events.parquet")
-    val rows = SparkEntry.queries("q125_salted_join")(spark, "target/test_salted_events")
+      .write.mode("overwrite").parquet(s"$fixtures/test_salted_events/events.parquet")
+    val rows = SparkEntry.queries("q125_salted_join")(spark, s"$fixtures/test_salted_events")
       .collect().map(r => r.getString(0) -> r).toMap
     assert(rows("click").getLong(1) == 2L && rows("click").getLong(2) == 2L &&
       rows("click").getDouble(3) == 600.0, s"click: ${rows("click")}")
@@ -1428,8 +1431,8 @@ class OperatorsSpec extends AnyFunSuite {
     val rows = (1L to 80L).map(i => (i, "x", "u", i)) ++
       Seq((200L, "x", "tiny", 5L), (201L, "x", "tiny", 5L), (202L, "x", "tiny", 9L))
     rows.toDF("doc_id", "text", "source", "n_chars")
-      .write.mode("overwrite").parquet("target/test_octile_docs/documents.parquet")
-    val got = SparkEntry.queries("q121_source_octiles")(spark, "target/test_octile_docs")
+      .write.mode("overwrite").parquet(s"$fixtures/test_octile_docs/documents.parquet")
+    val got = SparkEntry.queries("q121_source_octiles")(spark, s"$fixtures/test_octile_docs")
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
     (1 to 7).foreach { d =>
       assert(got(("u", d)) == 10L * d, s"uniform octile $d: ${got(("u", d))}")

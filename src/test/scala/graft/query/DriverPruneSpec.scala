@@ -179,29 +179,41 @@ class DriverPruneSpec extends AnyFunSuite {
 
 /** The local filesystem under the `racefs` scheme. Armed with
   * [[RaceFs.moveAsideOnList]], it renames one directory aside the first
-  * time a chosen directory is listed — a rename racing a reader. */
+  * time a chosen directory is listed — a rename racing a reader; armed
+  * with [[RaceFs.vanishOnList]], the directory is moved back once that
+  * listing returns, so it is gone for that reader only. */
 class RaceFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("racefs:///")
   override def listStatus(f: Path): Array[FileStatus] = {
-    RaceFs.onList(f.toUri.getPath)
-    super.listStatus(f)
+    val restore = RaceFs.onList(f.toUri.getPath)
+    try super.listStatus(f) finally restore()
   }
 }
 
 object RaceFs {
-  private var armed: Option[(String, String, String)] = None
+  private var armed: Option[(String, String, String, Boolean)] = None
   @volatile var fired = false
 
-  def moveAsideOnList(listed: String, from: String, to: String): Unit = synchronized {
-    armed = Some((listed, from, to))
+  def moveAsideOnList(listed: String, from: String, to: String): Unit =
+    arm(listed, from, to, back = false)
+
+  def vanishOnList(listed: String, aside: String): Unit =
+    arm(listed, listed, aside, back = true)
+
+  private def arm(listed: String, from: String, to: String, back: Boolean): Unit = synchronized {
+    armed = Some((listed, from, to, back))
     fired = false
   }
 
-  private def onList(path: String): Unit = synchronized {
-    armed.filter(_._1 == path).foreach { case (_, from, to) =>
-      java.nio.file.Files.move(java.nio.file.Paths.get(from), java.nio.file.Paths.get(to))
+  private def move(from: String, to: String): Unit =
+    java.nio.file.Files.move(java.nio.file.Paths.get(from), java.nio.file.Paths.get(to))
+
+  private def onList(path: String): () => Unit = synchronized {
+    armed.filter(_._1 == path).fold(() => ()) { case (_, from, to, back) =>
+      move(from, to)
       armed = None
       fired = true
+      if (back) () => move(to, from) else () => ()
     }
   }
 }
