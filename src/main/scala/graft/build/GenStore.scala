@@ -2,10 +2,12 @@ package graft.build
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.schema.LogicalTypeAnnotation
+import graft.functions.expressions.LongKeyIn
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.LongType
 
 /** The ONE gen-stamped-store lifecycle protocol, shared by every
   * persisted maintained structure in the engine — the vector indexes
@@ -32,9 +34,10 @@ import org.apache.spark.sql.functions._
   *  - READS resolve through three regimes decided by the meta: PLAIN
   *    (append-only history — no shuffle, probe filters push into the
   *    scan), BOUNDED tracked-upsert (the recorded upsert generations'
-  *    keys are read on the driver and folded into one literal filter
-  *    over the same scan — no shuffle, no join, no Spark job before the
-  *    query's own; past a cap on distinct upsert keys, full resolution),
+  *    keys are read on the driver from the scan's own file listing and
+  *    folded into one key filter over that scan — no shuffle, no
+  *    join, no Spark job before the query's own; past a cap on upsert
+  *    rows read or on distinct upsert keys, full resolution),
   *    UNTRUSTED (full latest-gen resolution);
   *  - COMPACT rebuilds at gen 0 in a sibling `.compact.tmp` tree and
   *    swaps (delete + rename); the delete→rename crash gap is adopted
@@ -491,57 +494,81 @@ private[graft] object GenStore {
           col("m.gen").as("gen"): _*)
     }
 
-  /** Distinct upsert keys the bounded regime folds into its literal
-    * filter; past it the read takes full resolution. */
+  /** Distinct upsert keys the bounded regime folds into its filter, and
+    * upsert-generation rows it may read on the driver to find them; past
+    * either cap the read resolves in full. */
   private val MaxUpsertKeys = 1 << 16
+  private val MaxUpsertRows = 1L << 20
 
-  /** The BOUNDED regime's row selection, resolved on the driver: the
-    * key column of every upsert generation `ug` is read with parquet-mr
-    * (no Spark job), each key's winning generation is its latest upsert
-    * generation, and the selection is one literal filter
-    * `(gen ∉ ug ∧ key ∉ K) ∨ ⋁_g (gen = g ∧ key ∈ K_g)` — the untouched
-    * generations minus every upsert key, plus each key's rows of its
-    * winning generation. On a trusted history a key outside the upsert
-    * generations lives in exactly one untouched generation, so this is
-    * latest-gen resolution. For one-row tables it equals the struct max
-    * because writers leave one row per (key, gen) (batches are deduped
-    * by id, deletes write one tombstone per key; LiveViewSpec pins it).
-    * None — the caller resolves in full — past `cap` distinct keys, on a
-    * null key or a key type other than int/long/string, and when an
-    * upsert generation's directory or file is missing or vanishes during
-    * the read: an unreadable generation is unknown, never "no keys",
-    * which would resurrect every key it deleted. A generation directory
-    * holding only `_SUCCESS` (a zero-row batch) is a known empty set. */
-  private def upsertFilter(s: SparkSession, t: GenTable, dir: String, ug: Seq[Long],
-      cap: Int): Option[Column] = {
+  /** The BOUNDED regime's row selection over `rows` (one listed relation
+    * of the committed generations), resolved on the driver: the key
+    * column of each upsert generation `ug`'s files IN THAT LISTING is
+    * read with parquet-mr (no Spark job), each key's winning generation
+    * is its latest upsert generation, and the selection is one filter
+    * `(gen ∉ ug ∧ key ∉ K) ∨ ⋁_g (gen = g ∧ key ∈ K_g)`, each key set a
+    * sorted array probed by binary search ([[LongKeyIn]]) — the
+    * untouched generations minus every upsert key, plus each key's rows
+    * of its winning generation. On a trusted history a key outside the
+    * upsert generations lives in exactly one untouched generation, so
+    * this is latest-gen resolution. For one-row tables it equals the
+    * struct max because writers leave one row per (key, gen) (batches
+    * are deduped by id, deletes write one tombstone per key;
+    * LiveViewSpec pins it). Keys and scan come from the same listing, so
+    * a compaction swapped in beside the read cannot pair a filter of one
+    * tree with the rows of another: once listed, a file that is gone
+    * fails the read (here: None; in the scan: the query's own error).
+    * None — the caller resolves in full over a fresh listing — past
+    * `maxRows` rows read or `maxKeys` distinct keys (the read stops
+    * there, so the driver's work is bounded by the caps), on a null key or a
+    * key type other than bigint, when a listed file is gone,
+    * and when the listing lacks an upsert generation that is not a known
+    * empty set (its directory holding only `_SUCCESS`, a zero-row batch):
+    * an unreadable generation is unknown, never "no keys", which would
+    * resurrect every key it deleted. */
+  private def upsertFilter(s: SparkSession, t: GenTable, dir: String, rows: DataFrame,
+      ug: Seq[Long], maxKeys: Int, maxRows: Long): Option[Column] = {
     val conf = s.sessionState.newHadoopConf()
-    val win = scala.collection.mutable.HashMap.empty[Any, Long]
-    var known = true
-    try for (g <- ug.sorted if known && win.size <= cap)
-      IndexBuilder.readParts(conf, new Path(s"${t.path(dir)}/gen=$g"), FilterCompat.NOOP,
-          more = known && win.size <= cap, columns = Seq(t.key)) { r =>
-        val f = r.getType.getType(0).asPrimitiveType
-        if (r.getFieldRepetitionCount(0) == 0) known = false
-        else f.getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT64 => win(r.getLong(0, 0)) = g
-          case PrimitiveTypeName.INT32 => win(r.getInteger(0, 0)) = g
-          case PrimitiveTypeName.BINARY if f.getLogicalTypeAnnotation ==
-              LogicalTypeAnnotation.stringType => win(r.getString(0, 0)) = g
-          case _ => known = false
-        }
+    val listed = rows.inputFiles.toSeq.map(f => new Path(new java.net.URI(f)))
+      .flatMap(p => genOf(p).filter(ug.contains).map(_ -> p)).groupMap(_._1)(_._2)
+    def knownEmpty(g: Long): Boolean = {
+      val d = new Path(s"${t.path(dir)}/gen=$g")
+      try d.getFileSystem(conf).listStatus(d).map(_.getPath.getName)
+        .filterNot(_.startsWith(".")).toSeq == Seq("_SUCCESS")
+      catch { case _: java.io.FileNotFoundException => false }
+    }
+    val files = ug.sorted.flatMap(g => listed.getOrElse(g, Nil).sortBy(_.toString).map(g -> _))
+    val win = scala.collection.mutable.HashMap.empty[Long, Long]
+    var known = rows.schema(t.key).dataType == LongType &&
+      ug.forall(g => listed.contains(g) || knownEmpty(g))
+    var read = 0L
+    def more = known && read <= maxRows && win.size <= maxKeys
+    try for ((g, p) <- files if more)
+      IndexBuilder.readFile(conf, p, FilterCompat.NOOP, more, columns = Seq(t.key)) { r =>
+        read += 1
+        if (r.getFieldRepetitionCount(0) == 0 ||
+            r.getType.getType(0).asPrimitiveType.getPrimitiveTypeName != PrimitiveTypeName.INT64)
+          known = false
+        else win(r.getLong(0, 0)) = g
       }
-    catch { case _: java.io.FileNotFoundException => known = false }
-    if (!known || win.size > cap) None
+    catch {
+      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => known = false
+    }
+    def in(keys: Iterable[Long]): Column =
+      ColumnBridge.column(LongKeyIn(ColumnBridge.expression(col(t.key)), keys.toArray.sorted))
+    if (!more) None
     else {
-      val order: Ordering[Any] = (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
       val gen = col("gen")
-      val key = col(t.key)
-      val untouched = !gen.isin(ug: _*) && (key.isNull || !key.isin(win.keys.toSeq.sorted(order): _*))
-      Some(win.toSeq.groupBy(_._2).toSeq.sortBy(_._1).foldLeft(untouched) {
-        case (f, (g, kv)) => f || (gen === g && key.isin(kv.map(_._1).sorted(order): _*))
+      val untouched = !gen.isin(ug: _*) && (col(t.key).isNull || !in(win.keys))
+      Some(win.groupMap(_._2)(_._1).toSeq.sortBy(_._1).foldLeft(untouched) {
+        case (f, (g, keys)) => f || (gen === g && in(keys))
       })
     }
   }
+
+  /** The generation of a data file: its nearest `gen=N` directory. */
+  private def genOf(file: Path): Option[Long] =
+    Iterator.iterate(file.getParent)(_.getParent).takeWhile(_ != null).map(_.getName)
+      .find(_.startsWith("gen=")).flatMap(_.stripPrefix("gen=").toLongOption)
 
   /** Throws unless the structure the tree's meta names stores table
     * `t` — a verb of one structure must never read or append another's
@@ -580,11 +607,13 @@ private[graft] object GenStore {
     *  - PLAIN (append-only history): the committed scan, `probe` pushed
     *    into it;
     *  - BOUNDED (trusted, with recorded upsert generations): the same
-    *    scan under one driver-resolved literal filter ([[upsertFilter]]),
-    *    `probe` pushed into every generation — row selection no longer
-    *    depends on the probe, so no probe can resurrect a superseded row;
-    *    past `maxUpsertKeys` distinct upsert keys, or when an upsert
-    *    generation cannot be read, it resolves in full instead;
+    *    scan under one key filter resolved on the driver from that
+    *    scan's own listing ([[upsertFilter]]), `probe` pushed into every
+    *    generation — row selection no longer depends on the probe, so no
+    *    probe can resurrect a superseded row; past `maxUpsertRows` upsert
+    *    rows or `maxUpsertKeys` distinct upsert keys, or when an upsert
+    *    generation cannot be read from the listing, it resolves in full
+    *    over a fresh listing instead;
     *  - FULL (untrusted history, or `resolveAll` — the audit path):
     *    [[resolve]] over every committed row, `probe` applied after it
     *    (pruning a superseded key's old partition out from under the
@@ -601,7 +630,7 @@ private[graft] object GenStore {
   def live(s: SparkSession, dir: String, t: GenTable,
       probe: DataFrame => DataFrame, resolveAll: Boolean, asOfGen: Option[Long],
       cols: Seq[String], pre: DataFrame => DataFrame,
-      maxUpsertKeys: Int = MaxUpsertKeys): DataFrame = {
+      maxUpsertKeys: Int = MaxUpsertKeys, maxUpsertRows: Long = MaxUpsertRows): DataFrame = {
     val full = metaOrThrow(s, dir)
     requireKind(full, dir, t)
     val meta = asOfGen.fold(full)(asOf(full, _))
@@ -611,12 +640,13 @@ private[graft] object GenStore {
     else {
       val post: DataFrame => DataFrame =
         if (t.dropsTombs(full)) df => probe(df).filter(t.serving) else probe
-      val plain = !resolveAll && meta.appendOnly
-      val bounded =
-        if (plain || resolveAll || !meta.trusted || meta.upsertGens.isEmpty) None
-        else upsertFilter(s, t, dir, meta.upsertGens, maxUpsertKeys)
       val rows = raw(s, t, dir, meta.gen, cols, pre)
-      post(if (plain) rows else bounded.fold(resolve(rows, t.key, t.multiRow))(f => rows.filter(f)))
+      post(
+        if (!resolveAll && meta.appendOnly) rows
+        else if (resolveAll || !meta.trusted || meta.upsertGens.isEmpty)
+          resolve(rows, t.key, t.multiRow)
+        else upsertFilter(s, t, dir, rows, meta.upsertGens, maxUpsertKeys, maxUpsertRows)
+          .fold(resolve(raw(s, t, dir, meta.gen, cols, pre), t.key, t.multiRow))(rows.filter))
     }
   }
 
@@ -748,13 +778,7 @@ private[graft] object GenStore {
     val keys = ids.select(col(idCol.getOrElse(t.idCol))
       .cast(sch(t.key).dataType).as(t.key)).distinct()
     val dead = deadCount(s, t, dir, prev, newIds = false, keys)
-    // the stored data columns, plus a stored hash-directory column (its
-    // value only names the directory)
-    val stored = sch.fieldNames.toSeq ++ (t.layout match {
-      case HashDirs(d, None, _, _) => Seq(d)
-      case _ => Nil
-    })
-    val lits = keys.select(stored.map(c =>
+    val lits = keys.select(t.cols.map(c =>
       if (c == t.key) col(c) else t.tombRow.getOrElse(c, lit(null)).as(c)): _*)
     // cast only what differs from the stored type: casting an array
     // literal would also flip its element nullability in the footer

@@ -523,6 +523,14 @@ object IndexBuilder {
       .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
       .sortBy(_.getPath.getName)
       .partition(_.isDirectory)
+    for (part <- parts.map(_.getPath) if more) readFile(conf, part, filter, more, columns)(row)
+    for (sub <- subdirs.map(_.getPath) if more) readParts(conf, sub, filter, more, columns)(row)
+  }
+
+  /** Read parquet file `part` on the driver as [[readParts]] reads each
+    * of its part-files. A missing `part` throws `FileNotFoundException`. */
+  private[graft] def readFile(conf: Configuration, part: Path, filter: FilterCompat.Filter,
+      more: => Boolean, columns: Seq[String] = Nil)(row: Group => Unit): Unit = {
     val support =
       if (columns.isEmpty) new GroupReadSupport
       else new GroupReadSupport {
@@ -532,18 +540,15 @@ object IndexBuilder {
             columns.filter(fileSchema.containsField).map(c => fileSchema.getType(fileSchema.getFieldIndex(c))): _*))
         }
       }
-    for (part <- parts.map(_.getPath) if more) {
-      val reader = ParquetReader.builder(support, part)
-        .withConf(conf).withFilter(filter).build()
-      try {
-        var g = reader.read()
-        while (g != null && more) {
-          row(g)
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    for (sub <- subdirs.map(_.getPath) if more) readParts(conf, sub, filter, more, columns)(row)
+    val reader = ParquetReader.builder(support, part)
+      .withConf(conf).withFilter(filter).build()
+    try {
+      var g = reader.read()
+      while (g != null && more) {
+        row(g)
+        g = reader.read()
+      }
+    } finally reader.close()
   }
 
   /** The items of list field `f` of a Spark-written row, in either of

@@ -82,9 +82,9 @@ import org.apache.spark.sql.functions._
   *    does not depend on the probe, so pruning can't resurrect a
   *    superseded row — AnnIndexSpec pins the hazard). One undeclared
   *    day-batch costs every reader a driver read of the batch's ids
-  *    and a literal filter — no shuffle, no join; past a cap on
-  *    distinct upserted ids the read resolves in full
-  *    ([[GenStore.live]]).
+  *    (from the scan's own file listing) and one key filter — no
+  *    shuffle, no join; past a cap on upsert rows read or on distinct
+  *    upserted ids the read resolves in full ([[GenStore.live]]).
   *  - UNTRUSTED (an in-stream compact ran: its corpus snapshot may
   *    cover batches the checkpoint has not delivered, which later
   *    re-append as duplicate content UNDER `newIds = true` — so the

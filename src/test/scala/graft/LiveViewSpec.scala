@@ -1,23 +1,30 @@
 package graft
 
 import graft.build.{GenStore, GenTable}
+import graft.functions.expressions.LongKeyIn
 import graft.query.RaceFs
 import graft.similarity.AnnIndex
 import graft.text.{PostingsStore, TextIndex}
+import java.io.File
+import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
+import scala.util.{Failure, Success, Try}
 
 /** The BOUNDED live view resolves upserts on the driver: on a trusted
   * history with upsert generations, every maintained store's live view
   * is one filtered scan (no aggregate, no join, no Spark job to plan it)
   * whose rows equal full resolution — current and as of every
-  * generation, and past the distinct-key cap too. An upsert generation
-  * that is missing or vanishes during the driver read is unknown and
-  * takes full resolution; a zero-row one is a known empty set. */
+  * generation, and past the distinct-key and upsert-row caps too. An
+  * upsert generation missing from the scan's listing is unknown and
+  * takes full resolution; a zero-row one is a known empty set; a
+  * compaction swapped in during a read never pairs one tree's keys with
+  * another's rows. */
 class LiveViewSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -81,8 +88,8 @@ class LiveViewSpec extends AnyFunSuite {
   private lazy val text = textHistory(s"$work/text")
 
   private def view(dir: String, t: GenTable, resolveAll: Boolean = false,
-      asOfGen: Option[Long] = None, cap: Int = 1 << 16): DataFrame =
-    GenStore.live(spark, dir, t, identity, resolveAll, asOfGen, t.cols, identity, cap)
+      asOfGen: Option[Long] = None, cap: Int = 1 << 16, rowCap: Long = 1L << 20): DataFrame =
+    GenStore.live(spark, dir, t, identity, resolveAll, asOfGen, t.cols, identity, cap, rowCap)
 
   /** The rows as a sorted multiset, columns in name order (a resolving
     * join puts the key and gen first). */
@@ -117,18 +124,22 @@ class LiveViewSpec extends AnyFunSuite {
   }
 
   /** Bounded ≡ full resolution, current and as of every generation;
-    * bounded reads are plain filtered scans; with a cap of one key the
-    * read resolves in full and still serves the same rows. */
+    * bounded reads are plain filtered scans; with a cap of one key, or
+    * of one upsert row read, the read resolves in full and still serves
+    * the same rows. */
   private def boundedEqualsFull(dir: String, t: GenTable): Unit =
     for (asOf <- None +: (0L until Gens).map(Some(_))) {
       val want = rows(view(dir, t, resolveAll = true, asOfGen = asOf))
       val bounded = view(dir, t, asOfGen = asOf)
       assert(rows(bounded) == want, s"${t.subdir} at $dir as of $asOf")
       assert(!resolves(bounded), s"${t.subdir} as of $asOf: the bounded view must not resolve")
-      val capped = view(dir, t, asOfGen = asOf, cap = 1)
-      assert(rows(capped) == want, s"${t.subdir} as of $asOf, cap 1")
       // from generation 2 on the prefix holds more than one upsert key
-      assert(resolves(capped) == asOf.forall(_ >= 2), s"${t.subdir} as of $asOf, cap 1")
+      // and more than one upsert row
+      for ((capped, which) <- Seq(view(dir, t, asOfGen = asOf, cap = 1) -> "key cap 1",
+          view(dir, t, asOfGen = asOf, rowCap = 1) -> "row cap 1")) {
+        assert(rows(capped) == want, s"${t.subdir} as of $asOf, $which")
+        assert(resolves(capped) == asOf.forall(_ >= 2), s"${t.subdir} as of $asOf, $which")
+      }
     }
 
   test("text postings + norms: bounded live view equals full resolution, as of every gen and past the cap") {
@@ -158,6 +169,23 @@ class LiveViewSpec extends AnyFunSuite {
     val want = TextIndex.searchScoredWith(PostingsStore.live(spark, text, resolveAll = true),
       PostingsStore.normsLive(spark, text, resolveAll = true), terms, "bm25")
     assert(rows(q) == rows(want) && rows(want).nonEmpty)
+  }
+
+  test("key_in: generated and interpreted evaluation agree; a null key stays null") {
+    val in = ColumnBridge.column(LongKeyIn(ColumnBridge.expression(col("k")), Array(-7L, 3L, 9L)))
+    // a range scan, so the projection is not folded on the driver
+    val df = spark.range(-8, 11)
+      .select(when(col("id") =!= 0, col("id")).as("k")).select(col("k"), in.as("hit"))
+    val want = (-8L to 10L).map(k =>
+      if (k == 0) "[null,null]" else s"[$k,${Set(-7L, 3L, 9L)(k)}]")
+    def got = df.collect().map(_.toString).toSeq
+    assert(got == want)
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try assert(got == want)
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("one-row tables: writers leave one row per (key, gen), duplicate-id batches included") {
@@ -194,23 +222,81 @@ class LiveViewSpec extends AnyFunSuite {
     } finally assert(fs.rename(new Path(s"$d/gen3_aside"), gen3))
   }
 
-  test("an upsert generation vanishing during the driver read takes full resolution") {
-    val d = textHistory(s"$work/text_raced")
-    val want = rows(PostingsStore.live(spark, d, resolveAll = true))
+  private def withRaceFs[T](body: => T): T = {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.racefs.impl", classOf[RaceFs].getName)
     hc.set("fs.racefs.impl.disable.cache", "true")
-    try {
-      // the delete generation is gone while the driver lists it, and
-      // back before the scan reads the store
-      RaceFs.vanishOnList(s"${GenTable.Postings.path(d)}/gen=3", s"$d/gen3_aside")
-      val live = PostingsStore.live(spark, s"racefs://$d")
-      assert(RaceFs.fired)
-      assert(resolves(live))
-      assert(rows(live) == want)
-    } finally {
+    try body finally {
+      RaceFs.disarm()
       hc.unset("fs.racefs.impl")
       hc.unset("fs.racefs.impl.disable.cache")
     }
+  }
+
+  /** Runs `read` with a race armed at the k-th matching call, k = 0, 1,
+    * … until the race no longer fires within the read; the outcome of
+    * every run, paired with whether its race fired. */
+  private def sweep[T](arm: Int => Unit)(read: => T): Seq[(Boolean, Try[T])] =
+    Iterator.from(0).map { k =>
+      assert(k < 500, "the race kept firing")
+      arm(k)
+      val out = Try(read)
+      val fired = RaceFs.fired
+      RaceFs.disarm()
+      fired -> out
+    }.span(_._1) match { case (raced, rest) => raced.toList :+ rest.next() }
+
+  test("an upsert generation missing from the scan's listing takes full resolution over a fresh one") {
+    val d = textHistory(s"$work/text_raced")
+    val want = rows(PostingsStore.live(spark, d, resolveAll = true))
+    val data = GenTable.Postings.path(d)
+    val runs = withRaceFs {
+      // the delete generation is gone while the store root is listed
+      // (the footer-schema walk, then the scan's listing), and back
+      // before the read goes on
+      sweep(RaceFs.vanishOnList(data, s"$data/gen=3", s"$d/gen3_aside", _)) {
+        val live = PostingsStore.live(spark, s"racefs://$d")
+        (rows(live), resolves(live))
+      }
+    }
+    assert(runs.forall(_._2.get._1 == want))
+    assert(runs.exists { case (fired, out) => fired && out.get._2 }, "no race hit the scan's listing")
+  }
+
+  test("a horizon compaction swapped in at any point of a bounded read: full-resolution rows or an error") {
+    val src = textHistory(s"$work/swap_src")
+    val squashed = s"$work/swap_squashed"
+    FileUtils.copyDirectory(new File(src), new File(squashed))
+    // upsert gens 2, 3, 4: the squash resolves 2 and 3 into gen 3
+    GenStore.compactThrough(spark, squashed, 3L)
+    def served(df: DataFrame) = rows(df.drop("gen"))
+    val want = served(PostingsStore.live(spark, src, resolveAll = true))
+    assert(served(PostingsStore.live(spark, squashed)) == want)
+    var k = 0
+    def fresh(): String = {
+      k += 1
+      FileUtils.copyDirectory(new File(src), new File(s"$work/swap_$k"))
+      FileUtils.copyDirectory(new File(squashed), new File(s"$work/swap_${k}_new"))
+      s"$work/swap_$k"
+    }
+    var d = ""
+    val runs = withRaceFs {
+      sweep { skip =>
+        d = fresh()
+        RaceFs.swapOnAccess(GenTable.Postings.path(d), skip, d, s"${d}_old", s"${d}_new")
+      }(served(PostingsStore.live(spark, s"racefs://$d")))
+    }
+    def missingFile(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+        case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => true
+        case _ => false
+      }
+    info(s"${runs.size - 1} accesses swept, ${runs.count(_._2.isFailure)} failed on a vanished file")
+    for (((fired, out), i) <- runs.zipWithIndex) out match {
+      case Success(r) => assert(r == want, s"swap at access $i")
+      case Failure(e) => assert(fired && missingFile(e), s"swap at access $i: $e")
+    }
+    // the swap landed inside the read and the read still served the rows
+    assert(runs.exists { case (fired, out) => fired && out.isSuccess })
   }
 }

@@ -180,40 +180,70 @@ class DriverPruneSpec extends AnyFunSuite {
 /** The local filesystem under the `racefs` scheme. Armed with
   * [[RaceFs.moveAsideOnList]], it renames one directory aside the first
   * time a chosen directory is listed — a rename racing a reader; armed
-  * with [[RaceFs.vanishOnList]], the directory is moved back once that
-  * listing returns, so it is gone for that reader only. */
+  * with [[RaceFs.vanishOnList]], a directory is gone for one listing of
+  * another and moved back once it returns, so it is gone for that reader
+  * only; armed with [[RaceFs.swapOnAccess]], a whole tree is swapped for
+  * another at one listing or status call under a path — a compaction's
+  * swap landing at that point of a read. */
 class RaceFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("racefs:///")
-  override def listStatus(f: Path): Array[FileStatus] = {
-    val restore = RaceFs.onList(f.toUri.getPath)
-    try super.listStatus(f) finally restore()
-  }
+  override def listStatus(f: Path): Array[FileStatus] =
+    RaceFs.around("list", f)(super.listStatus(f))
+  override def getFileStatus(f: Path): FileStatus =
+    RaceFs.around("stat", f)(super.getFileStatus(f))
 }
 
 object RaceFs {
-  private var armed: Option[(String, String, String, Boolean)] = None
+  /** On the `skip + 1`-th call `hit` matches (operation, path), rename
+    * each pair of `moves` in order; with `back`, rename them back once
+    * that call returns. */
+  private final case class Arm(hit: (String, String) => Boolean, skip: Int,
+      moves: Seq[(String, String)], back: Boolean)
+
+  private var armed: Option[Arm] = None
   @volatile var fired = false
 
   def moveAsideOnList(listed: String, from: String, to: String): Unit =
-    arm(listed, from, to, back = false)
+    arm(Arm((op, p) => op == "list" && p == listed, 0, Seq(from -> to), back = false))
 
-  def vanishOnList(listed: String, aside: String): Unit =
-    arm(listed, listed, aside, back = true)
+  /** `moved` is at `aside` during the `skip + 1`-th listing of `listed`. */
+  def vanishOnList(listed: String, moved: String, aside: String, skip: Int = 0): Unit =
+    arm(Arm((op, p) => op == "list" && p == listed, skip, Seq(moved -> aside), back = true))
 
-  private def arm(listed: String, from: String, to: String, back: Boolean): Unit = synchronized {
-    armed = Some((listed, from, to, back))
+  /** At the `skip + 1`-th listing or status call on `under` or below it,
+    * `tree` moves to `aside` and `replacement` takes its place, for good. */
+  def swapOnAccess(under: String, skip: Int, tree: String, aside: String,
+      replacement: String): Unit =
+    arm(Arm((_, p) => p == under || p.startsWith(s"$under/"), skip,
+      Seq(tree -> aside, replacement -> tree), back = false))
+
+  def disarm(): Unit = synchronized { armed = None }
+
+  private def arm(a: Arm): Unit = synchronized {
+    armed = Some(a)
     fired = false
   }
 
   private def move(from: String, to: String): Unit =
     java.nio.file.Files.move(java.nio.file.Paths.get(from), java.nio.file.Paths.get(to))
 
-  private def onList(path: String): () => Unit = synchronized {
-    armed.filter(_._1 == path).fold(() => ()) { case (_, from, to, back) =>
-      move(from, to)
-      armed = None
-      fired = true
-      if (back) () => move(to, from) else () => ()
+  private def around[T](op: String, f: Path)(call: => T): T = {
+    val restore = on(op, f.toUri.getPath)
+    try call finally restore()
+  }
+
+  private def on(op: String, path: String): () => Unit = synchronized {
+    armed.filter(_.hit(op, path)).fold(() => ()) { a =>
+      if (a.skip > 0) {
+        armed = Some(a.copy(skip = a.skip - 1))
+        () => ()
+      } else {
+        a.moves.foreach { case (from, to) => move(from, to) }
+        armed = None
+        fired = true
+        if (a.back) () => a.moves.reverse.foreach { case (from, to) => move(to, from) }
+        else () => ()
+      }
     }
   }
 }
