@@ -55,10 +55,10 @@ object Graft {
   }
 
   /** Register (or update) the BLOOM skipping-index root for a dataset
-    * path (`BloomIndex.build`'s output): transparent reads then consult
-    * the sketches for conjunct EQ leaves on bloom-covered columns,
-    * composing with any postings-index registration on the same path —
-    * high-cardinality EQ skipping without touching the query. */
+    * path (`BloomIndex.build`'s output): transparent reads then pass it
+    * with any postings-index root of the same path to the one pruning
+    * decision, where the sketches answer EQ leaves on bloom-covered
+    * columns — high-cardinality EQ skipping without touching the query. */
   def registerBloom(spark: SparkSession, dataDir: String, bloomRoot: String): Unit = {
     require(!dataDir.contains("=") && !dataDir.contains(";"),
       s"dataDir cannot contain '=' or ';' (conf-encoding separators): $dataDir")

@@ -260,20 +260,21 @@ private[graft] object GenStore {
     * its key's live generation but never counts as a live row, because
     * the views never serve it. */
   private def deadCounts(raw: DataFrame, keyCol: String, ids: DataFrame,
-      weight: Column = lit(1L), baseGen: Long = 0L): (Long, Long) = {
-    val matched = raw
-      .select(col(keyCol), col("gen").cast("long").as("gen"),
+      weight: Column = lit(1L), baseGen: Long = 0L): (Long, Long) =
+    liveSplit(raw.select(col(keyCol), col("gen").cast("long").as("gen"),
         weight.cast("long").as("w"))
-      .join(broadcast(ids.select(col(keyCol))), Seq(keyCol), "left_semi")
-    val liveRows = matched
-      .join(matched.groupBy(keyCol).agg(max("gen").as("gen")), Seq(keyCol, "gen"))
-    // base vs append split at `baseGen`, NOT a literal 0: after a
-    // HORIZON compact the base generation is the squash point (the gen
-    // clock is preserved so as-of reads keep working), and a superseded
-    // squashed-base row must leave `baseRows`, not `appendRows`
-    val r = liveRows.agg(
-      coalesce(sum(when(col("gen") === baseGen, col("w"))), lit(0L)).as("d0"),
-      coalesce(sum(when(col("gen") > baseGen, col("w"))), lit(0L)).as("da")).head()
+      .join(broadcast(ids.select(col(keyCol))), Seq(keyCol), "left_semi"), keyCol, baseGen)
+
+  /** The live weight of `rows` (`keyCol`, long `gen`, weight `w`): every
+    * row of its key's max generation, summed as (rows at `baseGen`, rows
+    * above it). The split is at `baseGen`, NOT a literal 0: after a
+    * HORIZON compact the base generation is the squash point (the gen
+    * clock is preserved so as-of reads keep working), and a superseded
+    * squashed-base row must leave `baseRows`, not `appendRows`. */
+  private def liveSplit(rows: DataFrame, keyCol: String, baseGen: Long): (Long, Long) = {
+    val r = rows.join(rows.groupBy(keyCol).agg(max("gen").as("gen")), Seq(keyCol, "gen"))
+      .agg(coalesce(sum(when(col("gen") === baseGen, col("w"))), lit(0L)),
+        coalesce(sum(when(col("gen") > baseGen, col("w"))), lit(0L))).head()
     (r.getLong(0), r.getLong(1))
   }
 
@@ -420,7 +421,8 @@ private[graft] object GenStore {
   private def readRetired(s: SparkSession, dir: String, keyCol: String): Option[DataFrame] = {
     val p = new Path(retiredPath(dir))
     if (fsOf(s, dir).exists(p))
-      Some(s.read.parquet(retiredPath(dir)).toDF(keyCol))
+      Some(s.read.schema(IndexBuilder.dataSchema(s, retiredPath(dir)))
+        .parquet(retiredPath(dir)).toDF(keyCol))
     else None
   }
 
@@ -429,17 +431,6 @@ private[graft] object GenStore {
   private def writeRetired(keys: DataFrame, tmpDir: String): Unit =
     keys.distinct().coalesce(1)
       .write.mode("overwrite").parquet(retiredPath(tmpDir))
-
-  /** Keys whose latest-generation state in `raw` is a TOMBSTONE — the
-    * retired-as-of set a horizon squash must record before dropping
-    * them ([[retiredPath]]). One resolution over `raw` (callers pass
-    * the prefix being squashed — compact-scale). */
-  private def tombstonedKeys(raw: DataFrame, keyCol: String, tomb: Column): DataFrame = {
-    val r = raw.select(col(keyCol), col("gen").cast("long").as("gen"),
-      tomb.as("tomb"))
-    r.join(r.groupBy(keyCol).agg(max("gen").as("gen")), Seq(keyCol, "gen"))
-      .filter(col("tomb")).select(keyCol).distinct()
-  }
 
   // ------------------------------------------------------ staged compact
 
@@ -818,24 +809,20 @@ private[graft] object GenStore {
         "(below the existing horizon the history is already squashed)")
     stagedCompact(s, dir) { tmp =>
       horizonStage(s, dir, tmp, h, t.subdirs)
-      val prefix = raw(s, t, dir, h + 1)
-      writeGen(t, resolve(prefix, t.key, t.multiRow).filter(t.serving)
-        .select(t.cols.map(col): _*), tmp, h, -1L)
+      val resolved = resolve(raw(s, t, dir, h + 1), t.key, t.multiRow)
+      writeGen(t, resolved.filter(t.serving).select(t.cols.map(col): _*), tmp, h, -1L)
       val prevRetired = readRetired(s, dir, t.idCol)
       if (prevRetired.isDefined || t.tombsPresent(full)) {
-        val dropped = tombstonedKeys(prefix, t.key, t.tomb).toDF(t.idCol)
+        val dropped = resolved.filter(t.tomb).select(col(t.key).as(t.idCol))
         writeRetired(prevRetired.fold(dropped)(_.unionByName(dropped)), tmp)
       }
-      val staged = raw(s, t, tmp, full.gen).select(col(t.key).as("k"),
-        col("gen"), t.weight.as("w"), t.tomb.as("tomb"))
-      val r = staged
-        .join(staged.groupBy("k").agg(max("gen").as("gen")), Seq("k", "gen"))
-        .agg(coalesce(sum(when(col("gen") === h, col("w"))), lit(0L)),
-          coalesce(sum(when(col("gen") > h, col("w"))), lit(0L))).head()
+      val staged = raw(s, t, tmp, full.gen)
+      val (base, appended) = liveSplit(
+        staged.select(col(t.key), col("gen"), t.weight.as("w")), t.key, h)
       val m1 = horizonMeta(full, h)
       writeMeta(s, tmp, t.recountTombs(
-        m1.copy(baseRows = r.getLong(0), appendRows = r.getLong(1)),
-        staged.filter(col("tomb")).count()))
+        m1.copy(baseRows = base, appendRows = appended),
+        staged.filter(t.tomb).count()))
     }
   }
 

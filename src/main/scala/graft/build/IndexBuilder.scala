@@ -413,38 +413,57 @@ object IndexBuilder {
       capBytes: Long = DefaultCapBytes,
       withChecksums: Boolean = false): Seq[SourceFile] = {
     require(keys.nonEmpty, "at least one key to index")
-    val names = keys.map(_._1)
+    refreshStale(spark, dataDir, keys.map(_._1), indexRoot, withChecksums,
+        graft.model.IndexType.PostingsParquet) { stale =>
+      writePostings(postingsFor(spark, stale, keys, capBytes), indexRoot, SaveMode.Append)
+    }
+  }
+
+  /** The incremental maintenance step shared by the postings and bloom
+    * builds: the files of `dataDir` with no verified-fresh descriptor
+    * covering `names` (new files, changed files, or files missing a
+    * requested name; every file when `overwrite`) are handed to `write`,
+    * then the descriptors are rewritten. Returns those files (Nil, and
+    * nothing written, when every file is fresh).
+    *
+    * One VERIFIED freshness decision per file is shared by the staleness
+    * split and the column union: using the unverified fingerprint for
+    * the union would let a checksum-stale file (mtime-preserving
+    * rewrite) keep its old columns marked indexed while the refreshed
+    * descriptor records the NEW checksum, permanently laundering the
+    * staleness into wrong pruning. CONTENT-fresh files re-indexed only
+    * for ADDED names keep the union of descriptor columns — their
+    * previous rows are still gen-valid (same mtime), and dropping the
+    * names would silently turn those columns' queries into full scans.
+    * Content-STALE files keep nothing: their old rows describe the
+    * previous bytes. */
+  private[build] def refreshStale(
+      spark: SparkSession,
+      dataDir: String,
+      names: Seq[String],
+      root: String,
+      withChecksums: Boolean,
+      indexType: String,
+      overwrite: Boolean = false)(write: Seq[SourceFile] => Unit): Seq[SourceFile] = {
     val files = listDataFiles(spark, dataDir)
-    val existing = loadDescriptors(spark, indexRoot)
-    // one VERIFIED freshness decision per file, shared by the staleness
-    // split and the prevCols union below — using the unverified
-    // fingerprint for prevCols would let a checksum-stale file (mtime-
-    // preserving rewrite) keep its old columns marked indexed while the
-    // refreshed descriptor records the NEW checksum, permanently
-    // laundering the staleness into wrong pruning
+    val existing = if (overwrite) Map.empty[String, DescriptorRow] else loadDescriptors(spark, root)
     val verifiedFresh: Map[String, Option[DescriptorRow]] =
       files.map(f => f.path -> freshDescriptorVerified(spark, existing, f)).toMap
     val stale = files.filterNot(f =>
       verifiedFresh(f.path).exists(d => names.forall(d.columns.contains)))
     if (stale.isEmpty) return Nil
-    writePostings(postingsFor(spark, stale, keys, capBytes), indexRoot, SaveMode.Append)
+    write(stale)
     val currentPaths = files.map(_.path).toSet
     val stalePaths = stale.map(_.path).toSet
     val kept = existing.values.toSeq
       .filter(d => currentPaths.contains(d.sourcePath) && !stalePaths.contains(d.sourcePath))
-    // CONTENT-fresh files re-indexed only for ADDED keys keep the union
-    // of descriptor columns — their previous keys' postings are still
-    // gen-valid (same mtime), and dropping the names would silently
-    // turn those columns' queries into full scans. Content-STALE files
-    // keep nothing: their old postings describe the previous bytes.
-    val refreshed = descriptorRows(spark, stale, Seq.empty, withChecksums,
-        graft.model.IndexType.PostingsParquet)
+    val refreshed = descriptorRows(spark, stale, Seq.empty, withChecksums, indexType)
       .map { d =>
         val prevCols = verifiedFresh.getOrElse(d.sourcePath, None)
           .map(_.columns).getOrElse(Seq.empty)
         d.copy(columns = (prevCols ++ names).distinct)
       }
-    writeDescriptors(spark, kept ++ refreshed, indexRoot)
+    writeDescriptors(spark, kept ++ refreshed, root)
     stale
   }
 

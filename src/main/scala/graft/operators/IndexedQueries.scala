@@ -218,7 +218,7 @@ object IndexedQueries extends QueryModule {
     prepare(s, dir)
     graft.build.BloomIndex.build(
       s, dataDir(dir), Seq("event_id"), bloomRoot(dir))
-    graft.build.BloomIndex.scan(s, dataDir(dir), Eq("event_id", "777"), bloomRoot(dir))
+    PrunedScanner.scan(s, dataDir(dir), Eq("event_id", "777"), bloomRoot(dir))
       .select("event_id", "user_id", "event_type")
   }
 

@@ -2,7 +2,6 @@ package graft.plans
 
 import graft.build.IndexBuilder
 import graft.query.{Pred, PrunedScanner}
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -60,13 +59,19 @@ final class GraftPrunedFileIndex(
   *
   * The rule rewrites `Filter(cond, scan(parquet roots))` when at least
   * one root path is registered in the session conf `spark.graft.indexes`
-  * (format `dataDir=indexRoot;...`) and `cond` has a conjunct that
-  * translates into the EQ/AND/OR IR over that root's INDEXED columns.
-  * The relation's [[FileIndex]] is wrapped with a
-  * [[GraftPrunedFileIndex]] that filters out the files each root's
-  * sparse index proves irrelevant. The Filter itself is left in place —
-  * it is the mandatory residual re-check, and Catalyst additionally
-  * pushes it into the parquet reader.
+  * (postings roots, format `dataDir=indexRoot;...`) or
+  * `spark.graft.bloomIndexes` (bloom roots, same format), and `cond`
+  * has a conjunct that translates into the EQ/AND/OR IR. Each registered
+  * data root gets ONE pruning decision (`PrunedScanner.excludedFiles`)
+  * over every index root registered for it; the decision folds each
+  * root's per-file evidence through one interval algebra, so a conjunct
+  * no index covers is unknown and AND drops it, while an OR mixing a
+  * bloom-covered and a postings-covered leaf can exclude a file neither
+  * index excludes alone. The relation's [[FileIndex]] is wrapped with a
+  * [[GraftPrunedFileIndex]] that filters out the excluded files. The
+  * Filter itself is left in place — it is the mandatory residual
+  * re-check, and Catalyst additionally pushes it into the parquet
+  * reader.
   *
   * Composition with Spark's native pruning: hive-partitioned layouts
   * (the reference's standard time-partitioned collections,
@@ -75,22 +80,23 @@ final class GraftPrunedFileIndex(
   * the `PartitionDirectory`s — Spark prunes partitions on partition
   * predicates, the graft index prunes FILES on data predicates, and the
   * two subtract independently. Conjuncts over partition columns are
-  * excluded from index translation (they are never in the data files, so
-  * never indexed) — dropping conjuncts only widens the file set.
+  * never in the data files, so no descriptor covers them and the
+  * algebra drops them — dropping conjuncts only widens the file set.
   *
   * Multi-root scans (`spark.read.parquet(dirA, dirB)`) prune each
-  * REGISTERED root with its own index; unregistered roots' files are
+  * REGISTERED root with its own indexes; unregistered roots' files are
   * always kept.
   *
   * Soundness: non-translatable predicates leave the plan untouched
   * (full scan); per-file freshness fallbacks are part of the pruning
   * decision (`PrunedScanner`); exclusion-oriented subtraction keeps any
   * file the decision didn't enumerate. The decision launches no Spark
-  * job: descriptors, postings and footers are read on the driver, as
-  * the reference's `getSplits` opens its index readers. Idempotence
-  * under the fixed-point optimizer batch is ensured with a TreeNodeTag
-  * (set even when nothing could be pruned, so the index lookup's file
-  * reads happen once, not once per fixed-point iteration).
+  * job: descriptors, postings, bloom sketches and footers are read on
+  * the driver, as the reference's `getSplits` opens its index readers;
+  * when no descriptor covers a leaf column it returns before listing
+  * the data files. Idempotence under the fixed-point optimizer batch is
+  * ensured with a TreeNodeTag (set even when nothing could be pruned, so
+  * the index reads happen once, not once per fixed-point iteration).
   *
   * Usage:
   * {{{
@@ -100,7 +106,7 @@ final class GraftPrunedFileIndex(
   * spark.read.parquet(dataDir).filter($"event_type" === "error") // pruned
   * }}}
   */
-case class GraftPruneRule(spark: SparkSession) extends Rule[LogicalPlan] with Logging {
+case class GraftPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   import GraftPruneRule._
 
@@ -109,14 +115,9 @@ case class GraftPruneRule(spark: SparkSession) extends Rule[LogicalPlan] with Lo
       .map { case (d, i) => normalize(d) -> i }
 
   /** dataDir → bloomRoot (the high-cardinality EQ skipping sketches,
-    * `spark.graft.bloomIndexes`) — consulted for conjunct EQ leaves on
-    * bloom-covered columns, COMPOSING with the postings-index pruning
-    * above: each index excludes the files it can prove irrelevant, and
-    * the subtractions union (both proofs are independent and sound).
-    * Pre-r18 the sketches were explicit-path only (q46) — a transparent
-    * `Graft.read(...).filter` on a bloom-indexed column full-scanned.
-    * Reference analog: `getSplits` consults whatever index exists per
-    * file, invisibly to the job
+    * `spark.graft.bloomIndexes`): passed with the postings root to the
+    * same decision. Reference analog: `getSplits` consults whatever
+    * index exists per file, invisibly to the job
     * (`BlockIndexedFileInputFormat.java:110-187`). */
   private def bloomRegistry: Map[String, String] =
     GraftPruneRule.parseRegistry(spark.conf.getOption(BloomIndexesConf))
@@ -152,75 +153,27 @@ case class GraftPruneRule(spark: SparkSession) extends Rule[LogicalPlan] with Lo
       case e => Pred.fromExpression(e)
     }
 
-  /** Restrict `pred` to conjuncts whose columns all lie in `allowed`
-    * (this root's indexed columns): AND keeps surviving sides, OR needs
-    * both. Dropping conjuncts only widens the file set — and without
-    * this, one conjunct on an unindexed (or partition) column would
-    * route EVERY file to the freshness fallback and defeat pruning. */
-  private def restrictTo(pred: Pred, allowed: Set[String]): Option[Pred] = pred match {
-    case graft.query.And(l, r) =>
-      (restrictTo(l, allowed), restrictTo(r, allowed)) match {
-        case (Some(a), Some(b)) => Some(graft.query.And(a, b))
-        case (a, b)             => a.orElse(b)
-      }
-    case graft.query.Or(l, r) =>
-      for { a <- restrictTo(l, allowed); b <- restrictTo(r, allowed) }
-        yield graft.query.Or(a, b)
-    case leaf =>
-      if (leaf.columns.subsetOf(allowed)) Some(leaf) else None
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case f @ Filter(cond, lr @ LogicalRelation(rel: HadoopFsRelation, _, _, _, _))
         if lr.getTagValue(PrunedTag).isEmpty && f.getTagValue(PrunedTag).isEmpty &&
           (registry.nonEmpty || bloomRegistry.nonEmpty) =>
       val reg = registry
       val breg = bloomRegistry
-      def rootsIn(m: Map[String, String]): Seq[(String, String)] =
-        rel.location.rootPaths
-          .filter(onDefaultFs)
-          .map(p => normalize(p.toString))
-          .flatMap(r => m.get(r).map(r -> _))
-      val registeredRoots = rootsIn(reg)
-      val bloomRoots = rootsIn(breg)
-      val predOpt =
-        if (registeredRoots.isEmpty && bloomRoots.isEmpty) None
-        else translatableConjuncts(cond)
+      // each registered data root with every index root registered for it
+      val decisions = rel.location.rootPaths
+        .filter(onDefaultFs)
+        .map(p => normalize(p.toString))
+        .distinct
+        .map(d => d -> (reg.get(d) ++ breg.get(d)).toSeq)
+        .filter(_._2.nonEmpty)
+      val predOpt = if (decisions.isEmpty) None else translatableConjuncts(cond)
       predOpt match {
-        case Some(fullPred) =>
-          // path -> length, not a bytes accumulator: a file excluded by
-          // BOTH indexes must subtract its size once from the planner's
-          // estimate, not twice
-          val excluded = scala.collection.mutable.Map.empty[String, Long]
-          registeredRoots.foreach { case (dataDir, indexRoot) =>
-            // this root's indexed columns = union over its descriptors
-            // (freshness is enforced per file inside the decision)
-            val indexedCols = IndexBuilder.loadDescriptors(spark, indexRoot)
-              .values.flatMap(_.columns).toSet
-            restrictTo(fullPred, indexedCols).foreach { pred =>
-              val (excl, report) =
-                PrunedScanner.excludedFiles(spark, dataDir, pred, indexRoot)
-              logInfo(s"GraftPruneRule: $dataDir pred=$pred -> " +
-                s"${report.selectedFiles}+${report.fallbackFiles}/${report.totalFiles} files, " +
-                s"bytes ratio ${report.bytesRatio}")
-              excl.foreach(sf => excluded(sf.path) = sf.length)
-            }
-          }
-          // bloom subtraction composes: ONE whole-predicate decision
-          // per bloom root — a file is excluded when the sketches prove
-          // the full tree false for it (AND: either side; OR: both
-          // sides — so IN-list / OR-of-EQ probes skip too, which
-          // per-conjunct composition cannot see)
-          bloomRoots.foreach { case (dataDir, bloomRoot) =>
-            if (fullPred.leaves.exists(_.isInstanceOf[graft.query.Eq])) {
-              val (excl, report) = graft.build.BloomIndex
-                .excludedFilesForPred(spark, dataDir, fullPred, bloomRoot)
-              logInfo(s"GraftPruneRule(bloom): $dataDir pred=$fullPred -> " +
-                s"${report.selectedFiles}+${report.fallbackFiles}/${report.totalFiles} files, " +
-                s"bytes ratio ${report.bytesRatio}")
-              excl.foreach(sf => excluded(sf.path) = sf.length)
-            }
-          }
+        case Some(pred) =>
+          // path -> length: a file excluded under two roots subtracts its
+          // size from the planner's estimate once
+          val excluded = decisions.flatMap { case (dataDir, roots) =>
+            PrunedScanner.excludedFiles(spark, dataDir, pred, roots)
+          }.map(sf => sf.path -> sf.length).toMap
           // tag even when nothing was excluded: the pruning decision
           // reads index files and must not rerun per fixed-point pass.
           // The no-op tag goes on the FILTER (a shared relation node may

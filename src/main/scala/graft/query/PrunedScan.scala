@@ -1,10 +1,12 @@
 package graft.query
 
-import graft.build.IndexBuilder
+import graft.build.{BloomIndex, IndexBuilder}
 import graft.intervals.{Block, IntervalOps}
+import graft.model.IndexType
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** What the pruner decided, for observability parity with the reference
   * (R10: splits/bytes before and after, pruning wall time —
@@ -75,186 +77,218 @@ object PruneStats {
 
 /** Index-consulting scan pruning — the Spark rebuild of the reference's
   * `getSplits` (`retrieval/BlockIndexedFileInputFormat.java:110-187`):
-  * evaluate an EQ/AND/OR tree bottom-up over the sparse index
-  * (EQ = postings lookup, AND = interval intersection, OR = capped
-  * union), keep only files whose resulting posting list is non-empty,
-  * and always re-apply the predicate row-level over the survivors.
+  * ONE per-file decision from whatever index covers each file. The data
+  * files are listed once and each index root's descriptors read once;
+  * every (file, leaf) then gets EVIDENCE from the roots whose fresh
+  * descriptor covers the leaf's column — "these byte ranges" or unknown —
+  * and the interval algebra folds it through the EQ/AND/OR tree
+  * ([[qualify]]). A file whose result is empty is dropped, a kept file
+  * whose result is unknown is a fallback file, and the predicate is
+  * always re-applied row-level over the survivors.
   *
-  * Fallback soundness (R3): a file with no fresh descriptor — missing
-  * index, changed length/mtime, or a column of the predicate not
-  * indexed — is scanned in full, exactly like the reference's
-  * checksum-mismatch path (`:338-386`). Pruning can only *drop* work
-  * for provably-non-matching files, never rows.
+  * The descriptor's `indexType` picks the evidence reader:
+  * {{{
+  * POSTINGS_PARQUET  ranges of the value's postings row (Nil: value absent);
+  *                   unknown when the lookup passes its cap or the
+  *                   postings root is missing or moves mid-read
+  * BLOOM_PARQUET     EQ leaf only: negative sketch -> Nil, positive ->
+  *                   the whole file; unknown without a live sketch or
+  *                   when the blooms root is missing or vanishes
+  * }}}
+  * A leaf with evidence from several roots gets the intersection.
   *
-  * Scale shape: the pruning decision launches no Spark job. The driver
-  * reads the postings files of the predicate's columns directly
+  * Fallback soundness (R3): a file with no fresh descriptor covering a
+  * leaf — missing index, changed length/mtime or checksum, unindexed
+  * column — gives unknown for it, exactly like the reference's
+  * checksum-mismatch path (`:338-386`): AND with an unknown side is the
+  * other side, OR with one is unknown, so pruning only ever drops files
+  * the evidence proves irrelevant, never rows.
+  *
+  * Scale shape: the decision launches no Spark job. The driver reads the
+  * descriptors, the postings of the predicate's columns
   * (`IndexBuilder.lookupPostings`: value-pruned by parquet min/max and
-  * dictionaries thanks to the sorted write) and the data schema from one
-  * footer (`IndexBuilder.dataSchema`) — the same place and the same way
-  * the reference prunes (driver-side getSplits opening its MapFile
+  * dictionaries thanks to the sorted write), the bloom sketches
+  * (`BloomIndex.readSketches`) and the data schema from one footer
+  * (`IndexBuilder.dataSchema`) — the same place and the same way the
+  * reference prunes (driver-side getSplits opening its MapFile
   * readers). The subsequent data read lists only surviving files, so at
   * 1000x the files the scan plan never touches pruned files' footers at
   * all.
   */
 object PrunedScanner extends Logging {
 
-  /** Evaluate `pred` over one file's leaf->postings map. Returns the
-    * qualifying byte ranges (empty = file provably has no match).
-    * `None` from a leaf lookup means "leaf value absent from this
-    * file's index" — for an indexed column that is a definitive empty
-    * posting list. */
+  /** Fold per-leaf evidence through `pred`: `Some(ranges)` are the byte
+    * ranges that may match (Nil: provably none), `None` is unknown. AND
+    * intersects, and an unknown side leaves the other; OR is the capped
+    * union, and unknown when either side is. */
   private[query] def qualify(
       pred: Pred,
-      leafPostings: Map[Pred, Seq[Block]],
-      capBytes: Long): Seq[Block] = pred match {
+      evidence: Pred => Option[Seq[Block]],
+      capBytes: Long): Option[Seq[Block]] = pred match {
     case And(l, r) =>
-      IntervalOps.intersect(
-        qualify(l, leafPostings, capBytes),
-        qualify(r, leafPostings, capBytes))
+      (qualify(l, evidence, capBytes), qualify(r, evidence, capBytes)) match {
+        case (Some(a), Some(b)) => Some(IntervalOps.intersect(a, b))
+        case (a, b)             => a.orElse(b)
+      }
     case Or(l, r) =>
-      IntervalOps.unionCapped(
-        qualify(l, leafPostings, capBytes),
-        qualify(r, leafPostings, capBytes),
-        capBytes)
-    case leaf => leafPostings.getOrElse(leaf, Nil)
+      for (a <- qualify(l, evidence, capBytes); b <- qualify(r, evidence, capBytes))
+        yield IntervalOps.unionCapped(a, b, capBytes)
+    case leaf => evidence(leaf)
   }
 
-  /** The pruning decision alone: which files of `dataDir` must be read
-    * for `pred` (selected-by-index ++ fallback), plus the report. Shared
-    * by the explicit two-phase scan below and the transparent optimizer
-    * rule (graft.plans.GraftPruneRule). */
-  /** Postings-collect safety cap (see selectFilesDetailed). */
+  /** What one index root says about a (file, leaf). */
+  private type Evidence = (IndexBuilder.SourceFile, Pred) => Option[Seq[Block]]
+
+  /** Postings-lookup safety cap: a wide range over a high-cardinality
+    * column can match O(files x distinct values) postings rows; past the
+    * cap the root's evidence is unknown (sound, never partial) instead of
+    * an unbounded driver collect. IN lists are separately capped at
+    * translation time (Pred.MaxInValues). */
   val MaxCollectedPostings: Int = 1 << 20
 
+  /** The evidence reader of `root` for `leaves`, or None when no
+    * descriptor of the root covers a leaf it can answer (nothing is read
+    * past the descriptors then). Freshness is verified once per file:
+    * descriptors built withChecksums also compare the filesystem content
+    * checksum, so an mtime-preserving rewrite gives unknown instead of
+    * serving stale evidence. */
+  private def evidenceOf(
+      spark: SparkSession,
+      root: String,
+      leaves: Seq[Pred],
+      maxPostings: Int): Option[Evidence] = {
+    val descriptors = IndexBuilder.loadDescriptors(spark, root)
+    def covered(indexType: String): Set[String] =
+      descriptors.values.filter(_.indexType == indexType).flatMap(_.columns).toSet
+    val postingsCols = covered(IndexType.PostingsParquet)
+    val bloomCols = covered(IndexType.BloomParquet)
+    val postingsLeaves = leaves.filter(_.columns.subsetOf(postingsCols))
+    val bloomLeaves = leaves.collect { case e @ Eq(c, _) if bloomCols(c) => e }
+    if (postingsLeaves.isEmpty && bloomLeaves.isEmpty) return None
+    // gen must match the live descriptor: rebuilt files leave stale rows
+    // behind (append-only index); a mismatched gen describes a previous
+    // incarnation of the file
+    def live(file: String, gen: Long) = descriptors.get(file).exists(_.modificationTime == gen)
+    val postings: Option[Map[(String, Pred), Seq[Block]]] =
+      if (postingsLeaves.isEmpty) Some(Map.empty)
+      else IndexBuilder.lookupPostings(spark, root, postingsLeaves, maxPostings + 1) match {
+        case Some(rows) if rows.length <= maxPostings =>
+          Some(rows.filter(p => live(p.file, p.gen))
+            .flatMap(p => p.leaves.map(l => (p.file, l) -> p.ranges))
+            .groupBy(_._1)
+            .view.mapValues(rs => IntervalOps.normalize(rs.flatMap(_._2)))
+            .toMap)
+        case found =>
+          logWarning(s"PrunedScan: postings of $root " +
+            (if (found.isEmpty) "are missing or moved" else s"exceed $maxPostings rows") +
+            " — no postings evidence from this root")
+          None
+      }
+    val sketches: Option[Map[(String, String), BloomFilter]] =
+      if (bloomLeaves.isEmpty) Some(Map.empty)
+      else try Some(BloomIndex.readSketches(spark, root, bloomLeaves.map(_.column).toSet,
+          descriptors.view.mapValues(_.modificationTime).toMap))
+      catch { case _: java.io.FileNotFoundException =>
+        logWarning(s"PrunedScan: blooms of $root are missing or moved — no bloom evidence")
+        None
+      }
+    val fresh = scala.collection.mutable.Map.empty[String, Option[IndexBuilder.DescriptorRow]]
+    Some { (f, leaf) =>
+      fresh.getOrElseUpdate(f.path, IndexBuilder.freshDescriptorVerified(spark, descriptors, f))
+        .filter(d => leaf.columns.subsetOf(d.columns.toSet))
+        .flatMap(d => (d.indexType, leaf) match {
+          case (IndexType.PostingsParquet, _) => postings.map(_.getOrElse((f.path, leaf), Nil))
+          case (IndexType.BloomParquet, Eq(c, v)) =>
+            sketches.flatMap(_.get((f.path, c)))
+              .map(b => if (b.mightContainString(v)) Seq(Block(0L, f.length)) else Nil)
+          case _ => None
+        })
+    }
+  }
+
+  private def evidence(spark: SparkSession, roots: Seq[String], preds: Seq[Pred],
+      maxPostings: Int): Seq[Evidence] = {
+    val leaves = preds.flatMap(_.leaves).distinct
+    roots.flatMap(evidenceOf(spark, _, leaves, maxPostings))
+  }
+
+  /** The pruning decision for `pred` with `indexRoot`'s evidence: the
+    * files of `dataDir` to read (selected-by-index ++ fallback), plus
+    * the report. */
   def selectFiles(
       spark: SparkSession,
       dataDir: String,
       pred: Pred,
       indexRoot: String,
-      capBytes: Long = IndexBuilder.DefaultCapBytes): (Seq[String], PruneReport) =
-    selectFilesBatch(spark, dataDir, Seq(pred), indexRoot, capBytes).head
+      capBytes: Long = IndexBuilder.DefaultCapBytes): (Seq[String], PruneReport) = {
+    val (sel, fb, report) = selectFilesDetailed(spark, dataDir, Seq(pred), Seq(indexRoot), capBytes)._2.head
+    (sel ++ fb, report)
+  }
 
-  /** Batched pruning decision: many predicates against one dataset with
-    * a SINGLE file listing, descriptor read, and postings lookup. This
-    * is what makes a per-key verification sweep (the reference's
-    * ScanUsingIndexJob, one scan per unique key) viable: the driver
-    * work is shared across all keys instead of repeated per key. */
-  def selectFilesBatch(
-      spark: SparkSession,
-      dataDir: String,
-      preds: Seq[Pred],
-      indexRoot: String,
-      capBytes: Long = IndexBuilder.DefaultCapBytes): Seq[(Seq[String], PruneReport)] =
-    selectFilesDetailed(spark, dataDir, preds, indexRoot, capBytes)._2
-      .map { case (sel, fb, report) => (sel ++ fb, report) }
-
-  /** Exclusion-oriented pruning decision for the transparent rule: the
-    * files of `dataDir` PROVABLY irrelevant to `pred` (index-fresh, empty
-    * posting list), plus the report. The rule subtracts these from the
-    * relation's own listing instead of rebuilding it, so a file unknown
-    * to this enumeration (raced in by a concurrent writer, listed by a
-    * different FileIndex snapshot) is read, never silently dropped. */
+  /** Exclusion-oriented decision for the transparent rule
+    * ([[graft.plans.GraftPruneRule]]): the files of `dataDir` the
+    * evidence of `roots` proves irrelevant to `pred`. The rule subtracts
+    * these from the relation's own listing instead of rebuilding it, so
+    * a file unknown to this enumeration (raced in by a concurrent
+    * writer, listed by a different FileIndex snapshot) is read, never
+    * silently dropped. When no descriptor of `roots` covers a leaf the
+    * answer is empty and the data files are not listed. */
   def excludedFiles(
       spark: SparkSession,
       dataDir: String,
       pred: Pred,
-      indexRoot: String,
-      capBytes: Long = IndexBuilder.DefaultCapBytes): (Seq[IndexBuilder.SourceFile], PruneReport) = {
-    val (all, results) = selectFilesDetailed(spark, dataDir, Seq(pred), indexRoot, capBytes)
-    val (sel, fb, report) = results.head
-    val keep = (sel ++ fb).toSet
-    (all.filterNot(f => keep(f.path)), report)
+      roots: Seq[String],
+      capBytes: Long = IndexBuilder.DefaultCapBytes): Seq[IndexBuilder.SourceFile] = {
+    val t0 = System.nanoTime()
+    val evs = evidence(spark, roots, Seq(pred), MaxCollectedPostings)
+    if (evs.isEmpty) Nil
+    else {
+      val (all, Seq((sel, fb, _))) = decide(spark, dataDir, Seq(pred), evs, capBytes, t0)
+      val keep = (sel ++ fb).toSet
+      all.filterNot(f => keep(f.path))
+    }
   }
 
-  /** Like [[selectFilesBatch]] but keeps index-selected and
-    * freshness-fallback files apart — [[verifyCounts]] needs the
+  /** The decision for many predicates against one dataset with a SINGLE
+    * file listing, descriptor read and evidence read per root — what
+    * makes a per-key verification sweep (the reference's
+    * ScanUsingIndexJob, one scan per unique key) viable. Index-selected
+    * and fallback files stay apart: [[verifyCounts]] needs the
     * distinction to avoid materializing values x fallback pairs.
     * `maxPostings` is the postings-lookup cap; only specs lower it. */
   private[query] def selectFilesDetailed(
       spark: SparkSession,
       dataDir: String,
       preds: Seq[Pred],
-      indexRoot: String,
+      roots: Seq[String],
       capBytes: Long,
       maxPostings: Int = MaxCollectedPostings)
       : (Seq[IndexBuilder.SourceFile], Seq[(Seq[String], Seq[String], PruneReport)]) = {
     val t0 = System.nanoTime()
+    decide(spark, dataDir, preds, evidence(spark, roots, preds, maxPostings), capBytes, t0)
+  }
 
+  private def decide(
+      spark: SparkSession,
+      dataDir: String,
+      preds: Seq[Pred],
+      evs: Seq[Evidence],
+      capBytes: Long,
+      t0: Long): (Seq[IndexBuilder.SourceFile], Seq[(Seq[String], Seq[String], PruneReport)]) = {
     val files = IndexBuilder.listDataFiles(spark, dataDir)
-
-    // Fresh descriptors covering every predicate column -> file is
-    // prunable. Verified freshness: descriptors built withChecksums also
-    // compare the filesystem content checksum (one metadata-cheap FS
-    // call per file, memoized below via splitByColumns), so an
-    // mtime-preserving rewrite falls back to a full scan of that file
-    // instead of serving stale postings.
-    val descriptors = IndexBuilder.loadDescriptors(spark, indexRoot)
-    val freshCache = scala.collection.mutable.Map.empty[String, Option[IndexBuilder.DescriptorRow]]
-    def fresh(f: IndexBuilder.SourceFile): Option[IndexBuilder.DescriptorRow] =
-      freshCache.getOrElseUpdate(f.path,
-        IndexBuilder.freshDescriptorVerified(spark, descriptors, f))
-
-    // One postings lookup for ALL leaves of ALL predicates at once, on
-    // the driver (IndexBuilder.lookupPostings): only the predicate
-    // columns' directories are opened, EQ values hit parquet min/max and
-    // dictionaries of the sorted postings files, and the exact leaf test
-    // is Pred.leafMatches.
-    val allLeaves = preds.flatMap(_.leaves).distinct
-    val anyPrunable = files.exists(f => fresh(f).isDefined)
-    // gen must match the live descriptor: rebuilt files leave stale
-    // postings rows behind (append-only index); a mismatched gen means
-    // the row describes a previous incarnation of the file.
-    // Bounded lookup: a wide range over a high-cardinality column can
-    // match O(files x distinct values) postings rows; past the cap the
-    // batch degrades to a full scan (sound, never partial) instead of
-    // an unbounded driver collect. IN lists are separately capped at
-    // translation time (Pred.MaxInValues). A postings root that is
-    // missing or swapped during the read (a compaction's renames)
-    // degrades the same way: it says nothing about which files match.
-    var fullScan = false
-    val hits: Map[(String, Pred), Seq[Block]] =
-      if (allLeaves.isEmpty || !anyPrunable) Map.empty
-      else IndexBuilder.lookupPostings(spark, indexRoot, allLeaves, maxPostings + 1) match {
-        case None =>
-          logWarning(s"PrunedScan $dataDir: postings of $indexRoot are missing or moved — " +
-            "falling back to a full scan for this batch")
-          fullScan = true
-          Map.empty
-        case Some(collected) =>
-          fullScan = collected.length > maxPostings
-          if (fullScan) {
-            logWarning(s"PrunedScan $dataDir: postings lookup exceeded " +
-              s"$maxPostings rows for ${allLeaves.size} leaves — " +
-              "falling back to a full scan for this batch")
-          }
-          collected
-            .filter(p => descriptors.get(p.file).exists(_.modificationTime == p.gen))
-            .flatMap(p => p.leaves.map(l => (p.file, l) -> p.ranges))
-            .groupBy(_._1)
-            .view.mapValues(rs => IntervalOps.normalize(rs.flatMap(_._2)))
-            .toMap
-      }
+    // a leaf's evidence is the intersection of every root's; unknown
+    // when no root has any
+    def leafEvidence(f: IndexBuilder.SourceFile)(leaf: Pred): Option[Seq[Block]] =
+      evs.flatMap(_(f, leaf)).reduceOption(IntervalOps.intersect)
     // shared listing/lookup time amortized across the batch so summing
     // per-pred pruneTimeMs over a 1000-key sweep doesn't report the one
     // shared lookup a thousand times
     val sharedMs = (System.nanoTime() - t0) / 1000000 / math.max(preds.size, 1)
-
-    // the prunable/fallback split depends only on the predicate's
-    // column set — memoized so a per-key sweep (1000s of same-column
-    // predicates) partitions the file list once, not once per key
-    val splitByColumns =
-      scala.collection.mutable.Map.empty[Set[String], (Seq[IndexBuilder.SourceFile], Seq[IndexBuilder.SourceFile])]
     files -> preds.map { pred =>
       val tp = System.nanoTime()
-      val (prunable, fallback) = splitByColumns.getOrElseUpdate(pred.columns,
-        if (fullScan) (Seq.empty, files)
-        else files.partition(f =>
-          fresh(f).exists(d => pred.columns.forall(d.columns.contains))))
-      val leaves = pred.leaves.distinct
-      val selected = prunable.filter { f =>
-        val leafMap = leaves.map(l => l -> hits.getOrElse((f.path, l), Nil)).toMap
-        qualify(pred, leafMap, capBytes).nonEmpty
-      }
+      val verdicts = files.map(f => f -> qualify(pred, leafEvidence(f), capBytes))
+      val selected = verdicts.collect { case (f, Some(r)) if r.nonEmpty => f }
+      val fallback = verdicts.collect { case (f, None) => f }
       val report = PruneReport(
         totalFiles = files.size,
         selectedFiles = selected.size,
@@ -298,14 +332,12 @@ object PrunedScanner extends Logging {
         !schema.find(_.name == c).exists(f => integral(f.dataType))
       case _ => false
     }
-    val (toRead, report) =
-      if (betweenUnsound) {
-        logWarning(s"PrunedScan $dataDir: BETWEEN over a non-integral column " +
-          s"in $pred — index pruning skipped, scanning fully")
-        val files = IndexBuilder.listDataFiles(spark, dataDir)
-        (files.map(_.path), PruneReport(files.size, 0, files.size,
-          files.map(_.length).sum, files.map(_.length).sum, 0))
-      } else selectFiles(spark, dataDir, pred, indexRoot, capBytes)
+    if (betweenUnsound)
+      logWarning(s"PrunedScan $dataDir: BETWEEN over a non-integral column " +
+        s"in $pred — index pruning skipped, scanning fully")
+    val roots = if (betweenUnsound) Nil else Seq(indexRoot)
+    val (sel, fb, report) = selectFilesDetailed(spark, dataDir, Seq(pred), roots, capBytes)._2.head
+    val toRead = sel ++ fb
     val df =
       if (toRead.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -352,7 +384,7 @@ object PrunedScanner extends Logging {
       .filter(col("column") === column)
       .select("value").distinct().as[String].collect().sorted.toIndexedSeq
     val sets = selectFilesDetailed(
-      spark, dataDir, values.map(v => Eq(column, v): Pred), indexRoot, capBytes)._2
+      spark, dataDir, values.map(v => Eq(column, v): Pred), Seq(indexRoot), capBytes)._2
     // Index-SELECTED (value, file) pairs only: their count is bounded by
     // the postings rows the driver already holds. FALLBACK files (same
     // set for every key — the split depends only on the column) are

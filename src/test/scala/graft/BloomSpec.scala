@@ -1,7 +1,7 @@
 package graft
 
 import graft.build.BloomIndex
-import graft.query.Eq
+import graft.query.{Eq, PrunedScanner}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,8 +35,8 @@ class BloomSpec extends AnyFunSuite {
     val pred = Eq("event_id", "417")
     val full = spark.read.parquet(dataDir).filter(pred.toColumn)
       .select("event_id").collect().map(_.getLong(0)).toSet
-    val (files, report) = BloomIndex.selectFiles(spark, dataDir, pred, bloomRoot)
-    val pruned = BloomIndex.scan(spark, dataDir, pred, bloomRoot)
+    val (files, report) = PrunedScanner.selectFiles(spark, dataDir, pred, bloomRoot)
+    val pruned = PrunedScanner.scan(spark, dataDir, pred, bloomRoot)
       .select("event_id").collect().map(_.getLong(0)).toSet
     assert(pruned == full && pruned.nonEmpty)
     assert(report.fallbackFiles == 0)
@@ -54,14 +54,14 @@ class BloomSpec extends AnyFunSuite {
     keys.foreach { v =>
       val pred = Eq("event_type", v)
       val full = spark.read.parquet(dataDir).filter(pred.toColumn).count()
-      val pruned = BloomIndex.scan(spark, dataDir, pred, bloomRoot).count()
+      val pruned = PrunedScanner.scan(spark, dataDir, pred, bloomRoot).count()
       assert(pruned == full, s"value $v: pruned=$pruned full=$full")
     }
   }
 
   test("absent value returns empty result") {
     prepared
-    assert(BloomIndex.scan(spark, dataDir, Eq("event_id", "99999999"), bloomRoot)
+    assert(PrunedScanner.scan(spark, dataDir, Eq("event_id", "99999999"), bloomRoot)
       .count() == 0)
   }
 
@@ -73,8 +73,8 @@ class BloomSpec extends AnyFunSuite {
     BloomIndex.build(spark, dir, Seq("event_id"), root)
     BloomIndex.build(spark, dir, Seq("event_type"), root)
     // both columns stay covered: neither pruned query falls back
-    val (_, r1) = BloomIndex.selectFiles(spark, dir, Eq("event_id", "5"), root)
-    val (_, r2) = BloomIndex.selectFiles(spark, dir, Eq("event_type", "error"), root)
+    val (_, r1) = PrunedScanner.selectFiles(spark, dir, Eq("event_id", "5"), root)
+    val (_, r2) = PrunedScanner.selectFiles(spark, dir, Eq("event_type", "error"), root)
     assert(r1.fallbackFiles == 0, s"event_id coverage lost: $r1")
     assert(r2.fallbackFiles == 0, s"event_type coverage lost: $r2")
 
@@ -88,7 +88,7 @@ class BloomSpec extends AnyFunSuite {
     assert(after < before, s"expected dead bloom rows dropped: $before -> $after")
     val pred = Eq("event_type", "error")
     val full = spark.read.parquet(dir).filter(pred.toColumn).count()
-    assert(BloomIndex.scan(spark, dir, pred, root).count() == full)
+    assert(PrunedScanner.scan(spark, dir, pred, root).count() == full)
   }
 
   test("stale file falls back to full scan") {
@@ -105,7 +105,7 @@ class BloomSpec extends AnyFunSuite {
     java.nio.file.Files.setLastModifiedTime(
       java.nio.file.Paths.get(f.path),
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000))
-    val (_, report) = BloomIndex.selectFiles(
+    val (_, report) = PrunedScanner.selectFiles(
       spark, staleData, Eq("event_type", "error"), staleBloom)
     assert(report.fallbackFiles >= 1, s"expected stale fallback, got $report")
   }

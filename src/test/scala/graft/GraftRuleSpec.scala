@@ -259,8 +259,9 @@ class GraftRuleSpec extends AnyFunSuite {
         n
       }
       assert(inShape.collect().length == expectIn && expectIn >= 2)
-      // an EQ OR'd with a NON-bloom-covered leaf must NOT be bloom-pruned
-      // (the other branch can match rows in bloom-negative files)
+      // an EQ OR'd with a leaf the sketches do not cover: a file is
+      // dropped only when the postings also exclude the other branch
+      // (it can match rows in bloom-negative files)
       val orShape = spark.read.parquet(dataDir)
         .filter(col("event_id") === lit(probe) || col("event_type") === "error")
       val expectOr = {

@@ -9,10 +9,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The prune decision runs on the driver: the postings probe equals the
-  * Spark postings lookup, no Spark job is launched, and every branch
-  * that cannot trust the postings (the lookup cap, a postings root
-  * caught between a compaction's renames) degrades to a full scan whose
-  * rows equal a plain read. */
+  * Spark postings lookup, no Spark job is launched (postings and bloom
+  * roots alike), unindexed leaves are unknown to the interval algebra,
+  * and every branch that cannot trust an index (the lookup cap, a
+  * postings or blooms root caught between a compaction's renames)
+  * degrades to a full scan whose rows equal a plain read. */
 class DriverPruneSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -38,6 +39,13 @@ class DriverPruneSpec extends AnyFunSuite {
       .repartitionByRange(8, col("user_id"))
       .write.parquet(dataDir)
     IndexBuilder.build(spark, dataDir, Columns, indexRoot)
+  }
+
+  // a bloom root over `id`, which the postings index does not cover
+  private def bloomRoot = s"$work/bloom"
+  private lazy val bloomed: Unit = {
+    prepared
+    graft.build.BloomIndex.build(spark, dataDir, Seq("id"), bloomRoot)
   }
 
   private def ids(df: DataFrame): Set[Long] =
@@ -105,17 +113,86 @@ class DriverPruneSpec extends AnyFunSuite {
     } finally spark.conf.unset(graft.plans.GraftPruneRule.IndexesConf)
   }
 
+  test("a transparent read with postings and bloom registries plans with no Spark job") {
+    bloomed
+    Graft.registerIndex(spark, dataDir, indexRoot)
+    Graft.registerBloom(spark, dataDir, bloomRoot)
+    try {
+      val all = IndexBuilder.listDataFiles(spark, dataDir).size
+      // one conjunct per index, and an OR neither index can answer alone
+      for (c <- Seq(col("event_type") === "t2" && col("id") === 1235,
+          col("user_id") === 3 || col("id") === 1235)) {
+        var q: DataFrame = null
+        assert(jobsDuring {
+          q = Graft.read(spark, dataDir).filter(c)
+          q.queryExecution.optimizedPlan
+        } == 0, s"$c")
+        assert(q.inputFiles.length < all, s"$c")
+        assert(ids(q) == ids(spark.read.parquet(dataDir).filter(c)) && ids(q).nonEmpty)
+      }
+    } finally {
+      spark.conf.unset(graft.plans.GraftPruneRule.IndexesConf)
+      spark.conf.unset(graft.plans.GraftPruneRule.BloomIndexesConf)
+    }
+  }
+
+  test("explicit path: an unindexed conjunct is dropped from an AND and unknown in an OR") {
+    prepared
+    val files = IndexBuilder.listDataFiles(spark, dataDir).size
+    // `id` is not indexed
+    val none: Pred = And(Eq("event_type", "absent"), Eq("id", "5"))
+    val (noneDf, noneReport) = PrunedScanner.scanWithReport(spark, dataDir, none, indexRoot)
+    assert(noneReport.selectedFiles == 0 && noneReport.fallbackFiles == 0)
+    assert(ids(noneDf) == fullScanIds(none) && ids(noneDf).isEmpty)
+    val narrowed: Pred = And(Eq("user_id", "3"), Eq("id", "760"))
+    val (narrowedDf, narrowedReport) = PrunedScanner.scanWithReport(spark, dataDir, narrowed, indexRoot)
+    assert(narrowedReport.selectedFiles == 1 && narrowedReport.fallbackFiles == 0)
+    assert(ids(narrowedDf) == fullScanIds(narrowed) && ids(narrowedDf) == Set(760L))
+    val either: Pred = Or(Eq("user_id", "3"), Eq("id", "5"))
+    val (eitherDf, eitherReport) = PrunedScanner.scanWithReport(spark, dataDir, either, indexRoot)
+    assert(eitherReport.selectedFiles == 0 && eitherReport.fallbackFiles == files)
+    assert(ids(eitherDf) == fullScanIds(either))
+  }
+
+  test("a blooms root that vanishes during the read, or is missing, falls back to a full scan") {
+    bloomed
+    val pred: Pred = Eq("id", "1234")
+    val (_, fresh) = PrunedScanner.scanWithReport(spark, dataDir, pred, bloomRoot)
+    assert(fresh.fallbackFiles == 0 && fresh.selectedFiles < fresh.totalFiles)
+    val blooms = graft.build.BloomIndex.bloomsDir(bloomRoot)
+    spark.conf.set("fs.racefs.impl", classOf[RaceFs].getName)
+    spark.conf.set("fs.racefs.impl.disable.cache", "true")
+    try {
+      RaceFs.vanishOnList(blooms, blooms, s"$bloomRoot/blooms_old")
+      val (df, report) = PrunedScanner.scanWithReport(spark, dataDir, pred, s"racefs://$bloomRoot")
+      assert(RaceFs.fired)
+      assert(report.selectedFiles == 0 && report.fallbackFiles == report.totalFiles)
+      assert(ids(df) == fullScanIds(pred) && ids(df).nonEmpty)
+    } finally {
+      RaceFs.disarm()
+      spark.conf.unset("fs.racefs.impl")
+      spark.conf.unset("fs.racefs.impl.disable.cache")
+    }
+    val fs = new Path(bloomRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new Path(blooms), new Path(s"$bloomRoot/blooms_moved")))
+    try {
+      val (df, report) = PrunedScanner.scanWithReport(spark, dataDir, pred, bloomRoot)
+      assert(report.selectedFiles == 0 && report.fallbackFiles == report.totalFiles)
+      assert(ids(df) == fullScanIds(pred))
+    } finally fs.rename(new Path(s"$bloomRoot/blooms_moved"), new Path(blooms))
+  }
+
   test("postings-lookup cap: past it every file falls back and rows equal a full scan") {
     prepared
     val pred: Pred = Eq("event_type", "t1") // one postings row per file: 8 rows
     val files = IndexBuilder.listDataFiles(spark, dataDir).map(_.path).toSet
     val (_, Seq((sel, fb, report))) = PrunedScanner.selectFilesDetailed(
-      spark, dataDir, Seq(pred), indexRoot, IndexBuilder.DefaultCapBytes, maxPostings = 2)
+      spark, dataDir, Seq(pred), Seq(indexRoot), IndexBuilder.DefaultCapBytes, maxPostings = 2)
     assert(sel.isEmpty && fb.toSet == files && report.fallbackFiles == files.size)
     assert(ids(spark.read.parquet(fb: _*).filter(pred.toColumn)) == fullScanIds(pred))
     // under the default cap the same lookup is served by the index
     val (_, Seq((sel2, fb2, _))) = PrunedScanner.selectFilesDetailed(
-      spark, dataDir, Seq(pred), indexRoot, IndexBuilder.DefaultCapBytes)
+      spark, dataDir, Seq(pred), Seq(indexRoot), IndexBuilder.DefaultCapBytes)
     assert(fb2.isEmpty && sel2.toSet == files)
   }
 
@@ -155,7 +232,7 @@ class DriverPruneSpec extends AnyFunSuite {
         IndexBuilder.postingsDir(raced), s"$raced/postings_old")
       val pred: Pred = And(Eq("event_type", "t2"), Eq("user_id", "4"))
       val (_, Seq((sel, fb, report))) = PrunedScanner.selectFilesDetailed(
-        spark, dataDir, Seq(pred), s"racefs://$raced", IndexBuilder.DefaultCapBytes)
+        spark, dataDir, Seq(pred), Seq(s"racefs://$raced"), IndexBuilder.DefaultCapBytes)
       assert(RaceFs.fired)
       assert(sel.isEmpty && report.fallbackFiles == report.totalFiles)
       assert(ids(spark.read.parquet(fb: _*).filter(pred.toColumn)) == fullScanIds(pred))
