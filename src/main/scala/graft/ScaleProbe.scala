@@ -206,11 +206,13 @@ object ScaleProbe {
               AI.buildIvfPq(emb, idx, nlist = 16)
             val fsys = new org.apache.hadoop.fs.Path(idx)
               .getFileSystem(s.sparkContext.hadoopConfiguration)
-            def bytes(p: String): Long =
-              try fsys.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
-              catch { case _: java.io.FileNotFoundException => -1L }
-            val pqB = bytes(s"$idx/assignments")
-            val vecB = bytes(s"$d/ivf_upsert_idx/assignments")
+            // the assignment table of the store's committed version
+            def bytes(dir: String): Long = graft.build.GenStore.readMeta(s, dir).fold(-1L) { m =>
+              val p = graft.build.GenTable.Ivf.path(graft.build.GenStore.root(dir, m))
+              fsys.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
+            }
+            val pqB = bytes(idx)
+            val vecB = bytes(s"$d/ivf_upsert_idx")
             if (vecB > 0)
               println(f"[scale] ann_pq_read bytes: codes $pqB%d vs vectors $vecB%d (${pqB.toDouble / vecB}%.3f)")
             AI.ivfPqTopKFromIndex(s, idx, emb,
@@ -408,17 +410,17 @@ object ScaleProbe {
           val dir = s"$d/text_postings_store"
           val docs = Tables.documents(s, d).select("doc_id", "text")
           val isDelta = col("doc_id") % DA.DeltaMod === DA.DeltaRem
-          wipeOrCompact(s, dir, i, PS.compact(docs.filter(!isDelta), dir))
+          wipeOrCompact(s, dir, i, PS.build(docs.filter(!isDelta), dir))
         } else if (name == "text_takedown") Some { (s, d, i) =>
           val PS = graft.text.PostingsStore
           val dir = s"$d/text_takedown_store"
           val docs = Tables.documents(s, d).select("doc_id", "text")
-          wipeOrCompact(s, dir, i, PS.compact(docs, dir))
+          wipeOrCompact(s, dir, i, PS.build(docs, dir))
         } else if (name == "ann_takedown") Some { (s, d, i) =>
           val AI = graft.similarity.AnnIndex
           val dir = s"$d/ann_takedown_idx"
           val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-          wipeOrCompact(s, dir, i, AI.compactIvf(emb, dir, nlist = 16))
+          wipeOrCompact(s, dir, i, AI.buildIvf(emb, dir, nlist = 16))
         } else if (name == "text_horizon") Some { (s, d, i) =>
           // every warm run squashes the SAME fixed two-gen history: the
           // squash consumed the previous one, so rebuild it UNTIMED

@@ -1,13 +1,15 @@
 package graft.build
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.parquet.filter2.compat.FilterCompat
 import graft.functions.expressions.LongKeyIn
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 /** The ONE gen-stamped-store lifecycle protocol, shared by every
   * persisted maintained structure in the engine — the vector indexes
@@ -15,33 +17,50 @@ import org.apache.spark.sql.types.LongType
   * point-fetch vector store) and the text postings store
   * (`graft.text.PostingsStore`). Extracted in r18 so the regimes cannot
   * drift between structures (the r17 verdict's unification item): one
-  * definition of the meta, the generation reservation, the staged
-  * compact/recover swap, the three read regimes, and the staleness
-  * counters. Each structure is a [[GenTable]] descriptor plus its
-  * kernel, and every verb — [[build]], [[append]], [[delete]],
-  * [[live]], [[compactThrough]], [[retiredIds]], [[staleness]] — is
-  * derived from the descriptor here, once.
+  * definition of the meta, the generation reservation, the versioned
+  * commit, the three read regimes, and the staleness counters. Each
+  * structure is a [[GenTable]] descriptor plus its kernel, and every
+  * verb — [[build]], [[append]], [[delete]], [[live]],
+  * [[compactThrough]], [[retiredIds]], [[staleness]] — is derived from
+  * the descriptor here, once.
   *
-  * PROTOCOL (see `AnnIndex`'s class doc for the full economics):
-  *  - BUILD writes the corpus as `gen=0` and the `_INDEX_META` marker
-  *    LAST (completion marker; a crash mid-build leaves no meta and the
-  *    next build deletes the partial tree);
+  * PROTOCOL — the `_INDEX_META` commit is the store's only source of
+  * truth (the reference's index descriptor names the files it covers,
+  * and readers trust that marker, never the directory's shape):
+  *  - LAYOUT: a store's data and model files live under a VERSION root
+  *    `<dir>/v=K/` — each table's generations at
+  *    `v=K/<subdir>/gen=N/`, model files (centroids, codebook) and the
+  *    retired sidecar beside them;
+  *  - COMMIT: one atomic [[MetaIO.write]] of `_INDEX_META` records the
+  *    version, the gen counter, history flags, staleness counters, the
+  *    last applied streaming batch AND, for every table, its data schema
+  *    and each committed generation's files (path relative to `<dir>`,
+  *    length, mtime). It then deletes every entry of `<dir>` except the
+  *    meta and the live `v=K` — plus `v=K-1` when the commit switched
+  *    versions: an older version, the leftover of a crashed build or
+  *    compaction, a pre-version tree;
+  *  - BUILD (and every full compact, which IS a build) writes gen 0 and
+  *    the model files into `v=K+1/` beside the live `v=K/` and commits a
+  *    meta that points at it — nothing is renamed, and a crash before
+  *    the commit leaves the last committed view readable (the next build
+  *    clears the partial `v=K+1/` first);
   *  - APPEND reserves the next generation from the meta (O(1)), writes
-  *    ONLY the delta into its own `gen=N` directory with overwrite
-  *    semantics (file-idempotent replays), and commits by rewriting the
-  *    meta — gen counter, history flags, staleness counters, last
-  *    applied streaming batch — atomically ([[MetaIO.write]]);
-  *  - READS resolve through three regimes decided by the meta: PLAIN
-  *    (append-only history — no shuffle, probe filters push into the
-  *    scan), BOUNDED tracked-upsert (the recorded upsert generations'
-  *    keys are read on the driver from the scan's own file listing and
-  *    folded into one key filter over that scan — no shuffle, no
-  *    join, no Spark job before the query's own; past a cap on upsert
-  *    rows read or on distinct upsert keys, full resolution),
-  *    UNTRUSTED (full latest-gen resolution);
-  *  - COMPACT rebuilds at gen 0 in a sibling `.compact.tmp` tree and
-  *    swaps (delete + rename); the delete→rename crash gap is adopted
-  *    by [[recover]].
+  *    ONLY the delta into its own `gen=N` directory of the live version
+  *    with overwrite semantics (file-idempotent replays), and commits;
+  *  - READS build their relation from the meta's file list — no
+  *    directory listing, no schema walk — and resolve through three
+  *    regimes decided by the meta: PLAIN (append-only history — no
+  *    shuffle, probe filters push into the scan), BOUNDED tracked-upsert
+  *    (the recorded upsert generations' keys are read on the driver from
+  *    the committed files and folded into one key filter over the scan —
+  *    no shuffle, no join, no Spark job before the query's own; past a
+  *    cap on upsert rows read or on distinct upsert keys, full
+  *    resolution), UNTRUSTED (full latest-gen resolution). A compaction's
+  *    commit keeps the version it replaced until the store's next
+  *    commit, so a read survives any ONE compaction that overlaps it
+  *    unless an append or delete also commits before the read ends;
+  *  - A meta without a version (a pre-version tree) is treated like a
+  *    missing one: appends and reads throw, a build replaces it.
   *
   * STALENESS COUNTERS (exact since r18): `rows0`/`rowsa` are LIVE row
   * counters — rows of gen 0 / of append generations that a full
@@ -55,9 +74,7 @@ import org.apache.spark.sql.types.LongType
   * column-pruned thin scan, output O(|delta|) — and moves them out of
   * the counters, so `appendRows / (baseRows + appendRows)` IS the live
   * append-row fraction exactly, on every history shape (the r17 ≤2×
-  * upsert band is gone). Metas from before the counters (`-1`) stay
-  * legacy: [[metaStaleness]] returns None and the structure's reader
-  * falls back to its O(index) scan.
+  * upsert band is gone). Every readable meta carries them.
   *
   * SENTINELS AND TOMBSTONES (r19 — the counters count what readers
   * serve): some structures write rows that exist only for SUPERSESSION,
@@ -95,68 +112,120 @@ import org.apache.spark.sql.types.LongType
   */
 private[graft] object GenStore {
 
+  /** One committed data file: its generation, its path relative to the
+    * store root, its length and its modification time. */
+  final case class StoreFile(gen: Long, path: String, len: Long, mtime: Long)
+
+  /** One table's committed state: its data schema (partition columns
+    * excluded) and its files. */
+  final case class Table(schema: StructType, files: Seq[StoreFile])
+
   /** The store's durable control state: `gen` is the next-append
     * generation (commit pointer: only gens below it are visible),
     * `appendOnly` keeps the plain live view, `trusted` says `newIds`
     * declarations held for the whole history (false after an in-stream
     * compact), `upsertGens` are the generations whose append was an
     * upsert (bounded-resolution read path), `batch` is the last applied
-    * streaming batch, `params` the model parameters.
+    * streaming batch, `params` the model parameters, `version` the
+    * live version root `v=K` and `tables` the committed files by table
+    * subdirectory.
     *
     * `baseRows`/`appendRows` are the O(1) exact staleness counters (see
-    * class doc); -1 = legacy meta without counters. */
+    * class doc); -1 only on the in-memory as-of view. */
   final case class Meta(
       gen: Long, appendOnly: Boolean, batch: Long,
       trusted: Boolean = true, upsertGens: Seq[Long] = Nil,
-      baseRows: Long = -1L, appendRows: Long = -1L,
-      params: Map[String, String] = Map.empty)
+      baseRows: Long = 0L, appendRows: Long = 0L,
+      params: Map[String, String] = Map.empty,
+      version: Long = 0L, tables: Map[String, Table] = Map.empty)
 
   private val ReservedKeys =
-    Set("gen", "plain", "batch", "trust", "ugens", "rows0", "rowsa")
+    Set("gen", "plain", "batch", "trust", "ugens", "rows0", "rowsa", "ver")
 
-  private def metaPath(dir: String): String = s"$dir/_INDEX_META"
+  private val MetaName = "_INDEX_META"
+
+  private def metaPath(dir: String): String = s"$dir/$MetaName"
+
+  /** The version root of `m`: the directory its data and model files
+    * live under. */
+  def root(dir: String, m: Meta): String = s"$dir/${version(m)}"
+
+  private def version(m: Meta): String = s"v=${m.version}"
+
+  private def conf(s: SparkSession) = s.sessionState.newHadoopConf()
 
   private def fsOf(s: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    new Path(dir).getFileSystem(conf(s))
 
-  /** Missing keys default CONSERVATIVELY: an ambiguous or legacy meta
-    * must route readers through full upsert resolution (`plain` and
-    * `trust` default false — serving a truncated/foreign meta as a
-    * plain read could return superseded duplicate rows; resolving an
-    * actually-append-only history is merely slower, never wrong). */
+  /** Missing keys default CONSERVATIVELY: an ambiguous meta must route
+    * readers through full upsert resolution (`plain` and `trust`
+    * default false — serving a truncated/foreign meta as a plain read
+    * could return superseded duplicate rows; resolving an
+    * actually-append-only history is merely slower, never wrong). A meta
+    * without a version or without the row counters is a pre-version
+    * tree: None, as if absent.
+    *
+    * Layout: line 1 is the `key=value;…` control line; then, per table,
+    * a `<subdir>\t<schema json>` line followed by one
+    * `<gen>\t<len>\t<mtime>\t<path>` line per committed file. */
   def readMeta(s: SparkSession, dir: String): Option[Meta] =
-    MetaIO.read(s.sparkContext.hadoopConfiguration, new Path(metaPath(dir)))
-      .flatMap { line =>
-        val kv = line.split(';').flatMap { f =>
-          f.split('=') match { case Array(k, v) => Some(k -> v); case _ => None }
-        }.toMap
-        for (g <- kv.get("gen").flatMap(_.toLongOption))
-          yield Meta(g,
-            kv.get("plain").exists(_ == "true"),
-            kv.get("batch").flatMap(_.toLongOption).getOrElse(-1L),
-            kv.get("trust").exists(_ == "true"),
-            kv.get("ugens").toSeq.flatMap(_.split(',').flatMap(_.toLongOption)),
-            kv.get("rows0").flatMap(_.toLongOption).getOrElse(-1L),
-            kv.get("rowsa").flatMap(_.toLongOption).getOrElse(-1L),
-            kv -- ReservedKeys)
-      }
+    MetaIO.read(conf(s), new Path(metaPath(dir))).flatMap { content =>
+      val lines = content.split('\n').toSeq
+      val kv = lines.head.split(';').flatMap { f =>
+        f.split('=') match { case Array(k, v) => Some(k -> v); case _ => None }
+      }.toMap
+      def long(k: String) = kv.get(k).flatMap(_.toLongOption)
+      for (g <- long("gen"); v <- long("ver"); r0 <- long("rows0"); ra <- long("rowsa"))
+        yield Meta(g,
+          kv.get("plain").exists(_ == "true"),
+          long("batch").getOrElse(-1L),
+          kv.get("trust").exists(_ == "true"),
+          kv.get("ugens").toSeq.flatMap(_.split(',').flatMap(_.toLongOption)),
+          r0, ra, kv -- ReservedKeys, v, tablesOf(lines.tail))
+    }
 
-  /** Meta writes are ATOMIC ([[MetaIO.write]]: temp file + overwrite-
-    * rename): an in-place create would truncate the old marker before
-    * the new bytes land, so a crash mid-write on an APPEND would
-    * destroy the completion marker of a perfectly intact index — and
-    * the next maintenance pass would treat it as partial and rebuild
-    * from one micro-batch. */
-  private def writeMeta(s: SparkSession, dir: String, m: Meta): Unit = {
+  private def tablesOf(lines: Seq[String]): Map[String, Table] =
+    lines.foldLeft(List.empty[(String, Table)]) { (acc, line) =>
+      line.split('\t') match {
+        case Array(name, json) =>
+          (name -> Table(DataType.fromJson(json).asInstanceOf[StructType], Vector.empty)) :: acc
+        case Array(g, len, mtime, path) =>
+          val (name, t) = acc.head
+          (name -> t.copy(files = t.files :+
+            StoreFile(g.toLong, path, len.toLong, mtime.toLong))) :: acc.tail
+      }
+    }.toMap
+
+  /** The COMMIT: one ATOMIC meta write ([[MetaIO.write]]: temp file +
+    * overwrite-rename — an in-place create would truncate the old
+    * marker before the new bytes land, so a crash mid-write on an
+    * APPEND would destroy the completion marker of a perfectly intact
+    * index), then the cleanup rule: every entry of `dir` except the meta
+    * and the committed version is deleted — and, when the commit
+    * `switches` to a new version (a build, a compaction), the version it
+    * replaced, so a read that started on it survives this compaction.
+    * The replaced version goes at the store's next commit: keeping it
+    * through appends would hold a second copy of the store on disk
+    * until the next compaction. Hidden checksum files are the
+    * filesystem's own. */
+  private def writeMeta(s: SparkSession, dir: String, m: Meta, switches: Boolean): Unit = {
     val extra = m.params.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
     val ugens =
       if (m.upsertGens.isEmpty) Nil else Seq(s"ugens=${m.upsertGens.mkString(",")}")
-    val rows =
-      if (m.baseRows < 0 || m.appendRows < 0) Nil
-      else Seq(s"rows0=${m.baseRows}", s"rowsa=${m.appendRows}")
-    MetaIO.write(s.sparkContext.hadoopConfiguration, new Path(metaPath(dir)),
-      (Seq(s"gen=${m.gen}", s"plain=${m.appendOnly}", s"batch=${m.batch}",
-        s"trust=${m.trusted}") ++ ugens ++ rows ++ extra).mkString(";"))
+    val control = (Seq(s"gen=${m.gen}", s"plain=${m.appendOnly}", s"batch=${m.batch}",
+      s"trust=${m.trusted}") ++ ugens ++ Seq(s"rows0=${m.baseRows}",
+      s"rowsa=${m.appendRows}", s"ver=${m.version}") ++ extra).mkString(";")
+    val files = m.tables.toSeq.sortBy(_._1).flatMap { case (name, t) =>
+      s"$name\t${t.schema.json}" +:
+        t.files.map(f => s"${f.gen}\t${f.len}\t${f.mtime}\t${f.path}")
+    }
+    MetaIO.write(conf(s), new Path(metaPath(dir)), (control +: files).mkString("\n"))
+    val keep = Set(MetaName, version(m)) ++
+      Option.when(switches)(version(m.copy(version = m.version - 1)))
+    val fs = fsOf(s, dir)
+    for (st <- fs.listStatus(new Path(dir)); n = st.getPath.getName
+         if !keep(n) && !n.startsWith("."))
+      fs.delete(st.getPath, true)
   }
 
   /** Whether a COMPLETE store lives at `dir` — true only once the
@@ -184,8 +253,8 @@ private[graft] object GenStore {
     * is what keeps the read-side resolution bounded. Returns
     * (reserved gen, the meta to commit after the write, the PREVIOUS
     * meta — the appender needs its flags to decide whether the exact
-    * dead-row count must run). A meta-less tree is a partial or legacy
-    * build and must be rebuilt, not appended to — throws. */
+    * dead-row count must run). A meta-less tree is a partial or
+    * pre-version build and must be rebuilt, not appended to — throws. */
   private def reserveGen(s: SparkSession, dir: String, newIds: Boolean,
       batchId: Long): (Long, Meta, Meta) =
     readMeta(s, dir) match {
@@ -201,7 +270,7 @@ private[graft] object GenStore {
         (m.gen, next, m)
       case None => throw new IllegalStateException(
         s"no complete index at $dir (missing ${metaPath(dir)}): build it " +
-          "first — a legacy/partial tree must be rebuilt, not appended to")
+          "first — a partial or pre-version tree must be rebuilt, not appended to")
     }
 
   /** Validate caller-passed model parameters against the meta's — a
@@ -220,29 +289,17 @@ private[graft] object GenStore {
     }
 
   /** The meta as the READ-SIDE contract: a meta-less tree is partial or
-    * legacy and must not be silently served. */
+    * pre-version and must not be silently served. */
   def metaOrThrow(s: SparkSession, dir: String): Meta =
     readMeta(s, dir).getOrElse(throw new IllegalStateException(
       s"no complete index at $dir (missing ${metaPath(dir)}): build it " +
-        "first — a legacy/partial tree must be rebuilt, not read"))
-
-  /** The counter-derived EXACT live append-row fraction, when the meta
-    * carries the counters (see class doc; None = legacy meta, the
-    * caller falls back to its O(index) scan). */
-  private def metaStaleness(m: Meta): Option[Double] =
-    if (m.baseRows < 0 || m.appendRows < 0) None
-    else {
-      val total = m.baseRows + m.appendRows
-      Some(if (total == 0) 0.0 else m.appendRows.toDouble / total)
-    }
+        "first — a partial or pre-version tree must be rebuilt, not read"))
 
   /** Commit an append's counters: the written generation's rows join
     * the live append set; the superseded live rows (`dead` = base,
-    * append split) leave theirs. Legacy counter-less metas stay
-    * legacy. */
+    * append split) leave theirs. */
   private def appendCounters(m: Meta, written: Long, dead: (Long, Long)): Meta =
-    if (m.baseRows < 0 || m.appendRows < 0) m
-    else m.copy(baseRows = m.baseRows - dead._1,
+    m.copy(baseRows = m.baseRows - dead._1,
       appendRows = m.appendRows - dead._2 + written)
 
   /** The EXACT superseded-live-row count behind [[appendCounters]]:
@@ -291,8 +348,8 @@ private[graft] object GenStore {
     * (time-travel): stores retain their full generation history until
     * compact, so "the corpus as of generation N" is the same three-
     * regime view over the prefix. The restricted meta's commit pointer
-    * is `n + 1` (callers' raw reads filter `gen < meta.gen`, so the
-    * later generations' files are partition-pruned away), its upsert
+    * is `n + 1` (callers' raw reads take only the committed files below
+    * it, so the later generations are never listed or read), its upsert
     * gens are the recorded ones inside the prefix, and the regime
     * decision re-derives: a trusted history whose recorded upserts all
     * land AFTER `n` was append-only as of `n` — plain read; an
@@ -348,7 +405,7 @@ private[graft] object GenStore {
     * full trust — the squashed generation is single-gen-per-key by
     * construction, exactly a fresh build's shape, so even an untrusted
     * store comes back plain-readable. Counters are set by the caller
-    * (recounted from the staged tree); the streaming batch clock is
+    * (recounted from the new version); the streaming batch clock is
     * PRESERVED — a horizon compact must not reopen replayed batches. */
   private def horizonMeta(m: Meta, h: Long): Meta = {
     val ug = m.upsertGens.filter(_ > h)
@@ -360,110 +417,136 @@ private[graft] object GenStore {
       params = m.params + ("horizon" -> h.toString))
   }
 
-  /** Stage a HORIZON compact: byte-copy what the squash KEEPS into the
-    * staged sibling — model files, codebooks, and each data subtree's
-    * tail generations (`gen > h`) — nothing recomputed, and crucially
-    * nothing of the squashed prefix copied only to be thrown away (the
-    * prefix is the BULK of a deep store; copying it would double the
-    * compact's I/O for no reason). The meta is NOT copied: the staged
-    * tree must read as INCOMPLETE until the caller's final meta write —
-    * a crash mid-stage must never leave an adoptable tmp. The caller
-    * then writes the resolved base generation at `gen=h` and the meta
-    * LAST. Byte copy, not move: the live tree stays intact until
-    * [[stagedCompact]]'s swap (object stores do this server-side; the
-    * cost is tail + model I/O only, no shuffle or recompute). */
-  private def horizonStage(s: SparkSession, dir: String, tmp: String,
-      h: Long, dataSubdirs: Seq[String]): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
+  // ------------------------------------------------------- versions
+
+  /** Start version `m.version` of the store: clear whatever a crashed
+    * build or compaction left at its root (never committed, so no
+    * reader can hold it). */
+  private def startVersion(s: SparkSession, dir: String, m: Meta): String = {
+    val r = root(dir, m)
     val fs = fsOf(s, dir)
-    if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
-    fs.mkdirs(new Path(tmp))
+    if (fs.exists(new Path(r))) fs.delete(new Path(r), true)
+    r
+  }
+
+  /** Stage a HORIZON compact into version `next`: byte-copy what the
+    * squash KEEPS from the live version `m` — model files and each
+    * table's committed tail generations (`gen > h`, from the meta's
+    * file list) — nothing recomputed, and crucially nothing of the
+    * squashed prefix copied only to be thrown away (the prefix is the
+    * BULK of a deep store; copying it would double the compact's I/O for
+    * no reason). Returns `next` with the copied files recorded; the
+    * caller writes the resolved base generation at `gen=h` and commits.
+    * Byte copy, not move: the live version stays intact and readable
+    * through the commit and after it (object stores copy server-side;
+    * the cost is tail + model I/O only, no shuffle or recompute). */
+  private def stageTail(s: SparkSession, dir: String, t: GenTable, m: Meta,
+      next: Meta, h: Long): Meta = {
+    val fs = fsOf(s, dir)
     def copy(src: Path, dst: Path): Unit =
-      if (!org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, true, conf))
+      if (!FileUtil.copy(fs, src, fs, dst, false, true, conf(s)))
         throw new java.io.IOException(s"horizon stage: could not copy $src to $dst")
-    val keepGen = (p: Path) => {
-      val n = p.getName
-      n.startsWith("gen=") && n.stripPrefix("gen=").toLongOption.exists(_ > h)
+    val tableDirs = (t.subdirs :+ RetiredTable).toSet
+    for (child <- fs.listStatus(new Path(root(dir, m))); n = child.getPath.getName
+         if !tableDirs(n) && !n.startsWith("."))
+      copy(child.getPath, new Path(s"${root(dir, next)}/$n"))
+    val tables = m.tables.removed(RetiredTable).map { case (name, tb) =>
+      name -> tb.copy(files = tb.files.filter(_.gen > h).map { f =>
+        val p = s"${version(next)}/${f.path.stripPrefix(s"${version(m)}/")}"
+        copy(new Path(dir, f.path), new Path(dir, p))
+        val st = fs.getFileStatus(new Path(dir, p))
+        f.copy(path = p, len = st.getLen, mtime = st.getModificationTime)
+      })
     }
-    for (child <- fs.listStatus(new Path(dir))) {
-      val name = child.getPath.getName
-      if (name == metaPath(dir).split('/').last) () // never copy the meta
-      else if (dataSubdirs.contains(name)) {
-        // a gen-stamped subtree: keep only the tail generations
-        fs.mkdirs(new Path(s"$tmp/$name"))
-        for (g <- fs.listStatus(child.getPath) if keepGen(g.getPath))
-          copy(g.getPath, new Path(s"$tmp/$name/${g.getPath.getName}"))
-      } else copy(child.getPath, new Path(s"$tmp/$name"))
+    next.copy(tables = tables)
+  }
+
+  // ------------------------------------------- committed-file relations
+
+  private def qualified(s: SparkSession, dir: String): Path =
+    fsOf(s, dir).makeQualified(new Path(dir))
+
+  /** `files` under `tableRoot` (both relative to the store root `dir`) as one
+    * parquet relation with `schema` as its data schema: Spark's file
+    * index over `tableRoot`, whose status cache is the given list, so
+    * it lists nothing, and partition columns (gen, hash directories)
+    * are discovered from the paths as a listed read would. */
+  private def relation(s: SparkSession, dir: String, tableRoot: String,
+      schema: StructType, files: Seq[StoreFile]): DataFrame = {
+    val base = qualified(s, dir)
+    val rootPath = new Path(base, tableRoot)
+    val statuses = files.map(f =>
+      new FileStatus(f.len, false, 1, 0L, f.mtime, new Path(base, f.path))).toArray
+    val cache = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+        if (p == rootPath) Some(statuses) else None
+      def putLeafFiles(p: Path, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(s, Seq(rootPath), Map.empty, Some(schema), cache)
+    s.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, schema,
+      None, new ParquetFileFormat, Map("path" -> rootPath.toString))(s))
+  }
+
+  /** Record the data files Spark just wrote under `out` (relative to
+    * the store root) as generation
+    * `gen` of table `name` in `m` (replacing any earlier record of that
+    * generation — a replayed write overwrites its own output), and
+    * re-read them: the one writer-side listing. The table's schema is
+    * the first file's footer when the table has none yet. None when the
+    * write left no data file (an empty write leaves only `_SUCCESS`). */
+  private def record(s: SparkSession, dir: String, m: Meta, name: String,
+      gen: Long, out: String): (Meta, Option[DataFrame]) = {
+    val base = qualified(s, dir).toUri.getPath.stripSuffix("/") + "/"
+    val fs = fsOf(s, dir)
+    def leaves(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+      .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+    val written = leaves(new Path(dir, out)).sortBy(_.getPath.toString)
+    if (written.isEmpty) (m, None)
+    else {
+      val prev = m.tables.get(name)
+      val schema = prev.fold(IndexBuilder.footerSchema(s, conf(s), written.head))(_.schema)
+      val files = written.map(st => StoreFile(gen,
+        st.getPath.toUri.getPath.stripPrefix(base), st.getLen, st.getModificationTime))
+      val kept = prev.fold(Seq.empty[StoreFile])(_.files.filterNot(_.gen == gen))
+      (m.copy(tables = m.tables + (name -> Table(schema, kept ++ files))),
+        Some(relation(s, dir, out, schema, files)))
     }
   }
 
   // ------------------------------------------- retired-key sidecar
 
-  /** The RETIRED-KEY SIDECAR (`<dir>/retired`, one key column): a
-    * horizon squash drops a tombstoned key's rows from the squashed
-    * base — which would also destroy the only durable record that the
-    * key was TAKEN DOWN. That record is load-bearing: `retiredIds`
-    * feeds the in-stream full compact's source exclusion, and a source
-    * directory still physically holds deleted ids' rows, so losing it
-    * would let the next full compact RESURRECT every takedown the
-    * squash absorbed. The squash therefore writes the dropped keys
-    * (unioned with any prior sidecar) into the staged tree — atomic
-    * under the swap — and `retiredIds` unions the sidecar back in
+  /** The RETIRED-KEY SIDECAR (table `retired` of the version root, one
+    * key column): a horizon squash drops a tombstoned key's rows from
+    * the squashed base — which would also destroy the only durable
+    * record that the key was TAKEN DOWN. That record is load-bearing:
+    * `retiredIds` feeds the in-stream full compact's source exclusion,
+    * and a source directory still physically holds deleted ids' rows,
+    * so losing it would let the next full compact RESURRECT every
+    * takedown the squash absorbed. The squash therefore writes the
+    * dropped keys (unioned with any prior sidecar) into the new version
+    * — committed with it — and `retiredIds` unions the sidecar back in
     * (minus currently-live keys, so a re-add leaves the set). A FULL
-    * compact/build wipes the tree including the sidecar: that is the
+    * compact/build starts a version without the sidecar: that is the
     * existing full-compact contract — it consumes the retired set at
     * rebuild time (the corpus passed in is already takedown-filtered),
     * after which takedown durability belongs to the source pipeline. */
-  private def retiredPath(dir: String): String = s"$dir/retired"
+  private val RetiredTable = "retired"
 
-  /** The sidecar's keys, if one exists (None on never-squashed or
-    * delete-free stores — zero cost there). */
-  private def readRetired(s: SparkSession, dir: String, keyCol: String): Option[DataFrame] = {
-    val p = new Path(retiredPath(dir))
-    if (fsOf(s, dir).exists(p))
-      Some(s.read.schema(IndexBuilder.dataSchema(s, retiredPath(dir)))
-        .parquet(retiredPath(dir)).toDF(keyCol))
-    else None
-  }
+  /** The sidecar's keys, if `m` committed one (None on never-squashed
+    * or delete-free stores — zero cost there). */
+  private def readRetired(s: SparkSession, dir: String, m: Meta, keyCol: String): Option[DataFrame] =
+    m.tables.get(RetiredTable).map(t =>
+      relation(s, dir, s"${version(m)}/$RetiredTable", t.schema, t.files).toDF(keyCol))
 
-  /** Persist the sidecar into a staged tree (tiny: one row per retired
-    * key, coalesced to one file). */
-  private def writeRetired(keys: DataFrame, tmpDir: String): Unit =
-    keys.distinct().coalesce(1)
-      .write.mode("overwrite").parquet(retiredPath(tmpDir))
-
-  // ------------------------------------------------------ staged compact
-
-  private def compactTmp(dir: String) = s"${dir.stripSuffix("/")}.compact.tmp"
-
-  /** The shared staged-swap protocol behind every compact: the rebuild
-    * lands in a sibling `.compact.tmp` tree (meta last), and only then
-    * swaps in (delete old, rename). A crash mid-rebuild leaves the OLD
-    * store fully intact and complete; the delete→rename gap is covered
-    * by [[recover]]. */
-  def stagedCompact(s: SparkSession, dir: String)(build: String => Unit): Unit = {
-    recover(s, dir)
-    val tmp = compactTmp(dir)
-    build(tmp)
-    val fs = fsOf(s, dir)
-    fs.delete(new Path(dir), true)
-    if (!fs.rename(new Path(tmp), new Path(dir)))
-      throw new java.io.IOException(
-        s"compact swap failed: could not rename $tmp over $dir")
-  }
-
-  /** Adopt a completed-but-unswapped compaction: if the store tree is
-    * missing/partial while a COMPLETE `.compact.tmp` sits beside it
-    * (crash between the swap's delete and rename), rename it in.
-    * Returns whether a recovery happened. Safe to call any time —
-    * no-op unless exactly that state is found. */
-  def recover(s: SparkSession, dir: String): Boolean = {
-    val tmp = compactTmp(dir)
-    if (!isComplete(s, dir) && isComplete(s, tmp)) {
-      val fs = fsOf(s, dir)
-      fs.delete(new Path(dir), true)
-      fs.rename(new Path(tmp), new Path(dir))
-    } else false
+  /** Write the sidecar into `m`'s version (tiny: one row per retired
+    * key, coalesced to one file), recorded at the squash point `h`. */
+  private def writeRetired(s: SparkSession, keys: DataFrame, dir: String, m: Meta,
+      h: Long): Meta = {
+    val out = s"${version(m)}/$RetiredTable"
+    keys.distinct().coalesce(1).write.mode("overwrite").parquet(s"$dir/$out")
+    record(s, dir, m, RetiredTable, h, out)._1
   }
 
   // ------------------------------------------------------- live views
@@ -491,11 +574,11 @@ private[graft] object GenStore {
   private val MaxUpsertKeys = 1 << 16
   private val MaxUpsertRows = 1L << 20
 
-  /** The BOUNDED regime's row selection over `rows` (one listed relation
-    * of the committed generations), resolved on the driver: the key
-    * column of each upsert generation `ug`'s files IN THAT LISTING is
-    * read with parquet-mr (no Spark job), each key's winning generation
-    * is its latest upsert generation, and the selection is one filter
+  /** The BOUNDED regime's row selection over `rows` (the committed
+    * generations of `m`), resolved on the driver: the key column of each
+    * upsert generation's files as `m` committed them is read with
+    * parquet-mr (no Spark job), each key's winning generation is its
+    * latest upsert generation, and the selection is one filter
     * `(gen ∉ ug ∧ key ∉ K) ∨ ⋁_g (gen = g ∧ key ∈ K_g)`, each key set a
     * sorted array probed by binary search ([[LongKeyIn]]) — the
     * untouched generations minus every upsert key, plus each key's rows
@@ -504,46 +587,31 @@ private[graft] object GenStore {
     * this is latest-gen resolution. For one-row tables it equals the
     * struct max because writers leave one row per (key, gen) (batches
     * are deduped by id, deletes write one tombstone per key;
-    * LiveViewSpec pins it). Keys and scan come from the same listing, so
-    * a compaction swapped in beside the read cannot pair a filter of one
-    * tree with the rows of another: once listed, a file that is gone
-    * fails the read (here: None; in the scan: the query's own error).
-    * None — the caller resolves in full over a fresh listing — past
-    * `maxRows` rows read or `maxKeys` distinct keys (the read stops
-    * there, so the driver's work is bounded by the caps), on a null key or a
-    * key type other than bigint, when a listed file is gone,
-    * and when the listing lacks an upsert generation that is not a known
-    * empty set (its directory holding only `_SUCCESS`, a zero-row batch):
-    * an unreadable generation is unknown, never "no keys", which would
-    * resurrect every key it deleted. */
-  private def upsertFilter(s: SparkSession, t: GenTable, dir: String, rows: DataFrame,
-      ug: Seq[Long], maxKeys: Int, maxRows: Long): Option[Column] = {
-    val conf = s.sessionState.newHadoopConf()
-    val listed = rows.inputFiles.toSeq.map(f => new Path(new java.net.URI(f)))
-      .flatMap(p => genOf(p).filter(ug.contains).map(_ -> p)).groupMap(_._1)(_._2)
-    def knownEmpty(g: Long): Boolean = {
-      val d = new Path(s"${t.path(dir)}/gen=$g")
-      try d.getFileSystem(conf).listStatus(d).map(_.getPath.getName)
-        .filterNot(_.startsWith(".")).toSeq == Seq("_SUCCESS")
-      catch { case _: java.io.FileNotFoundException => false }
-    }
-    val files = ug.sorted.flatMap(g => listed.getOrElse(g, Nil).sortBy(_.toString).map(g -> _))
+    * LiveViewSpec pins it). Keys and scan come from the same meta, so
+    * they always describe one committed state; an upsert generation
+    * with no committed file is a zero-row batch — no keys. None — the
+    * caller resolves in full — past `maxRows` rows read or `maxKeys`
+    * distinct keys (the read stops there, so the driver's work is
+    * bounded by the caps), and on a null key or a key type other than
+    * bigint. */
+  private def upsertFilter(s: SparkSession, t: GenTable, dir: String, m: Meta,
+      rows: DataFrame, maxKeys: Int, maxRows: Long): Option[Column] = {
+    val hc = conf(s)
+    val ug = m.upsertGens
+    val files = tableOf(m, dir, t).files.filter(f => ug.contains(f.gen)).sortBy(f => (f.gen, f.path))
     val win = scala.collection.mutable.HashMap.empty[Long, Long]
-    var known = rows.schema(t.key).dataType == LongType &&
-      ug.forall(g => listed.contains(g) || knownEmpty(g))
+    var known = rows.schema(t.key).dataType == LongType
     var read = 0L
     def more = known && read <= maxRows && win.size <= maxKeys
-    try for ((g, p) <- files if more)
-      IndexBuilder.readFile(conf, p, FilterCompat.NOOP, more, columns = Seq(t.key)) { r =>
+    for (f <- files if more)
+      IndexBuilder.readFile(hc, new Path(dir, f.path), FilterCompat.NOOP, more,
+          columns = Seq(t.key)) { r =>
         read += 1
         if (r.getFieldRepetitionCount(0) == 0 ||
             r.getType.getType(0).asPrimitiveType.getPrimitiveTypeName != PrimitiveTypeName.INT64)
           known = false
-        else win(r.getLong(0, 0)) = g
+        else win(r.getLong(0, 0)) = f.gen
       }
-    catch {
-      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => known = false
-    }
     def in(keys: Iterable[Long]): Column =
       ColumnBridge.column(LongKeyIn(ColumnBridge.expression(col(t.key)), keys.toArray.sorted))
     if (!more) None
@@ -556,11 +624,6 @@ private[graft] object GenStore {
     }
   }
 
-  /** The generation of a data file: its nearest `gen=N` directory. */
-  private def genOf(file: Path): Option[Long] =
-    Iterator.iterate(file.getParent)(_.getParent).takeWhile(_ != null).map(_.getName)
-      .find(_.startsWith("gen=")).flatMap(_.stripPrefix("gen=").toLongOption)
-
   /** Throws unless the structure the tree's meta names stores table
     * `t` — a verb of one structure must never read or append another's
     * rows. */
@@ -571,40 +634,43 @@ private[graft] object GenStore {
         "one: use the verbs of the structure it holds")
   }
 
-  /** Table `t`'s files as one relation, gen and any directory column
-    * discovered from the paths. The data schema comes from one footer
-    * read on the driver ([[IndexBuilder.dataSchema]]), not from Spark's
-    * schema-inference job. */
-  private def scan(s: SparkSession, t: GenTable, dir: String): DataFrame =
-    s.read.schema(IndexBuilder.dataSchema(s, t.path(dir))).parquet(t.path(dir))
+  /** Table `t`'s committed files below `m`'s commit pointer as one
+    * relation, gen and any directory column discovered from the paths —
+    * built from the meta's file list and schema ([[relation]]): no
+    * listing, no footer read. An orphan gen directory from a crashed,
+    * never-replayed append is not in the list, so it is invisible. */
+  private def scan(s: SparkSession, t: GenTable, dir: String, m: Meta): DataFrame = {
+    val table = tableOf(m, dir, t)
+    relation(s, dir, t.path(version(m)), table.schema, table.files.filter(_.gen < m.gen))
+  }
+
+  private def tableOf(m: Meta, dir: String, t: GenTable): Table =
+    m.tables.getOrElse(t.subdir, throw new IllegalStateException(
+      s"the store at $dir committed no rows of table '${t.subdir}'"))
 
   /** The COMMITTED-GEN RAW READER: table `t`'s rows of the generations
-    * below `committedGen`, `cols` in read order plus gen as long. The
-    * commit pointer makes an orphan gen directory from a crashed,
-    * never-replayed append invisible, and since gen is a partition
-    * column its files are pruned statically, not filtered. `pre`
-    * narrows the scan before the projection (key-commuting filters:
-    * the vector store's directory pruning). */
-  private def raw(s: SparkSession, t: GenTable, dir: String, committedGen: Long,
+    * below `m.gen`, `cols` in read order plus gen as long. `pre` narrows
+    * the scan before the projection (key-commuting filters: the vector
+    * store's directory pruning). */
+  private def raw(s: SparkSession, t: GenTable, dir: String, m: Meta,
       cols: Seq[String], pre: DataFrame => DataFrame): DataFrame =
-    pre(scan(s, t, dir).filter(col("gen") < committedGen))
+    pre(scan(s, t, dir, m))
       .select(cols.map(t.readCol) :+ col("gen").cast("long").as("gen"): _*)
 
-  private def raw(s: SparkSession, t: GenTable, dir: String, committedGen: Long): DataFrame =
-    raw(s, t, dir, committedGen, t.cols, identity)
+  private def raw(s: SparkSession, t: GenTable, dir: String, m: Meta): DataFrame =
+    raw(s, t, dir, m, t.cols, identity)
 
   /** The LIVE rows of table `t`: latest generation per key, through the
     * regime the meta decides —
     *  - PLAIN (append-only history): the committed scan, `probe` pushed
     *    into it;
     *  - BOUNDED (trusted, with recorded upsert generations): the same
-    *    scan under one key filter resolved on the driver from that
-    *    scan's own listing ([[upsertFilter]]), `probe` pushed into every
+    *    scan under one key filter resolved on the driver from the same
+    *    meta's files ([[upsertFilter]]), `probe` pushed into every
     *    generation — row selection no longer depends on the probe, so no
     *    probe can resurrect a superseded row; past `maxUpsertRows` upsert
-    *    rows or `maxUpsertKeys` distinct upsert keys, or when an upsert
-    *    generation cannot be read from the listing, it resolves in full
-    *    over a fresh listing instead;
+    *    rows or `maxUpsertKeys` distinct upsert keys it resolves in full
+    *    instead;
     *  - FULL (untrusted history, or `resolveAll` — the audit path):
     *    [[resolve]] over every committed row, `probe` applied after it
     *    (pruning a superseded key's old partition out from under the
@@ -614,7 +680,7 @@ private[graft] object GenStore {
     * `cols` (plus gen) are kept. `asOfGen` reads the store as of
     * generation N ([[asOf]]). A counted store that never wrote a
     * tombstone, read current and append-only, serves the FLAT plan: the
-    * write-once scan under the commit pointer, no tombstone filter, no
+    * write-once scan of the committed files, no tombstone filter, no
     * projection — the maintained read's residual cost on a fresh or
     * just-compacted store is zero, not "small". The count describes the
     * FULL history, so an as-of read never takes it. */
@@ -627,17 +693,17 @@ private[graft] object GenStore {
     val meta = asOfGen.fold(full)(asOf(full, _))
     if (!resolveAll && asOfGen.isEmpty && meta.appendOnly &&
         t.tombCount.exists(k => full.params.get(k).contains("0")))
-      probe(pre(scan(s, t, dir).filter(col("gen") < meta.gen)))
+      probe(pre(scan(s, t, dir, meta)))
     else {
       val post: DataFrame => DataFrame =
         if (t.dropsTombs(full)) df => probe(df).filter(t.serving) else probe
-      val rows = raw(s, t, dir, meta.gen, cols, pre)
+      val rows = raw(s, t, dir, meta, cols, pre)
       post(
         if (!resolveAll && meta.appendOnly) rows
         else if (resolveAll || !meta.trusted || meta.upsertGens.isEmpty)
           resolve(rows, t.key, t.multiRow)
-        else upsertFilter(s, t, dir, rows, meta.upsertGens, maxUpsertKeys, maxUpsertRows)
-          .fold(resolve(raw(s, t, dir, meta.gen, cols, pre), t.key, t.multiRow))(rows.filter))
+        else upsertFilter(s, t, dir, meta, rows, maxUpsertKeys, maxUpsertRows)
+          .fold(resolve(rows, t.key, t.multiRow))(rows.filter))
     }
   }
 
@@ -647,36 +713,34 @@ private[graft] object GenStore {
   // ------------------------------------------------------------ verbs
 
   /** The GENERATION WRITER: lay `rows` out as generation `gen` of table
-    * `t` (its [[GenLayout]]) with overwrite semantics — a replayed
-    * crash-append overwrites its own partial output — then write each
-    * derived sidecar from the rows just written (a footer-friendly
-    * re-read, never a recompute of the rows' subtree). `est` sizes a
-    * range layout's fan-out (the batch's rows; -1 = a build at session
-    * width) and is evaluated only there. Returns (serving rows,
-    * tombstone rows) of the generation in one pass. An EMPTY
-    * partitioned write leaves only _SUCCESS (no schema to read) and
-    * counts (0, 0): a zero-row streaming micro-batch must not wedge the
+    * `t` (its [[GenLayout]]) in `m`'s version with overwrite semantics —
+    * a replayed crash-append overwrites its own partial output — then
+    * write each derived sidecar from the rows just written (a re-read of
+    * the recorded files, never a recompute of the rows' subtree). `est`
+    * sizes a range layout's fan-out (the batch's rows; -1 = a build at
+    * session width) and is evaluated only there. Returns `m` with the
+    * written files recorded, and (serving rows, tombstone rows) of the
+    * generation in one pass. An EMPTY write records nothing and counts
+    * (0, 0): a zero-row streaming micro-batch must not wedge the
     * maintenance loop on a throw. */
-  private def writeGen(t: GenTable, rows: DataFrame, dir: String, gen: Long,
-      est: => Long): (Long, Long) = {
-    val s = rows.sparkSession
+  private def writeGen(t: GenTable, rows: DataFrame, dir: String, m: Meta, gen: Long,
+      est: => Long): (Meta, Long, Long) = {
     lazy val n = est
-    val out = layOut(t, rows, dir, gen, n)
-    val written =
-      try Some(s.read.schema(IndexBuilder.dataSchema(s, out)).parquet(out))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    written.fold((0L, 0L)) { w =>
-      t.derived.foreach { case (d, derive) => layOut(d, derive(w), dir, gen, n) }
+    val (m1, written) = layOut(t, rows, dir, m, gen, n)
+    written.fold((m1, 0L, 0L)) { w =>
+      val m2 = t.derived.foldLeft(m1) { case (acc, (d, derive)) =>
+        layOut(d, derive(w), dir, acc, gen, n)._1
+      }
       val r = w.agg(count(lit(1)), coalesce(sum(when(t.tomb, 1L)), lit(0L))).head()
-      (r.getLong(0) - r.getLong(1), r.getLong(1))
+      (m2, r.getLong(0) - r.getLong(1), r.getLong(1))
     }
   }
 
-  /** Write `rows` as generation `gen` of table `t` in its layout;
-    * returns the generation directory. */
-  private def layOut(t: GenTable, rows: DataFrame, dir: String, gen: Long,
-      est: => Long): String = {
-    val out = s"${t.path(dir)}/gen=$gen"
+  /** Write `rows` as generation `gen` of table `t` in its layout and
+    * record the files ([[record]]). */
+  private def layOut(t: GenTable, rows: DataFrame, dir: String, m: Meta, gen: Long,
+      est: => Long): (Meta, Option[DataFrame]) = {
+    val out = s"${t.path(version(m))}/gen=$gen"
     val writer = t.layout match {
       case HashDirs(d, derive, parts, sortBy) =>
         val r = derive.fold(rows)(rows.withColumn(d, _))
@@ -692,26 +756,27 @@ private[graft] object GenStore {
           .sortWithinPartitions(sortBy.map(col): _*)
           .write.mode("overwrite")
     }
-    writer.parquet(out)
-    out
+    writer.parquet(s"$dir/$out")
+    record(rows.sparkSession, dir, m, t.subdir, gen, out)
   }
 
-  /** BUILD: wipe `dir`, write gen 0 of `rows` and the meta LAST (the
-    * completion marker — a crash mid-build leaves no meta and the next
-    * build deletes the partial tree). `rows` is evaluated after the
-    * wipe: kernels lay down their model files (centroids, codebook)
-    * there. `appendOnly = false` stamps the store upsert-possible-and-
-    * untrusted ATOMICALLY in that same meta write — the in-stream
-    * compact's flag (its corpus snapshot may cover undelivered batches
-    * that later re-append as `newIds` duplicates). */
+  /** BUILD: write gen 0 of `rows` into a new version beside the live
+    * one and commit the meta that points at it (the completion marker —
+    * a crash before the commit leaves the last committed view as it
+    * was, and the next build clears the partial version). `rows`
+    * receives the new version root: kernels lay down their model files
+    * (centroids, codebook) there. A full COMPACT is this verb over the
+    * current corpus. `appendOnly = false` stamps the store
+    * upsert-possible-and-untrusted ATOMICALLY in that same meta write —
+    * the in-stream compact's flag (its corpus snapshot may cover
+    * undelivered batches that later re-append as `newIds` duplicates). */
   def build(s: SparkSession, t: GenTable, dir: String, batchId: Long,
-      appendOnly: Boolean, params: Map[String, String])(rows: => DataFrame): Unit = {
-    val fs = fsOf(s, dir)
-    if (fs.exists(new Path(dir))) fs.delete(new Path(dir), true)
-    val (n0, tombs) = writeGen(t, rows, dir, 0L, -1L)
-    writeMeta(s, dir, t.addTombs(Meta(gen = 1L, appendOnly = appendOnly,
-      batch = batchId, trusted = appendOnly, baseRows = n0, appendRows = 0L,
-      params = params ++ t.tombCount.map(_ -> "0")), tombs))
+      appendOnly: Boolean, params: Map[String, String])(rows: String => DataFrame): Unit = {
+    val m0 = Meta(gen = 1L, appendOnly = appendOnly, batch = batchId,
+      trusted = appendOnly, params = params ++ t.tombCount.map(_ -> "0"),
+      version = readMeta(s, dir).fold(0L)(_.version + 1))
+    val (m, n0, tombs) = writeGen(t, rows(startVersion(s, dir, m0)), dir, m0, 0L, -1L)
+    writeMeta(s, dir, t.addTombs(m.copy(baseRows = n0), tombs), switches = true)
   }
 
   /** APPEND: reserve the next generation, let the kernel validate the
@@ -726,8 +791,8 @@ private[graft] object GenStore {
     val (ids, rows, est) = batch(next)
     val t = GenTable.of(next)
     val dead = deadCount(s, t, dir, prev, newIds, ids)
-    val (n, tombs) = writeGen(t, rows, dir, gen, est)
-    writeMeta(s, dir, t.addTombs(appendCounters(next, n, dead), tombs))
+    val (m, n, tombs) = writeGen(t, rows, dir, next, gen, est)
+    writeMeta(s, dir, t.addTombs(appendCounters(m, n, dead), tombs), switches = false)
   }
 
   /** The EXACT superseded-row count behind an append, when the history
@@ -735,11 +800,10 @@ private[graft] object GenStore {
     * generations, semi-joined with the (broadcast, delta-scale) ids. A
     * key-derived directory layout first prunes the scan to the ids'
     * directories (≤ ProbePartitions values — a tiny driver collect), so
-    * an upsert micro-batch on the vector store reads only its buckets.
-    * Legacy counter-less metas pay nothing. */
+    * an upsert micro-batch on the vector store reads only its buckets. */
   private def deadCount(s: SparkSession, t: GenTable, dir: String, prev: Meta,
       newIds: Boolean, ids: DataFrame): (Long, Long) =
-    if (prev.baseRows < 0 || !needsDeadCount(prev, newIds)) (0L, 0L)
+    if (!needsDeadCount(prev, newIds)) (0L, 0L)
     else {
       val keys = ids.select(t.key)
       val pre: DataFrame => DataFrame = t.keyDirs.fold(identity[DataFrame] _) {
@@ -747,7 +811,7 @@ private[graft] object GenStore {
           val vs = keys.select(f).distinct().collect().map(_.get(0)).toSeq
           _.filter(col(d).isin(vs: _*))
       }
-      deadCounts(raw(s, t, dir, prev.gen, t.cols, pre), t.key, keys, t.weight,
+      deadCounts(raw(s, t, dir, prev, t.cols, pre), t.key, keys, t.weight,
         baseGen = horizonOf(prev))
     }
 
@@ -765,7 +829,7 @@ private[graft] object GenStore {
     val s = ids.sparkSession
     val (gen, next, prev) = reserveGen(s, dir, newIds = false, batchId)
     val t = GenTable.of(next)
-    val sch = IndexBuilder.dataSchema(s, t.path(dir))
+    val sch = tableOf(next, dir, t).schema
     val keys = ids.select(col(idCol.getOrElse(t.idCol))
       .cast(sch(t.key).dataType).as(t.key)).distinct()
     val dead = deadCount(s, t, dir, prev, newIds = false, keys)
@@ -776,8 +840,8 @@ private[graft] object GenStore {
     val tombs = lits.select(lits.schema.fields.toSeq.map(f =>
       sch.find(_.name == f.name).filter(_.dataType.simpleString != f.dataType.simpleString)
         .fold(col(f.name))(st => col(f.name).cast(st.dataType).as(f.name))): _*)
-    val (_, n) = writeGen(t, tombs, dir, gen, keys.count())
-    writeMeta(s, dir, t.addTombs(appendCounters(next, 0L, dead), n))
+    val (m, _, n) = writeGen(t, tombs, dir, next, gen, keys.count())
+    writeMeta(s, dir, t.addTombs(appendCounters(m, 0L, dead), n), switches = false)
   }
 
   /** HORIZON compact: squash generations ≤ `h` into ONE resolved base
@@ -787,19 +851,20 @@ private[graft] object GenStore {
     * discarding it; this one reclaims the same cost for the prefix while
     * `asOf(n ≥ h)` keeps reproducing exactly. The squashed base is the
     * prefix's resolved serving state: tombstoned keys are dropped from
-    * it and RECORDED in the retired sidecar ([[retiredPath]]), so
+    * it and RECORDED in the retired sidecar ([[RetiredTable]]), so
     * [[retiredIds]] keeps protecting future full compacts from
     * resurrecting them out of the source. Needs no source corpus and no
     * model retrain (all generations share the build-time model — that
-    * invariant is what makes the squash a pure row-level resolve); runs
-    * under the staged-swap/recover protocol. The staged meta carries
-    * recounted LIVE serving rows split at `h` and the tombstone rows
-    * that PHYSICALLY remain — physical, not live-resolved: a tail
-    * tombstone superseded by a re-add still decides its key's state for
-    * as-of reads inside the window, so the views' drop must stay on
-    * while any such row exists. Squashing the whole history (`h` = last
-    * gen) restores an untrusted store to trusted plain reads with the
-    * clock preserved ([[horizonMeta]]). */
+    * invariant is what makes the squash a pure row-level resolve). It
+    * writes a new version beside the live one ([[stageTail]]) and
+    * commits it like a build. The committed meta carries recounted LIVE
+    * serving rows split at `h` and the tombstone rows that PHYSICALLY
+    * remain — physical, not live-resolved: a tail tombstone superseded
+    * by a re-add still decides its key's state for as-of reads inside
+    * the window, so the views' drop must stay on while any such row
+    * exists. Squashing the whole history (`h` = last gen) restores an
+    * untrusted store to trusted plain reads with the clock preserved
+    * ([[horizonMeta]]). */
   def compactThrough(s: SparkSession, dir: String, h: Long): Unit = {
     val full = metaOrThrow(s, dir)
     val t = GenTable.of(full)
@@ -807,23 +872,24 @@ private[graft] object GenStore {
     require(h >= h0 && h < full.gen,
       s"horizon $h outside [$h0, ${full.gen - 1}] for the store at $dir " +
         "(below the existing horizon the history is already squashed)")
-    stagedCompact(s, dir) { tmp =>
-      horizonStage(s, dir, tmp, h, t.subdirs)
-      val resolved = resolve(raw(s, t, dir, h + 1), t.key, t.multiRow)
-      writeGen(t, resolved.filter(t.serving).select(t.cols.map(col): _*), tmp, h, -1L)
-      val prevRetired = readRetired(s, dir, t.idCol)
-      if (prevRetired.isDefined || t.tombsPresent(full)) {
+    val next = full.copy(version = full.version + 1)
+    startVersion(s, dir, next)
+    val resolved = resolve(raw(s, t, dir, full.copy(gen = h + 1)), t.key, t.multiRow)
+    val (based, _, _) = writeGen(t, resolved.filter(t.serving).select(t.cols.map(col): _*),
+      dir, stageTail(s, dir, t, full, next, h), h, -1L)
+    val prevRetired = readRetired(s, dir, full, t.idCol)
+    val staged =
+      if (prevRetired.isEmpty && !t.tombsPresent(full)) based
+      else {
         val dropped = resolved.filter(t.tomb).select(col(t.key).as(t.idCol))
-        writeRetired(prevRetired.fold(dropped)(_.unionByName(dropped)), tmp)
+        writeRetired(s, prevRetired.fold(dropped)(_.unionByName(dropped)), dir, based, h)
       }
-      val staged = raw(s, t, tmp, full.gen)
-      val (base, appended) = liveSplit(
-        staged.select(col(t.key), col("gen"), t.weight.as("w")), t.key, h)
-      val m1 = horizonMeta(full, h)
-      writeMeta(s, tmp, t.recountTombs(
-        m1.copy(baseRows = base, appendRows = appended),
-        staged.filter(t.tomb).count()))
-    }
+    val rows = raw(s, t, dir, staged)
+    val (base, appended) = liveSplit(
+      rows.select(col(t.key), col("gen"), t.weight.as("w")), t.key, h)
+    writeMeta(s, dir, t.recountTombs(
+      horizonMeta(staged, h).copy(baseRows = base, appendRows = appended),
+      rows.filter(t.tomb).count()), switches = true)
   }
 
   /** The RETIRED keys: present in the store's generations (or in the
@@ -837,12 +903,12 @@ private[graft] object GenStore {
   def retiredIds(s: SparkSession, dir: String): DataFrame = {
     val meta = metaOrThrow(s, dir)
     val t = GenTable.of(meta)
-    val sidecar = readRetired(s, dir, t.idCol)
+    val sidecar = readRetired(s, dir, meta, t.idCol)
     if (!t.tombsPresent(meta) && sidecar.isEmpty) {
       import s.implicits._
       Seq.empty[Long].toDF(t.idCol)
     } else {
-      val present = raw(s, t, dir, meta.gen).select(col(t.key).as(t.idCol)).distinct()
+      val present = raw(s, t, dir, meta).select(col(t.key).as(t.idCol)).distinct()
       sidecar.fold(present)(sc => present.unionByName(sc).distinct())
         .join(live(s, dir, t).select(col(t.key).as(t.idCol)).distinct(),
           Seq(t.idCol), "left_anti")
@@ -852,15 +918,11 @@ private[graft] object GenStore {
   /** Fraction of LIVE serving rows that arrived by append — the drift /
     * fan-out signal a deployment compacts on. O(1) from the meta's
     * exact counters (class doc), so a per-micro-batch compaction
-    * decision never scans the store; a legacy counter-less meta falls
-    * back to aggregating the live view. */
+    * decision never scans the store. */
   def staleness(s: SparkSession, dir: String): Double = {
-    val meta = metaOrThrow(s, dir)
-    metaStaleness(meta).getOrElse {
-      val r = live(s, dir, GenTable.of(meta))
-        .agg(count(lit(1)), sum(when(col("gen") > 0, 1L).otherwise(0L))).head()
-      if (r.getLong(0) == 0) 0.0 else r.getLong(1).toDouble / r.getLong(0)
-    }
+    val m = metaOrThrow(s, dir)
+    val total = m.baseRows + m.appendRows
+    if (total == 0) 0.0 else m.appendRows.toDouble / total
   }
 
   // ------------------------------------------------ artifact discipline
@@ -877,17 +939,17 @@ private[graft] object GenStore {
     * text-postings hazard). Returns whether a rebuild ran. */
   def ensureArtifact(s: SparkSession, markerPath: Path, fingerprint: String,
       treeDir: String)(build: => Unit): Boolean = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val fresh = MetaIO.read(conf, markerPath).contains(fingerprint) &&
+    val hc = conf(s)
+    val fresh = MetaIO.read(hc, markerPath).contains(fingerprint) &&
       isComplete(s, treeDir)
     if (fresh) false
     else {
-      val fs = markerPath.getFileSystem(conf)
+      val fs = markerPath.getFileSystem(hc)
       if (fs.exists(markerPath)) fs.delete(markerPath, false)
       val d = new Path(treeDir)
       if (fs.exists(d)) fs.delete(d, true)
       build
-      MetaIO.write(conf, markerPath, fingerprint)
+      MetaIO.write(hc, markerPath, fingerprint)
       true
     }
   }

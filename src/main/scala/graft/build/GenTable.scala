@@ -36,9 +36,10 @@ private[graft] final case class RangeClustered(by: Seq[String],
   * plus its kernel (the model it assigns rows under, and its probes).
   *
   *  - `marker`: the `_INDEX_META` key that names the structure;
-  *  - `subdir`/`key`: the gen-stamped data directory and the key that
-  *    latest-generation resolution groups by; `id` names the key in the
-  *    retired sidecar and in [[GenStore.retiredIds]];
+  *  - `subdir`/`key`: the gen-stamped data directory under the store's
+  *    version root (also the table's name in the meta's file list) and
+  *    the key that latest-generation resolution groups by; `id` names
+  *    the key in the retired sidecar and in [[GenStore.retiredIds]];
   *  - `multiRow`: whether a key has many rows (banded signatures,
   *    postings) — its latest generation wins as a whole;
   *  - `cols`: the stored row in read order (gen excluded);
@@ -62,7 +63,8 @@ private[graft] final case class GenTable(
 
   def idCol: String = id.getOrElse(key)
 
-  def path(dir: String): String = s"$dir/$subdir"
+  /** The table's directory under version root `root`. */
+  def path(root: String): String = s"$root/$subdir"
 
   def subdirs: Seq[String] = subdir +: derived.map(_._1.subdir)
 
@@ -102,11 +104,9 @@ private[graft] final case class GenTable(
   def dropsTombs(m: GenStore.Meta): Boolean =
     tombCount.isDefined || m.params.contains("del")
 
-  /** The meta after `n` more tombstone rows were written. A legacy
-    * counted store without the param stays without it. */
+  /** The meta after `n` more tombstone rows were written. */
   def addTombs(m: GenStore.Meta, n: Long): GenStore.Meta = tombCount match {
-    case Some(k) => m.params.get(k).flatMap(_.toLongOption)
-      .fold(m)(p => m.copy(params = m.params + (k -> (p + n).toString)))
+    case Some(k) => m.copy(params = m.params + (k -> (m.params(k).toLong + n).toString))
     case None => if (n > 0) m.copy(params = m.params + ("del" -> "1")) else m
   }
 

@@ -532,22 +532,23 @@ object IndexBuilder {
 
   /** Read the parquet part-files under `dir` (and its subdirectories) on
     * the driver, row by row as parquet-mr groups, while `more` holds.
-    * `columns` projects each file to the named columns it has (Nil = all
-    * of them). Names starting with `_` or `.` are skipped, so a
-    * directory holding only `_SUCCESS` reads as no rows. A missing `dir`,
-    * subdirectory or part-file throws `FileNotFoundException`. */
+    * Names starting with `_` or `.` are skipped, so a directory holding
+    * only `_SUCCESS` reads as no rows. A missing `dir`, subdirectory or
+    * part-file throws `FileNotFoundException`. */
   private[graft] def readParts(conf: Configuration, dir: Path, filter: FilterCompat.Filter,
-      more: => Boolean, columns: Seq[String] = Nil)(row: Group => Unit): Unit = {
+      more: => Boolean)(row: Group => Unit): Unit = {
     val (subdirs, parts) = dir.getFileSystem(conf).listStatus(dir).toSeq
       .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
       .sortBy(_.getPath.getName)
       .partition(_.isDirectory)
-    for (part <- parts.map(_.getPath) if more) readFile(conf, part, filter, more, columns)(row)
-    for (sub <- subdirs.map(_.getPath) if more) readParts(conf, sub, filter, more, columns)(row)
+    for (part <- parts.map(_.getPath) if more) readFile(conf, part, filter, more)(row)
+    for (sub <- subdirs.map(_.getPath) if more) readParts(conf, sub, filter, more)(row)
   }
 
   /** Read parquet file `part` on the driver as [[readParts]] reads each
-    * of its part-files. A missing `part` throws `FileNotFoundException`. */
+    * of its part-files; `columns` projects it to the named columns it
+    * has (Nil = all of them). A missing `part` throws
+    * `FileNotFoundException`. */
   private[graft] def readFile(conf: Configuration, part: Path, filter: FilterCompat.Filter,
       more: => Boolean, columns: Seq[String] = Nil)(row: Group => Unit): Unit = {
     val support =
@@ -610,13 +611,17 @@ object IndexBuilder {
     named("_common_metadata")
       .orElse(named("_metadata"))
       .orElse(files.find(f => f.getPath.getName != "_common_metadata" && f.getPath.getName != "_metadata"))
-      .map { st =>
-        val footer = new Footer(st.getPath, ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
-        SchemaBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
-          footer, new ParquetToSparkSchemaConverter(sqlConf)))
-      }
+      .map(footerSchema(spark, conf, _))
       .getOrElse(spark.read.parquet(dataDir).schema)
+  }
+
+  /** The data schema of one parquet file from its footer, as Spark's
+    * reader converts it (every field nullable). */
+  def footerSchema(spark: SparkSession, conf: Configuration, st: FileStatus): StructType = {
+    val footer = new Footer(st.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    SchemaBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+      footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
   }
 
   /** Compact the append-only postings: drop rows for deleted files and

@@ -216,7 +216,7 @@ object SimilarityQueries extends QueryModule {
     * lifecycle stage under the oracle (q164 gates tracked-upsert
     * resolution, q165 the append-only plain read, this the POST-COMPACT
     * read): the artifact's `ivfc` history is base build + delta append
-    * + a full `compactIvf` retrain-and-staged-swap, so the probe reads
+    * + a full compacting `buildIvf` retrain (a new committed version), so the probe reads
     * one generation at staleness 0 — a plain, cell-partition-pruned
     * scan. The compact retrains on the same corpus with the same
     * trainer, so the read is bit-identical to the from-scratch q45
@@ -261,11 +261,11 @@ object SimilarityQueries extends QueryModule {
     * bounded tracked-upsert, q165 = plain append-only, q166 =
     * post-compact, q167 = bounded banded, this = UNTRUSTED full
     * resolution). The artifact's `ivfu` history replays the in-stream
-    * compact hazard batch-side: a `compactIvf(appendOnly = false)`
+    * compact hazard batch-side: a compacting `buildIvf(appendOnly = false)`
     * whose corpus snapshot already covered a batch the checkpoint had
     * not delivered, followed by that batch's `newIds = true` re-append
     * — truthful from the stream's view, duplicate content in fact,
-    * which is exactly why the compact's own staged meta stamped the
+    * which is exactly why the compact's own meta commit stamped the
     * declarations untrusted. The read therefore takes the
     * full-latest-gen-resolution plan (probe filters strictly
     * post-reduce — the resurrect hazard); assignment under a fixed

@@ -36,8 +36,8 @@ object TextQueries extends QueryModule {
   /** Artifact epoch: bump to rebuild the postings stores alone.
     * (2 = the norms sidecar joined the generations; 3 = the sentinel-
     * free `sent` counter joined the meta — the flat fast path's
-    * license.) */
-  private val PostingsEpoch = 3
+    * license; 4 = the versioned layout with its committed file list.) */
+  private val PostingsEpoch = 4
 
   private def isDelta =
     col("doc_id") % DedupArtifacts.DeltaMod === DedupArtifacts.DeltaRem

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   *    exactly) — q165 reads the APPEND-ONLY PLAIN view with the probe's
   *    bucket filters pushed below it, the common-case economics.
   *  - COMPACTED IVF (`ivfc`): base build + delta append + a full
-  *    `compactIvf` retrain — q166 reads THROUGH the compacted index
+  *    compacting `buildIvf` retrain — q166 reads THROUGH the compacted index
   *    (one generation, plain, staleness 0), gating the post-compact
   *    read path. The compact retrains on the same corpus with the same
   *    trainer, so the result is bit-identical to the from-scratch q45
@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   *    BOUNDED banded resolution (banded rows are per-vector, so the
   *    resolved view is still exactly base∪delta).
   *  - UNTRUSTED IVF (`ivfu`): the in-stream-compact hazard REPLAYED
-  *    BATCH-SIDE — base build, then `compactIvf(appendOnly = false)`
+  *    BATCH-SIDE — base build, then a compacting `buildIvf(appendOnly = false)`
   *    over the FULL corpus (the compact's snapshot covered a batch the
   *    checkpoint had not delivered), then that batch re-appends
   *    declaring `newIds = true` (truthfully, from the stream's view —
@@ -106,11 +106,12 @@ object AnnArtifacts {
   /** Per-history epoch versions: bump ONE to rebuild ONE tree. (The
     * relocation into the `h/` root plus the r17 dense-cid codebook fix
     * and the maintained vecs store reset every history once — recorded
-    * here as the common epoch 1.) */
+    * here as the common epoch 1; the versioned store layout with its
+    * committed file list reset them all again — epoch 2.) */
   private val HistoryVersions: Map[String, Int] = Map(
-    "ivf" -> 1, "lsh" -> 1, "ivfc" -> 1, "lshu" -> 1, "ivfu" -> 1,
-    "ivfpq" -> 1, "ivfpqu" -> 1, "vecs" -> 1, "vecsu" -> 1, "ivfd" -> 1,
-    "ivfb" -> 1)
+    "ivf" -> 2, "lsh" -> 2, "ivfc" -> 2, "lshu" -> 2, "ivfu" -> 2,
+    "ivfpq" -> 2, "ivfpqu" -> 2, "vecs" -> 2, "vecsu" -> 2, "ivfd" -> 2,
+    "ivfb" -> 2)
 
   private def root(sfDir: String): String =
     s"${DedupArtifacts.artifactBase}/graft_ann/h/${DedupArtifacts.corpusKey(sfDir)}"
@@ -235,7 +236,7 @@ object AnnArtifacts {
     build("ivfc", ivfParams) { d =>
       AnnIndex.buildIvf(base, d, nlist = IvfNlist)
       AnnIndex.appendIvf(delta, d, newIds = true)
-      AnnIndex.compactIvf(e, d, nlist = IvfNlist)
+      AnnIndex.buildIvf(e, d, nlist = IvfNlist) // the compaction
     }
     // the UNDECLARED banded append (same base/delta split as `lsh`, but
     // the conservative default): the meta records gen 1 as an upsert
@@ -247,14 +248,14 @@ object AnnArtifacts {
     // the untrusted history (q168): the in-stream-compact hazard,
     // batch-replayed — the compact's corpus snapshot already contains
     // the delta batch the checkpoint has not delivered, and its
-    // `appendOnly = false` meta stamps the index untrusted IN the
-    // staged swap; the late delivery then re-appends the same content
+    // `appendOnly = false` meta stamps the index untrusted IN its
+    // own commit; the late delivery then re-appends the same content
     // under `newIds = true` (truthful from the stream's view), and the
     // untrusted meta routes every read through full latest-gen
     // resolution, collapsing the content-identical duplicates
     build("ivfu", ivfParams) { d =>
       AnnIndex.buildIvf(base, d, nlist = IvfNlist)
-      AnnIndex.compactIvf(e, d, nlist = IvfNlist, appendOnly = false)
+      AnnIndex.buildIvf(e, d, nlist = IvfNlist, appendOnly = false)
       AnnIndex.appendIvf(delta, d, newIds = true)
     }
     // the two PQ histories share an identical deterministic gen-0 tree

@@ -21,9 +21,11 @@ import org.apache.spark.sql.functions._
   *    re-scan of the base (exactly how production IVF ingests: FAISS
   *    `add` does not move centroids) — into its own `gen=N` directory;
   *    a re-ingested id supersedes its older rows (latest gen wins);
-  *  - COMPACT retrains on the current corpus and rewrites gen 0 when
-  *    [[GenStore.staleness]] (the delta fraction) says the model has drifted —
-  *    the posting-compaction step of the same lifecycle.
+  *  - COMPACT is BUILD over the current corpus, run when
+  *    [[GenStore.staleness]] (the delta fraction) says the model has
+  *    drifted — the posting-compaction step of the same lifecycle: the
+  *    retrained model and gen 0 land in a new version beside the live
+  *    one, and the meta commit switches readers over ([[GenStore]]).
   *
   * Append ≡ rebuild is EXACT, not approximate: assignment under a fixed
   * model is a pure per-row function, so base-assign ∪ delta-assign is
@@ -45,13 +47,15 @@ import org.apache.spark.sql.functions._
   * the banded probe's scan outputs a fraction of the table's rows.
   *
   * DURABILITY PROTOCOL: a small `_INDEX_META` file — written LAST on
-  * build and after every append — carries the generation counter, the
-  * history flags, the MODEL PARAMETERS, and the last applied streaming
-  * batch id. The meta is the completion marker: a crash between the
-  * centroid and assignment writes (or mid-append) leaves no meta
-  * update, and [[GenStore.isComplete]] reports the index absent/unfinished so
-  * the next build deletes the partial state and rebuilds — never the
-  * permanent append-onto-missing-state failure a path-probe invited.
+  * build and after every append — carries the version, the generation
+  * counter, the history flags, the MODEL PARAMETERS, the last applied
+  * streaming batch id and the committed file list. The meta is the
+  * completion marker: a crash between the centroid and assignment
+  * writes (or mid-append) leaves no meta update — the last committed
+  * view stays as it was, and a store that never committed reports
+  * absent/unfinished ([[GenStore.isComplete]]), so the next build
+  * writes a fresh version over the leftover — never the permanent
+  * append-onto-missing-state failure a path-probe invited.
   * Appends are additionally FILE-idempotent: each lands in its own
   * `gen=N` directory with overwrite semantics, so a
   * crashed-and-replayed append overwrites its own partial output
@@ -90,11 +94,11 @@ import org.apache.spark.sql.functions._
   *    re-append as duplicate content UNDER `newIds = true` — so the
   *    declarations themselves can no longer be trusted): full
   *    latest-gen resolution over the whole index, probe filters after.
-  *    The flag rides the compact's OWN meta write (atomic under the
-  *    staged swap), and the next batch-side compact clears it.
+  *    The flag rides the compact's OWN meta commit, and the next
+  *    batch-side compact clears it.
   *
   * Single-writer assumption, like `DedupArtifacts`: build/append/compact
-  * from one job at a time; a production deployment stages and renames.
+  * from one job at a time.
   */
 object AnnIndex extends org.apache.spark.internal.Logging {
 
@@ -126,17 +130,17 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     val s = corpus.sparkSession
     val cs = Ann.trainCentroids(corpus, idCol, vecCol, nlist, lloydIters)
     GenStore.build(s, Ivf, indexDir, batchId, appendOnly,
-        Map("nlist" -> nlist.toString, "vecs" -> "1")) {
-      writeCentroids(s, indexDir, cs)
+        Map("nlist" -> nlist.toString, "vecs" -> "1")) { root =>
+      writeCentroids(s, root, cs)
       assignWith(buildRows(corpus, idCol, vecCol, batchId), cs, "vec_id", "v")
     }
   }
 
-  private def writeCentroids(s: SparkSession, dir: String,
+  private def writeCentroids(s: SparkSession, root: String,
       cs: Array[Array[Double]]): Unit = {
     import s.implicits._
     cs.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }
-      .toDF("cell", "c").write.parquet(centroidsPath(dir))
+      .toDF("cell", "c").write.parquet(centroidsPath(root))
   }
 
   /** Assign ONLY the delta under the persisted centroids and write it
@@ -158,7 +162,7 @@ object AnnIndex extends org.apache.spark.internal.Logging {
           "with appendIvfPq — a raw-vector generation would break the " +
           "partitioned read's schema")
       GenStore.requireKind(m, indexDir, Ivf)
-      val assigned = assignWith(one, centroidArray(s, indexDir), "vec_id", "v")
+      val assigned = assignWith(one, centroidArray(s, GenStore.root(indexDir, m)), "vec_id", "v")
       // a generation must match the BUILD's row schema: a legacy
       // (pre-vector-carrying) tree gets plain (vec_id, cell) appends —
       // mixing schemas across gen dirs would break the partitioned read
@@ -192,49 +196,6 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       batchId: Long): DataFrame =
     if (batchId >= 0) onePerId(corpus, idCol, vecCol)
     else corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
-
-  /** Retrain on the current corpus and rewrite the whole index at
-    * gen 0 — the compaction step once [[GenStore.staleness]] crosses the
-    * deployment's drift budget. A batch-side compact (default) resets
-    * the history flags: one generation, trivially plain-readable. An
-    * IN-STREAM compact passes `appendOnly = false`, and the
-    * untrusted-upserts flag lands IN the staged tree's own meta —
-    * atomic under the swap, so no crash window can adopt a compacted
-    * index whose flag is missing (the r15 advisor's exactly-once
-    * hole: the old two-step flag write could be skipped by a replay
-    * that saw the batch as already recorded).
-    *
-    * STAGED: the rebuild lands in a sibling `.compact.tmp` tree (meta
-    * last), and only then swaps in (delete old, rename). A crash
-    * mid-rebuild leaves the OLD index fully intact and complete — never
-    * the deleted-old/half-new state an in-place rewrite risks, which a
-    * streaming replay would "recover" by rebuilding from one micro-batch
-    * (losing every earlier batch). The delete→rename gap is covered by
-    * [[GenStore.recover]]: a complete tmp beside a missing/partial index is
-    * adopted by rename. */
-  def compactIvf(
-      corpus: DataFrame, indexDir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      nlist: Int = 16, lloydIters: Int = 2, batchId: Long = -1L,
-      appendOnly: Boolean = true): Unit =
-    GenStore.stagedCompact(corpus.sparkSession, indexDir)(tmp =>
-      buildIvf(corpus, tmp, idCol, vecCol, nlist, lloydIters, batchId, appendOnly))
-
-  /** [[compactIvf]]'s banded twin: re-band the current corpus under the
-    * same (or retuned) parameters and rewrite the whole index at gen 0
-    * via the SAME staged-swap/recover protocol — the compaction step
-    * once its [[GenStore.staleness]] (or small-file pressure from many append
-    * generations) crosses the deployment's budget. Resets the history
-    * flags: a compacted index is one generation, trivially
-    * plain-readable. */
-  def compactBanded(
-      corpus: DataFrame, indexDir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      nPlanes: Int = 16, bands: Int = 8, seed: Long = 42L,
-      batchId: Long = -1L, appendOnly: Boolean = true): Unit =
-    GenStore.stagedCompact(corpus.sparkSession, indexDir)(tmp =>
-      buildBanded(corpus, tmp, idCol, vecCol, nPlanes, bands, seed,
-        batchId, appendOnly))
 
   /** The LIVE assignment (vec_id, cell, gen): latest generation wins
     * per id, so a re-ingested vector supersedes its older rows — the
@@ -272,8 +233,8 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     * runs driver-side over the collected nlist rows — an `orderBy`
     * before the collect planned a whole extra AQE shuffle job for ≤32
     * rows (the probe paths run this once per query). */
-  private def centroidArray(s: SparkSession, indexDir: String): Array[Array[Double]] =
-    s.read.parquet(centroidsPath(indexDir)).select("cell", "c").collect()
+  private def centroidArray(s: SparkSession, root: String): Array[Array[Double]] =
+    s.read.parquet(centroidsPath(root)).select("cell", "c").collect()
       .sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
 
   /** Cap on driver-localized query sets — the broadcast-small-queries
@@ -324,8 +285,8 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     * verbatim values): the ADC distance table builds against it as a
     * broadcast — local rows make that build job trivial instead of a
     * parquet scan, and the read overlaps the other probe-prep reads. */
-  private def localizedCodebook(s: SparkSession, indexDir: String): DataFrame = {
-    val cb = s.read.parquet(codebookPath(indexDir))
+  private def localizedCodebook(s: SparkSession, root: String): DataFrame = {
+    val cb = s.read.parquet(codebookPath(root))
     s.createDataFrame(java.util.Arrays.asList(cb.collect(): _*), cb.schema)
   }
 
@@ -379,7 +340,7 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val csF = Future(centroidArray(s, indexDir))
+    val csF = Future(centroidArray(s, GenStore.root(indexDir, meta)))
     val locF = Future(localizedQueries(queries, idCol, vecCol))
     val cs = Await.result(csF, 10.minutes)
     val loc = Await.result(locF, 10.minutes)
@@ -454,15 +415,15 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     GenStore.build(s, Pq, indexDir, batchId, appendOnly,
         Map("nlist" -> nlist.toString, "pq" -> "1",
           "pq_nsub" -> nSub.toString, "pq_subdim" -> subDim.toString,
-          "pq_ncent" -> nCent.toString)) {
-      writeCentroids(s, indexDir, cs)
+          "pq_ncent" -> nCent.toString)) { root =>
+      writeCentroids(s, root, cs)
       // the lowest nCent ids PRESENT (pqCodebookPresent), not `id < nCent`
       // — a build whose corpus lacks the low ids (delta-keyed ingest, a
       // streaming first batch) would otherwise persist an EMPTY or
       // partial codebook and the inner join would silently code nothing
       Ann.pqCodebookPresent(corpus, nSub, subDim, nCent, idCol, vecCol)
-        .write.parquet(codebookPath(indexDir))
-      val cb = s.read.parquet(codebookPath(indexDir))
+        .write.parquet(codebookPath(root))
+      val cb = s.read.parquet(codebookPath(root))
       if (cb.isEmpty) throw new IllegalArgumentException(
         s"PQ build at $indexDir trained an empty codebook — the corpus is empty")
       // gen 0 assigns under the PERSISTED codebook (read back), the same
@@ -486,24 +447,11 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     val one = onePerId(delta, idCol, vecCol)
     GenStore.append(s, indexDir, newIds, batchId) { m =>
       val (nSub, subDim) = pqParamsOrThrow(m, indexDir)
-      (one, assignPqWith(one, centroidArray(s, indexDir),
-        s.read.parquet(codebookPath(indexDir)), nSub, subDim), -1L)
+      val root = GenStore.root(indexDir, m)
+      (one, assignPqWith(one, centroidArray(s, root),
+        s.read.parquet(codebookPath(root)), nSub, subDim), -1L)
     }
   }
-
-  /** [[compactIvf]]'s PQ twin: retrain centroids AND codebook on the
-    * current corpus and rewrite at gen 0 under the same staged-swap /
-    * recover protocol (the codebook rides inside the staged tree, so
-    * codes and model can never be adopted separately). */
-  def compactIvfPq(
-      corpus: DataFrame, indexDir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      nlist: Int = 16, nSub: Int = 8, subDim: Int = 8, nCent: Int = 16,
-      lloydIters: Int = 2, batchId: Long = -1L,
-      appendOnly: Boolean = true): Unit =
-    GenStore.stagedCompact(corpus.sparkSession, indexDir)(tmp =>
-      buildIvfPq(corpus, tmp, idCol, vecCol, nlist, nSub, subDim, nCent,
-        lloydIters, batchId, appendOnly))
 
   private def pqParamsOrThrow(m: GenStore.Meta, dir: String): (Int, Int) =
     (for {
@@ -588,8 +536,9 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val csF = Future(centroidArray(s, indexDir))
-    val cbF = Future(localizedCodebook(s, indexDir))
+    val root = GenStore.root(indexDir, meta)
+    val csF = Future(centroidArray(s, root))
+    val cbF = Future(localizedCodebook(s, root))
     val locF = Future(localizedQueries(queries, idCol, vecCol))
     val cs = Await.result(csF, 10.minutes)
     val cb = Await.result(cbF, 10.minutes)
@@ -779,7 +728,7 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       idCol: String = "vec_id", vecCol: String = "embedding",
       batchId: Long = -1L, appendOnly: Boolean = true): Unit =
     GenStore.build(corpus.sparkSession, Vecs, dir, batchId, appendOnly,
-        Map("pfetch" -> "1", "pbmod" -> Layout.ProbePartitions.toString))(
+        Map("pfetch" -> "1", "pbmod" -> Layout.ProbePartitions.toString))(_ =>
       buildRows(corpus, idCol, vecCol, batchId)
         .select(col("vec_id").as("bucket"), col("v")))
 
@@ -802,17 +751,6 @@ object AnnIndex extends org.apache.spark.internal.Logging {
       (one, one, -1L)
     }
   }
-
-  /** Rewrite the store at gen 0 from the current corpus under the
-    * shared staged-swap/recover protocol — the compaction step once
-    * the store's staleness or upsert-history read cost crosses the
-    * budget. */
-  def compactVecs(
-      corpus: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      batchId: Long = -1L, appendOnly: Boolean = true): Unit =
-    GenStore.stagedCompact(corpus.sparkSession, dir)(tmp =>
-      buildVecs(corpus, tmp, idCol, vecCol, batchId, appendOnly))
 
   /** The LIVE vectors (bucket, v, gen), latest generation per id
     * ([[GenStore.live]]), with ONE structural advantage over the other
@@ -873,7 +811,7 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     GenStore.build(corpus.sparkSession, Banded, indexDir, batchId, appendOnly,
         Map("dim" -> dim.toString, "np" -> nPlanes.toString,
-          "nb" -> bands.toString, "seed" -> seed.toString))(
+          "nb" -> bands.toString, "seed" -> seed.toString))(_ =>
       Ann.bandedRows(buildRows(corpus, idCol, vecCol, batchId),
           "vec_id", "v", Ann.hyperplanes(nPlanes, dim, seed), bands)
         .select("vec_id", "band", "bucket"))

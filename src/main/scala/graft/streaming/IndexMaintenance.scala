@@ -95,40 +95,37 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     } else full
 
   /** The maintenance loop every maintained store shares: each
-    * micro-batch of `srcDir` first adopts a crash-interrupted staged
-    * compact ([[GenStore.recover]]), then
+    * micro-batch of `srcDir`
     *  - BUILDS against a missing store — decided by the `_INDEX_META`
-    *    completion marker the build writes LAST, so a crash mid-build
-    *    replays as a build (which deletes the partial tree), never as an
-    *    append onto missing state;
+    *    completion marker the build commits LAST, so a crash mid-build
+    *    replays as a build (which writes a fresh version over the
+    *    leftover), never as an append onto missing state;
     *  - SKIPS a batch already recorded in the meta (the checkpoint
     *    commits after the meta, so a recorded batch is fully applied);
     *  - otherwise APPENDS (a crash between the gen-dir write and the
     *    meta update replays into the SAME reserved generation directory
     *    with overwrite semantics — file-idempotent), and once the O(1)
     *    staleness counters reach `compactAt > 0`, compacts in-stream:
-    *    a staged rebuild over the source as present NOW minus the
-    *    store's retired keys, stamped with this batch id so a post-swap
-    *    crash replays as a skip. The snapshot may cover batches the
-    *    checkpoint has not delivered (they re-append later as `newIds`
-    *    duplicates), so `compact` must stamp upserts-possible-and-
-    *    untrusted IN ITS OWN meta (`appendOnly = false`), atomic under
-    *    the staged swap — a separate post-swap flag write would leave a
-    *    crash window where a replay sees the batch recorded, skips, and
-    *    the flag never lands. `retainGens > 0` squashes instead
+    *    `build` again over the source as present NOW minus the store's
+    *    retired keys — a new version beside the live one — stamped with
+    *    this batch id so a post-commit crash replays as a skip. The
+    *    snapshot may cover batches the checkpoint has not delivered
+    *    (they re-append later as `newIds` duplicates), so the compacting
+    *    build gets `appendOnly = false` and stamps upserts-possible-and-
+    *    untrusted IN ITS OWN meta commit — a separate flag write after
+    *    it would leave a crash window where a replay sees the batch
+    *    recorded, skips, and the flag never lands. The first build gets
+    *    `appendOnly = true`. `retainGens > 0` squashes instead
     *    ([[compactOrSquash]]). */
   private def maintain(spark: SparkSession, srcDir: String, storeDir: String,
       checkpointDir: String, idCol: String, what: String, compactAt: Double,
-      retainGens: Int)(build: (DataFrame, Long) => Unit,
-      append: (DataFrame, Long) => Unit,
-      compact: (DataFrame, Long) => Unit): StreamingQuery = {
+      retainGens: Int)(build: (DataFrame, Long, Boolean) => Unit,
+      append: (DataFrame, Long) => Unit): StreamingQuery = {
     val schema = IndexBuilder.dataSchema(spark, srcDir)
     spark.readStream.schema(schema).parquet(srcDir).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (GenStore.recover(spark, storeDir))
-          logInfo(s"IndexMaintenance $what batch $batchId: adopted staged compact")
         if (!GenStore.isComplete(spark, storeDir)) {
-          build(batch, batchId)
+          build(batch, batchId, true)
           logInfo(s"IndexMaintenance $what batch $batchId: build")
         } else if (batchId <= GenStore.lastAppliedBatch(spark, storeDir)) {
           logInfo(s"IndexMaintenance $what batch $batchId: replay, skipped")
@@ -137,9 +134,9 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
           logInfo(s"IndexMaintenance $what batch $batchId: append")
           if (compactAt > 0 && GenStore.staleness(spark, storeDir) >= compactAt)
             compactOrSquash(spark, storeDir, retainGens, batchId, what) {
-              compact(compactCorpus(spark, srcDir, idCol,
-                GenStore.retiredIds(spark, storeDir)), batchId)
-              logInfo(s"IndexMaintenance $what batch $batchId: compacted (staged)")
+              build(compactCorpus(spark, srcDir, idCol,
+                GenStore.retiredIds(spark, storeDir)), batchId, false)
+              logInfo(s"IndexMaintenance $what batch $batchId: compacted")
             }
         }
       }
@@ -177,10 +174,10 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     *
     * Exactly-once composition, crash case by crash case:
     *  - build-vs-append is decided by `GenStore.isComplete` — the
-    *    `_INDEX_META` completion marker buildIvf writes LAST — so a
+    *    `_INDEX_META` completion marker buildIvf commits LAST — so a
     *    crash between the centroid and assignment writes replays as a
-    *    BUILD (which deletes the partial tree first), never as an
-    *    append onto missing state;
+    *    BUILD (a fresh version over the leftover), never as an append
+    *    onto missing state;
     *  - a batch already recorded in the meta (`lastAppliedBatch`)
     *    replays as a no-op — the checkpoint committed after the meta,
     *    so a recorded batch is fully applied;
@@ -200,11 +197,10 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     * at gen 0 over the corpus as currently present in `vecDir` — the
     * drift-budget compaction FAISS deployments schedule out-of-band,
     * here riding the same exactly-once batch bookkeeping. Compaction is
-    * STAGED (`AnnIndex.compactIvf` builds beside the index and swaps):
-    * a crash mid-rebuild leaves the old index intact and its batch
-    * bookkeeping replays the trigger batch as a skip; the swap's
-    * delete→rename gap is adopted by `GenStore.recover`, which runs at
-    * the top of every micro-batch. Because the vecDir snapshot may
+    * `AnnIndex.buildIvf` again — a new version beside the live one,
+    * switched in by its meta commit: a crash before the commit leaves
+    * the old index intact and its batch bookkeeping replays the trigger
+    * batch, and no step renames anything. Because the vecDir snapshot may
     * include files of batches the checkpoint has not yet delivered —
     * which will later re-append as duplicate content — an in-stream
     * compact marks the index upsert-possible (reads resolve latest-gen;
@@ -225,11 +221,10 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
       retainGens: Int = 0): StreamingQuery =
     maintain(spark, vecDir, indexDir, checkpointDir, idCol, "IVF", compactAt,
         retainGens)(
-      (b, id) => AnnIndex.buildIvf(b, indexDir, idCol, vecCol, nlist, batchId = id),
+      (b, id, plain) => AnnIndex.buildIvf(b, indexDir, idCol, vecCol, nlist,
+        batchId = id, appendOnly = plain),
       (b, id) => AnnIndex.appendIvf(b, indexDir, idCol, vecCol,
-        newIds = assumeNewIds, batchId = id),
-      (c, id) => AnnIndex.compactIvf(c, indexDir, idCol, vecCol, nlist,
-        batchId = id, appendOnly = false))
+        newIds = assumeNewIds, batchId = id))
 
   /** Streaming maintenance of the CODE-CARRYING IVF-PQ index — the
     * storage-bounded twin of [[runIvfAvailableNow]] (FAISS IVFADC:
@@ -241,8 +236,8 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     * cannot mis-code a delta). The first batch trains both models and
     * builds. Exactly-once composition is IDENTICAL to the IVF twin
     * (same meta protocol, same crash cases); an in-stream compact
-    * retrains BOTH models inside the staged tree — codes and codebook
-    * can never be adopted separately — and stamps
+    * retrains BOTH models inside its new version — codes and codebook
+    * are committed together or not at all — and stamps
     * upserts-possible-and-untrusted in its own meta, exactly like the
     * other twins and for the same undelivered-batch reason. */
   def runIvfPqAvailableNow(
@@ -261,12 +256,10 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
       retainGens: Int = 0): StreamingQuery =
     maintain(spark, vecDir, indexDir, checkpointDir, idCol, "IVF-PQ", compactAt,
         retainGens)(
-      (b, id) => AnnIndex.buildIvfPq(b, indexDir, idCol, vecCol, nlist, nSub,
-        subDim, nCent, batchId = id),
+      (b, id, plain) => AnnIndex.buildIvfPq(b, indexDir, idCol, vecCol, nlist, nSub,
+        subDim, nCent, batchId = id, appendOnly = plain),
       (b, id) => AnnIndex.appendIvfPq(b, indexDir, idCol, vecCol,
-        newIds = assumeNewIds, batchId = id),
-      (c, id) => AnnIndex.compactIvfPq(c, indexDir, idCol, vecCol, nlist, nSub,
-        subDim, nCent, batchId = id, appendOnly = false))
+        newIds = assumeNewIds, batchId = id))
 
   /** Streaming maintenance of the POINT-FETCH VECTOR STORE — the r17
     * twin completing the set: every persisted structure (postings,
@@ -279,10 +272,10 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     * twins (same meta protocol, same crash cases: completion marker
     * decides build-vs-append, recorded batches replay as skips, a
     * crashed append replays into the same overwritten gen dir, a
-    * staged compact is adopted by `recover`). `compactAt > 0` bounds
+    * compaction is committed whole or not at all). `compactAt > 0` bounds
     * the long-run generation/file fan-out via the same O(1) staleness
     * counters; an in-stream compact stamps
-    * upserts-possible-and-untrusted in its own staged meta — and the
+    * upserts-possible-and-untrusted in its own meta commit — and the
     * untrusted fetch regime stays a pruned point read, because the id
     * filter commutes with the latest-gen reduce (`AnnIndex.vecsLive`). */
   def runVecsAvailableNow(
@@ -297,11 +290,10 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
       retainGens: Int = 0): StreamingQuery =
     maintain(spark, vecDir, storeDir, checkpointDir, idCol, "vecs", compactAt,
         retainGens)(
-      (b, id) => AnnIndex.buildVecs(b, storeDir, idCol, vecCol, batchId = id),
+      (b, id, plain) => AnnIndex.buildVecs(b, storeDir, idCol, vecCol,
+        batchId = id, appendOnly = plain),
       (b, id) => AnnIndex.appendVecs(b, storeDir, idCol, vecCol,
-        newIds = assumeNewIds, batchId = id),
-      (c, id) => AnnIndex.compactVecs(c, storeDir, idCol, vecCol,
-        batchId = id, appendOnly = false))
+        newIds = assumeNewIds, batchId = id))
 
   /** Streaming maintenance of the TEXT POSTINGS STORE — the r18 twin
     * completing the set again after `PostingsStore` brought the text
@@ -318,7 +310,7 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     * is IDENTICAL to the vector twins (same meta protocol, same crash
     * cases); `compactAt > 0` bounds generation fan-out via the same
     * O(1) exact staleness counters, and an in-stream compact stamps
-    * upserts-possible-and-untrusted in its own staged meta. */
+    * upserts-possible-and-untrusted in its own meta commit. */
   def runTextAvailableNow(
       spark: SparkSession,
       docsDir: String,
@@ -332,11 +324,10 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     val fields = Seq("text" -> textCol)
     maintain(spark, docsDir, storeDir, checkpointDir, idCol, "text", compactAt,
         retainGens)(
-      (b, id) => PostingsStore.build(b, storeDir, idCol, fields, batchId = id),
+      (b, id, plain) => PostingsStore.build(b, storeDir, idCol, fields,
+        batchId = id, appendOnly = plain),
       (b, id) => PostingsStore.append(b, storeDir, idCol, fields,
-        newIds = assumeNewIds, batchId = id),
-      (c, id) => PostingsStore.compact(c, storeDir, idCol, fields,
-        batchId = id, appendOnly = false))
+        newIds = assumeNewIds, batchId = id))
   }
 
   /** Streaming maintenance of the BANDED (sign-LSH) ANN index — the
@@ -352,16 +343,16 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     * Exactly-once composition is IDENTICAL to the IVF twin (same meta
     * protocol, same crash cases: completion marker decides
     * build-vs-append, recorded batches replay as skips, a crashed
-    * append replays into the same overwritten gen dir, a staged
-    * compact is adopted by `recover` at the top of every batch).
+    * append replays into the same overwritten gen dir, a compaction is
+    * committed whole or not at all).
     * Append generations size their file fan-out to the batch, so a
     * micro-batch writes one file — `compactAt > 0` then bounds the
     * long-run generation/file count via [[GenStore.staleness]] +
-    * `compactBanded` (banded rows never drift
+    * a compacting `buildBanded` (banded rows never drift
     * geometrically — planes are seed-fixed — so the pressure compacted
     * away here is append fan-out and upsert-history read cost, not
     * recall). An in-stream compact marks the result
-    * upsert-possible-and-untrusted in its own staged meta, exactly like
+    * upsert-possible-and-untrusted in its own meta commit, exactly like
     * the IVF twin and for the same undelivered-batch reason. */
   def runBandedAvailableNow(
       spark: SparkSession,
@@ -378,12 +369,10 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
       retainGens: Int = 0): StreamingQuery =
     maintain(spark, vecDir, indexDir, checkpointDir, idCol, "banded", compactAt,
         retainGens)(
-      (b, id) => AnnIndex.buildBanded(b, indexDir, idCol, vecCol, nPlanes,
-        bands, seed, batchId = id),
+      (b, id, plain) => AnnIndex.buildBanded(b, indexDir, idCol, vecCol, nPlanes,
+        bands, seed, batchId = id, appendOnly = plain),
       (b, id) => AnnIndex.appendBanded(b, indexDir, idCol, vecCol, nPlanes,
-        bands, seed, newIds = assumeNewIds, batchId = id),
-      (c, id) => AnnIndex.compactBanded(c, indexDir, idCol, vecCol, nPlanes,
-        bands, seed, batchId = id, appendOnly = false))
+        bands, seed, newIds = assumeNewIds, batchId = id))
 
   /** Streaming TAKEDOWN maintenance — the deletes twin completing the
     * lifecycle's last CRUD verb (r19): a deletes directory (files of id
@@ -417,7 +406,7 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     // streams sharing one clock silently skip each other's batches
     // (batch 0 of a deletes feed is not a replay of ingest batch 0 —
     // the bug this marker exists to prevent). A sibling, not a file
-    // inside the store tree, so a staged compact's swap can't erase the
+    // inside the store tree, so a compaction's commit can't erase the
     // feed's progress. A crash between the tombstone commit and the
     // marker write replays the delete batch — idempotent in effect
     // (already-retired ids have no live rows to count dead; the extra
@@ -427,8 +416,6 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     val conf = spark.sparkContext.hadoopConfiguration
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (GenStore.recover(spark, storeDir))
-          logInfo(s"IndexMaintenance deletes batch $batchId: adopted staged compact")
         if (!GenStore.isComplete(spark, storeDir))
           throw new IllegalStateException(
             s"deletes stream against a missing/partial store at $storeDir: " +

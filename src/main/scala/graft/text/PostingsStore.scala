@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** The document-level TEXT POSTINGS table under the SAME maintained
   * lifecycle as every other persisted structure ([[graft.build
   * .GenStore]]): build → gen-stamped append → three-regime live read →
-  * staged compact. This closes the last artifact-discipline exception
+  * compact (a build over the current corpus, committed as a new
+  * version beside the live one). This closes the last artifact-discipline exception
   * (r17 verdict #1): the postings table was a write-once,
   * fingerprint-less cache — the one persisted artifact that would
   * silently serve stale search results after an in-place corpus
@@ -116,17 +117,15 @@ object PostingsStore {
   /** Build the postings store from a corpus: gen 0 (postings + norms
     * sidecar), meta LAST (the [[GenStore.build]] protocol, crash cases
     * included). A stream-invoked build (`batchId >= 0`) dedups
-    * duplicate-id first batches like every other structure. "norms"
-    * marks a store whose every generation carries the sidecar (stores
-    * from before it fall back to the aggregate). */
+    * duplicate-id first batches like every other structure. */
   def build(docs: DataFrame, dir: String,
       idCol: String = "doc_id",
       fields: Seq[(String, String)] = Seq("text" -> "text"),
       batchId: Long = -1L, appendOnly: Boolean = true): Unit = {
     require(fields.nonEmpty, "at least one (fieldName, column) pair")
     GenStore.build(docs.sparkSession, Postings, dir, batchId, appendOnly,
-      Map("text" -> "1", "tok" -> TokenizerEpoch.toString, "norms" -> "1",
-        "pfields" -> fieldsKey(fields)))(
+      Map("text" -> "1", "tok" -> TokenizerEpoch.toString,
+        "pfields" -> fieldsKey(fields)))(_ =>
       postingsRows(normalized(docs, idCol, fields, dedup = batchId >= 0), fields))
   }
 
@@ -162,16 +161,6 @@ object PostingsStore {
       batchId: Long = -1L): Unit =
     GenStore.delete(ids, dir, Some(idCol), batchId)
 
-  /** Re-tokenize the current corpus and rewrite at gen 0 under the
-    * shared staged-swap/recover protocol — the compaction step once
-    * [[staleness]] or upsert-history read cost crosses the budget. */
-  def compact(docs: DataFrame, dir: String,
-      idCol: String = "doc_id",
-      fields: Seq[(String, String)] = Seq("text" -> "text"),
-      batchId: Long = -1L, appendOnly: Boolean = true): Unit =
-    GenStore.stagedCompact(docs.sparkSession, dir)(tmp =>
-      build(docs, tmp, idCol, fields, batchId, appendOnly))
-
   /** The LIVE postings (field, term, doc_id, tf, positions): document-
     * level latest-generation resolution through [[GenStore.live]] —
     * plain read on append-only histories (term/field probe filters push
@@ -202,16 +191,11 @@ object PostingsStore {
     * whole overhead of the maintained read on the BM25 shape). Emptied
     * docs (dl = 0 sentinels) participate in resolution, then drop —
     * exactly the old derive-from-postings semantics, where an empty doc
-    * had no rows. A store from before the sidecar (no `norms` param)
-    * falls back to aggregating the live postings. */
+    * had no rows. */
   def normsLive(s: SparkSession, dir: String,
       resolveAll: Boolean = false, asOfGen: Option[Long] = None): DataFrame =
-    if (GenStore.metaOrThrow(s, dir).params.contains("norms"))
-      GenStore.live(s, dir, Norms, identity, resolveAll, asOfGen, Norms.cols, identity)
-        .select(col("doc_id"), col("dl").as("doc_len"))
-    else
-      live(s, dir, resolveAll = resolveAll, asOfGen = asOfGen)
-        .groupBy("doc_id").agg(sum("tf").as("doc_len"))
+    GenStore.live(s, dir, Norms, identity, resolveAll, asOfGen, Norms.cols, identity)
+      .select(col("doc_id"), col("dl").as("doc_len"))
 
   /** Fraction of LIVE postings rows that arrived by append
     * ([[GenStore.staleness]]: O(1) from the meta's exact counters). */

@@ -1,6 +1,6 @@
 package graft
 
-import graft.build.GenStore
+import graft.build.{GenStore, GenTable, MetaIO}
 import graft.similarity.{Ann, AnnIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -86,7 +86,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val idx = s"$work/ivf_compact"
     AnnIndex.buildIvf(emb.filter(!isDelta), idx, nlist = 16)
     AnnIndex.appendIvf(emb.filter(isDelta), idx)
-    AnnIndex.compactIvf(emb, idx, nlist = 16)
+    AnnIndex.buildIvf(emb, idx, nlist = 16)
     assert(GenStore.staleness(spark, idx) == 0.0)
     val q = emb.filter(col("vec_id") < 3)
     val fromIndex = topk(
@@ -158,6 +158,8 @@ class AnnIndexSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     AnnIndex.buildIvf(base, idx, nlist = 2, lloydIters = 0, batchId = 0L)
     assert(GenStore.lastAppliedBatch(spark, idx) == 0L)
+    val metaP = new org.apache.hadoop.fs.Path(s"$idx/_INDEX_META")
+    val built = MetaIO.read(spark.sparkContext.hadoopConfiguration, metaP).get
     val delta = Seq((3L, Array(0f, 0f, 1f, 0f))).toDF("vec_id", "embedding")
     AnnIndex.appendIvf(delta, idx, newIds = true, batchId = 1L)
     assert(GenStore.lastAppliedBatch(spark, idx) == 1L)
@@ -165,13 +167,9 @@ class AnnIndexSpec extends AnyFunSuite {
     // the same generation and overwrites it — appending it again (as a
     // foreachBatch replay would after a meta-less crash) must not
     // duplicate rows in the plain (append-only) live view beyond the one
-    // extra gen it writes; simulate by rolling the meta's gen back
+    // extra gen it writes; simulate by restoring the pre-append meta
     val before = AnnIndex.ivfAssignments(spark, idx).count()
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaP = new org.apache.hadoop.fs.Path(s"$idx/_INDEX_META")
-    val out = fs.create(metaP, true)
-    out.write("gen=1;plain=true;batch=0".getBytes); out.close()
+    MetaIO.write(spark.sparkContext.hadoopConfiguration, metaP, built)
     // COMMIT POINTER: with the meta rolled back to gen=1, the orphan
     // gen=1 directory (data landed, meta didn't) must be invisible —
     // readers see only committed generations
@@ -183,35 +181,33 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(GenStore.lastAppliedBatch(spark, idx) == 1L)
   }
 
-  test("staged compaction: a crash between swap steps is adopted by recover, old index never half-deleted") {
-    val idx = s"$work/ivf_staged"
+  test("a compaction killed between its version write and its commit: the last committed view reads, the next compaction succeeds") {
+    val idx = s"$work/ivf_killed"
     AnnIndex.buildIvf(emb.filter(!isDelta), idx, nlist = 16)
     AnnIndex.appendIvf(emb.filter(isDelta), idx)
-    // crash mid-rebuild: a PARTIAL tmp beside a complete index — the
-    // index stays complete and authoritative, recover is a no-op
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$idx.compact.tmp/centroids"))
-    assert(!GenStore.recover(spark, idx))
-    assert(GenStore.isComplete(spark, idx))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx.compact.tmp"), true)
-    // crash between the swap's delete and rename: complete tmp, missing
-    // index — recover adopts it and the content equals the compaction
-    AnnIndex.buildIvf(emb, s"$idx.compact.tmp", nlist = 16) // the staged rebuild
-    fs.delete(new org.apache.hadoop.fs.Path(idx), true)     // the crash point
-    assert(GenStore.recover(spark, idx), "recover must adopt the staged compact")
-    assert(GenStore.isComplete(spark, idx))
+    val hc = spark.sparkContext.hadoopConfiguration
+    val metaP = new org.apache.hadoop.fs.Path(s"$idx/_INDEX_META")
+    val committed = MetaIO.read(hc, metaP).get
+    def view(d: String) = rows3(AnnIndex.ivfAssignments(spark, d)
+      .select(col("vec_id"), col("cell"), col("gen")))
+    val before = view(idx)
+    // the compaction writes v=1 beside v=0 and is killed before its
+    // commit: the meta on disk is still the one it would have replaced
+    AnnIndex.buildIvf(emb, idx, nlist = 16)
+    MetaIO.write(hc, metaP, committed)
+    assert(new java.io.File(s"$idx/v=1/centroids").isDirectory,
+      "the killed compaction's version is left beside the live one")
+    assert(view(idx) == before, "the last committed view must still read")
+    assert(GenStore.staleness(spark, idx) > 0.0)
+    // the next compaction clears the leftover version and commits
+    AnnIndex.buildIvf(emb, idx, nlist = 16)
     assert(GenStore.staleness(spark, idx) == 0.0)
-    val adopted = rows3(AnnIndex.ivfAssignments(spark, idx)
-      .select(col("vec_id"), col("cell"), lit(0L)))
-    val idx2 = s"$work/ivf_staged_cmp"
-    AnnIndex.buildIvf(emb, idx2, nlist = 16)
-    val fresh = rows3(AnnIndex.ivfAssignments(spark, idx2)
-      .select(col("vec_id"), col("cell"), lit(0L)))
-    assert(adopted == fresh)
-    // and a normal compactIvf over the recovered index still works
-    AnnIndex.compactIvf(emb, idx, nlist = 16)
-    assert(GenStore.staleness(spark, idx) == 0.0)
+    val fresh = s"$work/ivf_killed_cmp"
+    AnnIndex.buildIvf(emb, fresh, nlist = 16)
+    assert(view(idx) == view(fresh))
+    // the commit kept the version it replaced and nothing else
+    assert(new java.io.File(idx).list().filterNot(_.startsWith(".")).toSet ==
+      Set("_INDEX_META", "v=0", "v=1"))
   }
 
   test("append-only live view is a PLAIN read (no shuffle) and equals the reduce view") {
@@ -395,7 +391,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // truthful from the stream's view, duplicate in fact
     val idx = s"$work/ivf_untrusted"
     AnnIndex.buildIvf(emb.filter(!isDelta), idx, nlist = 16)
-    AnnIndex.compactIvf(emb, idx, nlist = 16, appendOnly = false)
+    AnnIndex.buildIvf(emb, idx, nlist = 16, appendOnly = false)
     AnnIndex.appendIvf(emb.filter(isDelta), idx, newIds = true)
     // the untrusted meta must override the lying declaration: every id
     // serves exactly one live row, and the view equals the from-scratch
@@ -457,7 +453,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val idx = s"$work/ivfpq_cmp"
     AnnIndex.buildIvfPq(emb.filter(!isDelta), idx, nlist = 16)
     AnnIndex.appendIvfPq(emb.filter(isDelta), idx) // undeclared upsert history
-    AnnIndex.compactIvfPq(emb, idx, nlist = 16)
+    AnnIndex.buildIvfPq(emb, idx, nlist = 16)
     assert(GenStore.staleness(spark, idx) == 0.0, "compact must reset staleness")
     val q = emb.filter(col("vec_id") < 3)
     val viaIndex = AnnIndex.ivfPqTopKFromIndex(
@@ -699,7 +695,8 @@ class AnnIndexSpec extends AnyFunSuite {
       // target, so the gen dir must hold ONE part file, not 32 shards
       AnnIndex.appendBanded(emb.filter(col("vec_id") < 3), idx,
         nPlanes = 16, bands = 8, newIds = true)
-      val genDir = new java.io.File(s"$idx/banded/gen=1")
+      val genDir = new java.io.File(
+        s"${GenTable.Banded.path(GenStore.root(idx, GenStore.metaOrThrow(spark, idx)))}/gen=1")
       val parts = genDir.listFiles().count(_.getName.startsWith("part-"))
       assert(parts == 1,
         s"a tiny append must write one file (got $parts) — small-file " +
@@ -772,7 +769,7 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.appendBanded(emb.filter(isDelta), idx, nPlanes = 16, bands = 8)
     assert(GenStore.staleness(spark, idx) > 0.0,
       "append must register as banded staleness")
-    AnnIndex.compactBanded(emb, idx, nPlanes = 16, bands = 8)
+    AnnIndex.buildBanded(emb, idx, nPlanes = 16, bands = 8)
     assert(GenStore.staleness(spark, idx) == 0.0,
       "compacted banded index must be one generation")
     val compacted = rows3(AnnIndex.bandedRowsLive(spark, idx)

@@ -51,7 +51,7 @@ class HorizonCompactSpec extends AnyFunSuite {
         r.getSeq[Int](4))).toSet
 
   private def genDirs(dir: String, sub: String): Set[Long] = {
-    val d = new java.io.File(s"$dir/$sub")
+    val d = new java.io.File(s"${GenStore.root(dir, GenStore.metaOrThrow(spark, dir))}/$sub")
     if (!d.exists()) Set.empty
     else d.listFiles().filter(_.isDirectory).map(_.getName)
       .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toLong).toSet

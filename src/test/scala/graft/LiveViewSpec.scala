@@ -1,30 +1,32 @@
 package graft
 
-import graft.build.{GenStore, GenTable}
+import graft.build.{GenStore, GenTable, MetaIO}
 import graft.functions.expressions.LongKeyIn
 import graft.query.RaceFs
 import graft.similarity.AnnIndex
 import graft.text.{PostingsStore, TextIndex}
 import java.io.File
 import org.apache.commons.io.FileUtils
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{DelegateToFileSystem, Path}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
-import scala.util.{Failure, Success, Try}
+import scala.util.Try
 
 /** The BOUNDED live view resolves upserts on the driver: on a trusted
   * history with upsert generations, every maintained store's live view
   * is one filtered scan (no aggregate, no join, no Spark job to plan it)
   * whose rows equal full resolution — current and as of every
-  * generation, and past the distinct-key and upsert-row caps too. An
-  * upsert generation missing from the scan's listing is unknown and
-  * takes full resolution; a zero-row one is a known empty set; a
-  * compaction swapped in during a read never pairs one tree's keys with
-  * another's rows. */
+  * generation, and past the distinct-key and upsert-row caps too. A
+  * zero-row upsert generation is a known empty set; a committed file
+  * that is gone fails the read; every read is built from the meta's
+  * file list and lists no directory; a compaction committed at any
+  * point of a read leaves its rows unchanged; a filesystem registered
+  * only in the session conf serves the whole lifecycle. */
 class LiveViewSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -95,6 +97,8 @@ class LiveViewSpec extends AnyFunSuite {
     * join puts the key and gen first). */
   private def rows(df: DataFrame): Seq[String] =
     df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).toSeq.sorted
+
+  private def root(dir: String): String = GenStore.root(dir, GenStore.metaOrThrow(spark, dir))
 
   private def resolves(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.exists {
@@ -191,7 +195,7 @@ class LiveViewSpec extends AnyFunSuite {
   test("one-row tables: writers leave one row per (key, gen), duplicate-id batches included") {
     for ((dir, t) <- Seq(ivf -> GenTable.Ivf, pq -> GenTable.Pq, vecs -> GenTable.Vecs,
         text -> GenTable.Norms)) {
-      val perKeyGen = spark.read.parquet(t.path(dir)).groupBy(t.key, "gen").count()
+      val perKeyGen = spark.read.parquet(t.path(root(dir))).groupBy(t.key, "gen").count()
       assert(perKeyGen.filter(col("count") > 1).isEmpty, s"${t.subdir} at $dir")
       assert(perKeyGen.filter(col("gen") === 2).count() > 0, s"${t.subdir} at $dir: no re-ingest")
     }
@@ -202,7 +206,7 @@ class LiveViewSpec extends AnyFunSuite {
     AnnIndex.buildIvf(emb, d, nlist = 8)
     AnnIndex.appendIvf(emb.limit(0), d) // undeclared, zero rows: gen 1
     GenStore.delete(emb.filter(col("vec_id") < 3).select("vec_id"), d)
-    val gen1 = new Path(s"${GenTable.Ivf.path(d)}/gen=1")
+    val gen1 = new Path(s"${GenTable.Ivf.path(root(d))}/gen=1")
     val fs = gen1.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.listStatus(gen1).map(_.getPath.getName).filterNot(_.startsWith(".")).toSeq == Seq("_SUCCESS"))
     val bounded = view(d, GenTable.Ivf)
@@ -210,17 +214,23 @@ class LiveViewSpec extends AnyFunSuite {
     assert(rows(bounded) == rows(view(d, GenTable.Ivf, resolveAll = true)))
   }
 
-  test("a missing upsert generation directory takes full resolution, never 'no upsert keys'") {
+  test("a committed upsert file that is gone fails the read, never 'no upsert keys'") {
     val d = textHistory(s"$work/text_missing")
-    val gen3 = new Path(s"${GenTable.Postings.path(d)}/gen=3")
+    val gen3 = new Path(s"${GenTable.Postings.path(root(d))}/gen=3")
     val fs = gen3.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(gen3, new Path(s"$d/gen3_aside")))
     try {
-      val live = view(d, GenTable.Postings)
-      assert(resolves(live))
-      assert(rows(live) == rows(view(d, GenTable.Postings, resolveAll = true)))
+      val e = intercept[Exception](rows(view(d, GenTable.Postings)))
+      assert(missingFile(e), s"not a missing-file error: $e")
     } finally assert(fs.rename(new Path(s"$d/gen3_aside"), gen3))
+    assert(rows(view(d, GenTable.Postings)) == rows(view(d, GenTable.Postings, resolveAll = true)))
   }
+
+  private def missingFile(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => true
+      case _ => false
+    }
 
   private def withRaceFs[T](body: => T): T = {
     val hc = spark.sparkContext.hadoopConfiguration
@@ -246,29 +256,43 @@ class LiveViewSpec extends AnyFunSuite {
       fired -> out
     }.span(_._1) match { case (raced, rest) => raced.toList :+ rest.next() }
 
-  test("an upsert generation missing from the scan's listing takes full resolution over a fresh one") {
-    val d = textHistory(s"$work/text_raced")
-    val want = rows(PostingsStore.live(spark, d, resolveAll = true))
-    val data = GenTable.Postings.path(d)
-    val runs = withRaceFs {
-      // the delete generation is gone while the store root is listed
-      // (the footer-schema walk, then the scan's listing), and back
-      // before the read goes on
-      sweep(RaceFs.vanishOnList(data, s"$data/gen=3", s"$d/gen3_aside", _)) {
-        val live = PostingsStore.live(spark, s"racefs://$d")
-        (rows(live), resolves(live))
+  test("live lists no directory: plain, bounded, full and as-of reads are built from the meta") {
+    val flat = s"$work/text_flat"
+    val sp = spark
+    import sp.implicits._
+    PostingsStore.build(Seq(1L -> "alpha beta", 2L -> "beta").toDF("doc_id", "text"), flat)
+    PostingsStore.append(Seq(3L -> "gamma").toDF("doc_id", "text"), flat, newIds = true)
+    val reads = Seq[(String, String => DataFrame)](
+      "flat" -> (PostingsStore.live(spark, _)),
+      "bounded" -> (view(_, GenTable.Postings)),
+      "full" -> (view(_, GenTable.Postings, resolveAll = true)),
+      "as-of plain" -> (view(_, GenTable.Postings, asOfGen = Some(1L))),
+      "as-of bounded" -> (view(_, GenTable.Postings, asOfGen = Some(3L))),
+      "norms" -> (view(_, GenTable.Norms)),
+      "ivf bounded" -> (view(_, GenTable.Ivf)),
+      "ivf as-of plain" -> (view(_, GenTable.Ivf, asOfGen = Some(1L))))
+    val dirs = Seq(flat, text, text, text, text, text, ivf, ivf)
+    withRaceFs {
+      for (((what, read), d) <- reads.zip(dirs)) {
+        val want = rows(read(d))
+        RaceFs.listings.set(0)
+        val df = read(s"racefs://$d")
+        df.queryExecution.executedPlan
+        assert(rows(df) == want, what)
+        assert(RaceFs.listings.get == 0, s"$what: ${RaceFs.listings.get} directory listings")
       }
     }
-    assert(runs.forall(_._2.get._1 == want))
-    assert(runs.exists { case (fired, out) => fired && out.get._2 }, "no race hit the scan's listing")
   }
 
-  test("a horizon compaction swapped in at any point of a bounded read: full-resolution rows or an error") {
+  test("a horizon compaction committed at any access of a bounded read leaves its rows unchanged") {
     val src = textHistory(s"$work/swap_src")
     val squashed = s"$work/swap_squashed"
     FileUtils.copyDirectory(new File(src), new File(squashed))
-    // upsert gens 2, 3, 4: the squash resolves 2 and 3 into gen 3
+    // upsert gens 2, 3, 4: the squash resolves 2 and 3 into gen 3 and
+    // commits it as version 1 beside version 0
     GenStore.compactThrough(spark, squashed, 3L)
+    val committed = MetaIO.read(spark.sparkContext.hadoopConfiguration,
+      new Path(s"$squashed/_INDEX_META")).get
     def served(df: DataFrame) = rows(df.drop("gen"))
     val want = served(PostingsStore.live(spark, src, resolveAll = true))
     assert(served(PostingsStore.live(spark, squashed)) == want)
@@ -276,27 +300,53 @@ class LiveViewSpec extends AnyFunSuite {
     def fresh(): String = {
       k += 1
       FileUtils.copyDirectory(new File(src), new File(s"$work/swap_$k"))
-      FileUtils.copyDirectory(new File(squashed), new File(s"$work/swap_${k}_new"))
       s"$work/swap_$k"
     }
     var d = ""
     val runs = withRaceFs {
       sweep { skip =>
         d = fresh()
-        RaceFs.swapOnAccess(GenTable.Postings.path(d), skip, d, s"${d}_old", s"${d}_new")
+        val store = d
+        RaceFs.actOnAccess(store, skip) {
+          // the compaction's commit: its version lands beside the live
+          // one, then the meta that points at it
+          FileUtils.copyDirectory(new File(s"$squashed/v=1"), new File(s"$store/v=1"))
+          MetaIO.write(spark.sparkContext.hadoopConfiguration,
+            new Path(s"$store/_INDEX_META"), committed)
+        }
       }(served(PostingsStore.live(spark, s"racefs://$d")))
     }
-    def missingFile(e: Throwable): Boolean =
-      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
-        case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => true
-        case _ => false
-      }
-    info(s"${runs.size - 1} accesses swept, ${runs.count(_._2.isFailure)} failed on a vanished file")
-    for (((fired, out), i) <- runs.zipWithIndex) out match {
-      case Success(r) => assert(r == want, s"swap at access $i")
-      case Failure(e) => assert(fired && missingFile(e), s"swap at access $i: $e")
-    }
-    // the swap landed inside the read and the read still served the rows
-    assert(runs.exists { case (fired, out) => fired && out.isSuccess })
+    info(s"${runs.size - 1} accesses swept")
+    for (((_, out), i) <- runs.zipWithIndex)
+      assert(out.toOption.contains(want), s"commit at access $i: $out")
+    assert(runs.size > 10, "the sweep must cover the read's accesses")
+  }
+
+  test("a filesystem registered only in the session conf serves build, append and read") {
+    val sp = spark
+    import sp.implicits._
+    val confs = Seq("fs.sessfs.impl" -> classOf[SessionFs].getName,
+      "fs.sessfs.impl.disable.cache" -> "true",
+      "fs.AbstractFileSystem.sessfs.impl" -> classOf[SessionAfs].getName)
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val d = s"sessfs://$work/sessfs_text"
+      PostingsStore.build(Seq(1L -> "alpha beta", 2L -> "beta").toDF("doc_id", "text"), d)
+      PostingsStore.append(Seq(2L -> "gamma").toDF("doc_id", "text"), d)
+      PostingsStore.delete(Seq(1L).toDF("doc_id"), d)
+      assert(PostingsStore.live(spark, d).select("doc_id", "term").as[(Long, String)]
+        .collect().toSet == Set(2L -> "gamma"))
+      assert(rows(view(d, GenTable.Postings)) == rows(view(d, GenTable.Postings, resolveAll = true)))
+    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 }
+
+/** [[RaceFs]] under the `sessfs` scheme, which only the session-conf
+  * spec registers. */
+class SessionFs extends RaceFs {
+  override def getUri: java.net.URI = java.net.URI.create("sessfs:///")
+}
+
+/** [[SessionFs]] for `FileContext`, which the meta's atomic rename uses. */
+class SessionAfs(uri: java.net.URI, conf: Configuration)
+  extends DelegateToFileSystem(uri, new SessionFs, conf, "sessfs", false)

@@ -158,7 +158,7 @@ class PostingsStoreSpec extends AnyFunSuite {
     PostingsStore.append(docsDF(Seq(1L -> "alpha omega", 2L -> "beta")), d)
     assert(PostingsStore.staleness(spark, d) > 0.0)
     val current = docsDF(Seq(1L -> "alpha omega", 2L -> "beta"))
-    PostingsStore.compact(current, d)
+    PostingsStore.build(current, d)
     assert(PostingsStore.staleness(spark, d) == 0.0, "compact must reset staleness")
     assert(liveSet(d) == builtSet(current))
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.build.GenStore
+import graft.build.{GenStore, GenTable}
 import graft.similarity.{Ann, AnnIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -103,7 +103,7 @@ class VecStoreSpec extends AnyFunSuite {
     AnnIndex.buildVecs(emb.filter(!isDelta), dir)
     AnnIndex.appendVecs(emb.filter(isDelta), dir) // undeclared upsert
     assert(GenStore.staleness(spark, dir) > 0.0)
-    AnnIndex.compactVecs(emb, dir)
+    AnnIndex.buildVecs(emb, dir)
     assert(GenStore.staleness(spark, dir) == 0.0)
     val cmp = s"$work/vecs_compact_cmp"
     AnnIndex.buildVecs(emb, cmp)
@@ -210,7 +210,7 @@ class VecStoreSpec extends AnyFunSuite {
     val idx = s"$work/pq_dense"
     AnnIndex.buildIvfPq(shifted, idx, nlist = 4, nSub = 8, subDim = 8,
       nCent = 16)
-    val cids = spark.read.parquet(s"$idx/codebook")
+    val cids = spark.read.parquet(s"${GenStore.root(idx, GenStore.metaOrThrow(spark, idx))}/codebook")
       .select("cid").distinct().collect().map(_.getLong(0)).toSet
     assert(cids == (0L until 16L).toSet,
       s"codebook cids must be dense 0..15 independent of the id domain: $cids")
@@ -298,7 +298,9 @@ class VecStoreSpec extends AnyFunSuite {
     AnnIndex.appendIvfPq(
       Seq((5L, vLo), (5L, vHi)).toDF("vec_id", "embedding"), idx,
       newIds = true)
-    val rows = spark.read.parquet(s"$idx/assignments/gen=1").collect()
+    def gen1(d: String) =
+      s"${GenTable.Ivf.path(GenStore.root(d, GenStore.metaOrThrow(spark, d)))}/gen=1"
+    val rows = spark.read.parquet(gen1(idx)).collect()
     assert(rows.length == 1, s"one coherent row per id, got ${rows.length}")
     // comparator: the same append with ONLY the max-struct row — the
     // pick is lexicographic on the vector, and vLo(0)=0.8 > vHi(0)=0.1,
@@ -308,7 +310,7 @@ class VecStoreSpec extends AnyFunSuite {
       nCent = 2, lloydIters = 0)
     AnnIndex.appendIvfPq(Seq((5L, vLo)).toDF("vec_id", "embedding"), idx2,
       newIds = true)
-    val exp = spark.read.parquet(s"$idx2/assignments/gen=1").collect()
+    val exp = spark.read.parquet(gen1(idx2)).collect()
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getSeq[Int](1).toList)
     assert(rows.map(key).toSet == exp.map(key).toSet,

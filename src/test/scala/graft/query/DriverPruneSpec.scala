@@ -2,7 +2,7 @@ package graft.query
 
 import graft.Graft
 import graft.build.IndexBuilder
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -259,40 +259,52 @@ class DriverPruneSpec extends AnyFunSuite {
   * time a chosen directory is listed — a rename racing a reader; armed
   * with [[RaceFs.vanishOnList]], a directory is gone for one listing of
   * another and moved back once it returns, so it is gone for that reader
-  * only; armed with [[RaceFs.swapOnAccess]], a whole tree is swapped for
-  * another at one listing or status call under a path — a compaction's
-  * swap landing at that point of a read. */
+  * only; armed with [[RaceFs.actOnAccess]], it runs an action (a
+  * commit landing at that point of a read) at one listing, status or
+  * open call under a path. [[RaceFs.listings]] counts directory
+  * listings. */
 class RaceFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("racefs:///")
-  override def listStatus(f: Path): Array[FileStatus] =
+  override def listStatus(f: Path): Array[FileStatus] = {
+    RaceFs.listings.incrementAndGet()
     RaceFs.around("list", f)(super.listStatus(f))
+  }
   override def getFileStatus(f: Path): FileStatus =
     RaceFs.around("stat", f)(super.getFileStatus(f))
+  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+    RaceFs.around("open", f)(super.open(f, bufferSize))
 }
 
 object RaceFs {
-  /** On the `skip + 1`-th call `hit` matches (operation, path), rename
-    * each pair of `moves` in order; with `back`, rename them back once
-    * that call returns. */
+  /** On the `skip + 1`-th call `hit` matches (operation, path), run
+    * `act`; the function it returns runs once that call returns. */
   private final case class Arm(hit: (String, String) => Boolean, skip: Int,
-      moves: Seq[(String, String)], back: Boolean)
+      act: () => () => Unit)
 
   private var armed: Option[Arm] = None
   @volatile var fired = false
+  val listings = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def moveAsideOnList(listed: String, from: String, to: String): Unit =
-    arm(Arm((op, p) => op == "list" && p == listed, 0, Seq(from -> to), back = false))
+    arm(Arm((op, p) => op == "list" && p == listed, 0, () => {
+      move(from, to)
+      () => ()
+    }))
 
   /** `moved` is at `aside` during the `skip + 1`-th listing of `listed`. */
   def vanishOnList(listed: String, moved: String, aside: String, skip: Int = 0): Unit =
-    arm(Arm((op, p) => op == "list" && p == listed, skip, Seq(moved -> aside), back = true))
+    arm(Arm((op, p) => op == "list" && p == listed, skip, () => {
+      move(moved, aside)
+      () => move(aside, moved)
+    }))
 
-  /** At the `skip + 1`-th listing or status call on `under` or below it,
-    * `tree` moves to `aside` and `replacement` takes its place, for good. */
-  def swapOnAccess(under: String, skip: Int, tree: String, aside: String,
-      replacement: String): Unit =
-    arm(Arm((_, p) => p == under || p.startsWith(s"$under/"), skip,
-      Seq(tree -> aside, replacement -> tree), back = false))
+  /** At the `skip + 1`-th listing, status or open call on `under` or
+    * below it, run `act`. */
+  def actOnAccess(under: String, skip: Int)(act: => Unit): Unit =
+    arm(Arm((_, p) => p == under || p.startsWith(s"$under/"), skip, () => {
+      act
+      () => ()
+    }))
 
   def disarm(): Unit = synchronized { armed = None }
 
@@ -315,11 +327,9 @@ object RaceFs {
         armed = Some(a.copy(skip = a.skip - 1))
         () => ()
       } else {
-        a.moves.foreach { case (from, to) => move(from, to) }
         armed = None
         fired = true
-        if (a.back) () => a.moves.reverse.foreach { case (from, to) => move(to, from) }
-        else () => ()
+        a.act()
       }
     }
   }
