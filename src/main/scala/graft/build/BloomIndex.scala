@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.io.api.Binary
-import org.apache.spark.sql.{Encoder, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -30,10 +30,10 @@ import scala.jdk.CollectionConverters._
   * (descriptor fingerprint mismatch) fall back to a full scan exactly
   * like the postings index.
   *
-  * Layout:
+  * Layout (the postings index's, `IndexBuilder`'s class doc):
   * {{{
-  * bloomRoot/blooms/part-*.parquet       (file, column, bloom, gen)
-  * bloomRoot/descriptors/part-*.parquet  IndexBuilder.DescriptorRow
+  * bloomRoot/_INDEX_META                           the commit: descriptors, files
+  * bloomRoot/v=K/blooms/batch=N/part-*.parquet     (file, column, bloom, gen)
   * }}}
   *
   * Build = ONE pass over the data: explode (column, value) pairs,
@@ -48,8 +48,6 @@ object BloomIndex {
   val DefaultFpp: Double = 0.03
 
   final case class BloomRow(file: String, column: String, bloom: Array[Byte], gen: Long)
-
-  def bloomsDir(root: String): String = s"$root/blooms"
 
   /** Serializable bloom-building UDAF over stringified values. */
   final case class BloomAgg(expectedItems: Long, fpp: Double)
@@ -73,9 +71,9 @@ object BloomIndex {
   /** Build (or refresh) blooms for `columns` over the dataset.
     * INCREMENTAL like the postings index: only files with no fresh
     * descriptor are read (a daily one-file append costs one file's
-    * scan, not the corpus), their bloom rows are APPENDED gen-stamped,
-    * and [[readSketches]]' gen filter makes superseded rows inert.
-    * `overwrite` forces a full rebuild. */
+    * scan, not the corpus), their bloom rows are committed gen-stamped
+    * as a new batch, and [[readSketches]]' gen filter makes superseded
+    * rows inert. `overwrite` forces a full rebuild into a new version. */
   def build(
       spark: SparkSession,
       dataDir: String,
@@ -87,7 +85,7 @@ object BloomIndex {
       withChecksums: Boolean = false): Unit = {
     require(columns.nonEmpty)
     IndexBuilder.refreshStale(spark, dataDir, columns, bloomRoot, withChecksums,
-        graft.model.IndexType.BloomParquet, overwrite) { stale =>
+        graft.model.IndexType.BloomParquet, overwrite) { (stale, out) =>
       val df = spark.read.parquet(stale.map(_.path): _*)
       val kvs = array(columns.map(c =>
         struct(lit(c).as("column"), col(c).cast("string").as("value"))): _*)
@@ -102,51 +100,36 @@ object BloomIndex {
         .groupBy("file", "column")
         .agg(bloomAgg(col("value")).as("bloom"))
         .join(broadcast(gens), "file")
-        .write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.Append)
-        .parquet(bloomsDir(bloomRoot))
+        .write.mode("overwrite").parquet(out)
     }
   }
 
   /** Drop bloom rows for deleted files and superseded generations and
-    * rewrite — the maintenance twin of `IndexBuilder.compact` (the
-    * append-only build otherwise accumulates a dead ~90 KB sketch per
-    * rebuild per column forever). Returns (rowsBefore, rowsAfter). */
-  def compact(spark: SparkSession, bloomRoot: String): (Long, Long) = {
-    import spark.implicits._
-    val descs = IndexBuilder.loadDescriptors(spark, bloomRoot)
-    val live = spark.createDataset(
-      descs.values.map(d => (d.sourcePath, d.modificationTime)).toSeq)
-      .toDF("file", "gen")
-    val all = spark.read.parquet(bloomsDir(bloomRoot))
-    val before = all.count()
-    val staging = s"$bloomRoot/blooms_compacting"
-    // same-gen duplicates (a content-fresh file re-indexed for an added
-    // column re-emits its other columns) are byte-identical — bloom
-    // bits are an order-independent OR — so dropDuplicates is safe
-    all.join(broadcast(live), Seq("file", "gen"), "left_semi")
-      .dropDuplicates("file", "column", "gen")
-      .write.mode(SaveMode.Overwrite).parquet(staging)
-    val fs = new Path(bloomRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexBuilder.stagedSwap(fs, new Path(staging),
-      new Path(bloomsDir(bloomRoot)), new Path(s"$bloomRoot/blooms_old"))
-    spark.catalog.refreshByPath(bloomsDir(bloomRoot))
-    val after = spark.read.parquet(bloomsDir(bloomRoot)).count()
-    (before, after)
-  }
+    * rewrite them as a new version — the maintenance twin of
+    * `IndexBuilder.compact` (the append-only build otherwise accumulates
+    * a dead ~90 KB sketch per rebuild per column forever). Returns
+    * (rowsBefore, rowsAfter), from the committed files' footers. Same-gen
+    * duplicates (a content-fresh file re-indexed for an added column
+    * re-emits its other columns) are byte-identical — bloom bits are an
+    * order-independent OR — so dropDuplicates is safe. */
+  def compact(spark: SparkSession, bloomRoot: String): (Long, Long) =
+    IndexBuilder.compactRoot(spark, bloomRoot)(
+      _.dropDuplicates("file", "column", "gen").write.mode("overwrite"))
 
-  /** The sketches of `columns` whose gen is their file's in `gens`
-    * (file -> live descriptor gen), keyed by (file, column) — read on the
-    * driver with no Spark job, `column` pushed to parquet as an IN
-    * filter. The pruning decision (`graft.query.PrunedScanner`) turns
-    * them into evidence. A missing blooms root, or a part-file that
-    * vanishes mid-read, throws `FileNotFoundException`. */
-  private[graft] def readSketches(spark: SparkSession, bloomRoot: String,
+  /** The sketches of `columns` in the committed files of index `idx`
+    * whose gen is their file's in `gens` (file -> live descriptor gen),
+    * keyed by (file, column) — read on the driver with no Spark job,
+    * `column` pushed to parquet as an IN filter. The pruning decision
+    * (`graft.query.PrunedScanner`) turns them into evidence. A committed
+    * file that is gone throws `FileNotFoundException`. */
+  private[graft] def readSketches(spark: SparkSession, idx: IndexBuilder.Root,
       columns: Set[String], gens: Map[String, Long]): Map[(String, String), BloomFilter] = {
     val out = Map.newBuilder[(String, String), BloomFilter]
     val filter = FilterCompat.get(FilterApi.in(FilterApi.binaryColumn("column"),
       columns.map(Binary.fromString).asJava))
-    IndexBuilder.readParts(spark.sessionState.newHadoopConf(), new Path(bloomsDir(bloomRoot)),
-        filter, more = true) { g =>
+    val conf = Commit.conf(spark)
+    for (f <- idx.files) IndexBuilder.readFile(conf, new Path(idx.dir, f.path), filter,
+        more = true) { g =>
       val (file, column) = (g.getString("file", 0), g.getString("column", 0))
       if (columns(column) && gens.get(file).contains(g.getLong("gen", 0)))
         out += (file, column) -> BloomFilter.readFrom(

@@ -1,15 +1,14 @@
 package graft.build
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import graft.build.Commit.{Table, conf, fsOf, relation}
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.parquet.filter2.compat.FilterCompat
 import graft.functions.expressions.LongKeyIn
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** The ONE gen-stamped-store lifecycle protocol, shared by every
   * persisted maintained structure in the engine — the vector indexes
@@ -24,9 +23,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   * [[compactThrough]], [[retiredIds]], [[staleness]] — is derived from
   * the descriptor here, once.
   *
-  * PROTOCOL — the `_INDEX_META` commit is the store's only source of
-  * truth (the reference's index descriptor names the files it covers,
-  * and readers trust that marker, never the directory's shape):
+  * PROTOCOL — the `_INDEX_META` commit ([[Commit]], shared with the
+  * postings and bloom roots) is the store's only source of truth:
   *  - LAYOUT: a store's data and model files live under a VERSION root
   *    `<dir>/v=K/` — each table's generations at
   *    `v=K/<subdir>/gen=N/`, model files (centroids, codebook) and the
@@ -37,7 +35,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   *    and each committed generation's files (path relative to `<dir>`,
   *    length, mtime). It then deletes every entry of `<dir>` except the
   *    meta and the live `v=K` — plus `v=K-1` when the commit switched
-  *    versions: an older version, the leftover of a crashed build or
+  *    versions (a store read has no fallback, so it keeps one grace
+  *    version): an older version, the leftover of a crashed build or
   *    compaction, a pre-version tree;
   *  - BUILD (and every full compact, which IS a build) writes gen 0 and
   *    the model files into `v=K+1/` beside the live `v=K/` and commits a
@@ -112,14 +111,6 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   */
 private[graft] object GenStore {
 
-  /** One committed data file: its generation, its path relative to the
-    * store root, its length and its modification time. */
-  final case class StoreFile(gen: Long, path: String, len: Long, mtime: Long)
-
-  /** One table's committed state: its data schema (partition columns
-    * excluded) and its files. */
-  final case class Table(schema: StructType, files: Seq[StoreFile])
-
   /** The store's durable control state: `gen` is the next-append
     * generation (commit pointer: only gens below it are visible),
     * `appendOnly` keeps the plain live view, `trusted` says `newIds`
@@ -142,20 +133,11 @@ private[graft] object GenStore {
   private val ReservedKeys =
     Set("gen", "plain", "batch", "trust", "ugens", "rows0", "rowsa", "ver")
 
-  private val MetaName = "_INDEX_META"
-
-  private def metaPath(dir: String): String = s"$dir/$MetaName"
-
   /** The version root of `m`: the directory its data and model files
     * live under. */
   def root(dir: String, m: Meta): String = s"$dir/${version(m)}"
 
-  private def version(m: Meta): String = s"v=${m.version}"
-
-  private def conf(s: SparkSession) = s.sessionState.newHadoopConf()
-
-  private def fsOf(s: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(conf(s))
+  private def version(m: Meta): String = Commit.version(m.version)
 
   /** Missing keys default CONSERVATIVELY: an ambiguous meta must route
     * readers through full upsert resolution (`plain` and `trust`
@@ -163,69 +145,34 @@ private[graft] object GenStore {
     * could return superseded duplicate rows; resolving an
     * actually-append-only history is merely slower, never wrong). A meta
     * without a version or without the row counters is a pre-version
-    * tree: None, as if absent.
-    *
-    * Layout: line 1 is the `key=value;…` control line; then, per table,
-    * a `<subdir>\t<schema json>` line followed by one
-    * `<gen>\t<len>\t<mtime>\t<path>` line per committed file. */
+    * tree: None, as if absent. After the control line comes the
+    * [[Commit]] file list. */
   def readMeta(s: SparkSession, dir: String): Option[Meta] =
-    MetaIO.read(conf(s), new Path(metaPath(dir))).flatMap { content =>
-      val lines = content.split('\n').toSeq
-      val kv = lines.head.split(';').flatMap { f =>
-        f.split('=') match { case Array(k, v) => Some(k -> v); case _ => None }
-      }.toMap
+    Commit.read(s, dir).flatMap { case (v, kv, lines) =>
       def long(k: String) = kv.get(k).flatMap(_.toLongOption)
-      for (g <- long("gen"); v <- long("ver"); r0 <- long("rows0"); ra <- long("rowsa"))
+      for (g <- long("gen"); r0 <- long("rows0"); ra <- long("rowsa"))
         yield Meta(g,
           kv.get("plain").exists(_ == "true"),
           long("batch").getOrElse(-1L),
           kv.get("trust").exists(_ == "true"),
           kv.get("ugens").toSeq.flatMap(_.split(',').flatMap(_.toLongOption)),
-          r0, ra, kv -- ReservedKeys, v, tablesOf(lines.tail))
+          r0, ra, kv -- ReservedKeys, v, Commit.tablesOf(lines))
     }
 
-  private def tablesOf(lines: Seq[String]): Map[String, Table] =
-    lines.foldLeft(List.empty[(String, Table)]) { (acc, line) =>
-      line.split('\t') match {
-        case Array(name, json) =>
-          (name -> Table(DataType.fromJson(json).asInstanceOf[StructType], Vector.empty)) :: acc
-        case Array(g, len, mtime, path) =>
-          val (name, t) = acc.head
-          (name -> t.copy(files = t.files :+
-            StoreFile(g.toLong, path, len.toLong, mtime.toLong))) :: acc.tail
-      }
-    }.toMap
-
-  /** The COMMIT: one ATOMIC meta write ([[MetaIO.write]]: temp file +
-    * overwrite-rename — an in-place create would truncate the old
-    * marker before the new bytes land, so a crash mid-write on an
-    * APPEND would destroy the completion marker of a perfectly intact
-    * index), then the cleanup rule: every entry of `dir` except the meta
-    * and the committed version is deleted — and, when the commit
-    * `switches` to a new version (a build, a compaction), the version it
-    * replaced, so a read that started on it survives this compaction.
-    * The replaced version goes at the store's next commit: keeping it
+  /** The COMMIT ([[Commit.write]]). When the commit `switches` to a new
+    * version (a build, a compaction) it keeps the version it replaced,
+    * so a read that started on it survives this compaction. The
+    * replaced version goes at the store's next commit: keeping it
     * through appends would hold a second copy of the store on disk
-    * until the next compaction. Hidden checksum files are the
-    * filesystem's own. */
+    * until the next compaction. */
   private def writeMeta(s: SparkSession, dir: String, m: Meta, switches: Boolean): Unit = {
     val extra = m.params.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
     val ugens =
       if (m.upsertGens.isEmpty) Nil else Seq(s"ugens=${m.upsertGens.mkString(",")}")
-    val control = (Seq(s"gen=${m.gen}", s"plain=${m.appendOnly}", s"batch=${m.batch}",
+    val control = Seq(s"gen=${m.gen}", s"plain=${m.appendOnly}", s"batch=${m.batch}",
       s"trust=${m.trusted}") ++ ugens ++ Seq(s"rows0=${m.baseRows}",
-      s"rowsa=${m.appendRows}", s"ver=${m.version}") ++ extra).mkString(";")
-    val files = m.tables.toSeq.sortBy(_._1).flatMap { case (name, t) =>
-      s"$name\t${t.schema.json}" +:
-        t.files.map(f => s"${f.gen}\t${f.len}\t${f.mtime}\t${f.path}")
-    }
-    MetaIO.write(conf(s), new Path(metaPath(dir)), (control +: files).mkString("\n"))
-    val keep = Set(MetaName, version(m)) ++
-      Option.when(switches)(version(m.copy(version = m.version - 1)))
-    val fs = fsOf(s, dir)
-    for (st <- fs.listStatus(new Path(dir)); n = st.getPath.getName
-         if !keep(n) && !n.startsWith("."))
-      fs.delete(st.getPath, true)
+      s"rowsa=${m.appendRows}") ++ extra
+    Commit.write(s, dir, m.version, control, Commit.fileLines(m.tables), keepPrevious = switches)
   }
 
   /** Whether a COMPLETE store lives at `dir` — true only once the
@@ -269,7 +216,7 @@ private[graft] object GenStore {
             batch = math.max(m.batch, batchId), upsertGens = ugens)
         (m.gen, next, m)
       case None => throw new IllegalStateException(
-        s"no complete index at $dir (missing ${metaPath(dir)}): build it " +
+        s"no complete index at $dir (missing ${Commit.metaPath(dir)}): build it " +
           "first — a partial or pre-version tree must be rebuilt, not appended to")
     }
 
@@ -292,7 +239,7 @@ private[graft] object GenStore {
     * pre-version and must not be silently served. */
   def metaOrThrow(s: SparkSession, dir: String): Meta =
     readMeta(s, dir).getOrElse(throw new IllegalStateException(
-      s"no complete index at $dir (missing ${metaPath(dir)}): build it " +
+      s"no complete index at $dir (missing ${Commit.metaPath(dir)}): build it " +
         "first — a partial or pre-version tree must be rebuilt, not read"))
 
   /** Commit an append's counters: the written generation's rows join
@@ -419,16 +366,6 @@ private[graft] object GenStore {
 
   // ------------------------------------------------------- versions
 
-  /** Start version `m.version` of the store: clear whatever a crashed
-    * build or compaction left at its root (never committed, so no
-    * reader can hold it). */
-  private def startVersion(s: SparkSession, dir: String, m: Meta): String = {
-    val r = root(dir, m)
-    val fs = fsOf(s, dir)
-    if (fs.exists(new Path(r))) fs.delete(new Path(r), true)
-    r
-  }
-
   /** Stage a HORIZON compact into version `next`: byte-copy what the
     * squash KEEPS from the live version `m` — model files and each
     * table's committed tail generations (`gen > h`, from the meta's
@@ -459,60 +396,6 @@ private[graft] object GenStore {
       })
     }
     next.copy(tables = tables)
-  }
-
-  // ------------------------------------------- committed-file relations
-
-  private def qualified(s: SparkSession, dir: String): Path =
-    fsOf(s, dir).makeQualified(new Path(dir))
-
-  /** `files` under `tableRoot` (both relative to the store root `dir`) as one
-    * parquet relation with `schema` as its data schema: Spark's file
-    * index over `tableRoot`, whose status cache is the given list, so
-    * it lists nothing, and partition columns (gen, hash directories)
-    * are discovered from the paths as a listed read would. */
-  private def relation(s: SparkSession, dir: String, tableRoot: String,
-      schema: StructType, files: Seq[StoreFile]): DataFrame = {
-    val base = qualified(s, dir)
-    val rootPath = new Path(base, tableRoot)
-    val statuses = files.map(f =>
-      new FileStatus(f.len, false, 1, 0L, f.mtime, new Path(base, f.path))).toArray
-    val cache = new FileStatusCache {
-      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
-        if (p == rootPath) Some(statuses) else None
-      def putLeafFiles(p: Path, leafFiles: Array[FileStatus]): Unit = ()
-      def invalidateAll(): Unit = ()
-    }
-    val index = new InMemoryFileIndex(s, Seq(rootPath), Map.empty, Some(schema), cache)
-    s.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, schema,
-      None, new ParquetFileFormat, Map("path" -> rootPath.toString))(s))
-  }
-
-  /** Record the data files Spark just wrote under `out` (relative to
-    * the store root) as generation
-    * `gen` of table `name` in `m` (replacing any earlier record of that
-    * generation — a replayed write overwrites its own output), and
-    * re-read them: the one writer-side listing. The table's schema is
-    * the first file's footer when the table has none yet. None when the
-    * write left no data file (an empty write leaves only `_SUCCESS`). */
-  private def record(s: SparkSession, dir: String, m: Meta, name: String,
-      gen: Long, out: String): (Meta, Option[DataFrame]) = {
-    val base = qualified(s, dir).toUri.getPath.stripSuffix("/") + "/"
-    val fs = fsOf(s, dir)
-    def leaves(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
-      .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
-      .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
-    val written = leaves(new Path(dir, out)).sortBy(_.getPath.toString)
-    if (written.isEmpty) (m, None)
-    else {
-      val prev = m.tables.get(name)
-      val schema = prev.fold(IndexBuilder.footerSchema(s, conf(s), written.head))(_.schema)
-      val files = written.map(st => StoreFile(gen,
-        st.getPath.toUri.getPath.stripPrefix(base), st.getLen, st.getModificationTime))
-      val kept = prev.fold(Seq.empty[StoreFile])(_.files.filterNot(_.gen == gen))
-      (m.copy(tables = m.tables + (name -> Table(schema, kept ++ files))),
-        Some(relation(s, dir, out, schema, files)))
-    }
   }
 
   // ------------------------------------------- retired-key sidecar
@@ -546,7 +429,7 @@ private[graft] object GenStore {
       h: Long): Meta = {
     val out = s"${version(m)}/$RetiredTable"
     keys.distinct().coalesce(1).write.mode("overwrite").parquet(s"$dir/$out")
-    record(s, dir, m, RetiredTable, h, out)._1
+    m.copy(tables = Commit.record(s, dir, m.tables, RetiredTable, h, out)._1)
   }
 
   // ------------------------------------------------------- live views
@@ -737,7 +620,7 @@ private[graft] object GenStore {
   }
 
   /** Write `rows` as generation `gen` of table `t` in its layout and
-    * record the files ([[record]]). */
+    * record the files ([[Commit.record]]). */
   private def layOut(t: GenTable, rows: DataFrame, dir: String, m: Meta, gen: Long,
       est: => Long): (Meta, Option[DataFrame]) = {
     val out = s"${t.path(version(m))}/gen=$gen"
@@ -757,7 +640,8 @@ private[graft] object GenStore {
           .write.mode("overwrite")
     }
     writer.parquet(s"$dir/$out")
-    record(rows.sparkSession, dir, m, t.subdir, gen, out)
+    val (tables, written) = Commit.record(rows.sparkSession, dir, m.tables, t.subdir, gen, out)
+    (m.copy(tables = tables), written)
   }
 
   /** BUILD: write gen 0 of `rows` into a new version beside the live
@@ -775,7 +659,7 @@ private[graft] object GenStore {
     val m0 = Meta(gen = 1L, appendOnly = appendOnly, batch = batchId,
       trusted = appendOnly, params = params ++ t.tombCount.map(_ -> "0"),
       version = readMeta(s, dir).fold(0L)(_.version + 1))
-    val (m, n0, tombs) = writeGen(t, rows(startVersion(s, dir, m0)), dir, m0, 0L, -1L)
+    val (m, n0, tombs) = writeGen(t, rows(Commit.startVersion(s, dir, m0.version)), dir, m0, 0L, -1L)
     writeMeta(s, dir, t.addTombs(m.copy(baseRows = n0), tombs), switches = true)
   }
 
@@ -873,7 +757,7 @@ private[graft] object GenStore {
       s"horizon $h outside [$h0, ${full.gen - 1}] for the store at $dir " +
         "(below the existing horizon the history is already squashed)")
     val next = full.copy(version = full.version + 1)
-    startVersion(s, dir, next)
+    Commit.startVersion(s, dir, next.version)
     val resolved = resolve(raw(s, t, dir, full.copy(gen = h + 1)), t.key, t.multiRow)
     val (based, _, _) = writeGen(t, resolved.filter(t.serving).select(t.cols.map(col): _*),
       dir, stageTail(s, dir, t, full, next, h), h, -1L)

@@ -14,7 +14,8 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageType
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import graft.model.IndexType
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -38,7 +39,7 @@ import scala.jdk.CollectionConverters._
   *      -> groupBy(file, column, value)            // single shuffle
   *      -> agg(MergeIntervals)                     // custom UDAF, map-side partial
   *      -> sortWithinPartitions(column, value)     // parquet min/max friendly
-  *      -> write indexRoot/postings partitioned by column
+  *      -> write one batch of the postings table, partitioned by column
   * }}}
   *
   * Block identity comes from the hidden `_metadata` columns
@@ -47,17 +48,28 @@ import scala.jdk.CollectionConverters._
   * and already aligned to parquet row-group boundaries by Spark's split
   * planning.
   *
-  * Layout:
+  * Layout (the [[Commit]] protocol the maintained stores use):
   * {{{
-  * indexRoot/postings/column=<c>/part-*.parquet   (value, file, ranges)
-  * indexRoot/descriptors/part-*.parquet           one row per indexed base file
+  * indexRoot/_INDEX_META                                the commit
+  * indexRoot/v=K/postings/batch=N/column=<c>/part-*.parquet
+  *                                         (file, value, ranges, gen)
   * }}}
   *
-  * The descriptors dataset ports the `FileIndexDescriptor` sidecar
-  * (`elephanttwin.thrift:39-50`): per base file, the indexed columns and
-  * a freshness fingerprint (length + modification time). Query-side code
-  * falls back to a full scan for any file whose fingerprint no longer
-  * matches (`BlockIndexedFileInputFormat.java:338-386` semantics).
+  * The meta ports the `FileIndexDescriptor` sidecar
+  * (`elephanttwin.thrift:39-50`): one atomic write records the index
+  * type and format version, per base file its indexed columns and a
+  * freshness fingerprint (length + modification time, and the content
+  * checksum when one was recorded), and every committed postings file.
+  * Query-side code falls back to a full scan for any file whose
+  * fingerprint no longer matches (`BlockIndexedFileInputFormat.java:
+  * 338-386` semantics), and reads only the files the meta lists. A root
+  * without a meta is no index. A build and a compaction write batch 0
+  * of version K+1 and commit it; an incremental build writes the next
+  * batch of version K (its number from the meta, so a crashed batch's
+  * leftover is overwritten) and commits it. Nothing is renamed, a crash
+  * before the commit leaves the last committed index as it was, and the
+  * commit deletes every other version: a read that finds a committed
+  * file gone falls back to a full scan.
   *
   * Scale design (100 TB): the postings table is O(files x distinct
   * values) rows of a few dozen bytes — orders of magnitude smaller than
@@ -103,8 +115,76 @@ object IndexBuilder {
       checksumAlgorithm: String = "length+mtime",
       checksum: String = "")
 
-  def postingsDir(indexRoot: String): String = s"$indexRoot/postings"
-  def descriptorsDir(indexRoot: String): String = s"$indexRoot/descriptors"
+  /** An index root's commit: its version, its index type, the
+    * descriptor of every indexed base file by path, and its table's
+    * committed files. */
+  private[graft] final case class Root(dir: String, version: Long, indexType: String,
+      descriptors: Map[String, DescriptorRow], tables: Map[String, Commit.Table]) {
+    def files: Seq[Commit.StoreFile] = tables.values.flatMap(_.files).toSeq
+  }
+
+  /** The table an index of `indexType` keeps its rows in. */
+  private def tableOf(indexType: String): String =
+    if (indexType == IndexType.BloomParquet) "blooms" else "postings"
+
+  /** The index committed at `indexRoot`; None without a meta (or with a
+    * meta of another index format version): no index. */
+  private[graft] def readRoot(spark: SparkSession, indexRoot: String): Option[Root] =
+    Commit.read(spark, indexRoot).flatMap { case (ver, kv, lines) =>
+      val iv = graft.model.FileIndexDescriptor.CurrentVersion
+      kv.get("type").filter(_ => kv.get("iver").contains(iv.toString)).map { t =>
+        val (src, list) = lines.partition(_.startsWith("src\t"))
+        Root(indexRoot, ver, t, src.map { line =>
+          val Array(_, len, mtime, cols, path, sum @ _*) = line.split('\t')
+          path -> DescriptorRow(path, len.toLong, mtime.toLong, cols.split(',').toSeq, t, iv,
+            sum.headOption.getOrElse("length+mtime"), sum.lift(1).getOrElse(""))
+        }.toMap, Commit.tablesOf(list))
+      }
+    }
+
+  private def rootOrThrow(spark: SparkSession, indexRoot: String): Root =
+    readRoot(spark, indexRoot).getOrElse(throw new IllegalStateException(
+      s"no committed index at $indexRoot (missing ${Commit.metaPath(indexRoot)}): build it first"))
+
+  /** COMMIT `r` ([[Commit.write]]): the index type and format version on
+    * the control line, one `src` line per descriptor (length, mtime,
+    * columns, path, and the checksum pair when one was recorded), then
+    * the file list. An index root keeps no older version. */
+  private def commit(spark: SparkSession, r: Root): Unit =
+    Commit.write(spark, r.dir, r.version,
+      Seq(s"type=${r.indexType}", s"iver=${graft.model.FileIndexDescriptor.CurrentVersion}"),
+      r.descriptors.values.toSeq.sortBy(_.sourcePath).map { d =>
+        (Seq("src", d.length, d.modificationTime, d.columns.mkString(","), d.sourcePath) ++
+          (if (d.checksum.isEmpty) Nil else Seq(d.checksumAlgorithm, d.checksum))).mkString("\t")
+      } ++ Commit.fileLines(r.tables), keepPrevious = false)
+
+  /** The committed rows of `r`'s table as one relation built from the
+    * meta's file list. */
+  private def rows(spark: SparkSession, r: Root): DataFrame = {
+    val t = tableOf(r.indexType)
+    r.tables.get(t).fold(spark.emptyDataFrame)(tb => Commit.relation(spark, r.dir,
+      s"${Commit.version(r.version)}/$t", tb.schema, tb.files).drop("batch"))
+  }
+
+  /** A new, empty version `ver` of an index of `indexType` at `dir`. */
+  private def newVersion(spark: SparkSession, dir: String, ver: Long, indexType: String): Root = {
+    Commit.startVersion(spark, dir, ver)
+    Root(dir, ver, indexType, Map.empty, Map.empty)
+  }
+
+  /** Write the next batch of `base` with `write`, given the batch's
+    * directory (no commit names it, so a crashed batch's leftover is
+    * overwritten), and commit it with `descriptors`. Returns the commit. */
+  private def commitBatch(spark: SparkSession, base: Root,
+      descriptors: Map[String, DescriptorRow])(write: String => Unit): Root = {
+    val (table, batch) = (tableOf(base.indexType), base.files.map(_.gen).maxOption.fold(0L)(_ + 1))
+    val out = s"${Commit.version(base.version)}/$table/batch=$batch"
+    write(s"${base.dir}/$out")
+    val done = base.copy(descriptors = descriptors,
+      tables = Commit.record(spark, base.dir, base.tables, table, batch, out)._1)
+    commit(spark, done)
+    done
+  }
 
   /** Canonical file identity used everywhere (postings `file` column,
     * descriptors, pruning maps): the scheme-less URI path. Hadoop
@@ -144,7 +224,7 @@ object IndexBuilder {
     * `util/HdfsUtils.java:78-102` does). */
   def listDataFiles(spark: SparkSession, dataDir: String): Seq[SourceFile] = {
     val path = new Path(dataDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = path.getFileSystem(Commit.conf(spark))
     def walk(p: Path): Seq[SourceFile] = {
       val st = fs.getFileStatus(p)
       if (st.isDirectory) {
@@ -162,26 +242,8 @@ object IndexBuilder {
     * build-side skip decision routes through these two helpers — the
     * checksum-mismatch semantics of `BlockIndexedFileInputFormat
     * .java:338-386`). */
-  def loadDescriptors(spark: SparkSession, indexRoot: String): Map[String, DescriptorRow] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val descPath = new Path(descriptorsDir(indexRoot))
-    if (!descPath.getFileSystem(conf).exists(descPath)) return Map.empty
-    // read on the driver, no Spark job; descriptors written before the
-    // checksum fields existed read back with the length+mtime defaults
-    // (no rebuild required)
-    val rows = Seq.newBuilder[DescriptorRow]
-    readParts(conf, descPath, FilterCompat.NOOP, more = true) { g =>
-      def opt(f: String, default: String) =
-        if (g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0) g.getString(f, 0)
-        else default
-      rows += DescriptorRow(
-        g.getString("sourcePath", 0), g.getLong("length", 0), g.getLong("modificationTime", 0),
-        listOf(g, "columns").map(_.getString(0, 0)),
-        g.getString("indexType", 0), g.getInteger("indexVersion", 0),
-        opt("checksumAlgorithm", "length+mtime"), opt("checksum", ""))
-    }
-    rows.result().map(d => d.sourcePath -> d).toMap
-  }
+  def loadDescriptors(spark: SparkSession, indexRoot: String): Map[String, DescriptorRow] =
+    readRoot(spark, indexRoot).fold(Map.empty[String, DescriptorRow])(_.descriptors)
 
   /** The filesystem's NATIVE content checksum for a file, as
     * (algorithm, hex): HDFS answers from already-stored block CRCs —
@@ -241,8 +303,7 @@ object IndexBuilder {
     freshDescriptor(descriptors, f).filter { d =>
       d.checksum.isEmpty || {
         val p = new Path(f.path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        checksumMatches(fs, p, d)
+        checksumMatches(p.getFileSystem(Commit.conf(spark)), p, d)
       }
     }
 
@@ -319,20 +380,18 @@ object IndexBuilder {
       .join(broadcast(gens), "file")
   }
 
-  private def writePostings(postings: DataFrame, indexRoot: String, mode: SaveMode): Unit =
+  /** The postings table's writer: one directory per column, each sorted
+    * by value. */
+  private def postingsWriter(postings: DataFrame): DataFrameWriter[Row] =
     postings
       .repartition(col("column"))
       .sortWithinPartitions("column", "value", "file")
-      .write.mode(mode)
+      .write.mode(SaveMode.Overwrite)
       .partitionBy("column")
-      .parquet(postingsDir(indexRoot))
 
-  private[build] def writeDescriptors(
-      spark: SparkSession, descriptors: Seq[DescriptorRow], indexRoot: String): Unit = {
-    import spark.implicits._
-    spark.createDataset(descriptors).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(descriptorsDir(indexRoot))
-  }
+  private def writePostings(spark: SparkSession, keys: IndexKeys, capBytes: Long)
+      (files: Seq[SourceFile], out: String): Unit =
+    postingsWriter(postingsFor(spark, files, keys, capBytes)).parquet(out)
 
   /** One descriptor row per file of an index of type `indexType`
     * (postings or bloom), with the content checksum when asked. */
@@ -344,7 +403,7 @@ object IndexBuilder {
         if (!withChecksums) ("length+mtime", "")
         else {
           val p = new Path(f.path)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val fs = p.getFileSystem(Commit.conf(spark))
           fsChecksum(fs, p).getOrElse(("md5", contentMd5(fs, p)))
         }
       DescriptorRow(
@@ -382,16 +441,14 @@ object IndexBuilder {
     require(keys.nonEmpty, "at least one key to index")
     val names = keys.map(_._1)
     if (!overwrite && isFresh(spark, dataDir, indexRoot, names)) return
-    val files = listDataFiles(spark, dataDir)
-    writePostings(postingsFor(spark, files, keys, capBytes), indexRoot, SaveMode.Overwrite)
-    writeDescriptors(spark, descriptorRows(spark, files, names, withChecksums,
-      graft.model.IndexType.PostingsParquet), indexRoot)
+    refreshStale(spark, dataDir, names, indexRoot, withChecksums, IndexType.PostingsParquet,
+      overwrite = true)(writePostings(spark, keys, capBytes))
   }
 
   /** Incrementally index only the files with no fresh descriptor (new
     * files, changed files, or files missing a requested column) and
-    * APPEND their postings — the maintenance path the reference runs as
-    * skip-if-`hasPreviousIndex` re-submission
+    * commit their postings as a new batch — the maintenance path the
+    * reference runs as skip-if-`hasPreviousIndex` re-submission
     * (`AbstractBlockIndexingJob.java:249-277, 359-364`). Stale rows for
     * rebuilt files stay in the postings table; the `gen` stamp makes
     * them inert at query time. Returns the files (re)indexed. */
@@ -414,17 +471,18 @@ object IndexBuilder {
       withChecksums: Boolean = false): Seq[SourceFile] = {
     require(keys.nonEmpty, "at least one key to index")
     refreshStale(spark, dataDir, keys.map(_._1), indexRoot, withChecksums,
-        graft.model.IndexType.PostingsParquet) { stale =>
-      writePostings(postingsFor(spark, stale, keys, capBytes), indexRoot, SaveMode.Append)
-    }
+      IndexType.PostingsParquet)(writePostings(spark, keys, capBytes))
   }
 
-  /** The incremental maintenance step shared by the postings and bloom
-    * builds: the files of `dataDir` with no verified-fresh descriptor
-    * covering `names` (new files, changed files, or files missing a
-    * requested name; every file when `overwrite`) are handed to `write`,
-    * then the descriptors are rewritten. Returns those files (Nil, and
-    * nothing written, when every file is fresh).
+  /** The maintenance step shared by the postings and bloom builds: the
+    * files of `dataDir` with no verified-fresh descriptor covering
+    * `names` (new files, changed files, or files missing a requested
+    * name; every file when `overwrite` or when the root holds no index
+    * of `indexType`) are handed to `write` with the directory to write
+    * their rows to — batch 0 of a new version when `overwrite` or no such
+    * index, else the next batch of the live version — and the written
+    * files and the descriptors are committed. Returns those files (Nil,
+    * and nothing written, when every file is fresh).
     *
     * One VERIFIED freshness decision per file is shared by the staleness
     * split and the column union: using the unverified fingerprint for
@@ -444,15 +502,16 @@ object IndexBuilder {
       root: String,
       withChecksums: Boolean,
       indexType: String,
-      overwrite: Boolean = false)(write: Seq[SourceFile] => Unit): Seq[SourceFile] = {
+      overwrite: Boolean = false)(write: (Seq[SourceFile], String) => Unit): Seq[SourceFile] = {
     val files = listDataFiles(spark, dataDir)
-    val existing = if (overwrite) Map.empty[String, DescriptorRow] else loadDescriptors(spark, root)
+    val live = readRoot(spark, root)
+    val prev = live.filter(r => !overwrite && r.indexType == indexType)
+    val existing = prev.fold(Map.empty[String, DescriptorRow])(_.descriptors)
     val verifiedFresh: Map[String, Option[DescriptorRow]] =
       files.map(f => f.path -> freshDescriptorVerified(spark, existing, f)).toMap
     val stale = files.filterNot(f =>
       verifiedFresh(f.path).exists(d => names.forall(d.columns.contains)))
     if (stale.isEmpty) return Nil
-    write(stale)
     val currentPaths = files.map(_.path).toSet
     val stalePaths = stale.map(_.path).toSet
     val kept = existing.values.toSeq
@@ -463,14 +522,16 @@ object IndexBuilder {
           .map(_.columns).getOrElse(Seq.empty)
         d.copy(columns = (prevCols ++ names).distinct)
       }
-    writeDescriptors(spark, kept ++ refreshed, root)
+    val base = prev.getOrElse(newVersion(spark, root, live.fold(0L)(_.version + 1), indexType))
+    commitBatch(spark, base, (kept ++ refreshed).map(d => d.sourcePath -> d).toMap)(write(stale, _))
     stale
   }
 
   /** The postings table as a first-class DataFrame (S5: the reference's
-    * index-as-input verification path, `ScanUsingIndexJob.java:218-224`). */
+    * index-as-input verification path, `ScanUsingIndexJob.java:218-224`):
+    * the committed files, columns `file, value, ranges, gen, column`. */
   def postings(spark: SparkSession, indexRoot: String): DataFrame =
-    spark.read.parquet(postingsDir(indexRoot))
+    rows(spark, rootOrThrow(spark, indexRoot))
 
   /** One postings row: the byte ranges of `file` that hold `value` of
     * `column`, stamped with the file's generation at build time, with
@@ -478,28 +539,27 @@ object IndexBuilder {
   final case class Posting(
       file: String, column: String, value: String, ranges: Seq[Block], gen: Long, leaves: Seq[Pred])
 
-  /** The postings rows matching any of `leaves` (EQ/BETWEEN), read on
-    * the driver with no Spark job — the reference's `getSplits` opens
-    * its MapFile index readers the same way
-    * (`BlockIndexedFileInputFormat.java:110-187`). Only the
-    * `column=<c>` directories the leaves name are opened; EQ values are
-    * pushed to parquet as one IN filter per column, so row-group min/max
-    * and dictionary skipping work on the value-sorted files. A column
+  /** The postings rows of index `idx` matching any of `leaves`
+    * (EQ/BETWEEN), read on the driver with no Spark job — the
+    * reference's `getSplits` opens its MapFile index readers the same
+    * way (`BlockIndexedFileInputFormat.java:110-187`). Only the committed
+    * files under the `column=<c>` directories the leaves name are
+    * opened; EQ values are pushed to parquet as one IN filter per
+    * column, so row-group min/max and dictionary skipping work on the
+    * value-sorted files. A column
     * with a BETWEEN leaf is read unfiltered. Every row is re-checked
     * with the exact [[Pred.leafMatches]] before it counts toward
     * `limit`; reading stops once `limit` rows are held, so a caller that
     * passes `cap + 1` sees an overflow as `cap + 1` rows. Generations
     * are NOT filtered here.
     *
-    * The postings root is listed ONCE: a column absent from that
-    * listing only holds nulls and contributes no rows. None when the
-    * root is missing, or when a directory or file of that listing
-    * vanishes during the read (a compaction's swap caught between or
-    * under the reads): that is "unknown", never "no match". */
+    * Nothing is listed: a column with no committed file only holds
+    * nulls and contributes no rows. None when a committed file is gone
+    * (a later commit deleted it under the read): that is "unknown",
+    * never "no match". */
   def lookupPostings(
-      spark: SparkSession, indexRoot: String, leaves: Seq[Pred], limit: Int): Option[Seq[Posting]] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(postingsDir(indexRoot))
+      spark: SparkSession, idx: Root, leaves: Seq[Pred], limit: Int): Option[Seq[Posting]] = {
+    val conf = Commit.conf(spark)
     val out = IndexedSeq.newBuilder[Posting]
     var n = 0
     val byColumn = leaves.groupBy {
@@ -508,46 +568,31 @@ object IndexBuilder {
       case other                  => sys.error(s"not a leaf: $other")
     }
     try {
-      val present = root.getFileSystem(conf).listStatus(root).map(_.getPath.getName).toSet
       for ((c, ls) <- byColumn.toSeq.sortBy(_._1)) {
-        val dir = s"column=${ExternalCatalogUtils.escapePathName(c)}"
+        val dir = s"/column=${ExternalCatalogUtils.escapePathName(c)}/"
         val filter =
           if (ls.exists(_.isInstanceOf[Between])) FilterCompat.NOOP
           else FilterCompat.get(FilterApi.in(FilterApi.binaryColumn("value"),
             ls.collect { case Eq(_, v) => Binary.fromString(v) }.toSet.asJava))
-        if (present(dir)) readParts(conf, new Path(root, dir), filter, more = n < limit) { g =>
-          val value = g.getString("value", 0)
-          val matched = ls.filter(Pred.leafMatches(_, value))
-          if (matched.nonEmpty) {
-            val ranges = listOf(g, "ranges").map(_.getGroup(0, 0))
-              .map(b => Block(b.getLong("start", 0), b.getLong("end", 0)))
-            out += Posting(g.getString("file", 0), c, value, ranges, g.getLong("gen", 0), matched)
-            n += 1
+        for (f <- idx.files if f.path.contains(dir) && n < limit)
+          readFile(conf, new Path(idx.dir, f.path), filter, more = n < limit) { g =>
+            val value = g.getString("value", 0)
+            val matched = ls.filter(Pred.leafMatches(_, value))
+            if (matched.nonEmpty) {
+              val ranges = listOf(g, "ranges").map(_.getGroup(0, 0))
+                .map(b => Block(b.getLong("start", 0), b.getLong("end", 0)))
+              out += Posting(g.getString("file", 0), c, value, ranges, g.getLong("gen", 0), matched)
+              n += 1
+            }
           }
-        }
       }
       Some(out.result())
     } catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** Read the parquet part-files under `dir` (and its subdirectories) on
-    * the driver, row by row as parquet-mr groups, while `more` holds.
-    * Names starting with `_` or `.` are skipped, so a directory holding
-    * only `_SUCCESS` reads as no rows. A missing `dir`, subdirectory or
-    * part-file throws `FileNotFoundException`. */
-  private[graft] def readParts(conf: Configuration, dir: Path, filter: FilterCompat.Filter,
-      more: => Boolean)(row: Group => Unit): Unit = {
-    val (subdirs, parts) = dir.getFileSystem(conf).listStatus(dir).toSeq
-      .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.getName)
-      .partition(_.isDirectory)
-    for (part <- parts.map(_.getPath) if more) readFile(conf, part, filter, more)(row)
-    for (sub <- subdirs.map(_.getPath) if more) readParts(conf, sub, filter, more)(row)
-  }
-
-  /** Read parquet file `part` on the driver as [[readParts]] reads each
-    * of its part-files; `columns` projects it to the named columns it
-    * has (Nil = all of them). A missing `part` throws
+  /** Read parquet file `part` on the driver, row by row as parquet-mr
+    * groups, while `more` holds; `columns` projects it to the named
+    * columns it has (Nil = all of them). A missing `part` throws
     * `FileNotFoundException`. */
   private[graft] def readFile(conf: Configuration, part: Path, filter: FilterCompat.Filter,
       more: => Boolean, columns: Seq[String] = Nil)(row: Group => Unit): Unit = {
@@ -630,49 +675,39 @@ object IndexBuilder {
     * forever; without periodic compaction the dead rows cost lookup I/O
     * even though the gen filter keeps them semantically inert. Safe to
     * run any time — the surviving rows are exactly the ones query-side
-    * lookups honor. Returns (rowsBefore, rowsAfter).
+    * lookups honor. Returns (rowsBefore, rowsAfter), from the committed
+    * files' footers.
     *
-    * The rewrite stages into a sibling directory then swaps, so a crash
-    * mid-compact leaves the old postings intact (descriptors are
-    * untouched entirely). */
-  def compact(spark: SparkSession, indexRoot: String): (Long, Long) = {
+    * The rewrite is batch 0 of a new version, committed with the same
+    * descriptors: a crash before the commit leaves the old index as it
+    * was. */
+  def compact(spark: SparkSession, indexRoot: String): (Long, Long) =
+    compactRoot(spark, indexRoot)(postingsWriter)
+
+  /** The compaction shared by the postings and bloom roots: `writer`
+    * lays out the rows of `indexRoot` whose (file, gen) is a live
+    * descriptor's as batch 0 of a new version, which is committed.
+    * Returns the committed rows before and after. */
+  private[build] def compactRoot(spark: SparkSession, indexRoot: String)
+      (writer: DataFrame => DataFrameWriter[Row]): (Long, Long) = {
     import spark.implicits._
-    val descs = loadDescriptors(spark, indexRoot)
-    val live = spark.createDataset(
-      descs.values.map(d => (d.sourcePath, d.modificationTime)).toSeq)
+    val idx = rootOrThrow(spark, indexRoot)
+    val live = idx.descriptors.values.map(d => (d.sourcePath, d.modificationTime)).toSeq
       .toDF("file", "gen")
-    val all = postings(spark, indexRoot)
-    val before = all.count()
-    val stagingDir = s"$indexRoot/postings_compacting"
-    all.join(broadcast(live), Seq("file", "gen"), "left_semi")
-      .repartition(col("column"))
-      .sortWithinPartitions("column", "value", "file")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("column")
-      .parquet(stagingDir)
-    val fs = new Path(indexRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    stagedSwap(fs, new Path(stagingDir),
-      new Path(postingsDir(indexRoot)), new Path(s"$indexRoot/postings_old"))
-    spark.catalog.refreshByPath(postingsDir(indexRoot))
-    val after = postings(spark, indexRoot).count()
-    (before, after)
+    val before = footerRows(spark, idx)
+    val done = commitBatch(spark, newVersion(spark, indexRoot, idx.version + 1, idx.indexType),
+        idx.descriptors) { out =>
+      writer(rows(spark, idx).join(broadcast(live), Seq("file", "gen"), "left_semi")).parquet(out)
+    }
+    (before, footerRows(spark, done))
   }
 
-  /** Swap `staging` into `finalDir` with a backup: rename results are
-    * CHECKED (Hadoop reports most failures as `false`, not exceptions)
-    * and a failed second rename restores the original before throwing —
-    * never delete the only live copy. */
-  private[build] def stagedSwap(
-      fs: FileSystem, staging: Path, finalDir: Path, backup: Path): Unit = {
-    fs.delete(backup, true)
-    if (!fs.rename(finalDir, backup))
-      throw new java.io.IOException(s"compact: cannot move $finalDir aside to $backup")
-    if (!fs.rename(staging, finalDir)) {
-      fs.rename(backup, finalDir) // restore; best-effort by construction
-      throw new java.io.IOException(
-        s"compact: cannot move $staging into place; original restored")
-    }
-    fs.delete(backup, true)
+  /** The rows of `r`'s committed files, from their parquet footers. */
+  private def footerRows(spark: SparkSession, r: Root): Long = {
+    val conf = Commit.conf(spark)
+    r.files.map(f => ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(new Path(r.dir, f.path), conf), ParquetMetadataConverter.NO_FILTER)
+      .getBlocks.asScala.map(_.getRowCount).sum).sum
   }
 
   /** Typed view of the postings (the model contract of FIXTURES.md §2). */

@@ -167,10 +167,12 @@ object Layout {
         .filter(col("bucket").isNotNull).limit(cap + 1).collect()
       if (rows.isEmpty || rows.length > cap) base
       else {
-        val keys = rows.map(_.getLong(0)).distinct
+        // sorted, so the plan is a function of the values, not of the
+        // probe's collect order
+        val keys = rows.map(_.getLong(0)).distinct.sorted
         val pbs = keys
           .map(b => (((b % ProbePartitions) + ProbePartitions) % ProbePartitions).toInt)
-          .distinct.toSeq
+          .distinct.sorted.toSeq
         base.filter(col("pb").isin(pbs: _*) && col("bucket").isin(keys.toSeq: _*))
       }
     }

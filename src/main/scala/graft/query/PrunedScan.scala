@@ -78,7 +78,8 @@ object PruneStats {
 /** Index-consulting scan pruning — the Spark rebuild of the reference's
   * `getSplits` (`retrieval/BlockIndexedFileInputFormat.java:110-187`):
   * ONE per-file decision from whatever index covers each file. The data
-  * files are listed once and each index root's descriptors read once;
+  * files are listed once and each index root's meta read once — its
+  * descriptors and its committed file list come from that one read;
   * every (file, leaf) then gets EVIDENCE from the roots whose fresh
   * descriptor covers the leaf's column — "these byte ranges" or unknown —
   * and the interval algebra folds it through the EQ/AND/OR tree
@@ -88,26 +89,26 @@ object PruneStats {
   *
   * The descriptor's `indexType` picks the evidence reader:
   * {{{
-  * POSTINGS_PARQUET  ranges of the value's postings row (Nil: value absent);
-  *                   unknown when the lookup passes its cap or the
-  *                   postings root is missing or moves mid-read
+  * POSTINGS_PARQUET  ranges of the value's postings row (Nil: value absent,
+  *                   or no committed file of its column); unknown when
+  *                   the lookup passes its cap or a committed file is gone
   * BLOOM_PARQUET     EQ leaf only: negative sketch -> Nil, positive ->
   *                   the whole file; unknown without a live sketch or
-  *                   when the blooms root is missing or vanishes
+  *                   when a committed file is gone
   * }}}
   * A leaf with evidence from several roots gets the intersection.
   *
   * Fallback soundness (R3): a file with no fresh descriptor covering a
-  * leaf — missing index, changed length/mtime or checksum, unindexed
-  * column — gives unknown for it, exactly like the reference's
-  * checksum-mismatch path (`:338-386`): AND with an unknown side is the
-  * other side, OR with one is unknown, so pruning only ever drops files
-  * the evidence proves irrelevant, never rows.
+  * leaf — missing index (a root without a meta), changed length/mtime
+  * or checksum, unindexed column — gives unknown for it, exactly like
+  * the reference's checksum-mismatch path (`:338-386`): AND with an
+  * unknown side is the other side, OR with one is unknown, so pruning
+  * only ever drops files the evidence proves irrelevant, never rows.
   *
-  * Scale shape: the decision launches no Spark job. The driver reads the
-  * descriptors, the postings of the predicate's columns
-  * (`IndexBuilder.lookupPostings`: value-pruned by parquet min/max and
-  * dictionaries thanks to the sorted write), the bloom sketches
+  * Scale shape: the decision launches no Spark job and lists no index
+  * directory. The driver reads the meta, the postings of the predicate's
+  * columns (`IndexBuilder.lookupPostings`: value-pruned by parquet
+  * min/max and dictionaries thanks to the sorted write), the bloom sketches
   * (`BloomIndex.readSketches`) and the data schema from one footer
   * (`IndexBuilder.dataSchema`) — the same place and the same way the
   * reference prunes (driver-side getSplits opening its MapFile
@@ -148,7 +149,7 @@ object PrunedScanner extends Logging {
 
   /** The evidence reader of `root` for `leaves`, or None when no
     * descriptor of the root covers a leaf it can answer (nothing is read
-    * past the descriptors then). Freshness is verified once per file:
+    * past the meta then). Freshness is verified once per file:
     * descriptors built withChecksums also compare the filesystem content
     * checksum, so an mtime-preserving rewrite gives unknown instead of
     * serving stale evidence. */
@@ -157,7 +158,8 @@ object PrunedScanner extends Logging {
       root: String,
       leaves: Seq[Pred],
       maxPostings: Int): Option[Evidence] = {
-    val descriptors = IndexBuilder.loadDescriptors(spark, root)
+    val idx = IndexBuilder.readRoot(spark, root)
+    val descriptors = idx.fold(Map.empty[String, IndexBuilder.DescriptorRow])(_.descriptors)
     def covered(indexType: String): Set[String] =
       descriptors.values.filter(_.indexType == indexType).flatMap(_.columns).toSet
     val postingsCols = covered(IndexType.PostingsParquet)
@@ -171,7 +173,7 @@ object PrunedScanner extends Logging {
     def live(file: String, gen: Long) = descriptors.get(file).exists(_.modificationTime == gen)
     val postings: Option[Map[(String, Pred), Seq[Block]]] =
       if (postingsLeaves.isEmpty) Some(Map.empty)
-      else IndexBuilder.lookupPostings(spark, root, postingsLeaves, maxPostings + 1) match {
+      else idx.flatMap(IndexBuilder.lookupPostings(spark, _, postingsLeaves, maxPostings + 1)) match {
         case Some(rows) if rows.length <= maxPostings =>
           Some(rows.filter(p => live(p.file, p.gen))
             .flatMap(p => p.leaves.map(l => (p.file, l) -> p.ranges))
@@ -180,16 +182,16 @@ object PrunedScanner extends Logging {
             .toMap)
         case found =>
           logWarning(s"PrunedScan: postings of $root " +
-            (if (found.isEmpty) "are missing or moved" else s"exceed $maxPostings rows") +
+            (if (found.isEmpty) "lost a committed file" else s"exceed $maxPostings rows") +
             " — no postings evidence from this root")
           None
       }
     val sketches: Option[Map[(String, String), BloomFilter]] =
       if (bloomLeaves.isEmpty) Some(Map.empty)
-      else try Some(BloomIndex.readSketches(spark, root, bloomLeaves.map(_.column).toSet,
+      else try idx.map(BloomIndex.readSketches(spark, _, bloomLeaves.map(_.column).toSet,
           descriptors.view.mapValues(_.modificationTime).toMap))
       catch { case _: java.io.FileNotFoundException =>
-        logWarning(s"PrunedScan: blooms of $root are missing or moved — no bloom evidence")
+        logWarning(s"PrunedScan: blooms of $root lost a committed file — no bloom evidence")
         None
       }
     val fresh = scala.collection.mutable.Map.empty[String, Option[IndexBuilder.DescriptorRow]]

@@ -33,11 +33,12 @@ object RangeScan {
     // caller path (file:///...) must be canonicalized for BOTH the
     // descriptor lookup and the postings filter or it matches zero rows.
     val canonicalFile = IndexBuilder.canonicalPath(file)
-    val liveGen = IndexBuilder.loadDescriptors(spark, indexRoot)
-      .get(canonicalFile).map(_.modificationTime)
-    val postings = IndexBuilder.lookupPostings(spark, indexRoot, Seq(Eq(column, value)), Int.MaxValue)
+    val idx = IndexBuilder.readRoot(spark, indexRoot).getOrElse(
+      throw new java.io.FileNotFoundException(s"no committed index at $indexRoot"))
+    val liveGen = idx.descriptors.get(canonicalFile).map(_.modificationTime)
+    val postings = IndexBuilder.lookupPostings(spark, idx, Seq(Eq(column, value)), Int.MaxValue)
       .getOrElse(throw new java.io.FileNotFoundException(
-        s"no postings under $indexRoot"))
+        s"a committed postings file of $indexRoot is gone"))
     val ranges = postings
       .filter(p => p.file == canonicalFile && liveGen.contains(p.gen))
       .flatMap(_.ranges)

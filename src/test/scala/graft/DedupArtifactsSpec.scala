@@ -511,4 +511,13 @@ class DedupArtifactsSpec extends AnyFunSuite {
       assert(lookup(bId) == bSim, s"b_sim does not correspond to b_id=$bId")
     }
   }
+
+  test("pruneToProbe: probes with the same buckets in another row order plan identically") {
+    import spark.implicits._
+    val base = spark.range(200).select(col("id").as("bucket"),
+      pmod(col("id"), lit(graft.build.Layout.ProbePartitions)).cast("int").as("pb"))
+    def plan(buckets: Seq[Long]): String =
+      graft.build.Layout.pruneToProbe(base, buckets.toDF("bucket")).queryExecution.optimizedPlan.toString
+    assert(plan(Seq(17L, 3L, 140L, 9L)) == plan(Seq(9L, 140L, 3L, 17L)))
+  }
 }

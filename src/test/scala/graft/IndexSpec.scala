@@ -56,9 +56,7 @@ class IndexSpec extends AnyFunSuite {
       assert(r.forall(b => b.start < b.end))
     }
     // descriptor model round-trip
-    import spark.implicits._
-    val d = spark.read.parquet(IndexBuilder.descriptorsDir(indexRoot))
-      .as[IndexBuilder.DescriptorRow].head()
+    val d = IndexBuilder.loadDescriptors(spark, indexRoot).values.head
     val full = IndexBuilder.toDescriptor(d)
     assert(full.sourcePath == d.sourcePath && full.checksum.length == d.length)
     assert(full.indexedFields.map(_.fieldName) == d.columns)

@@ -36,8 +36,7 @@ class StreamingIndexSpec extends AnyFunSuite {
     q1.awaitTermination()
     val files1 = IndexBuilder.listDataFiles(spark, dataDir).map(_.path).toSet
     import spark.implicits._
-    val desc1 = spark.read.parquet(IndexBuilder.descriptorsDir(indexRoot))
-      .as[IndexBuilder.DescriptorRow].collect().map(_.sourcePath).toSet
+    val desc1 = IndexBuilder.loadDescriptors(spark, indexRoot).values.map(_.sourcePath).toSet
     assert(desc1 == files1)
 
     // two more files arrive
@@ -48,8 +47,7 @@ class StreamingIndexSpec extends AnyFunSuite {
       spark, dataDir, Seq("kind"), indexRoot, s"$work/ckpt2")
     q2.awaitTermination()
     val files2 = IndexBuilder.listDataFiles(spark, dataDir).map(_.path).toSet
-    val desc2 = spark.read.parquet(IndexBuilder.descriptorsDir(indexRoot))
-      .as[IndexBuilder.DescriptorRow].collect().map(_.sourcePath).toSet
+    val desc2 = IndexBuilder.loadDescriptors(spark, indexRoot).values.map(_.sourcePath).toSet
     assert(desc2 == files2 && files2.size == 4)
 
     // index-pruned scan sees rows from both generations of arrival

@@ -2,18 +2,28 @@ package graft.query
 
 import graft.Graft
 import graft.build.IndexBuilder
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
+import java.io.File
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataInputStream, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.util.Try
 
 /** The prune decision runs on the driver: the postings probe equals the
   * Spark postings lookup, no Spark job is launched (postings and bloom
   * roots alike), unindexed leaves are unknown to the interval algebra,
   * and every branch that cannot trust an index (the lookup cap, a
-  * postings or blooms root caught between a compaction's renames)
-  * degrades to a full scan whose rows equal a plain read. */
+  * committed file gone) degrades to a full scan whose rows equal a
+  * plain read. An index root commits like a maintained store: a rebuild
+  * cancelled or running alongside, and a compaction or an incremental
+  * build committed at any access of a decision, never cost a matching
+  * row, and a filesystem registered only in the session conf serves the
+  * whole lifecycle. */
 class DriverPruneSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -54,6 +64,25 @@ class DriverPruneSpec extends AnyFunSuite {
   private def fullScanIds(pred: Pred): Set[Long] =
     ids(spark.read.parquet(dataDir).filter(pred.toColumn))
 
+  private def committed(root: String): IndexBuilder.Root = IndexBuilder.readRoot(spark, root).get
+
+  /** A copy of the prepared index at `$work/<name>`. */
+  private def copyOfIndex(name: String): String = {
+    prepared
+    FileUtils.copyDirectory(new File(indexRoot), new File(s"$work/$name"))
+    s"$work/$name"
+  }
+
+  private def withRaceFs[T](body: => T): T = {
+    spark.conf.set("fs.racefs.impl", classOf[RaceFs].getName)
+    spark.conf.set("fs.racefs.impl.disable.cache", "true")
+    try body finally {
+      RaceFs.disarm()
+      spark.conf.unset("fs.racefs.impl")
+      spark.conf.unset("fs.racefs.impl.disable.cache")
+    }
+  }
+
   /** Jobs started while `body` runs. A marker job submitted afterwards
     * flushes the listener bus: its start event arrives after every
     * earlier one. */
@@ -81,7 +110,7 @@ class DriverPruneSpec extends AnyFunSuite {
     val leaves: Seq[Pred] = Seq(Eq("user_id", "3"), Eq("user_id", "11"), Eq("event_type", "t1"),
       Between("user_id", Some(BigDecimal(5)), Some(BigDecimal(7)), loInc = true, hiInc = false),
       Eq("event_type", "absent"))
-    val got = IndexBuilder.lookupPostings(spark, indexRoot, leaves, Int.MaxValue).get
+    val got = IndexBuilder.lookupPostings(spark, committed(indexRoot), leaves, Int.MaxValue).get
       .map(p => (p.file, p.column, p.value, p.ranges, p.gen)).toSet
     import spark.implicits._
     val want = IndexBuilder.postings(spark, indexRoot)
@@ -92,7 +121,7 @@ class DriverPruneSpec extends AnyFunSuite {
       .toSet
     assert(want.nonEmpty && got == want)
     // the limit stops the read
-    assert(IndexBuilder.lookupPostings(spark, indexRoot, leaves, 3).get.size == 3)
+    assert(IndexBuilder.lookupPostings(spark, committed(indexRoot), leaves, 3).get.size == 3)
   }
 
   test("the prune decision and transparent planning launch no Spark job") {
@@ -154,32 +183,19 @@ class DriverPruneSpec extends AnyFunSuite {
     assert(ids(eitherDf) == fullScanIds(either))
   }
 
-  test("a blooms root that vanishes during the read, or is missing, falls back to a full scan") {
+  test("a committed bloom file that is gone falls back to a full scan") {
     bloomed
     val pred: Pred = Eq("id", "1234")
     val (_, fresh) = PrunedScanner.scanWithReport(spark, dataDir, pred, bloomRoot)
     assert(fresh.fallbackFiles == 0 && fresh.selectedFiles < fresh.totalFiles)
-    val blooms = graft.build.BloomIndex.bloomsDir(bloomRoot)
-    spark.conf.set("fs.racefs.impl", classOf[RaceFs].getName)
-    spark.conf.set("fs.racefs.impl.disable.cache", "true")
-    try {
-      RaceFs.vanishOnList(blooms, blooms, s"$bloomRoot/blooms_old")
-      val (df, report) = PrunedScanner.scanWithReport(spark, dataDir, pred, s"racefs://$bloomRoot")
-      assert(RaceFs.fired)
-      assert(report.selectedFiles == 0 && report.fallbackFiles == report.totalFiles)
-      assert(ids(df) == fullScanIds(pred) && ids(df).nonEmpty)
-    } finally {
-      RaceFs.disarm()
-      spark.conf.unset("fs.racefs.impl")
-      spark.conf.unset("fs.racefs.impl.disable.cache")
-    }
-    val fs = new Path(bloomRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new Path(blooms), new Path(s"$bloomRoot/blooms_moved")))
+    val file = new File(bloomRoot, committed(bloomRoot).files.head.path)
+    val aside = new File(s"$work/bloom_aside")
+    FileUtils.moveFile(file, aside)
     try {
       val (df, report) = PrunedScanner.scanWithReport(spark, dataDir, pred, bloomRoot)
       assert(report.selectedFiles == 0 && report.fallbackFiles == report.totalFiles)
-      assert(ids(df) == fullScanIds(pred))
-    } finally fs.rename(new Path(s"$bloomRoot/blooms_moved"), new Path(blooms))
+      assert(ids(df) == fullScanIds(pred) && ids(df).nonEmpty)
+    } finally FileUtils.moveFile(aside, file)
   }
 
   test("postings-lookup cap: past it every file falls back and rows equal a full scan") {
@@ -196,51 +212,127 @@ class DriverPruneSpec extends AnyFunSuite {
     assert(fb2.isEmpty && sel2.toSet == files)
   }
 
-  test("a missing postings root falls back to a full scan; a missing column directory is no match") {
-    prepared
-    // an index caught between compact's two renames: postings/ moved
-    // aside, descriptors still fresh
-    val swapped = s"$work/index_swapped"
-    IndexBuilder.build(spark, dataDir, Columns, swapped)
-    val fs = new Path(swapped).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new Path(IndexBuilder.postingsDir(swapped)), new Path(s"$swapped/postings_old")))
+  test("a committed postings file that is gone falls back to a full scan; a column with no committed file is no match") {
+    val gone = copyOfIndex("index_gone")
+    val file = committed(gone).files.find(_.path.contains("/column=user_id/")).get
+    assert(new File(gone, file.path).delete())
     val pred: Pred = Eq("user_id", "3")
-    val (df, report) = PrunedScanner.scanWithReport(spark, dataDir, pred, swapped)
+    val (df, report) = PrunedScanner.scanWithReport(spark, dataDir, pred, gone)
     assert(report.fallbackFiles == report.totalFiles && report.selectedFiles == 0)
     assert(ids(df) == fullScanIds(pred) && ids(df).nonEmpty)
-    // `tag` holds only nulls: no column=tag directory, and EQ never
+    // `tag` holds only nulls: no committed column=tag file, and EQ never
     // matches null, so pruning every file is the right answer
-    assert(!fs.exists(new Path(s"${IndexBuilder.postingsDir(indexRoot)}/column=tag")))
+    assert(!committed(indexRoot).files.exists(_.path.contains("/column=tag/")))
     val tagPred: Pred = Eq("tag", "x")
     val (tagDf, tagReport) = PrunedScanner.scanWithReport(spark, dataDir, tagPred, indexRoot)
     assert(tagReport.selectedFiles == 0 && tagReport.fallbackFiles == 0)
     assert(tagDf.collect().toSeq == spark.read.parquet(dataDir).filter(tagPred.toColumn).collect().toSeq)
   }
 
-  test("postings swapped between two column reads fall back to a full scan, never no match") {
-    prepared
-    val raced = s"$work/index_raced"
-    IndexBuilder.build(spark, dataDir, Columns, raced)
-    // the index is read through `racefs`, known only to the session's
-    // conf (the FS cache is off, so no instance outlives the conf)
-    spark.conf.set("fs.racefs.impl", classOf[RaceFs].getName)
-    spark.conf.set("fs.racefs.impl.disable.cache", "true")
-    try {
-      // compact's first rename lands after the root listing and the
-      // event_type read, just before user_id's directory is listed
-      RaceFs.moveAsideOnList(s"${IndexBuilder.postingsDir(raced)}/column=user_id",
-        IndexBuilder.postingsDir(raced), s"$raced/postings_old")
-      val pred: Pred = And(Eq("event_type", "t2"), Eq("user_id", "4"))
-      val (_, Seq((sel, fb, report))) = PrunedScanner.selectFilesDetailed(
-        spark, dataDir, Seq(pred), Seq(s"racefs://$raced"), IndexBuilder.DefaultCapBytes)
+  /** Files of `dataDir` holding a row that matches `pred`. */
+  private def matching(pred: Pred): Set[String] =
+    spark.read.parquet(dataDir).filter(pred.toColumn)
+      .select(input_file_name()).collect().map(r => IndexBuilder.canonicalPath(r.getString(0))).toSet
+
+  /** Runs `body` with `listener` registered; returns once it has seen
+    * every job `body` ran. */
+  private def listening(listener: SparkListener)(body: => Unit): Unit = {
+    spark.sparkContext.addSparkListener(listener)
+    try jobsDuring(body) finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a rebuild cancelled in its write keeps the committed index: the same selection, full-scan rows") {
+    val root = copyOfIndex("index_cancelled")
+    val pred: Pred = Eq("user_id", "3")
+    val (before, _) = PrunedScanner.selectFiles(spark, dataDir, pred, root)
+    withRaceFs {
+      // the write job is cancelled as its first task creates a file
+      RaceFs.actOnCreate(root) {
+        spark.sparkContext.cancelAllJobs()
+        throw new java.io.IOException("the rebuild's write job was cancelled")
+      }
+      intercept[Exception](
+        IndexBuilder.build(spark, dataDir, Columns, s"racefs://$root", overwrite = true))
       assert(RaceFs.fired)
-      assert(sel.isEmpty && report.fallbackFiles == report.totalFiles)
-      assert(ids(spark.read.parquet(fb: _*).filter(pred.toColumn)) == fullScanIds(pred))
-      assert(fullScanIds(pred).nonEmpty)
-    } finally {
-      spark.conf.unset("fs.racefs.impl")
-      spark.conf.unset("fs.racefs.impl.disable.cache")
     }
+    val (df, report) = PrunedScanner.scanWithReport(spark, dataDir, pred, root)
+    assert(PrunedScanner.selectFiles(spark, dataDir, pred, root)._1 == before)
+    assert(report.fallbackFiles == 0 && report.selectedFiles == before.size)
+    assert(ids(df) == fullScanIds(pred) && ids(df).size == 250)
+  }
+
+  test("a rebuild running alongside decisions: every decision keeps every file with a matching row") {
+    val root = copyOfIndex("index_rebuilt")
+    val pred: Pred = Or(Eq("user_id", "3"), Eq("event_type", "t1"))
+    val kept = new java.util.concurrent.ConcurrentLinkedQueue[Try[Seq[String]]]()
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        kept.add(Try(PrunedScanner.selectFiles(spark, dataDir, pred, root)._1))
+    })(IndexBuilder.build(spark, dataDir, Columns, root, overwrite = true))
+    import scala.jdk.CollectionConverters._
+    val (decisions, want) = (kept.asScala.toSeq, matching(pred))
+    assert(decisions.size >= 2, "the rebuild ran no jobs")
+    for (d <- decisions) assert(d.toOption.exists(fs => want.subsetOf(fs.toSet)), s"$d")
+  }
+
+  test("a compaction or an incremental build committed at any access of a decision: full-scan rows, never an error") {
+    val pred: Pred = And(Eq("event_type", "t2"), Eq("user_id", "4"))
+    val want = fullScanIds(pred)
+    assert(want.nonEmpty)
+    for ((what, commit) <- Seq[(String, (String, String) => Unit)](
+        "compact" -> ((_, root) => IndexBuilder.compact(spark, root)),
+        "buildIncremental" -> ((data, root) => assert(
+          IndexBuilder.buildIncremental(spark, data, Columns, root).nonEmpty)))) {
+      val (data, built) = (s"$work/swept_data_$what", s"$work/swept_index_$what")
+      FileUtils.copyDirectory(new File(dataDir), new File(data))
+      IndexBuilder.build(spark, data, Columns, built)
+      val touched = new File(IndexBuilder.listDataFiles(spark, data).head.path)
+      val runs = withRaceFs {
+        Iterator.from(0).map { k =>
+          assert(k < 200, "the race kept firing")
+          val root = s"${built}_$k"
+          FileUtils.copyDirectory(new File(built), new File(root))
+          // a new mtime leaves one file stale for the incremental build
+          assert(touched.setLastModified(touched.lastModified() + 2000))
+          RaceFs.actOnAccess(root, k)(commit(data, root))
+          val out = Try {
+            val (_, Seq((sel, fb, _))) = PrunedScanner.selectFilesDetailed(
+              spark, data, Seq(pred), Seq(s"racefs://$root"), IndexBuilder.DefaultCapBytes)
+            ids(spark.read.parquet(sel ++ fb: _*).filter(pred.toColumn))
+          }
+          val fired = RaceFs.fired
+          RaceFs.disarm()
+          fired -> out
+        }.span(_._1) match { case (raced, rest) => raced.toList :+ rest.next() }
+      }
+      info(s"$what: ${runs.size - 1} accesses swept")
+      assert(runs.size > 3, s"$what: the sweep must cover the decision's accesses")
+      for (((_, out), i) <- runs.zipWithIndex)
+        assert(out.toOption.contains(want), s"$what committed at access $i: $out")
+    }
+  }
+
+  test("a filesystem registered only in the session conf serves build, buildIncremental, compact and a pruned scan") {
+    prepared
+    val confs = Seq("fs.idxfs.impl" -> classOf[IndexSessionFs].getName,
+      "fs.idxfs.impl.disable.cache" -> "true",
+      "fs.AbstractFileSystem.idxfs.impl" -> classOf[IndexSessionAfs].getName)
+    val data = s"$work/idxfs_data"
+    FileUtils.copyDirectory(new File(dataDir), new File(data))
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val (d, root) = (s"idxfs://$data", s"idxfs://$work/idxfs_index")
+      IndexBuilder.build(spark, d, Columns, root)
+      val touched = IndexBuilder.listDataFiles(spark, d).head.path
+      assert(new File(touched).setLastModified(new File(touched).lastModified() + 2000))
+      assert(IndexBuilder.buildIncremental(spark, d, Columns, root).map(_.path) == Seq(touched))
+      val (before, after) = IndexBuilder.compact(spark, root)
+      assert(after < before)
+      val pred: Pred = Eq("user_id", "3")
+      val (df, report) = PrunedScanner.scanWithReport(spark, d, pred, root)
+      assert(report.fallbackFiles == 0 && report.selectedFiles < report.totalFiles)
+      assert(ids(df) == fullScanIds(pred))
+    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
   test("RangeScan.readPosting serves the live postings through the driver lookup") {
@@ -255,14 +347,10 @@ class DriverPruneSpec extends AnyFunSuite {
 }
 
 /** The local filesystem under the `racefs` scheme. Armed with
-  * [[RaceFs.moveAsideOnList]], it renames one directory aside the first
-  * time a chosen directory is listed — a rename racing a reader; armed
-  * with [[RaceFs.vanishOnList]], a directory is gone for one listing of
-  * another and moved back once it returns, so it is gone for that reader
-  * only; armed with [[RaceFs.actOnAccess]], it runs an action (a
-  * commit landing at that point of a read) at one listing, status or
-  * open call under a path. [[RaceFs.listings]] counts directory
-  * listings. */
+  * [[RaceFs.actOnAccess]], it runs an action (a commit landing at that
+  * point of a read) at one listing, status or open call under a path;
+  * armed with [[RaceFs.actOnCreate]], at the first file created below a
+  * path. [[RaceFs.listings]] counts directory listings. */
 class RaceFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("racefs:///")
   override def listStatus(f: Path): Array[FileStatus] = {
@@ -273,6 +361,13 @@ class RaceFs extends RawLocalFileSystem {
     RaceFs.around("stat", f)(super.getFileStatus(f))
   override def open(f: Path, bufferSize: Int): FSDataInputStream =
     RaceFs.around("open", f)(super.open(f, bufferSize))
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream =
+    RaceFs.around("create", f)(super.create(f, overwrite, bufferSize, replication, blockSize, progress))
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream =
+    RaceFs.around("create", f)(
+      super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress))
 }
 
 object RaceFs {
@@ -285,23 +380,17 @@ object RaceFs {
   @volatile var fired = false
   val listings = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  def moveAsideOnList(listed: String, from: String, to: String): Unit =
-    arm(Arm((op, p) => op == "list" && p == listed, 0, () => {
-      move(from, to)
-      () => ()
-    }))
-
-  /** `moved` is at `aside` during the `skip + 1`-th listing of `listed`. */
-  def vanishOnList(listed: String, moved: String, aside: String, skip: Int = 0): Unit =
-    arm(Arm((op, p) => op == "list" && p == listed, skip, () => {
-      move(moved, aside)
-      () => move(aside, moved)
-    }))
-
   /** At the `skip + 1`-th listing, status or open call on `under` or
     * below it, run `act`. */
   def actOnAccess(under: String, skip: Int)(act: => Unit): Unit =
-    arm(Arm((_, p) => p == under || p.startsWith(s"$under/"), skip, () => {
+    arm(Arm((op, p) => op != "create" && (p == under || p.startsWith(s"$under/")), skip, () => {
+      act
+      () => ()
+    }))
+
+  /** At the first file created below `under`, run `act`. */
+  def actOnCreate(under: String)(act: => Unit): Unit =
+    arm(Arm((op, p) => op == "create" && p.startsWith(s"$under/"), 0, () => {
       act
       () => ()
     }))
@@ -312,9 +401,6 @@ object RaceFs {
     armed = Some(a)
     fired = false
   }
-
-  private def move(from: String, to: String): Unit =
-    java.nio.file.Files.move(java.nio.file.Paths.get(from), java.nio.file.Paths.get(to))
 
   private def around[T](op: String, f: Path)(call: => T): T = {
     val restore = on(op, f.toUri.getPath)
@@ -334,3 +420,14 @@ object RaceFs {
     }
   }
 }
+
+/** [[RaceFs]] under the `idxfs` scheme, which only the index root's
+  * session-conf spec registers. */
+class IndexSessionFs extends RaceFs {
+  override def getUri: java.net.URI = java.net.URI.create("idxfs:///")
+}
+
+/** [[IndexSessionFs]] for `FileContext`, which the meta's atomic rename
+  * uses. */
+class IndexSessionAfs(uri: java.net.URI, conf: Configuration)
+  extends DelegateToFileSystem(uri, new IndexSessionFs, conf, "idxfs", false)
