@@ -333,7 +333,7 @@ object Bench {
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","failed":$failed,"best_total":${fmt(bestTotal)}$prunePart,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(
-        s"${graft.dedup.DedupArtifacts.artifactBase}/bench_last.json"), json)
+        s"${graft.build.Artifact.base}/bench_last.json"), json)
     catch { case NonFatal(e) => System.err.println(s"[bench-warn] file write skipped: $e") }
     drain(spark, 30.seconds)
     spark.stop()
@@ -402,7 +402,7 @@ object Bench {
     * driver's 8-cpu scaling bench is a full-suite run, and before r20
     * it epoch-reset every tokenTable-reading query's floor each round
     * (12 floors flapped 32→8→32 per round, re-recording at ambient
-    * contention; verified by diffing DigestDump output at CPUS=8 vs 32
+    * contention; verified by diffing `Dev digests` output at CPUS=8 vs 32
     * — the only differing token). The trade: a constant-count
     * repartition edit alone no longer resets its floor (the regression
     * warning still fires); partitioning-column or node-shape changes
@@ -415,7 +415,7 @@ object Bench {
   }
 
   /** The normalized analyzed-plan string [[planDigest]] hashes — exposed
-    * so the DigestDump dev tool can diff two sessions' strings and
+    * so the `Dev digests` tool can diff two sessions' strings and
     * localize any session-dependent token that leaks through (each such
     * token is a spurious floor epoch reset). */
   private[graft] def normalizedAnalyzed(df: DataFrame): String =
@@ -437,7 +437,7 @@ object Bench {
     * this box are not signal. The q26 +32% regression of round 2 would
     * have been flagged in-round by exactly this check. */
   private def histPath(sfDir: String) = java.nio.file.Paths.get(
-    s"${graft.dedup.DedupArtifacts.artifactBase}/bench_prev_${new java.io.File(sfDir).getName}.txt")
+    s"${graft.build.Artifact.base}/bench_prev_${new java.io.File(sfDir).getName}.txt")
 
   /** One parsed history line: best time, the plan digest of the epoch
     * that set it, and the last observed (scanned, qualified) counters. */

@@ -12,7 +12,7 @@ package graft
   */
 object RepoRoot {
   def resolve(fileName: String): java.nio.file.Path = {
-    val base = java.nio.file.Paths.get(graft.dedup.DedupArtifacts.artifactBase)
+    val base = java.nio.file.Paths.get(graft.build.Artifact.base)
       .toAbsolutePath
     Option(base.getParent).getOrElse(base).resolve(fileName)
   }

@@ -36,15 +36,15 @@ object ScaleProbe {
       else Seq("q27_dedup_simhash", "q49_dedup_clusters", "q63_dedup_winnow",
         "q100_dedup_funnel", "q122_dup_degree_hist")
     val organic = args.length > 3 && args(3) == "organic"
-    val outDir = s"${graft.dedup.DedupArtifacts.artifactBase}/scale$factor" +
-      (if (organic) "organic" else "")
-
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Session.local(cpus)
 
-    val dest = new org.apache.hadoop.fs.Path(s"$outDir/documents.parquet")
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dest)) {
+    // the scaled corpus is one artifact of the SOURCE corpus per
+    // (factor, regime), fingerprinted on the two tables it replicates
+    val outDir = graft.build.Artifact.ensure(spark, srcDir,
+        s"scale$factor${if (organic) "organic" else ""}",
+        graft.build.Artifact.fingerprint(spark,
+          s"$srcDir/documents.parquet", s"$srcDir/embeddings.parquet")) { out =>
       val docs = Tables.documents(spark, srcDir)
       // re-key stride derived from the actual max id: a fixed 1e8 would
       // silently collide copies (and corrupt the scaled dedup structure)
@@ -64,23 +64,20 @@ object ScaleProbe {
         }
         .reduce(_ unionByName _)
         .repartition(32)
-        .write.parquet(dest.toString)
-    }
-    // the semantic queries (q28/q157/q158) read the embeddings table —
-    // replicate it with the same disjoint-id-range scheme. Organic
-    // regime: copy i's vectors are CIRCULARLY SHIFTED by i positions —
-    // an orthogonal transformation, so every intra-copy pairwise cosine
-    // is preserved EXACTLY (each copy keeps the original near-dup
-    // structure) while cross-copy cosines become mean-zero noise
-    // (~N(0, 1/sqrt(64))). NOTE the tail is not negligible at dim 64:
-    // P(cos >= 0.45) ~ 1e-4 per cross pair (measured 1e-4 on this
-    // data), so the scaled corpus gains accidental cross-copy pairs
-    // quadratically — exactly the rate truly INDEPENDENT new vectors
-    // would produce at this threshold/dimension, which is the honest
-    // organic-growth regime (10x-organic q28 rows: 16,786 vs 144 at
-    // 1x — dominated by those accidental pairs, like real ingest).
-    val edest = new org.apache.hadoop.fs.Path(s"$outDir/embeddings.parquet")
-    if (!fs.exists(edest)) {
+        .write.parquet(s"$out/documents.parquet")
+      // the semantic queries (q28/q157/q158) read the embeddings table —
+      // replicate it with the same disjoint-id-range scheme. Organic
+      // regime: copy i's vectors are CIRCULARLY SHIFTED by i positions —
+      // an orthogonal transformation, so every intra-copy pairwise cosine
+      // is preserved EXACTLY (each copy keeps the original near-dup
+      // structure) while cross-copy cosines become mean-zero noise
+      // (~N(0, 1/sqrt(64))). NOTE the tail is not negligible at dim 64:
+      // P(cos >= 0.45) ~ 1e-4 per cross pair (measured 1e-4 on this
+      // data), so the scaled corpus gains accidental cross-copy pairs
+      // quadratically — exactly the rate truly INDEPENDENT new vectors
+      // would produce at this threshold/dimension, which is the honest
+      // organic-growth regime (10x-organic q28 rows: 16,786 vs 144 at
+      // 1x — dominated by those accidental pairs, like real ingest).
       val emb = Tables.embeddings(spark, srcDir)
       val maxVid = emb.agg(max(col("vec_id"))).first().getLong(0)
       val estride = math.max(100000000L, maxVid + 1)
@@ -114,9 +111,9 @@ object ScaleProbe {
         }
         .reduce(_ unionByName _)
         .repartition(32)
-        .write.parquet(edest.toString)
+        .write.parquet(s"$out/embeddings.parquet")
     }
-    val n = spark.read.parquet(dest.toString).count()
+    val n = spark.read.parquet(s"$outDir/documents.parquet").count()
     println(s"[scale] corpus: $n docs (${factor}x of $srcDir)")
 
     names.foreach { name =>
@@ -205,7 +202,7 @@ object ScaleProbe {
             if (!graft.build.GenStore.isComplete(s, idx))
               AI.buildIvfPq(emb, idx, nlist = 16)
             val fsys = new org.apache.hadoop.fs.Path(idx)
-              .getFileSystem(s.sparkContext.hadoopConfiguration)
+              .getFileSystem(graft.build.Commit.conf(s))
             // the assignment table of the store's committed version
             def bytes(dir: String): Long = graft.build.GenStore.readMeta(s, dir).fold(-1L) { m =>
               val p = graft.build.GenTable.Ivf.path(graft.build.GenStore.root(dir, m))
@@ -271,15 +268,14 @@ object ScaleProbe {
           (s, d) => {
             val AI = graft.similarity.AnnIndex
             val idx = s"$d/ivfpq_read_idx"
-            val vecs = s"$d/ivfpq_vecs_pb"
             val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
             if (!graft.build.GenStore.isComplete(s, idx))
               AI.buildIvfPq(emb, idx, nlist = 16)
-            val fsys = new org.apache.hadoop.fs.Path(vecs)
-              .getFileSystem(s.sparkContext.hadoopConfiguration)
-            if (!fsys.exists(new org.apache.hadoop.fs.Path(vecs)))
+            val vecs = graft.build.Artifact.ensure(s, d, "ivfpq_vecs_pb",
+                graft.build.Artifact.fingerprint(s, s"$d/embeddings.parquet")) { v =>
               graft.build.Layout.writeBucketDirs(
-                emb.select(col("vec_id").as("bucket"), col("embedding")), vecs)
+                emb.select(col("vec_id").as("bucket"), col("embedding")), v)
+            }
             AI.ivfPqTopKPointFetch(s, idx, vecs,
               emb.filter(col("vec_id") < 3), 5, nprobe = 4)
           }
@@ -400,7 +396,7 @@ object ScaleProbe {
           // cold is ALWAYS the full build + first mutation, even on a
           // re-invoked probe dir — wipe the leftover store
           val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+          val fs = p.getFileSystem(graft.build.Commit.conf(s))
           if (fs.exists(p)) fs.delete(p, true): Unit
         } else if (graft.build.GenStore.isComplete(s, dir)) compact
       val prep: Option[(SparkSession, String, Int) => Unit] =
@@ -428,7 +424,7 @@ object ScaleProbe {
           val DA = graft.dedup.DedupArtifacts
           val dir = s"$d/text_horizon_store"
           val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+          val fs = p.getFileSystem(graft.build.Commit.conf(s))
           if (fs.exists(p)) fs.delete(p, true): Unit
           if (i > 1) {
             val docs = Tables.documents(s, d).select("doc_id", "text")
@@ -441,7 +437,7 @@ object ScaleProbe {
           val DA = graft.dedup.DedupArtifacts
           val dir = s"$d/ann_horizon_idx"
           val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+          val fs = p.getFileSystem(graft.build.Commit.conf(s))
           if (fs.exists(p)) fs.delete(p, true): Unit
           if (i > 1) {
             val emb = Tables.embeddings(s, d).select("vec_id", "embedding")

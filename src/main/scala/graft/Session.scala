@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local session of the dev mains (Bench, RunOne, Verify,
-  * DigestDump, PlanDump, ScaleProbe): `local[cpus]` with as many shuffle
+/** The one local session of the mains (Bench, Verify, Dev,
+  * ScaleProbe): `local[cpus]` with as many shuffle
   * partitions, UTC session time, nanosecond timestamps read as longs
   * (see `Tables.events`), AQE on and no UI. Floors and plan digests are
   * measured under exactly this configuration, so every main must share

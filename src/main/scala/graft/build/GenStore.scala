@@ -808,33 +808,4 @@ private[graft] object GenStore {
     val total = m.baseRows + m.appendRows
     if (total == 0) 0.0 else m.appendRows.toDouble / total
   }
-
-  // ------------------------------------------------ artifact discipline
-
-  /** Build-or-reuse a persisted store as a FINGERPRINTED ingest
-    * artifact: rebuild iff the marker at `markerPath` doesn't carry
-    * `fingerprint` (source fingerprint + params + epoch — the caller
-    * composes it) or the tree at `treeDir` is incomplete. Wipe-then-
-    * build-then-mark, the one crash discipline (`AnnArtifacts`' — the
-    * stale tree AND its marker go before the rebuild, the marker lands
-    * LAST and atomically). This is the freshness rule every persisted
-    * artifact must carry: a bare `fs.exists` probe would silently serve
-    * stale results after an in-place source rewrite (the r17 verdict's
-    * text-postings hazard). Returns whether a rebuild ran. */
-  def ensureArtifact(s: SparkSession, markerPath: Path, fingerprint: String,
-      treeDir: String)(build: => Unit): Boolean = {
-    val hc = conf(s)
-    val fresh = MetaIO.read(hc, markerPath).contains(fingerprint) &&
-      isComplete(s, treeDir)
-    if (fresh) false
-    else {
-      val fs = markerPath.getFileSystem(hc)
-      if (fs.exists(markerPath)) fs.delete(markerPath, false)
-      val d = new Path(treeDir)
-      if (fs.exists(d)) fs.delete(d, true)
-      build
-      MetaIO.write(hc, markerPath, fingerprint)
-      true
-    }
-  }
 }

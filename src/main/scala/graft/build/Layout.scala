@@ -61,7 +61,7 @@ object Layout {
     * write.
     *
     * `sourceFp` fingerprints the INPUT data (caller-provided, e.g.
-    * length+mtime of the source parquet); a mismatch — or a partial
+    * [[Artifact.fingerprint]] of the source parquet); a mismatch — or a partial
     * write (missing meta) — drops and rewrites. The meta file lives
     * inside the table directory under an underscore name, which parquet
     * readers ignore. */
@@ -176,43 +176,5 @@ object Layout {
         base.filter(col("pb").isin(pbs: _*) && col("bucket").isin(keys.toSeq: _*))
       }
     }
-  }
-
-  /** length:mtime fingerprint of source paths, for [[ensureBucketed]].
-    * Directories fingerprint every FILE in the tree recursively
-    * (relative-path:len:mtime, hashed to one token): a directory's own
-    * stat is filesystem-dependent (length often 0/4096, mtime moves only
-    * on child add/remove) — and for partitioned/nested layouts the
-    * direct children are themselves directories with the same problem,
-    * so an in-place rewrite of a part file inside a partition subdir
-    * must still flip the fingerprint. Metadata-only — one recursive
-    * listing per path, never a content read. */
-  def sourceFingerprint(spark: SparkSession, paths: String*): String =
-    paths.map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(hp)
-      val detail =
-        if (st.isDirectory) recursiveListingDetail(fs, hp) else ""
-      s"${st.getLen}:${st.getModificationTime}:" +
-        Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(detail))
-    }.mkString(",")
-
-  /** The shared staleness walk behind [[sourceFingerprint]] and
-    * `DedupArtifacts.fingerprint`: every FILE in the tree recursively as
-    * sorted "relative-path:len:mtime" entries — one definition so the
-    * two freshness rules can never drift apart. */
-  private[graft] def recursiveListingDetail(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val base = p.toUri.getPath
-    val it = fs.listFiles(p, true)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val c = it.next()
-      val rel = c.getPath.toUri.getPath.stripPrefix(base)
-      entries += s"$rel:${c.getLen}:${c.getModificationTime}"
-    }
-    entries.sorted.mkString(",")
   }
 }

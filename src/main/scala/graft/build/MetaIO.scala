@@ -5,8 +5,8 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
 
 /** The ONE small-marker read/write protocol shared by every artifact
   * meta in the engine (the `_INDEX_META` [[Commit]] of every maintained
-  * store and of every postings and bloom root, `AnnArtifacts._META`,
-  * `DedupArtifacts._META`, `Layout._GRAFT_LAYOUT`): writes are ATOMIC
+  * store and of every postings and bloom root, the `_META_<name>` marker
+  * of every [[Artifact]], `Layout._GRAFT_LAYOUT`): writes are ATOMIC
   * via temp file + overwrite-rename. An in-place `fs.create` truncates
   * the old marker before the new bytes land, so a crash mid-write
   * destroys the completion marker of a perfectly intact artifact — and

@@ -1,8 +1,8 @@
 package graft.dedup
 
 import graft.Tables
+import graft.build.Artifact
 import graft.operators.Components
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,11 +40,14 @@ import org.apache.spark.sql.functions._
   * the parquet round-trip of longs is lossless), which is the same
   * differential proof q99's bucketed path gives against the plain join.
   *
-  * Staleness: a meta file records the source table's (length, mtime)
-  * fingerprint; a changed corpus or a partial write (missing meta)
-  * rebuilds from scratch. [[Version]] bumps when any producing
-  * operator's semantics change, orphaning old layouts instead of
-  * silently serving them.
+  * Staleness: two [[graft.build.Artifact]] trees under the corpus's
+  * artifact root — `dedup` (everything derived from `documents`,
+  * fingerprinted on that table) and `dedup_sem` (everything derived
+  * from `embeddings`, fingerprinted on it plus its banding parameters).
+  * A changed table, or a partial write (missing marker), rebuilds its
+  * own tree only: a re-embedded corpus leaves the document tree alone
+  * and vice versa. [[Version]] rides both fingerprints, so a bump
+  * rebuilds in place instead of serving the old semantics.
   *
   * The 100 TB physical layout is ON DISK, not prose (v12): the cluster
   * maps are served from doc_id-bucketed catalog tables
@@ -63,11 +66,7 @@ import org.apache.spark.sql.functions._
   * production h<=3 tier (q155) avoids; the text-side chain stays
   * linear.
   *
-  * Single-writer assumption: `prepare` is synchronized within one JVM;
-  * two separate JVMs building the same sf dir concurrently would race
-  * the root delete. The driver's verify/bench flows are sequential; a
-  * production deployment writes to a job-scoped staging dir and
-  * publishes with an atomic rename, same meta-last protocol.
+  * Single-writer assumption: as for every [[graft.build.Artifact]].
   */
 object DedupArtifacts {
 
@@ -183,125 +182,38 @@ object DedupArtifacts {
     *     by construction. */
   private[graft] val Version = 13
 
-  /** Artifact base directory, the ONE root of every persisted artifact
-    * (dedup, ANN, text stores, the indexed demo copies, bench history)
-    * — `SPARK_GRAFT_ARTIFACT_DIR` relocates all of it (a production
-    * deployment points it next to the corpus on the distributed
-    * filesystem); the default is `target/` under the working directory,
-    * so a run from a copy of the repo writes into that copy. */
-  private[graft] def artifactBase: String =
-    sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_DIR",
-      java.nio.file.Paths.get("target").toAbsolutePath.toString)
+  /** The two artifact trees (class doc: staleness). */
+  private val DocTree = "dedup"
+  private val SemTree = "dedup_sem"
 
-  /** Corpus key: readable basename + a hash of the FULL canonical path,
-    * so two corpora that share a directory name (e.g. staging copies)
-    * get distinct artifact trees instead of fingerprint-thrashing one. */
-  private[graft] def corpusKey(sfDir: String): String = {
-    val f = new java.io.File(sfDir)
-    val h = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(f.getCanonicalPath))
-    s"${f.getName}_$h"
-  }
-
-  private def root(sfDir: String): String =
-    s"$artifactBase/graft_dedup/v$Version/${corpusKey(sfDir)}"
-  private def pairsPath(sfDir: String) = s"${root(sfDir)}/minhash_pairs"
-  private def clustersPath(sfDir: String) = s"${root(sfDir)}/clusters"
-  private def cutPairsPath(sfDir: String) = s"${root(sfDir)}/cut_pairs"
-  private def metaPath(sfDir: String) = s"${root(sfDir)}/_META"
-  private def semPairsPath(sfDir: String) = s"${root(sfDir)}/sem_pairs"
-  private def semMetaPath(sfDir: String) = s"${root(sfDir)}/_META_SEM"
-  private def baseSemPairsPath(sfDir: String) = s"${root(sfDir)}/base_sem_pairs"
-  private def semBandedPath(sfDir: String) = s"${root(sfDir)}/sem_banded"
-  private def semPairsProdPath(sfDir: String) = s"${root(sfDir)}/sem_pairs_prod"
-  private def baseSemPairsProdPath(sfDir: String) = s"${root(sfDir)}/base_sem_pairs_prod"
-  private def baseSemClustersProdPath(sfDir: String) = s"${root(sfDir)}/base_sem_clusters_prod"
-  private def baseSemClustersPath(sfDir: String) = s"${root(sfDir)}/base_sem_clusters"
-  private def baseClustersPath(sfDir: String) = s"${root(sfDir)}/base_clusters"
-  private def bandedPath(sfDir: String) = s"${root(sfDir)}/banded"
-  private def docSetsPath(sfDir: String) = s"${root(sfDir)}/doc_sets"
-  private def hotShinglesPath(sfDir: String) = s"${root(sfDir)}/hot_shingles"
-  private def sourceShinglesPath(sfDir: String) = s"${root(sfDir)}/source_shingles"
-  private def phashesPath(sfDir: String) = s"${root(sfDir)}/phashes"
-  private def phashBandedPath(sfDir: String) = s"${root(sfDir)}/phash_banded"
-  private def phashPairsPath(sfDir: String) = s"${root(sfDir)}/phash_pairs"
-  private def mediaClustersPath(sfDir: String) = s"${root(sfDir)}/media_clusters"
-  private def baseMediaClustersPath(sfDir: String) = s"${root(sfDir)}/base_media_clusters"
-  private def shinglesTable(sfDir: String) =
-    s"graft_shingles_${corpusKey(sfDir).replace('.', '_').replace('-', '_')}"
   private def bucketedTableName(sfDir: String, what: String) =
-    s"graft_${what}_${corpusKey(sfDir).replace('.', '_').replace('-', '_')}"
+    s"graft_${what}_${Artifact.corpusKey(sfDir).replace('.', '_').replace('-', '_')}"
+  private def shinglesTable(sfDir: String) = bucketedTableName(sfDir, "shingles")
 
-  /** Source fingerprint: (relative-path, length, mtime) over every FILE
-    * in the parquet directory tree, recursively — the directory's OWN
-    * stat is filesystem-dependent (length often 0/4096; mtime only moves
-    * when children are added/removed), and for partitioned/nested
-    * layouts the direct children are subdirectories with exactly the
-    * same staleness, so an in-place rewrite of a part file inside a
-    * partition subdir must still flip the fingerprint.
-    * Still metadata-only (one recursive listing), never a content read. */
-  private def fingerprint(s: SparkSession, sfDir: String,
-      table: String = "documents"): String = {
-    val p = new Path(s"$sfDir/$table.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    val detail =
-      if (st.isDirectory) graft.build.Layout.recursiveListingDetail(fs, p)
-      else s"${st.getLen}:${st.getModificationTime}"
-    // hash the listing so the meta file stays one short line at any
-    // file count
-    s"v$Version:${st.getLen}:${st.getModificationTime}:" +
-      Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(detail))
-  }
-
-  private def readMeta(fs: org.apache.hadoop.fs.FileSystem, meta: Path): Option[String] =
-    graft.build.MetaIO.read(fs.getConf, meta)
-
-  private def writeMeta(fs: org.apache.hadoop.fs.FileSystem, meta: Path, fp: String): Unit =
-    graft.build.MetaIO.write(fs.getConf, meta, fp)
-
-  /** Generic single-table artifact with its own meta: build `build`
-    * once per (corpus fingerprint, params, Version), read thereafter —
-    * the seam for small derived models (e.g. the BPE merge table) that
-    * deserve persist-once economics without joining one of the big
-    * artifact trees' rebuild units. Same meta-last protocol as
-    * [[prepare]]. */
+  /** Generic single-table artifact: build `build` once per (corpus
+    * table fingerprint, params, Version), read thereafter — the seam for
+    * small derived models (e.g. the BPE merge table) that deserve
+    * persist-once economics without joining one of the big artifact
+    * trees' rebuild units. */
   private[graft] def cachedTable(
       s: SparkSession, sfDir: String, name: String,
-      table: String, params: String)(build: => DataFrame): DataFrame =
-    synchronized {
-      val fp = fingerprint(s, sfDir, table) +
-        (if (params.nonEmpty) s":$params" else "")
-      val dir = s"${root(sfDir)}/$name"
-      val fs = new Path(root(sfDir))
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val meta = new Path(s"${root(sfDir)}/_META_${name.toUpperCase}")
-      if (!readMeta(fs, meta).contains(fp)) {
-        val p = new Path(dir)
-        if (fs.exists(p)) fs.delete(p, true)
-        build.write.parquet(dir)
-        writeMeta(fs, meta, fp)
-      }
-      s.read.parquet(dir)
-    }
+      table: String, params: String)(build: => DataFrame): DataFrame = {
+    val fp = s"v$Version:$params:" + Artifact.fingerprint(s, s"$sfDir/$table.parquet")
+    s.read.parquet(Artifact.ensure(s, sfDir, name, fp)(build.write.parquet(_)))
+  }
 
-  /** Idempotent build: a matching meta fingerprint is a no-op; anything
-    * else (absent, stale, partial) rebuilds the whole tree. Meta is
-    * written LAST, so a killed build never masquerades as complete.
-    * Returns the source fingerprint it computed, so accessors that need
-    * it (the bucketed cluster-map tables) don't pay a second recursive
-    * listing of the source tree per call. */
-  def prepare(s: SparkSession, sfDir: String): String = synchronized {
-    val fp = fingerprint(s, sfDir)
-    val rootPath = new Path(root(sfDir))
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val meta = new Path(metaPath(sfDir))
-    if (readMeta(fs, meta).contains(fp)) return fp
-    // stale/partial: rebuild the document-derived artifacts (the sem
-    // artifact has its own meta and source; clear it too only if the
-    // whole root goes)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
+  /** Idempotent build of the document-derived tree ([[Artifact.ensure]]:
+    * a matching marker is a no-op, anything else rebuilds the tree).
+    * Returns the fingerprint it computed, so accessors that need it (the
+    * bucketed cluster-map tables) don't pay a second recursive listing
+    * of the source tree per call. */
+  def prepare(s: SparkSession, sfDir: String): String = {
+    val fp = s"v$Version:" + Artifact.fingerprint(s, s"$sfDir/documents.parquet")
+    Artifact.ensure(s, sfDir, DocTree, fp)(buildDocs(s, sfDir, fp, _))
+    fp
+  }
 
+  private def buildDocs(s: SparkSession, sfDir: String, fp: String, d: String): Unit = {
     val docs = Tables.documents(s, sfDir)
     // the shingle index itself — the reference's core design (persist
     // the per-column index at build time, `AbstractBlockIndexingJob`)
@@ -322,14 +234,14 @@ object DedupArtifacts {
     // base-side build below and the q142 delta merge share them with
     // zero re-hashing.
     graft.build.Layout.writeBucketDirs(
-      Dedup.bandedTable(shArt, K, Bands), bandedPath(sfDir))
-    Dedup.docSetTable(shArt).write.parquet(docSetsPath(sfDir))
+      Dedup.bandedTable(shArt, K, Bands), s"$d/banded")
+    Dedup.docSetTable(shArt).write.parquet(s"$d/doc_sets")
     // the df cut (shingles in > MaxShingleFreq docs) — corpus-stable,
     // consumed by every overlap/cut report (q105) instead of
     // re-aggregating the full index per run
     shArt.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") > MaxShingleFreq).select("sh")
-      .write.parquet(hotShinglesPath(sfDir))
+      .write.parquet(s"$d/hot_shingles")
     // the per-source DISTINCT below-cut shingle incidence — the overlap
     // reports' (q105) whole input, corpus-stable: one anti-join against
     // the just-written cut + one broadcast metadata join at ingest.
@@ -339,7 +251,7 @@ object DedupArtifacts {
     // pair/cluster artifacts over a missing optional column.
     val srcIncidence =
       if (docs.columns.contains("source"))
-        shArt.join(s.read.parquet(hotShinglesPath(sfDir)), Seq("sh"), "left_anti")
+        shArt.join(s.read.parquet(s"$d/hot_shingles"), Seq("sh"), "left_anti")
           .join(broadcast(docs.select(col("doc_id"), col("source"))), "doc_id")
           .select(col("source"), col("sh")).distinct()
       else
@@ -349,23 +261,23 @@ object DedupArtifacts {
               org.apache.spark.sql.types.StringType),
             org.apache.spark.sql.types.StructField("sh",
               org.apache.spark.sql.types.LongType))))
-    srcIncidence.write.parquet(sourceShinglesPath(sfDir))
+    srcIncidence.write.parquet(s"$d/source_shingles")
     // per-media perceptual hashes — FEATURE EXTRACTION AT INGEST, the
     // multimodal twin of the shingle index: decode/hash each payload
     // once when it lands, and every near-dup/bucket report (q129, q143)
     // joins 8-byte fingerprints instead of re-decoding binaries. Derived
-    // from the documents table (its synthetic media), so the main meta
-    // covers its staleness.
+    // from the documents table (its synthetic media), so this tree's
+    // fingerprint covers its staleness.
     graft.multimodal.Multimodal.perceptualHashes(
         graft.multimodal.Multimodal.fromTable(
           docs.filter(length(col("text")) > 0), "doc_id", "text", "image"))
-      .write.parquet(phashesPath(sfDir))
+      .write.parquet(s"$d/phashes")
     // the perceptual-hash near-dup pair set over the just-persisted
     // hashes — the media twin of minhash_pairs (q143's operator output;
     // hamming IS the verification here, no second stage). Syndication
     // and QC reports join this pair list instead of re-running the
     // banded hamming join per report.
-    val phs = s.read.parquet(phashesPath(sfDir))
+    val phs = s.read.parquet(s"$d/phashes")
       .select(col("media_id").as("doc_id"), col("phash").as("simhash"))
     // v13: the media pigeonhole band table, persisted in the SAME
     // pb-directory layout as the text/semantic banded tables — band
@@ -373,21 +285,21 @@ object DedupArtifacts {
     // full self-join (the pair build right below) and the q150/q154
     // delta probes (which prune to their buckets' directories)
     graft.build.Layout.writeBucketDirs(
-      Dedup.simHashBands(phs, PHashMaxHamming), phashBandedPath(sfDir))
-    Dedup.candidatesFromSimhashBanded(s.read.parquet(phashBandedPath(sfDir)))
+      Dedup.simHashBands(phs, PHashMaxHamming), s"$d/phash_banded")
+    Dedup.candidatesFromSimhashBanded(s.read.parquet(s"$d/phash_banded"))
       .filter(bit_count(col("a_sim").bitwiseXOR(col("b_sim"))) <= PHashMaxHamming)
       .select(col("a_id").as("media_i"), col("b_id").as("media_j"))
       .distinct()
-      .write.parquet(phashPairsPath(sfDir))
+      .write.parquet(s"$d/phash_pairs")
     // media clusters: components over the PERSISTED media pairs (read
     // back, like the text clusters below), universe = every hashed
     // media item, singletons map to themselves
     Components.connectedComponents(
         phs.select(col("doc_id").as("id")),
-        s.read.parquet(phashPairsPath(sfDir))
+        s.read.parquet(s"$d/phash_pairs")
           .select(col("media_i").as("src"), col("media_j").as("dst")))
       .select(col("id").as("media_id"), col("comp").as("cluster_rep"))
-      .write.parquet(mediaClustersPath(sfDir))
+      .write.parquet(s"$d/media_clusters")
     // "yesterday's run" for the media tier (q154): the cluster
     // assignment over the BASE media subset only, from the
     // base-internal phash pairs — pair membership is a per-pair
@@ -396,29 +308,29 @@ object DedupArtifacts {
     val isDeltaMedia = col("doc_id") % DeltaMod === DeltaRem
     Components.connectedComponents(
         phs.filter(!isDeltaMedia).select(col("doc_id").as("id")),
-        s.read.parquet(phashPairsPath(sfDir))
+        s.read.parquet(s"$d/phash_pairs")
           .filter(col("media_i") % DeltaMod =!= DeltaRem &&
             col("media_j") % DeltaMod =!= DeltaRem)
           .select(col("media_i").as("src"), col("media_j").as("dst")))
       .select(col("id").as("media_id"), col("comp").as("cluster_rep"))
-      .write.parquet(baseMediaClustersPath(sfDir))
-    val banded = s.read.parquet(bandedPath(sfDir))
-    val sets = s.read.parquet(docSetsPath(sfDir))
+      .write.parquet(s"$d/base_media_clusters")
+    val banded = s.read.parquet(s"$d/banded")
+    val sets = s.read.parquet(s"$d/doc_sets")
     // the verified MinHash pair set — q25's exact operator output,
     // built FROM the just-persisted banded/doc-set state (identical
     // plan below the shingle boundary; DedupArtifactsSpec pins equality
     // with the from-docs operator)
     Dedup.verifyPairsWithSets(
         Dedup.lshCandidatesFromBanded(banded), sets, Threshold)
-      .write.parquet(pairsPath(sfDir))
+      .write.parquet(s"$d/minhash_pairs")
     // components over the PERSISTED pairs (read back, not the live
     // subtree: the iterative label propagation would otherwise re-run
     // the whole MinHash machinery once per round)
-    val edges = s.read.parquet(pairsPath(sfDir))
+    val edges = s.read.parquet(s"$d/minhash_pairs")
       .select(col("doc_i").as("src"), col("doc_j").as("dst"))
     Components.connectedComponents(docs.select(col("doc_id").as("id")), edges)
       .select(col("id").as("doc_id"), col("comp").as("cluster_rep"))
-      .write.parquet(clustersPath(sfDir))
+      .write.parquet(s"$d/clusters")
     // the hot-shingle-cut exact-Jaccard pair set — q53's operator
     // output, from the persisted shingle index. The df aggregate is
     // recomputed on purpose: its subtree's small size estimates keep
@@ -427,7 +339,7 @@ object DedupArtifacts {
     // docstring for the A/B).
     Dedup.exactJaccardPairsFromShingles(shArt, Threshold,
         maxShingleFreq = MaxShingleFreq)
-      .write.parquet(cutPairsPath(sfDir))
+      .write.parquet(s"$d/cut_pairs")
     // "yesterday's run" for the incremental-maintenance demo (q142):
     // the cluster assignment over the BASE subset only, from the
     // base-internal pair set — what a dated production run would have
@@ -441,65 +353,53 @@ object DedupArtifacts {
         docs.filter(!isDelta).select(col("doc_id").as("id")),
         basePairs.select(col("doc_i").as("src"), col("doc_j").as("dst")))
       .select(col("id").as("doc_id"), col("comp").as("cluster_rep"))
-      .write.parquet(baseClustersPath(sfDir))
-
-    writeMeta(fs, meta, fp)
-    fp
+      .write.parquet(s"$d/base_clusters")
   }
 
-  /** Build the embedding-cosine near-dup pair artifact (the q28 exact
-    * operator's output at [[SemThreshold]]) — its own meta keyed on the
-    * EMBEDDINGS table, so a re-embedded corpus rebuilds it without
-    * touching the text-derived artifacts and vice versa. */
   /** Pre-build BOTH artifact trees — the document-derived set AND the
-    * embedding-derived sem set (which has its own meta/source and is
-    * otherwise built by its first reader): the bench's untimed
-    * pre-build hook (r18 #5 — artifact builds are ingest cost, not
-    * read cost; without this the first sem reader paid the tree build
-    * inside its timed slot, the same first-reader scatter the text and
-    * media families already had fixed). */
+    * embedding-derived sem set (which is otherwise built by its first
+    * reader): the bench's untimed pre-build hook (r18 #5 — artifact
+    * builds are ingest cost, not read cost; without this the first sem
+    * reader paid the tree build inside its timed slot, the same
+    * first-reader scatter the text and media families already had
+    * fixed). */
   def prepareAll(s: SparkSession, sfDir: String): Unit = {
     prepare(s, sfDir): Unit
     prepareSem(s, sfDir)
   }
 
-  private def prepareSem(s: SparkSession, sfDir: String): Unit = synchronized {
-    // banding parameters and the artifact SET are part of the artifact
-    // identity: retuning the banding or adding a table must rebuild the
-    // sem tree (and only it), not silently serve buckets hashed under
-    // the old structure or a tree missing the new table (set2: +
-    // base_sem_clusters_prod)
-    val fp = fingerprint(s, sfDir, table = "embeddings") +
-      s":b$SemPlanes/$SemBands/$SemSeed:set2"
-    val fs = new Path(root(sfDir))
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val meta = new Path(semMetaPath(sfDir))
-    if (readMeta(fs, meta).contains(fp)) return
-    for (d <- Seq(semPairsPath(sfDir), baseSemPairsPath(sfDir),
-        baseSemClustersPath(sfDir), semBandedPath(sfDir),
-        semPairsProdPath(sfDir), baseSemPairsProdPath(sfDir),
-        baseSemClustersProdPath(sfDir))) {
-      val p = new Path(d)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+  /** Build the embedding-derived tree: the embedding-cosine near-dup
+    * pair artifact (the q28 exact operator's output at [[SemThreshold]])
+    * and the production-regime banded index and pair sets. Banding
+    * parameters and the artifact SET are part of the fingerprint:
+    * retuning the banding or adding a table rebuilds this tree (and only
+    * it), never silently serving buckets hashed under the old structure
+    * or a tree missing the new table (set2: + base_sem_clusters_prod). */
+  private def prepareSem(s: SparkSession, sfDir: String): Unit = {
+    val fp = s"v$Version:b$SemPlanes/$SemBands/$SemSeed:set2:" +
+      Artifact.fingerprint(s, s"$sfDir/embeddings.parquet")
+    Artifact.ensure(s, sfDir, SemTree, fp)(buildSem(s, sfDir, _)): Unit
+  }
+
+  private def buildSem(s: SparkSession, sfDir: String, d: String): Unit = {
     graft.similarity.Ann
       .cosineNearDupPairs(graft.Tables.embeddings(s, sfDir), SemThreshold)
-      .write.parquet(semPairsPath(sfDir))
+      .write.parquet(s"$d/sem_pairs")
     // "yesterday's run" for the incremental semantic demos (q157/q158):
     // pair membership is a per-pair property of its two endpoints, so
     // the base-internal pair set is a pure FILTER of the just-written
     // full pair set — no second O(n^2) pass
     val isDelta = (c: org.apache.spark.sql.Column) => c % DeltaMod === DeltaRem
-    val basePairs = s.read.parquet(semPairsPath(sfDir))
+    val basePairs = s.read.parquet(s"$d/sem_pairs")
       .filter(!isDelta(col("id_i")) && !isDelta(col("id_j")))
-    basePairs.write.parquet(baseSemPairsPath(sfDir))
+    basePairs.write.parquet(s"$d/base_sem_pairs")
     graft.operators.Components.connectedComponents(
         graft.Tables.embeddings(s, sfDir)
           .filter(!isDelta(col("vec_id"))).select(col("vec_id").as("id")),
-        s.read.parquet(baseSemPairsPath(sfDir))
+        s.read.parquet(s"$d/base_sem_pairs")
           .select(col("id_i").as("src"), col("id_j").as("dst")))
       .select(col("id").as("vec_id"), col("comp").as("cluster_rep"))
-      .write.parquet(baseSemClustersPath(sfDir))
+      .write.parquet(s"$d/base_sem_clusters")
     // v11: the PRODUCTION-regime semantic candidate index and pair set
     // over the planted corpus (q51's registered regime, where banding's
     // pigeonhole budget is exact). Banded rows are per-vector
@@ -512,32 +412,43 @@ object DedupArtifacts {
     graft.build.Layout.writeBucketDirs(
       graft.similarity.Ann.bandedSignatures(corpusP, "vec_id", "embedding",
         SemPlanes, SemBands, SemSeed),
-      semBandedPath(sfDir))
-    val bandedP = s.read.parquet(semBandedPath(sfDir))
+      s"$d/sem_banded")
+    val bandedP = s.read.parquet(s"$d/sem_banded")
     graft.similarity.Ann.verifyCosinePairs(
         graft.similarity.Ann.selfCandidatesFromBanded(bandedP),
         corpusP, SemProdThreshold)
-      .write.parquet(semPairsProdPath(sfDir))
-    s.read.parquet(semPairsProdPath(sfDir))
+      .write.parquet(s"$d/sem_pairs_prod")
+    s.read.parquet(s"$d/sem_pairs_prod")
       .filter(!isDelta(col("id_i")) && !isDelta(col("id_j")))
-      .write.parquet(baseSemPairsProdPath(sfDir))
+      .write.parquet(s"$d/base_sem_pairs_prod")
     // "yesterday's run" for the banded incremental cluster demo (q163):
     // components over the base-internal production pair set — the
     // production twin of base_sem_clusters
     graft.operators.Components.connectedComponents(
         corpusP.filter(!isDelta(col("vec_id"))).select(col("vec_id").as("id")),
-        s.read.parquet(baseSemPairsProdPath(sfDir))
+        s.read.parquet(s"$d/base_sem_pairs_prod")
           .select(col("id_i").as("src"), col("id_j").as("dst")))
       .select(col("id").as("vec_id"), col("comp").as("cluster_rep"))
-      .write.parquet(baseSemClustersProdPath(sfDir))
-    writeMeta(fs, meta, fp)
+      .write.parquet(s"$d/base_sem_clusters_prod")
+  }
+
+  private def docPath(sfDir: String, t: String) = s"${Artifact.root(sfDir)}/$DocTree/$t"
+
+  /** Table `t` of the document-derived tree, built if stale. */
+  private def docTable(s: SparkSession, sfDir: String, t: String): DataFrame = {
+    prepare(s, sfDir)
+    s.read.parquet(docPath(sfDir, t))
+  }
+
+  /** Table `t` of the embedding-derived tree, built if stale. */
+  private def semTable(s: SparkSession, sfDir: String, t: String): DataFrame = {
+    prepareSem(s, sfDir)
+    s.read.parquet(s"${Artifact.root(sfDir)}/$SemTree/$t")
   }
 
   /** Verified near-dup pairs (doc_i, doc_j), doc_i < doc_j. */
-  def minHashPairs(s: SparkSession, sfDir: String): DataFrame = {
-    prepare(s, sfDir)
-    s.read.parquet(pairsPath(sfDir))
-  }
+  def minHashPairs(s: SparkSession, sfDir: String): DataFrame =
+    docTable(s, sfDir, "minhash_pairs")
 
   /** Cluster assignment (doc_id, cluster_rep); every document appears,
     * singletons map to themselves. Served from a doc_id-BUCKETED
@@ -552,77 +463,59 @@ object DedupArtifacts {
     val fp = prepare(s, sfDir)
     val t = bucketedTableName(sfDir, "clusters")
     graft.build.Layout.ensureBucketed(
-      s.read.parquet(clustersPath(sfDir)), t, "doc_id", buckets = 32,
+      s.read.parquet(docPath(sfDir, "clusters")), t, "doc_id", buckets = 32,
       sourceFp = fp)
     graft.build.Layout.read(s, t)
   }
 
   /** Hot-shingle-cut exact-Jaccard pairs (doc_i, doc_j), doc_i < doc_j. */
-  def cutPairs(s: SparkSession, sfDir: String): DataFrame = {
-    prepare(s, sfDir)
-    s.read.parquet(cutPairsPath(sfDir))
-  }
+  def cutPairs(s: SparkSession, sfDir: String): DataFrame =
+    docTable(s, sfDir, "cut_pairs")
 
   /** Embedding-cosine near-dup pairs (id_i, id_j), id_i < id_j. */
-  def semPairs(s: SparkSession, sfDir: String): DataFrame = {
-    prepareSem(s, sfDir)
-    s.read.parquet(semPairsPath(sfDir))
-  }
+  def semPairs(s: SparkSession, sfDir: String): DataFrame =
+    semTable(s, sfDir, "sem_pairs")
 
   /** The base embedding subset's internal pair set (id_i, id_j) — the
     * persisted state q157's incremental pair maintenance streams. */
-  def baseSemPairs(s: SparkSession, sfDir: String): DataFrame = {
-    prepareSem(s, sfDir)
-    s.read.parquet(baseSemPairsPath(sfDir))
-  }
+  def baseSemPairs(s: SparkSession, sfDir: String): DataFrame =
+    semTable(s, sfDir, "base_sem_pairs")
 
   /** The base embedding subset's cluster assignment
     * (vec_id, cluster_rep) — the persisted state q158's incremental
     * semantic merge starts from; the embedding twin of
     * [[baseClusters]]. */
-  def baseSemClusters(s: SparkSession, sfDir: String): DataFrame = {
-    prepareSem(s, sfDir)
-    s.read.parquet(baseSemClustersPath(sfDir))
-  }
+  def baseSemClusters(s: SparkSession, sfDir: String): DataFrame =
+    semTable(s, sfDir, "base_sem_clusters")
 
   /** The sign-LSH banded signature table over the planted corpus at
     * the PRODUCTION parameters (vec_id, band, bucket, pb) — the
     * semantic candidate index q161 and the streaming semantic path
     * probe. `pb` is the `Layout.writeBucketDirs` directory column: a
     * cap-bounded probe join reads only matching directories' files. */
-  def semBanded(s: SparkSession, sfDir: String): DataFrame = {
-    prepareSem(s, sfDir)
-    s.read.parquet(semBandedPath(sfDir))
-  }
+  def semBanded(s: SparkSession, sfDir: String): DataFrame =
+    semTable(s, sfDir, "sem_banded")
 
   /** The production-threshold ([[SemProdThreshold]]) pair set over the
     * planted corpus (id_i, id_j), built through the banded index. */
-  def semPairsProd(s: SparkSession, sfDir: String): DataFrame = {
-    prepareSem(s, sfDir)
-    s.read.parquet(semPairsProdPath(sfDir))
-  }
+  def semPairsProd(s: SparkSession, sfDir: String): DataFrame =
+    semTable(s, sfDir, "sem_pairs_prod")
 
   /** The base subset's internal production-threshold pair set — the
     * persisted state q161's banded incremental merge starts from. */
-  def baseSemPairsProd(s: SparkSession, sfDir: String): DataFrame = {
-    prepareSem(s, sfDir)
-    s.read.parquet(baseSemPairsProdPath(sfDir))
-  }
+  def baseSemPairsProd(s: SparkSession, sfDir: String): DataFrame =
+    semTable(s, sfDir, "base_sem_pairs_prod")
 
   /** The base subset's production-threshold cluster assignment
     * (vec_id, cluster_rep) — the persisted state q163's banded
     * incremental cluster merge starts from. */
-  def baseSemClustersProd(s: SparkSession, sfDir: String): DataFrame = {
-    prepareSem(s, sfDir)
-    s.read.parquet(baseSemClustersProdPath(sfDir))
-  }
+  def baseSemClustersProd(s: SparkSession, sfDir: String): DataFrame =
+    semTable(s, sfDir, "base_sem_clusters_prod")
 
   /** The base subset's cluster assignment (doc_id, cluster_rep) — the
     * persisted state q142's incremental merge starts from. */
-  def baseClusters(s: SparkSession, sfDir: String): DataFrame = {
-    prepare(s, sfDir)
-    s.read.parquet(baseClustersPath(sfDir))
-  }
+  def baseClusters(s: SparkSession, sfDir: String): DataFrame =
+    docTable(s, sfDir, "base_clusters")
 
   /** The banded LSH bucket table (doc_id, band, bucket, pb) — the
     * persisted candidate-generation state, in the
@@ -631,56 +524,42 @@ object DedupArtifacts {
     * matching directories. Per-doc rows: filtering to any doc subset
     * equals rebuilding over that subset, so one table serves
     * full-corpus, base-side, and delta-side candidate joins. */
-  def banded(s: SparkSession, sfDir: String): DataFrame = {
-    prepare(s, sfDir)
-    s.read.parquet(bandedPath(sfDir))
-  }
+  def banded(s: SparkSession, sfDir: String): DataFrame =
+    docTable(s, sfDir, "banded")
 
   /** The verification doc-set table (doc_id, shs sorted array, sz) —
     * [[Dedup.verifyPairsWithSets]]' right side, persisted. */
-  def docSets(s: SparkSession, sfDir: String): DataFrame = {
-    prepare(s, sfDir)
-    s.read.parquet(docSetsPath(sfDir))
-  }
+  def docSets(s: SparkSession, sfDir: String): DataFrame =
+    docTable(s, sfDir, "doc_sets")
 
   /** Shingles in more than [[MaxShingleFreq]] documents (sh) — the
     * corpus-stable df cut every overlap report anti-joins against. */
-  def hotShingles(s: SparkSession, sfDir: String): DataFrame = {
-    prepare(s, sfDir)
-    s.read.parquet(hotShinglesPath(sfDir))
-  }
+  def hotShingles(s: SparkSession, sfDir: String): DataFrame =
+    docTable(s, sfDir, "hot_shingles")
 
   /** Distinct (source, sh) over below-cut shingles — the per-source
     * content-incidence index the overlap matrix (q105) runs on. */
-  def sourceShingles(s: SparkSession, sfDir: String): DataFrame = {
-    prepare(s, sfDir)
-    s.read.parquet(sourceShinglesPath(sfDir))
-  }
+  def sourceShingles(s: SparkSession, sfDir: String): DataFrame =
+    docTable(s, sfDir, "source_shingles")
 
   /** Per-media perceptual hashes (media_id, phash) — extracted once at
     * ingest; the near-dup/bucket reports join fingerprints, never
     * binaries. */
-  def phashes(s: SparkSession, sfDir: String): DataFrame = {
-    prepare(s, sfDir)
-    s.read.parquet(phashesPath(sfDir))
-  }
+  def phashes(s: SparkSession, sfDir: String): DataFrame =
+    docTable(s, sfDir, "phashes")
 
   /** The media pigeonhole band table (doc_id, simhash, band, bucket,
     * pb) over [[phashes]], in the `Layout.writeBucketDirs` pb-directory
     * layout — the persisted candidate index the q150/q154 delta probes
     * and the phash_pairs build share (v13: one banding on disk, the
     * media twin of [[banded]]/[[semBanded]]). */
-  def phashBanded(s: SparkSession, sfDir: String): DataFrame = {
-    prepare(s, sfDir)
-    s.read.parquet(phashBandedPath(sfDir))
-  }
+  def phashBanded(s: SparkSession, sfDir: String): DataFrame =
+    docTable(s, sfDir, "phash_banded")
 
   /** Perceptual-hash near-dup media pairs (media_i, media_j), i < j,
     * within [[PHashMaxHamming]] bits — the persisted media pair set. */
-  def phashPairs(s: SparkSession, sfDir: String): DataFrame = {
-    prepare(s, sfDir)
-    s.read.parquet(phashPairsPath(sfDir))
-  }
+  def phashPairs(s: SparkSession, sfDir: String): DataFrame =
+    docTable(s, sfDir, "phash_pairs")
 
   /** Media cluster assignment (media_id, cluster_rep) — components over
     * [[phashPairs]]; every hashed media item appears, singletons map to
@@ -690,7 +569,7 @@ object DedupArtifacts {
     val fp = prepare(s, sfDir)
     val t = bucketedTableName(sfDir, "media_clusters")
     graft.build.Layout.ensureBucketed(
-      s.read.parquet(mediaClustersPath(sfDir)), t, "media_id", buckets = 32,
+      s.read.parquet(docPath(sfDir, "media_clusters")), t, "media_id", buckets = 32,
       sourceFp = fp)
     graft.build.Layout.read(s, t)
   }
@@ -698,10 +577,8 @@ object DedupArtifacts {
   /** The base media subset's cluster assignment (media_id, cluster_rep)
     * — the persisted state q154's incremental media merge starts from;
     * the media twin of [[baseClusters]]. */
-  def baseMediaClusters(s: SparkSession, sfDir: String): DataFrame = {
-    prepare(s, sfDir)
-    s.read.parquet(baseMediaClustersPath(sfDir))
-  }
+  def baseMediaClusters(s: SparkSession, sfDir: String): DataFrame =
+    docTable(s, sfDir, "base_media_clusters")
 
   /** Write-or-redeclare the bucketed shingle table (cross-session
     * idempotent via Layout.ensureBucketed's own fingerprint; called on

@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import graft.build.IndexBuilder
+import graft.build.{Artifact, IndexBuilder}
 import graft.query.{And, Between, Eq, Or, Pred, PrunedScanner}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,8 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * The single-file test tables can't demonstrate file skipping, so the
   * queries scan a derived multi-file copy of `events` (range-partitioned
-  * by event_type so values cluster per file) built once per scale factor
-  * under target/. Row-set semantics are unchanged, which is all the
+  * by event_type so values cluster per file), a per-corpus
+  * [[Artifact]]. Row-set semantics are unchanged, which is all the
   * oracle compares.
   */
 object IndexedQueries extends QueryModule {
@@ -25,35 +24,26 @@ object IndexedQueries extends QueryModule {
   private val CapBytes = 64L * 1024 * 1024
   private val IndexedColumns = Seq("event_type", "user_id")
 
-  /** Bump when the postings/descriptor schema changes: stale demo
-    * datasets from an older layout then rebuild instead of failing. */
-  private[operators] val DemoLayoutVersion = 3
+  private def indexRoot(sfDir: String): String = s"${Artifact.root(sfDir)}/events_index"
 
-  private def root(sfDir: String): String = {
-    val sfName = new java.io.File(sfDir).getName
-    s"${graft.dedup.DedupArtifacts.artifactBase}/graft_demo/v$DemoLayoutVersion/$sfName"
-  }
-  private def dataDir(sfDir: String): String = s"${root(sfDir)}/events_data"
-  private def indexRoot(sfDir: String): String = s"${root(sfDir)}/events_index"
-
-  /** Idempotent: write the multi-file copy once, build the index once
-    * (IndexBuilder.build is a fresh-check no-op afterwards). */
-  private def prepare(s: SparkSession, sfDir: String): Unit = synchronized {
-    val dd = new Path(dataDir(sfDir))
-    val fs = dd.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dd)) {
+  /** The multi-file copy of `events` ([[Artifact.ensure]]: rebuilt iff
+    * `events.parquet` changed) and its index (IndexBuilder.build is a
+    * fresh-check no-op afterwards, a refresh after a rebuilt copy).
+    * Returns the copy's directory. */
+  private def prepare(s: SparkSession, sfDir: String): String = synchronized {
+    val dataDir = Artifact.ensure(s, sfDir, "events_data",
+        Artifact.fingerprint(s, s"$sfDir/events.parquet")) { d =>
       Tables.events(s, sfDir)
         .repartitionByRange(8, col("event_type"), col("event_id"))
-        .write.parquet(dataDir(sfDir))
+        .write.parquet(d)
     }
-    IndexBuilder.build(s, dataDir(sfDir), IndexedColumns, indexRoot(sfDir),
+    IndexBuilder.build(s, dataDir, IndexedColumns, indexRoot(sfDir),
       capBytes = CapBytes)
+    dataDir
   }
 
-  private def prunedScan(s: SparkSession, sfDir: String, pred: Pred): DataFrame = {
-    prepare(s, sfDir)
-    PrunedScanner.scan(s, dataDir(sfDir), pred, indexRoot(sfDir))
-  }
+  private def prunedScan(s: SparkSession, sfDir: String, pred: Pred): DataFrame =
+    PrunedScanner.scan(s, prepare(s, sfDir), pred, indexRoot(sfDir))
 
   /** EQ leaf through the index (S2/S6/J3). */
   private def q16IdxEq(s: SparkSession, dir: String): DataFrame =
@@ -99,8 +89,7 @@ object IndexedQueries extends QueryModule {
     * .java:22-95`). The oracle is the full-scan group-by — index-scan
     * counts must equal full-scan counts key by key. */
   private def q20IdxVerifyCounts(s: SparkSession, dir: String): DataFrame = {
-    prepare(s, dir)
-    PrunedScanner.verifyCounts(s, dataDir(dir), "event_type", indexRoot(dir))
+    PrunedScanner.verifyCounts(s, prepare(s, dir), "event_type", indexRoot(dir))
       .select(col("value").as("event_type"), col("n"))
   }
 
@@ -144,13 +133,13 @@ object IndexedQueries extends QueryModule {
     * between scan and residual it would block parquet pushdown of the
     * residual, so the counters run in this dedicated probe instead. */
   def observedScanDemo(s: SparkSession, sfDir: String): Option[(Long, Long)] = {
-    prepare(s, sfDir)
+    val dataDir = prepare(s, sfDir)
     graft.query.ScanMetrics.register(s)
     val pred = Eq("event_type", "error")
     val (files, _) = PrunedScanner.selectFiles(
-      s, dataDir(sfDir), pred, indexRoot(sfDir), capBytes = CapBytes)
+      s, dataDir, pred, indexRoot(sfDir), capBytes = CapBytes)
     if (files.isEmpty) return Some((0L, 0L))
-    val schema = IndexBuilder.dataSchema(s, dataDir(sfDir))
+    val schema = IndexBuilder.dataSchema(s, dataDir)
     graft.query.ScanMetrics.observed(
         s.read.schema(schema).parquet(files: _*),
         pred.toColumnFor(schema), name = "graft_bench_probe")
@@ -166,25 +155,25 @@ object IndexedQueries extends QueryModule {
     m
   }
 
-  private def partDataDir(sfDir: String): String = s"${root(sfDir)}/events_part"
-  private def partIndexRoot(sfDir: String): String = s"${root(sfDir)}/events_part_index"
+  private def partIndexRoot(sfDir: String): String =
+    s"${Artifact.root(sfDir)}/events_part_index"
 
   /** Day-partitioned copy (the reference's standard time-partitioned
     * layout, `indexing/StatusesIndexManager.java:42-144` → `day=` dirs):
     * event types clustered across tasks so each day directory holds
     * several files dominated by few types — file-level index pruning has
-    * work to do WITHIN a partition. */
-  private def preparePartitioned(s: SparkSession, sfDir: String): Unit = synchronized {
-    val dd = new Path(partDataDir(sfDir))
-    val fs = dd.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dd)) {
+    * work to do WITHIN a partition. Returns the copy's directory. */
+  private def preparePartitioned(s: SparkSession, sfDir: String): String = synchronized {
+    val dataDir = Artifact.ensure(s, sfDir, "events_part",
+        Artifact.fingerprint(s, s"$sfDir/events.parquet")) { d =>
       Tables.events(s, sfDir)
         .withColumn("day", to_date(col("ts")))
         .repartition(8, col("event_type"))
-        .write.partitionBy("day").parquet(partDataDir(sfDir))
+        .write.partitionBy("day").parquet(d)
     }
-    IndexBuilder.build(s, partDataDir(sfDir), Seq("event_type"), partIndexRoot(sfDir),
+    IndexBuilder.build(s, dataDir, Seq("event_type"), partIndexRoot(sfDir),
       capBytes = CapBytes)
+    dataDir
   }
 
   /** TRANSPARENT pruning on the hive-partitioned layout: a plain
@@ -194,10 +183,10 @@ object IndexedQueries extends QueryModule {
     * asserted at plan level in GraftRuleSpec; row-set equivalence to the
     * full scan verified here against the oracle. */
   private def q52IdxPartitioned(s: SparkSession, dir: String): DataFrame = {
-    preparePartitioned(s, dir)
+    val dataDir = preparePartitioned(s, dir)
     graft.Graft.enable(s)
-    graft.Graft.registerIndex(s, partDataDir(dir), partIndexRoot(dir))
-    s.read.parquet(partDataDir(dir))
+    graft.Graft.registerIndex(s, dataDir, partIndexRoot(dir))
+    s.read.parquet(dataDir)
       .filter(col("event_type") === "error" &&
         col("day") >= lit("2024-01-16").cast("date"))
       .select("event_id", "user_id", "event_type", "day")
@@ -208,17 +197,16 @@ object IndexedQueries extends QueryModule {
       |FROM events
       |WHERE event_type = 'error' AND CAST(ts AS DATE) >= DATE '2024-01-16'""".stripMargin
 
-  private def bloomRoot(sfDir: String): String = s"${root(sfDir)}/events_bloom"
+  private def bloomRoot(sfDir: String): String = s"${Artifact.root(sfDir)}/events_bloom"
 
   /** EQ on a HIGH-CARDINALITY column through the bloom skipping index
     * (extension: postings would cost O(distinct values), the bloom is a
     * fixed-size sketch per file). Oracle = full-scan SQL; bloom
     * no-false-negatives makes the pruned scan exactly equivalent. */
   private def q46BloomEq(s: SparkSession, dir: String): DataFrame = {
-    prepare(s, dir)
-    graft.build.BloomIndex.build(
-      s, dataDir(dir), Seq("event_id"), bloomRoot(dir))
-    PrunedScanner.scan(s, dataDir(dir), Eq("event_id", "777"), bloomRoot(dir))
+    val dataDir = prepare(s, dir)
+    graft.build.BloomIndex.build(s, dataDir, Seq("event_id"), bloomRoot(dir))
+    PrunedScanner.scan(s, dataDir, Eq("event_id", "777"), bloomRoot(dir))
       .select("event_id", "user_id", "event_type")
   }
 
@@ -234,13 +222,12 @@ object IndexedQueries extends QueryModule {
     * GraftRuleSpec asserts the files-read drop at plan level; here the
     * row set is under the oracle. */
   private def q174BloomTransparent(s: SparkSession, dir: String): DataFrame = {
-    prepare(s, dir)
-    graft.build.BloomIndex.build(
-      s, dataDir(dir), Seq("event_id"), bloomRoot(dir))
+    val dataDir = prepare(s, dir)
+    graft.build.BloomIndex.build(s, dataDir, Seq("event_id"), bloomRoot(dir))
     graft.Graft.enable(s)
-    graft.Graft.registerIndex(s, dataDir(dir), indexRoot(dir))
-    graft.Graft.registerBloom(s, dataDir(dir), bloomRoot(dir))
-    graft.Graft.read(s, dataDir(dir))
+    graft.Graft.registerIndex(s, dataDir, indexRoot(dir))
+    graft.Graft.registerBloom(s, dataDir, bloomRoot(dir))
+    graft.Graft.read(s, dataDir)
       .filter(col("event_id") === lit(555L))
       .select("event_id", "user_id", "event_type")
   }
@@ -255,12 +242,11 @@ object IndexedQueries extends QueryModule {
     * the must-not-prune case (a non-covered disjunct); here the row set
     * is under the oracle. */
   private def q175BloomInList(s: SparkSession, dir: String): DataFrame = {
-    prepare(s, dir)
-    graft.build.BloomIndex.build(
-      s, dataDir(dir), Seq("event_id"), bloomRoot(dir))
+    val dataDir = prepare(s, dir)
+    graft.build.BloomIndex.build(s, dataDir, Seq("event_id"), bloomRoot(dir))
     graft.Graft.enable(s)
-    graft.Graft.registerBloom(s, dataDir(dir), bloomRoot(dir))
-    graft.Graft.read(s, dataDir(dir))
+    graft.Graft.registerBloom(s, dataDir, bloomRoot(dir))
+    graft.Graft.read(s, dataDir)
       .filter(col("event_id") === lit(555L) || col("event_id") === lit(777L))
       .select("event_id", "user_id", "event_type")
   }
@@ -289,8 +275,8 @@ object IndexedQueries extends QueryModule {
     // the catalog entry over the files instead of re-paying the
     // partitioned write (the claimed ingest-pays-once economics; the
     // earlier writeBucketed call rewrote the layout per invocation)
-    val fpL = graft.build.Layout.sourceFingerprint(s, s"$dir/lineitem.parquet")
-    val fpO = graft.build.Layout.sourceFingerprint(s, s"$dir/orders.parquet")
+    val fpL = Artifact.fingerprint(s, s"$dir/lineitem.parquet")
+    val fpO = Artifact.fingerprint(s, s"$dir/orders.parquet")
     graft.build.Layout.ensureBucketed(
       Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_quantity")),
       lT, "l_orderkey", 8, fpL)

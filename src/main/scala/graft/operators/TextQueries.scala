@@ -1,10 +1,9 @@
 package graft.operators
 
 import graft.Tables
-import graft.build.GenStore
+import graft.build.{Artifact, GenStore}
 import graft.dedup.DedupArtifacts
 import graft.text.{PostingsStore, TextIndex}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,11 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object TextQueries extends QueryModule {
 
-  private def root(sfDir: String): String = {
-    val sfName = new java.io.File(sfDir).getName
-    s"${DedupArtifacts.artifactBase}/graft_demo/v${IndexedQueries.DemoLayoutVersion}/$sfName"
-  }
-
   /** Artifact epoch: bump to rebuild the postings stores alone.
     * (2 = the norms sidecar joined the generations; 3 = the sentinel-
     * free `sent` counter joined the meta — the flat fast path's
@@ -47,24 +41,26 @@ object TextQueries extends QueryModule {
     * caller — true models the dated-ingest day, false the re-ingest
     * upsert). One definition for all three text artifacts. */
   private def ensurePostings(s: SparkSession, sfDir: String, name: String,
-      fields: Seq[(String, String)], deltaNewIds: Boolean): String = synchronized {
-    val dir = s"${root(sfDir)}/$name"
-    val marker = new Path(s"${root(sfDir)}/_META_$name")
+      fields: Seq[(String, String)], deltaNewIds: Boolean): String =
     // the FULL field mapping (names AND columns — PostingsStore
     // .fieldsKey, the key the store itself validates on append) rides
     // the fingerprint: hashing names alone would reuse a stale store
     // across two configurations indexing different columns under the
     // same field names (r18 nit)
-    val fp = s"e$PostingsEpoch:${PostingsStore.fieldsKey(fields)}:" +
-      graft.build.Layout.sourceFingerprint(s, s"$sfDir/documents.parquet")
-    GenStore.ensureArtifact(s, marker, fp, dir) {
-      val docs = Tables.documents(s, sfDir)
-      PostingsStore.build(docs.filter(!isDelta), dir, "doc_id", fields)
-      PostingsStore.append(docs.filter(isDelta), dir, "doc_id", fields,
+    ensureStore(s, sfDir, name, PostingsStore.fieldsKey(fields)) { (docs, d) =>
+      PostingsStore.build(docs.filter(!isDelta), d, "doc_id", fields)
+      PostingsStore.append(docs.filter(isDelta), d, "doc_id", fields,
         newIds = deltaNewIds)
     }
-    dir
-  }
+
+  /** One postings-store artifact `name` of `sfDir`: fingerprinted on the
+    * documents table, the epoch and the store's `params`; `build` writes
+    * its history from the documents at the directory it is handed. */
+  private def ensureStore(s: SparkSession, sfDir: String, name: String,
+      params: String)(build: (DataFrame, String) => Unit): String =
+    Artifact.ensure(s, sfDir, name, s"e$PostingsEpoch:$params:" +
+        Artifact.fingerprint(s, s"$sfDir/documents.parquet"))(
+      build(Tables.documents(s, sfDir), _))
 
   /** The flagship single-field postings history (base + declared delta
     * append — plain-regime reads, the common-case economics). */
@@ -269,17 +265,12 @@ object TextQueries extends QueryModule {
     * docs containing a term via the term->byte-range index over a
     * multi-file copy of documents; oracle is the plain contains filter. */
   private def q38TextBlockScan(s: SparkSession, dir: String): DataFrame = {
-    val dataDir = s"${root(dir)}/docs_data"
-    val indexRoot = s"${root(dir)}/docs_text_index"
-    synchronized {
-      val p = new Path(dataDir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) {
-        Tables.documents(s, dir).repartitionByRange(4, col("doc_id"))
-          .write.parquet(dataDir)
-      }
-      graft.text.BlockTextIndex.build(s, dataDir, "text", indexRoot)
+    val dataDir = Artifact.ensure(s, dir, "docs_data",
+        Artifact.fingerprint(s, s"$dir/documents.parquet")) { d =>
+      Tables.documents(s, dir).repartitionByRange(4, col("doc_id")).write.parquet(d)
     }
+    val indexRoot = s"${Artifact.root(dir)}/docs_text_index"
+    synchronized(graft.text.BlockTextIndex.build(s, dataDir, "text", indexRoot))
     graft.text.BlockTextIndex.scanForTerm(s, dataDir, "text", "dup", indexRoot)
       ._1.select("doc_id", "lang")
   }
@@ -370,42 +361,24 @@ object TextQueries extends QueryModule {
     * corpus, gen 1 re-ingests the delta batch WITH CHANGED CONTENT
     * (each delta doc gains a trailing `graftmark` token) as an
     * UNDECLARED append — the re-crawled-documents scenario. */
-  private def upsertStoreDir(s: SparkSession, dir: String): String = {
-    val d = s"${root(dir)}/text_postings_u"
-    val marker = new Path(s"${root(dir)}/_META_text_postings_u")
-    val fp = s"e$PostingsEpoch:u:" +
-      graft.build.Layout.sourceFingerprint(s, s"$dir/documents.parquet")
-    synchronized {
-      GenStore.ensureArtifact(s, marker, fp, d) {
-        val docs = Tables.documents(s, dir)
-        PostingsStore.build(docs, d)
-        PostingsStore.append(
-          docs.filter(isDelta)
-            .withColumn("text", concat(col("text"), lit(" graftmark"))),
-          d) // undeclared: the bounded doc-level resolution regime
-      }
+  private def upsertStoreDir(s: SparkSession, dir: String): String =
+    ensureStore(s, dir, "text_postings_u", "u") { (docs, d) =>
+      PostingsStore.build(docs, d)
+      PostingsStore.append(
+        docs.filter(isDelta)
+          .withColumn("text", concat(col("text"), lit(" graftmark"))),
+        d) // undeclared: the bounded doc-level resolution regime
     }
-    d
-  }
 
   /** The TAKEDOWN-history store behind q176: gen 0 indexes the full
     * corpus, then the standard delta batch's ids arrive as a DELETED-IDS
     * batch (the GDPR/opt-out feed) — one tombstone generation via
     * [[PostingsStore.delete]], no compact. */
-  private def takedownStoreDir(s: SparkSession, dir: String): String = {
-    val d = s"${root(dir)}/text_postings_d"
-    val marker = new Path(s"${root(dir)}/_META_text_postings_d")
-    val fp = s"e$PostingsEpoch:d:" +
-      graft.build.Layout.sourceFingerprint(s, s"$dir/documents.parquet")
-    synchronized {
-      GenStore.ensureArtifact(s, marker, fp, d) {
-        val docs = Tables.documents(s, dir)
-        PostingsStore.build(docs, d)
-        PostingsStore.delete(docs.filter(isDelta).select("doc_id"), d)
-      }
+  private def takedownStoreDir(s: SparkSession, dir: String): String =
+    ensureStore(s, dir, "text_postings_d", "d") { (docs, d) =>
+      PostingsStore.build(docs, d)
+      PostingsStore.delete(docs.filter(isDelta).select("doc_id"), d)
     }
-    d
-  }
 
   /** The HORIZON-COMPACTED store behind q181: gen 0 indexes the full
     * corpus, gen 1 re-ingests the delta with ONE trailing `graftmark`
@@ -414,27 +387,18 @@ object TextQueries extends QueryModule {
     * generation AT clock 1 while gen 2 survives byte-identical. The
     * retention story: yesterday's deep history is reclaimed, this
     * week's stays reproducible. */
-  private def horizonStoreDir(s: SparkSession, dir: String): String = {
-    val d = s"${root(dir)}/text_postings_hz"
-    val marker = new Path(s"${root(dir)}/_META_text_postings_hz")
-    val fp = s"e$PostingsEpoch:hz:" +
-      graft.build.Layout.sourceFingerprint(s, s"$dir/documents.parquet")
-    synchronized {
-      GenStore.ensureArtifact(s, marker, fp, d) {
-        val docs = Tables.documents(s, dir)
-        PostingsStore.build(docs, d)
-        PostingsStore.append(
-          docs.filter(isDelta)
-            .withColumn("text", concat(col("text"), lit(" graftmark"))), d)
-        PostingsStore.append(
-          docs.filter(isDelta)
-            .withColumn("text",
-              concat(col("text"), lit(" graftmark graftmark"))), d)
-        GenStore.compactThrough(s, d, 1L)
-      }
+  private def horizonStoreDir(s: SparkSession, dir: String): String =
+    ensureStore(s, dir, "text_postings_hz", "hz") { (docs, d) =>
+      PostingsStore.build(docs, d)
+      PostingsStore.append(
+        docs.filter(isDelta)
+          .withColumn("text", concat(col("text"), lit(" graftmark"))), d)
+      PostingsStore.append(
+        docs.filter(isDelta)
+          .withColumn("text",
+            concat(col("text"), lit(" graftmark graftmark"))), d)
+      GenStore.compactThrough(s, d, 1L)
     }
-    d
-  }
 
   /** Pre-build every per-corpus postings store — the bench calls this
     * UNTIMED (artifact builds are ingest cost, not read cost; r18 #5),

@@ -1,9 +1,9 @@
 package graft.similarity
 
 import graft.Tables
-import graft.build.{GenStore, MetaIO}
+import graft.build.{Artifact, GenStore}
 import graft.dedup.DedupArtifacts
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,16 +74,14 @@ import org.apache.spark.sql.functions._
   *    filter commutes with the latest-gen reduce (bucket = id), so the
   *    fetch stays a pruned point read in every regime.
   *
-  * STALENESS is PER HISTORY (r17): each tree pairs with its own
-  * `_META_<name>` marker carrying `h<version>:<params>:<sourceFp>` —
-  * a single history's version bump (or a param change scoped to its
-  * family) rebuilds ONLY that tree, where the pre-r17 single
-  * fingerprint rebuilt all nine (the r16 verdict's stretch item). The
-  * old single-epoch lineage v1–v10 is recorded in git history; the
-  * per-history versions below start at 1 in the relocated `h/` root.
-  * Meta written LAST per tree, atomically ([[MetaIO]]); partial state
-  * (missing tree meta, or an index tree whose own `_INDEX_META` is
-  * gone) rebuilds that history alone.
+  * STALENESS is PER HISTORY: each history is one [[Artifact.ensure]]
+  * tree whose fingerprint is `h<version>:<params>:<sourceFp>` — a
+  * single history's version bump (or a param change scoped to its
+  * family) rebuilds ONLY that tree, in place. The two PQ histories
+  * share a third artifact, `ivfpq_base` (the trained and coded base
+  * corpus), which each copies before its own append: a stale PQ history
+  * rebuilds from the base without retraining it. Partial state (a
+  * missing marker) rebuilds that history alone.
   */
 object AnnArtifacts {
 
@@ -110,31 +108,31 @@ object AnnArtifacts {
     * committed file list reset them all again — epoch 2.) */
   private val HistoryVersions: Map[String, Int] = Map(
     "ivf" -> 2, "lsh" -> 2, "ivfc" -> 2, "lshu" -> 2, "ivfu" -> 2,
-    "ivfpq" -> 2, "ivfpqu" -> 2, "vecs" -> 2, "vecsu" -> 2, "ivfd" -> 2,
-    "ivfb" -> 2)
+    "ivfpq_base" -> 2, "ivfpq" -> 2, "ivfpqu" -> 2, "vecs" -> 2, "vecsu" -> 2,
+    "ivfd" -> 2, "ivfb" -> 2)
 
-  private def root(sfDir: String): String =
-    s"${DedupArtifacts.artifactBase}/graft_ann/h/${DedupArtifacts.corpusKey(sfDir)}"
-  def ivfDir(sfDir: String): String = s"${root(sfDir)}/ivf"
-  def lshDir(sfDir: String): String = s"${root(sfDir)}/lsh"
-  def ivfCompactDir(sfDir: String): String = s"${root(sfDir)}/ivfc"
-  def lshUpsertDir(sfDir: String): String = s"${root(sfDir)}/lshu"
-  def ivfUntrustedDir(sfDir: String): String = s"${root(sfDir)}/ivfu"
-  def ivfPqDir(sfDir: String): String = s"${root(sfDir)}/ivfpq"
-  def ivfPqUpsertDir(sfDir: String): String = s"${root(sfDir)}/ivfpqu"
+  private def dirOf(sfDir: String, name: String): String =
+    s"${Artifact.root(sfDir)}/$name"
+  def ivfDir(sfDir: String): String = dirOf(sfDir, "ivf")
+  def lshDir(sfDir: String): String = dirOf(sfDir, "lsh")
+  def ivfCompactDir(sfDir: String): String = dirOf(sfDir, "ivfc")
+  def lshUpsertDir(sfDir: String): String = dirOf(sfDir, "lshu")
+  def ivfUntrustedDir(sfDir: String): String = dirOf(sfDir, "ivfu")
+  def ivfPqDir(sfDir: String): String = dirOf(sfDir, "ivfpq")
+  def ivfPqUpsertDir(sfDir: String): String = dirOf(sfDir, "ivfpqu")
 
   /** The TAKEDOWN history (r19 — the delete verb under the oracle):
     * gen 0 indexes the FULL corpus, then the standard delta batch's ids
     * arrive as a DELETED-IDS batch ([[GenStore.delete]] — one tombstone
     * generation, no compact). q177 probes through it and must see the
     * corpus-minus-takedowns exactly. */
-  def ivfDeleteDir(sfDir: String): String = s"${root(sfDir)}/ivfd"
+  def ivfDeleteDir(sfDir: String): String = dirOf(sfDir, "ivfd")
 
   /** The AS-OF history (r19): gen 0 indexes the BASE, gen 1 appends the
     * delta batch DECLARED new (a genuine dated-ingest day) — so an
     * as-of-gen-0 read must reproduce the pre-append corpus exactly.
     * q177's delete twin for time-travel. */
-  def ivfBaseDeltaDir(sfDir: String): String = s"${root(sfDir)}/ivfb"
+  def ivfBaseDeltaDir(sfDir: String): String = dirOf(sfDir, "ivfb")
 
   /** The corpus vectors as a MAINTAINED point-fetch store
     * ([[AnnIndex.buildVecs]]'s gen-stamped pb layout): the REFINE-FETCH
@@ -144,10 +142,10 @@ object AnnArtifacts {
     * .java:419-431`), so the PQ two-stage read never scans the corpus:
     * ADC reads nprobe/nlist of the CODES, rerank reads ≤ |shortlist|
     * id-buckets of the VECTORS. */
-  def vecsDir(sfDir: String): String = s"${root(sfDir)}/vecs"
+  def vecsDir(sfDir: String): String = dirOf(sfDir, "vecs")
 
   /** [[vecsDir]]'s undeclared-append twin (q172's fetch side). */
-  def vecsUpsertDir(sfDir: String): String = s"${root(sfDir)}/vecsu"
+  def vecsUpsertDir(sfDir: String): String = dirOf(sfDir, "vecsu")
 
   /** Per-family parameter fingerprints: a change rebuilds only the
     * histories it affects. */
@@ -161,54 +159,11 @@ object AnnArtifacts {
 
   /** Build-or-reuse the maintained index histories for `sfDir`'s
     * embeddings — each history independently (per-history staleness). */
-  def ensure(s: SparkSession, sfDir: String): Unit = synchronized {
-    val conf = s.sparkContext.hadoopConfiguration
-    val srcFp = graft.build.Layout.sourceFingerprint(
-      s, s"$sfDir/embeddings.parquet")
-    def fp(name: String, params: String) =
-      s"h${HistoryVersions(name)}:$params:$srcFp"
-    def histMeta(name: String) = new Path(s"${root(sfDir)}/_META_$name")
-    def dirOf(name: String) = s"${root(sfDir)}/$name"
-    def fresh(name: String, params: String): Boolean =
-      MetaIO.read(conf, histMeta(name)).contains(fp(name, params)) &&
-        GenStore.isComplete(s, dirOf(name))
-    // wipe-then-build-then-mark, ONE copy of the crash discipline: the
-    // stale tree AND its marker go before the rebuild (a crash
-    // mid-build must not leave a fresh-looking marker over a partial
-    // tree); the marker lands LAST. The shared-base PQ branch composes
-    // these same three steps, never re-implements them.
-    def wipe(name: String): Unit = {
-      val d = dirOf(name)
-      val fs = new Path(d).getFileSystem(conf)
-      if (fs.exists(histMeta(name))) fs.delete(histMeta(name), false)
-      if (fs.exists(new Path(d))) fs.delete(new Path(d), true)
-    }
-    def mark(name: String, params: String): Unit =
-      MetaIO.write(conf, histMeta(name), fp(name, params))
+  def ensure(s: SparkSession, sfDir: String): Unit = {
+    val srcFp = Artifact.fingerprint(s, s"$sfDir/embeddings.parquet")
     def build(name: String, params: String)(body: String => Unit): Unit =
-      if (!fresh(name, params)) {
-        wipe(name); body(dirOf(name)); mark(name, params)
-      }
-    // one-time legacy cleanup: pre-r17 roots lived under versioned
-    // graft_ann/v<N>/ paths the per-history scheme never reads again —
-    // reclaim them instead of leaving dead full-corpus trees behind on
-    // deployments whose artifact dir outlives a round. GATED behind a
-    // marker so the destructive sweep (and its listStatus) runs ONCE,
-    // not on every ensure() — an unguarded sweep would repeatedly
-    // delete shared artifact state out from under any concurrently
-    // running pre-r17 process (the r17 advisor's finding)
-    try {
-      val annBase = new Path(s"${DedupArtifacts.artifactBase}/graft_ann")
-      val fs = annBase.getFileSystem(conf)
-      val swept = new Path(annBase, "_LEGACY_V_SWEPT")
-      if (fs.exists(annBase) && !fs.exists(swept)) {
-        fs.listStatus(annBase).foreach { st =>
-          if (st.isDirectory && st.getPath.getName.matches("v[0-9]+"))
-            fs.delete(st.getPath, true)
-        }
-        MetaIO.write(conf, swept, "1")
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
+      Artifact.ensure(s, sfDir, name,
+        s"h${HistoryVersions(name)}:$params:$srcFp")(body): Unit
 
     lazy val e = emb(s, sfDir)
     lazy val isDelta =
@@ -259,31 +214,25 @@ object AnnArtifacts {
       AnnIndex.appendIvf(delta, d, newIds = true)
     }
     // the two PQ histories share an identical deterministic gen-0 tree
-    // (the append≡rebuild spec pins that determinism): when BOTH are
-    // stale, build the base once and copy it before the divergent
-    // appends, instead of paying the heaviest stage (train both models
-    // + code the whole base corpus) twice; when only one is stale, it
-    // rebuilds independently
-    val pqBase = (d: String) => AnnIndex.buildIvfPq(base, d,
-      nlist = IvfNlist, nSub = PqNSub, subDim = PqSubDim, nCent = PqNCent)
-    if (!fresh("ivfpq", pqParams) && !fresh("ivfpqu", pqParams)) {
-      val fs = new Path(root(sfDir)).getFileSystem(conf)
-      Seq("ivfpq", "ivfpqu").foreach(wipe)
-      pqBase(dirOf("ivfpq"))
-      org.apache.hadoop.fs.FileUtil.copy(
-        fs, new Path(dirOf("ivfpq")), fs, new Path(dirOf("ivfpqu")),
-        false, conf)
-      AnnIndex.appendIvfPq(delta, dirOf("ivfpq"), newIds = true)
-      AnnIndex.appendIvfPq(delta, dirOf("ivfpqu")) // undeclared: bounded
-      mark("ivfpq", pqParams)
-      mark("ivfpqu", pqParams)
-    } else {
-      build("ivfpq", pqParams) { d =>
-        pqBase(d); AnnIndex.appendIvfPq(delta, d, newIds = true)
+    // (the append≡rebuild spec pins that determinism): it is built once
+    // as its own artifact and copied before each history's divergent
+    // append, instead of paying the heaviest stage (train both models
+    // + code the whole base corpus) per history
+    def fromPqBase(d: String): Unit = {
+      val pqBase = Artifact.ensure(s, sfDir, "ivfpq_base",
+        s"h${HistoryVersions("ivfpq_base")}:$pqParams:$srcFp") { b =>
+        AnnIndex.buildIvfPq(base, b,
+          nlist = IvfNlist, nSub = PqNSub, subDim = PqSubDim, nCent = PqNCent)
       }
-      build("ivfpqu", pqParams) { d =>
-        pqBase(d); AnnIndex.appendIvfPq(delta, d)
-      }
+      val conf = graft.build.Commit.conf(s)
+      val fs = new Path(pqBase).getFileSystem(conf)
+      FileUtil.copy(fs, new Path(pqBase), fs, new Path(d), false, conf): Unit
+    }
+    build("ivfpq", pqParams) { d =>
+      fromPqBase(d); AnnIndex.appendIvfPq(delta, d, newIds = true)
+    }
+    build("ivfpqu", pqParams) { d =>
+      fromPqBase(d); AnnIndex.appendIvfPq(delta, d) // undeclared: bounded
     }
     // the refine-fetch stores (q171/q172): maintained id-bucketed
     // vector tables — declared append-only and undeclared-upsert twins

@@ -249,7 +249,7 @@ object AnnIndex extends org.apache.spark.internal.Logging {
     * distance table, rerank query side — previously re-scanned the
     * queries' parquet inside its own job; with 3-row query sets the
     * per-scan job overhead dominated entire maintained-ANN reads
-    * (RunOne: 13-26 construction jobs per read, 85-92% of wall).
+    * (`Dev run`: 13-26 construction jobs per read, 85-92% of wall).
     * Returns the local relation plus each row's vector as doubles
     * (float→double is exact) for the driver-side probe-cell twin; None
     * past the cap or for a null/null-element vector (the Catalyst

@@ -560,7 +560,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // feature extraction moved to ingest (DedupArtifacts.phashes): the
     // report plan must scan the 8-byte fingerprint artifact, never the
     // payloads — no typed map, no decode, in the per-report plan
-    assert(p.contains("graft_dedup") && p.contains("phashes"),
+    assert(p.contains("/dedup/phashes"),
       s"the profile must scan the persisted phash artifact:\n$p")
     assert(!p.contains("MapPartitions"),
       s"no per-report re-hashing of payloads:\n$p")
@@ -757,7 +757,7 @@ class PlanShapeSpec extends AnyFunSuite {
       // cluster map is served from its doc_id-BUCKETED catalog table
       // (graft_clusters_*, v12 layout) — still the persisted artifact,
       // one bucketed copy removed from the parquet tree
-      assert(p.contains("graft_dedup") || p.contains("graft_clusters_") ||
+      assert(p.contains("/dedup/") || p.contains("graft_clusters_") ||
         p.contains("graft_media_clusters_") || p.contains("ExistingRDD"),
         s"$q must consume the persisted artifact:\n$p")
       assert(!p.contains("xxhash64"),

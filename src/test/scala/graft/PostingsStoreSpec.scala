@@ -181,14 +181,15 @@ class PostingsStoreSpec extends AnyFunSuite {
   }
 
   test("artifact discipline: the fingerprinted marker rebuilds on source change, reuses otherwise") {
-    val d = s"$work/p6"
-    val marker = new org.apache.hadoop.fs.Path(s"$work/_META_p6")
+    val corpus = s"$work/p6"
+    val marker = new org.apache.hadoop.fs.Path(
+      s"${graft.build.Artifact.root(corpus)}/_META_p6")
     var builds = 0
     def ensure(fp: String): Unit =
-      graft.build.GenStore.ensureArtifact(spark, marker, fp, d) {
+      graft.build.Artifact.ensure(spark, corpus, "p6", fp) { d =>
         builds += 1
         PostingsStore.build(docsDF(Seq(1L -> "alpha")), d)
-      }
+      }: Unit
     ensure("fp-a"); ensure("fp-a")
     assert(builds == 1, "an unchanged fingerprint must reuse the artifact")
     ensure("fp-b") // the source changed: stale results must NOT be served
