@@ -93,7 +93,7 @@ object Graft {
     val descs = IndexBuilder.loadDescriptors(spark, indexRoot)
     if (descs.isEmpty) return Nil
     IndexBuilder.listDataFiles(spark, dataDir)
-      .flatMap(f => IndexBuilder.freshDescriptor(descs, f).toSeq.flatMap(_.columns))
+      .flatMap(f => IndexBuilder.freshDescriptorVerified(spark, descs, f).toSeq.flatMap(_.columns))
       .distinct.sorted
   }
 }

@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session of the mains (Bench, Verify, Dev,
-  * ScaleProbe): `local[cpus]` with as many shuffle
-  * partitions, UTC session time, nanosecond timestamps read as longs
-  * (see `Tables.events`), AQE on and no UI. Floors and plan digests are
-  * measured under exactly this configuration, so every main must share
-  * it. */
+  * ScaleProbe) and every spec (through `SparkSpec`): `local[cpus]` with
+  * as many shuffle partitions, UTC session time, nanosecond timestamps
+  * read as longs (see `Tables.events`), AQE on and no UI. Floors and
+  * plan digests are measured under exactly this configuration, so the
+  * mains and every spec must share it. */
 object Session {
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()

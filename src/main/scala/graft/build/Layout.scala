@@ -33,7 +33,7 @@ object Layout {
       spark.sql(s"DROP TABLE IF EXISTS `$table`")
       val loc = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = loc.getFileSystem(Commit.conf(spark))
       if (fs.exists(loc)) fs.delete(loc, true)
     }
     df.write
@@ -76,8 +76,8 @@ object Layout {
     // an unchanged source must rewrite, not re-declare a mismatched DDL
     // over the old files
     val fp = s"v$LayoutVersion:$bucketCol:$buckets:${df.schema.toDDL}:$sourceFp"
-    val fresh = MetaIO.read(spark.sparkContext.hadoopConfiguration, meta)
-      .contains(fp)
+    val conf = Commit.conf(spark)
+    val fresh = MetaIO.read(conf, meta).contains(fp)
     if (spark.catalog.tableExists(table)) {
       // same-session reuse — but only while the layout meta still
       // matches the CURRENT source fingerprint: a source that changed
@@ -98,7 +98,7 @@ object Layout {
       writeBucketed(df, table, bucketCol, buckets)
       // atomic (MetaIO): a crash mid-write must leave no truncated
       // marker that could accidentally string-compare equal later
-      MetaIO.write(spark.sparkContext.hadoopConfiguration, meta, fp)
+      MetaIO.write(conf, meta, fp)
     }
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** The reference's date/time utility surface (`util/DateUtil.java`,
   * 533 LoC of Joda formatters pinned to UTC) re-expressed as Catalyst
-  * expressions: the named formats, dateid round-trips, the `YYYY/MM/DD`
+  * expressions: the named formats, the dateid key, the `YYYY/MM/DD`
   * day-partition convention (`retrieval/StatusesIndexManager
   * .java:80-108`), day iteration, and the MySQL zero-date -> null
   * special case. Sessions run with spark.sql.session.timeZone=UTC,
@@ -33,9 +33,8 @@ object DateFormats {
     when(s === MySqlZero, lit(null).cast("timestamp"))
       .otherwise(to_timestamp(s, MySql))
 
-  /** dateid (yyyyMMdd int/string) <-> date round-trip. */
+  /** dateid (yyyyMMdd int) of a timestamp. */
   def toDateId(ts: Column): Column = date_format(ts, DateId).cast("int")
-  def fromDateId(id: Column): Column = to_date(id.cast("string"), DateId)
 
   /** `YYYY/MM/DD` day key, the index-collection partition convention. */
   def dayKey(ts: Column): Column = date_format(ts, DayPartition)

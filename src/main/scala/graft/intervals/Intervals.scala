@@ -9,7 +9,6 @@ package graft.intervals
 final case class Block(start: Long, end: Long) {
   require(start <= end, s"Block start must be <= end: [$start,$end)")
   def length: Long = end - start
-  def overlapsOrTouches(o: Block): Boolean = start <= o.end && o.start <= end
   def overlaps(o: Block): Boolean = start < o.end && o.start < end
 }
 
@@ -144,9 +143,6 @@ object IntervalOps {
   /** Plain uncapped union (Long.MaxValue cap). */
   def union(a: Seq[Block], b: Seq[Block]): Seq[Block] =
     normalize(a ++ b)
-
-  /** Total bytes covered by a posting list. */
-  def totalLength(blocks: Seq[Block]): Long = blocks.map(_.length).sum
 
   /** Bin-pack a posting list into "splits" each no larger than
     * `maxSplit`, greedily packing adjacent ranges; mirrors

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.build.IndexBuilder
+import graft.build.{Commit, IndexBuilder}
 import graft.query.{Pred, PrunedScanner}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
@@ -132,9 +132,7 @@ case class GraftPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * datasets living on the session's DEFAULT filesystem; roots on any
     * other FS are left untouched (full scan) rather than resolved
     * against the wrong filesystem. */
-  private def onDefaultFs(p: org.apache.hadoop.fs.Path): Boolean = {
-    val defaultUri = org.apache.hadoop.fs.FileSystem.getDefaultUri(
-      spark.sparkContext.hadoopConfiguration)
+  private def onDefaultFs(defaultUri: java.net.URI)(p: org.apache.hadoop.fs.Path): Boolean = {
     val u = p.toUri
     (u.getScheme == null || u.getScheme == defaultUri.getScheme) &&
       (u.getAuthority == null || u.getAuthority == defaultUri.getAuthority)
@@ -159,9 +157,10 @@ case class GraftPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
           (registry.nonEmpty || bloomRegistry.nonEmpty) =>
       val reg = registry
       val breg = bloomRegistry
+      val defaultUri = org.apache.hadoop.fs.FileSystem.getDefaultUri(Commit.conf(spark))
       // each registered data root with every index root registered for it
       val decisions = rel.location.rootPaths
-        .filter(onDefaultFs)
+        .filter(onDefaultFs(defaultUri))
         .map(p => normalize(p.toString))
         .distinct
         .map(d => d -> (reg.get(d) ++ breg.get(d)).toSeq)

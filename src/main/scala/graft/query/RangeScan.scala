@@ -3,22 +3,13 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Debug utility: read exactly one byte range `[start, end)` of one
-  * file — the rebuild of `OneSplitInputFormat`
-  * (`retrieval/OneSplitInputFormat.java:31-54`), which the reference
-  * uses with `TestIndexedReader` to eyeball the rows an index entry
-  * points at. The `_metadata` split columns give the same block
-  * identity the sparse index records, so a posting's range can be
-  * inspected directly. */
+/** Debug utility: read the rows one index posting points at, as the
+  * reference does with `OneSplitInputFormat`
+  * (`retrieval/OneSplitInputFormat.java:31-54`) and `TestIndexedReader`.
+  * The `_metadata` split columns give the same block identity the
+  * sparse index records, so a posting's ranges can be inspected
+  * directly. */
 object RangeScan {
-
-  /** Rows whose read-split lies inside `[start, end)` of `file`. */
-  def readRange(spark: SparkSession, file: String, start: Long, end: Long): DataFrame =
-    spark.read.parquet(file)
-      .withColumn("_block_start", col("_metadata.file_block_start"))
-      .withColumn("_block_end",
-        col("_metadata.file_block_start") + col("_metadata.file_block_length"))
-      .filter(col("_block_start") >= start && col("_block_end") <= end)
 
   /** Rows of the blocks a specific index posting covers — the
     * TestIndexedReader flow: look the value up, read only its ranges.

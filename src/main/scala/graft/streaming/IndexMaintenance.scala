@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.build.{GenStore, IndexBuilder}
+import graft.build.{Commit, GenStore, IndexBuilder}
 import graft.similarity.AnnIndex
 import graft.text.PostingsStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -413,7 +413,7 @@ object IndexMaintenance extends org.apache.spark.internal.Logging {
     // tombstone generation is dropped by the next compact).
     val marker = new org.apache.hadoop.fs.Path(
       s"${storeDir.stripSuffix("/")}.deletes_batch")
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = Commit.conf(spark)
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!GenStore.isComplete(spark, storeDir))

@@ -64,13 +64,6 @@ object TextIndex {
       .sortWithinPartitions("term", "doc_id")
       .write.mode(SaveMode.Overwrite).parquet(path)
 
-  /** Persist fielded postings clustered by (field, term) so a scoped
-    * term lookup prunes to one field's row groups. */
-  def writeFieldedPostings(postings: DataFrame, path: String): Unit =
-    postings.repartition(col("field"), col("term"))
-      .sortWithinPartitions("field", "term", "doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-
   /** Disjunctive (Lucene default-OR) match: postings rows for any query
     * term. */
   private def hits(postings: DataFrame, terms: Seq[String]): DataFrame =

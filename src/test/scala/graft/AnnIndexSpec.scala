@@ -2,7 +2,7 @@ package graft
 
 import graft.build.{GenStore, GenTable, MetaIO}
 import graft.similarity.{Ann, AnnIndex}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,22 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * registered q45/q30 in-query builds bit-for-bit (same trainer, same
   * parameters, same probe). Upserts follow the postings `gen`
   * convention: a re-ingested id's latest generation supersedes. */
-class AnnIndexSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("AnnIndexSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AnnIndexSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private lazy val work = {
-    val d = java.nio.file.Files.createTempDirectory("annidx").toString
-    d
-  }
+  private lazy val work = tempDir("annidx")
 
   private def rows3(df: DataFrame): Set[(Long, Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -282,9 +270,8 @@ class AnnIndexSpec extends AnyFunSuite {
     // Widen the range partitioning so the tiny fixture still yields
     // enough files/row groups for skipping to be measurable (each file
     // is one row group here).
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try AnnIndex.buildBanded(emb, idx, nPlanes = 64, bands = 4)
-    finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    withConf("spark.sql.shuffle.partitions" -> "32")(
+      AnnIndex.buildBanded(emb, idx, nPlanes = 64, bands = 4))
     val (_, allRows) = scanStats(AnnIndex.bandedRowsLive(spark, idx))
     val someBuckets = AnnIndex.bandedRowsLive(spark, idx)
       .filter(col("vec_id") === 0L).collect()
@@ -688,8 +675,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("micro-batch banded append writes files scaled to the batch, not the session width") {
     val idx = s"$work/lsh_smallfiles"
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try {
+    withConf("spark.sql.shuffle.partitions" -> "32") {
       AnnIndex.buildBanded(emb, idx, nPlanes = 16, bands = 8)
       // a 3-vector micro-batch: 24 banded rows — far below one file's
       // target, so the gen dir must hold ONE part file, not 32 shards
@@ -701,7 +687,7 @@ class AnnIndexSpec extends AnyFunSuite {
       assert(parts == 1,
         s"a tiny append must write one file (got $parts) — small-file " +
           "proliferation erodes O(|delta|) ingest until compact")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    }
   }
 
   /** The file scans of an executed plan (AQE stages unwrapped; a

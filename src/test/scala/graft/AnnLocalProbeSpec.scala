@@ -1,7 +1,6 @@
 package graft
 
 import graft.similarity.Ann
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,16 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * expression, so ANY divergence would silently drop candidate cells.
   * Pinned over EVERY vector of the test corpus as a query, at several
   * nprobe values, plus the null-vector edge. */
-class AnnLocalProbeSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("AnnLocalProbeSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AnnLocalProbeSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -3,9 +3,8 @@ package graft
 import graft.build.Artifact
 import graft.dedup.DedupArtifacts
 import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -14,34 +13,16 @@ import scala.jdk.CollectionConverters._
   * same directory name, an in-place source rewrite, or a crashed copy
   * never serve stale rows, and one table's change rebuilds only the
   * trees derived from it. */
-class ArtifactSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("ArtifactSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ArtifactSpec extends AnyFunSuite with SparkSpec {
 
   private val testdata = "/root/testdata"
 
-  private lazy val work = Files.createTempDirectory("artifact").toString
-
-  /** Every corpus path the spec keys artifacts by: the corpora are
-    * temporary, so their artifact trees go when the spec ends. */
-  private val corpora = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  override def afterAll(): Unit =
-    corpora.foreach(c => org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(Artifact.root(c))))
+  private lazy val work = tempDir("artifact")
 
   /** A corpus at `dir` holding `tables` copied from `testdata/<sf>`. */
   private def corpus(dir: String, sf: String, tables: String*): String = {
     Files.createDirectories(Paths.get(dir))
     tables.foreach(t => copyTable(s"$testdata/$sf", t, dir))
-    corpora += dir
     dir
   }
 
@@ -122,13 +103,10 @@ class ArtifactSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("fingerprint and ensure serve a corpus under a filesystem registered only in the session conf") {
-    val confs = Seq("fs.artfs.impl" -> classOf[ArtifactSessionFs].getName,
-      "fs.artfs.impl.disable.cache" -> "true")
     val local = corpus(s"$work/f/sfX", "sf0.001", "documents")
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val f = s"artfs://$local"
-      corpora += f
+    val f = s"artfs://$local"
+    try withConf("fs.artfs.impl" -> classOf[ArtifactSessionFs].getName,
+        "fs.artfs.impl.disable.cache" -> "true") {
       val fp = Artifact.fingerprint(spark, s"$f/documents.parquet")
       assert(fp == Artifact.fingerprint(spark, s"$local/documents.parquet"))
       var builds = 0
@@ -139,7 +117,9 @@ class ArtifactSpec extends AnyFunSuite with BeforeAndAfterAll {
       val dir = copy()
       assert(copy() == dir && builds == 1, "an unchanged fingerprint must reuse the copy")
       assert(rows(spark.read.parquet(dir)) == rows(Tables.documents(spark, local)))
-    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    // keyed by the artfs path, so outside every temporary directory
+    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(Artifact.root(f)))
   }
 }
 

@@ -1,23 +1,13 @@
 package graft
 
 import graft.operators.AsOfJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** As-of join semantics: backward inclusive match, null-payload
   * distinction, left vs inner, and plan shape (single shuffle of the
   * union, no pair explosion). */
-class AsOfJoinSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("AsOfJoinSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
 

@@ -2,23 +2,14 @@ package graft
 
 import graft.functions.DateFormats
 import graft.text.BlockTextIndex
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Block text index: term-localized files are actually skipped; date
   * format edge cases. */
-class BlockTextSpec extends AnyFunSuite {
+class BlockTextSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("BlockTextSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val work = java.nio.file.Files.createTempDirectory("test_btext").toString
+  private val work = tempDir("test_btext")
 
   test("term scan prunes files whose vocabulary lacks the term") {
     import spark.implicits._

@@ -2,24 +2,14 @@ package graft
 
 import graft.build.BloomIndex
 import graft.query.{Eq, PrunedScanner}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bloom skipping index: pruned scan ≡ full scan, actual pruning on
   * clustered data, no false negatives by construction. */
-class BloomSpec extends AnyFunSuite {
+class BloomSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("BloomSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val work = java.nio.file.Files.createTempDirectory("test_bloom").toString
+  private val work = tempDir("test_bloom")
   private val dataDir = s"$work/data"
   private val bloomRoot = s"$work/bloom"
 

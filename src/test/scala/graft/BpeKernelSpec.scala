@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.expressions.{BpeEncodeUtil, BpeTable}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
@@ -20,16 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a 5000-merge table proving the kernel's cost stays independent of K
   * (the chain at that size cannot even be built as a plan).
   */
-class BpeKernelSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("BpeKernelSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeKernelSpec extends AnyFunSuite with SparkSpec {
 
   private def chain(text: String, merges: Seq[(String, String)]): String =
     merges.foldLeft(text) { case (t, (p, s)) => t.replace(p, s) }

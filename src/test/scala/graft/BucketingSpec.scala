@@ -1,41 +1,25 @@
 package graft
 
 import graft.build.Layout
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucketing removes the shuffle from co-located joins — the plan-level
   * proof of the 100 TB join strategy (pre-partition once, join many
   * times shuffle-free). */
-class BucketingSpec extends AnyFunSuite {
+class BucketingSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("BucketingSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force the join strategy question
-    .config("spark.sql.warehouse.dir", java.nio.file.Files.createTempDirectory("test_warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Broadcast joins off: the plans below must answer the join
+    * strategy question. */
+  private def noBroadcast(body: => Unit): Unit =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   test("join of two bucketed tables runs without an Exchange") {
-    // getOrCreate may hand back another suite's session, where the
-    // builder confs above never applied — pin the runtime-settable one
-    // the plan assertions depend on
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try bucketedJoinBody()
-    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    noBroadcast(bucketedJoinBody())
   }
 
-  // unique per run: the warehouse dir can hold orphan locations from a
-  // previous JVM (catalog forgot the table, location survives) and
-  // saveAsTable refuses to reuse them
-  private val bEvents = s"b_events_${System.nanoTime()}"
-  private val bUsers = s"b_users_${System.nanoTime()}"
+  private val bEvents = "b_events"
+  private val bUsers = "b_users"
 
   private def bucketedJoinBody(): Unit = {
     val events = Tables.events(spark, "/root/testdata/sf0.001")
@@ -72,9 +56,7 @@ class BucketingSpec extends AnyFunSuite {
     // 100 TB, the corpus itself) plans no Exchange on either side —
     // the "exchange-free joins from every report" docstring is a plan
     // assert, not prose
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    noBroadcast {
       val sfDir = "/root/testdata/sf0.001"
       val clusters = graft.dedup.DedupArtifacts.clusters(spark, sfDir)
       val shingles = graft.dedup.DedupArtifacts.shingles(spark, sfDir)
@@ -84,7 +66,7 @@ class BucketingSpec extends AnyFunSuite {
       assert(plan.contains("SortMergeJoin"), plan)
       assert(!plan.contains("Exchange"),
         s"cluster-map join against a co-bucketed table must not shuffle:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    }
   }
 
   test("re-declaring a bucketed table over existing files keeps content and bucketing") {
@@ -93,11 +75,9 @@ class BucketingSpec extends AnyFunSuite {
     // CLUSTERED BY ... LOCATION re-attaches it, trusting the bucket ids
     // Spark encoded in the file names. Simulated here by declaring a
     // second catalog entry over the first table's location.
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val src = s"b_src_${System.nanoTime()}"
-      val redecl = s"b_redecl_${System.nanoTime()}"
+    noBroadcast {
+      val src = "b_src"
+      val redecl = "b_redecl"
       val events = Tables.events(spark, "/root/testdata/sf0.001")
         .select("event_id", "user_id", "event_type", "value")
       Layout.writeBucketed(events, src, "user_id", 4)
@@ -125,6 +105,6 @@ class BucketingSpec extends AnyFunSuite {
       val plan = j.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"re-declared bucketed join must not shuffle:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft
 import graft.build.IndexBuilder
 import graft.query.{Eq, PrunedScanner}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,18 +10,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * MTIME-PRESERVING rewrite (same length, same mtime, different bytes —
   * the distcp -p / touch scenario) and falls back to a full scan, where
   * the length+mtime fingerprint alone is fooled. */
-class ChecksumSpec extends AnyFunSuite {
+class ChecksumSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("ChecksumSpec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private val work = tempDir("test_checksum")
 
-  private val work = java.nio.file.Files.createTempDirectory("test_checksum").toString
+  /** Rewrites `dataDir`'s first part file in place: one byte flipped
+    * mid-file, same length, mtime restored — the filesystem updates the
+    * .crc sidecar, so only the content checksum can tell. Returns the
+    * file as it was listed before. */
+  private def rewriteFirstFile(dataDir: String): IndexBuilder.SourceFile = {
+    val victim = IndexBuilder.listDataFiles(spark, dataDir).head
+    val p = new Path(victim.path)
+    val fs = p.getFileSystem(graft.build.Commit.conf(spark))
+    val bytes = new Array[Byte](victim.length.toInt)
+    val in = fs.open(p)
+    try in.readFully(0, bytes) finally in.close()
+    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x5a).toByte
+    val out = fs.create(p, true)
+    try out.write(bytes) finally out.close()
+    fs.setTimes(p, victim.modificationTime, -1)
+    victim
+  }
 
   test("mtime-preserving rewrite is detected as stale, fingerprint-only is fooled") {
     val dataDir = s"$work/data"
@@ -42,24 +50,8 @@ class ChecksumSpec extends AnyFunSuite {
       spark, dataDir, Eq("event_type", "error"), indexRoot)
     assert(before.fallbackFiles == 0)
 
-    // rewrite one part file: flip a byte mid-file, keep length, restore
-    // mtime — the filesystem updates the .crc sidecar, so only the
-    // content checksum can tell
-    val victim = IndexBuilder.listDataFiles(spark, dataDir).head
-    val p = new Path(victim.path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = {
-      val in = fs.open(p)
-      try {
-        val buf = new Array[Byte](victim.length.toInt)
-        in.readFully(0, buf)
-        buf
-      } finally in.close()
-    }
-    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x5a).toByte
-    val out = fs.create(p, true)
-    try out.write(bytes) finally out.close()
-    fs.setTimes(p, victim.modificationTime, -1)
+    // rewrite one part file behind the length+mtime fingerprint
+    val victim = rewriteFirstFile(dataDir)
 
     val after = IndexBuilder.listDataFiles(spark, dataDir)
       .find(_.path == victim.path).get
@@ -88,18 +80,7 @@ class ChecksumSpec extends AnyFunSuite {
       withChecksums = true)
 
     // mtime-preserving rewrite of one file (content differs, fingerprint same)
-    val victim = IndexBuilder.listDataFiles(spark, dataDir).head
-    val p = new Path(victim.path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = {
-      val in = fs.open(p)
-      try { val b = new Array[Byte](victim.length.toInt); in.readFully(0, b); b }
-      finally in.close()
-    }
-    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x33).toByte
-    val out = fs.create(p, true)
-    try out.write(bytes) finally out.close()
-    fs.setTimes(p, victim.modificationTime, -1)
+    val victim = rewriteFirstFile(dataDir)
     spark.catalog.refreshByPath(dataDir)
 
     // incremental build for a DIFFERENT column: the rewritten file is
@@ -131,5 +112,17 @@ class ChecksumSpec extends AnyFunSuite {
       d.checksum.isEmpty && d.checksumAlgorithm == "length+mtime"))
     val f = IndexBuilder.listDataFiles(spark, dataDir).head
     assert(IndexBuilder.freshDescriptorVerified(spark, descs, f).isDefined)
+  }
+
+  test("indexedColumns drops a checksum-stale file's columns") {
+    val dataDir = s"$work/data_cols"
+    val indexRoot = s"$work/index_cols"
+    spark.range(0, 100, 1, 1).select(col("id"), (col("id") % 3).cast("string").as("event_type"))
+      .write.parquet(dataDir)
+    IndexBuilder.build(spark, dataDir, Seq("event_type"), indexRoot, withChecksums = true)
+    assert(Graft.indexedColumns(spark, dataDir, indexRoot) == Seq("event_type"))
+    rewriteFirstFile(dataDir)
+    // every pruned read of the file now falls back to a full scan
+    assert(Graft.indexedColumns(spark, dataDir, indexRoot) == Nil)
   }
 }

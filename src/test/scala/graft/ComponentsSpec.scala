@@ -1,18 +1,10 @@
 package graft
 
 import graft.operators.Components
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected components: known graphs, determinism, convergence. */
-class ComponentsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("ComponentsSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ComponentsSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
 

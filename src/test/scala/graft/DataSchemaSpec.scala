@@ -2,23 +2,15 @@ package graft
 
 import graft.build.IndexBuilder
 import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `IndexBuilder.dataSchema` reads one footer on the driver and must
   * give the schema Spark's own inference gives, file choice included. */
-class DataSchemaSpec extends AnyFunSuite {
+class DataSchemaSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("DataSchemaSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val work = java.nio.file.Files.createTempDirectory("dataschema").toString
+  private val work = tempDir("dataschema")
 
   private def write(df: DataFrame, dir: String): String = {
     df.write.mode("overwrite").parquet(dir)
@@ -78,11 +70,10 @@ class DataSchemaSpec extends AnyFunSuite {
     spark.range(0, 20, 1, 1).select(col("id"), lit("a").as("a")).write.parquet(dir)
     spark.range(20, 40, 1, 1).select(col("id"), lit(2L).as("b")).write.mode("append").parquet(dir)
     sameAsSpark(dir)
-    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
-    try {
+    withConf("spark.sql.parquet.mergeSchema" -> "true") {
       val merged = Graft.read(spark, dir).schema
       assert(merged == spark.read.parquet(dir).schema)
       assert(Set("id", "a", "b").subsetOf(merged.fieldNames.toSet))
-    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.dedup.{Dedup, DedupArtifacts}
 import graft.operators.Components
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * operator outputs (the differential proof the oracle gate repeats at
   * sf0.01 every round), and the prepare must be an idempotent no-op
   * when fresh. */
-class DedupArtifactsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("DedupArtifactsSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupArtifactsSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -2,7 +2,7 @@ package graft
 
 import graft.dedup.Dedup
 import graft.operators.DedupQueries
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,19 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * identical at every scale factor, and (b) the structural reason — each
   * true pair shares at least one below-cut shingle, with measured
   * margin. */
-class DedupCutSpec extends AnyFunSuite {
+class DedupCutSpec extends AnyFunSuite with SparkSpec {
 
   private val N = 3
   private val Threshold = 0.8
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("DedupCutSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def pairs(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -1,7 +1,6 @@
 package graft
 
 import graft.dedup.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,15 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * spec-local corpus, so the oracle definitions are replicated exactly:
   * hamming/Jaccard from first principles on collected rows — 600 docs,
   * driver-sized by construction). */
-class DedupExciteSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("DedupExciteSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupExciteSpec extends AnyFunSuite with SparkSpec {
 
   private val N = 3
   private val T = 0.8

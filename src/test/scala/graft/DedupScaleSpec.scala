@@ -2,7 +2,7 @@ package graft
 
 import graft.dedup.Dedup
 import graft.operators.DedupQueries
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,7 +39,7 @@ import org.scalatest.time.{Minutes, Span}
   * q26 (uncut exact Jaccard) is the one intentionally-quadratic oracle
   * anchor and is excluded by design.
   */
-class DedupScaleSpec extends AnyFunSuite with TimeLimits {
+class DedupScaleSpec extends AnyFunSuite with TimeLimits with SparkSpec {
 
   /** The canary must never become the hang it guards against (round 6:
     * this spec embedded q63's interpreted-HOF plan and stalled `sbt
@@ -50,15 +50,6 @@ class DedupScaleSpec extends AnyFunSuite with TimeLimits {
 
   /** 10× data × a 3× polylog/skew allowance — far from quadratic's 100×. */
   private val MaxGrowth = 30.0
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("DedupScaleSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def docs(sf: String): DataFrame =
     Tables.documents(spark, s"/root/testdata/$sf")

@@ -2,7 +2,7 @@ package graft
 
 import graft.build.GenStore
 import graft.similarity.{Ann, AnnIndex}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,20 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * source directory must never revert an id to OLDER content because
   * it sorts higher). Text twins live in PostingsStoreSpec.
   */
-class DeleteAsOfSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("DeleteAsOfSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DeleteAsOfSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private lazy val work =
-    java.nio.file.Files.createTempDirectory("delasof").toString
+  private lazy val work = tempDir("delasof")
 
   private def emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
   private def isDelta = col("vec_id") % 7 === 6

@@ -3,7 +3,6 @@ package graft
 import graft.build.IndexBuilder
 import graft.query.{Eq, PrunedScanner, RangeScan}
 import graft.text.{Analyzers, TextIndex}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,17 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * EMPTY strings, quotes, apostrophes, operators, unicode. Exercises
   * index build on a high-cardinality column, text search over messy
   * text, and the single-range debug reader. */
-class ExciteShapeSpec extends AnyFunSuite {
+class ExciteShapeSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("ExciteShapeSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val work = java.nio.file.Files.createTempDirectory("test_excite").toString
+  private val work = tempDir("test_excite")
 
   /** Synthetic excite-log-shaped rows: uid \t bignum \t query. */
   private def fixture = {

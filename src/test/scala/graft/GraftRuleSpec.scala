@@ -2,7 +2,6 @@ package graft
 
 import graft.build.IndexBuilder
 import graft.plans.GraftPruneRule
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,22 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Transparent pruning: a plain `spark.read.parquet(dir).filter(...)`
   * over a registered indexed path reads fewer files, with identical
   * results. */
-class GraftRuleSpec extends AnyFunSuite {
+class GraftRuleSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("GraftRuleSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.experimental.extraOptimizations ++= Seq(GraftPruneRule(s))
-    s
-  }
-
-  private val work = java.nio.file.Files.createTempDirectory("test_rule").toString
+  private val work = tempDir("test_rule")
   private val dataDir = s"$work/data"
   private val indexRoot = s"$work/index"
 
@@ -34,11 +20,20 @@ class GraftRuleSpec extends AnyFunSuite {
       case f: FileSourceScanExec => f.relation.location.inputFiles.length.toLong
     }.sum
 
+  /** `body` with no index registered: the plain read's answer. */
+  private def unregistered[T](body: => T): T = {
+    val confs = Seq(GraftPruneRule.IndexesConf, GraftPruneRule.BloomIndexesConf)
+    val saved = confs.flatMap(k => spark.conf.getOption(k).map(k -> _))
+    confs.foreach(spark.conf.unset)
+    try body finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   private lazy val prepared: Unit = {
     Tables.events(spark, "/root/testdata/sf0.001")
       .repartitionByRange(8, col("event_type"), col("event_id"))
       .write.parquet(dataDir)
     IndexBuilder.build(spark, dataDir, Seq("event_type", "user_id"), indexRoot)
+    Graft.enable(spark)
     spark.conf.set(GraftPruneRule.IndexesConf, s"$dataDir=$indexRoot")
   }
 
@@ -50,10 +45,8 @@ class GraftRuleSpec extends AnyFunSuite {
     assert(scanFileCount(pruned) < scanFileCount(full),
       "optimizer rule should shrink the file listing")
     // identical results to an unregistered full scan + filter
-    spark.conf.unset(GraftPruneRule.IndexesConf)
-    val expect = spark.read.parquet(dataDir).filter(col("event_type") === "error")
-      .select("event_id").collect().map(_.getLong(0)).toSet
-    spark.conf.set(GraftPruneRule.IndexesConf, s"$dataDir=$indexRoot")
+    val expect = unregistered(spark.read.parquet(dataDir).filter(col("event_type") === "error")
+      .select("event_id").collect().map(_.getLong(0)).toSet)
     val got = pruned.select("event_id").collect().map(_.getLong(0)).toSet
     assert(got == expect && got.nonEmpty)
   }
@@ -81,13 +74,8 @@ class GraftRuleSpec extends AnyFunSuite {
     val df = spark.read.parquet(dataDir)
       .filter(col("event_type") === "error" && col("event_id") === 7L)
     assert(scanFileCount(df) < scanFileCount(spark.read.parquet(dataDir)))
-    val expect = {
-      spark.conf.unset(GraftPruneRule.IndexesConf)
-      val e = spark.read.parquet(dataDir)
-        .filter(col("event_type") === "error" && col("event_id") === 7L).count()
-      spark.conf.set(GraftPruneRule.IndexesConf, s"$dataDir=$indexRoot")
-      e
-    }
+    val expect = unregistered(spark.read.parquet(dataDir)
+      .filter(col("event_type") === "error" && col("event_id") === 7L).count())
     assert(df.count() == expect)
   }
 
@@ -124,9 +112,7 @@ class GraftRuleSpec extends AnyFunSuite {
       .repartition(4, col("event_type"))
       .write.partitionBy("day").parquet(pdir)
     IndexBuilder.build(spark, pdir, Seq("event_type"), s"$work/pidx")
-    spark.conf.set(GraftPruneRule.IndexesConf,
-      s"$dataDir=$indexRoot;$pdir=$work/pidx")
-    try {
+    withConf(GraftPruneRule.IndexesConf -> s"$dataDir=$indexRoot;$pdir=$work/pidx") {
       val cut = lit("2024-01-16").cast("date")
       val full = numFilesRead(spark.read.parquet(pdir).filter(lit(true)))
       val partOnly = numFilesRead(
@@ -147,13 +133,11 @@ class GraftRuleSpec extends AnyFunSuite {
       val got = spark.read.parquet(pdir)
         .filter(col("event_type") === "error" && col("day") >= cut)
         .select("event_id").collect().map(_.getLong(0)).toSet
-      spark.conf.set(GraftPruneRule.IndexesConf, s"$dataDir=$indexRoot")
-      val expect = spark.read.parquet(pdir)
+      val expect = unregistered(spark.read.parquet(pdir)
         .filter(col("event_type") === "error" && col("day") >= cut)
-        .select("event_id").collect().map(_.getLong(0)).toSet
+        .select("event_id").collect().map(_.getLong(0)).toSet)
       assert(got == expect && got.nonEmpty)
-    } finally
-      spark.conf.set(GraftPruneRule.IndexesConf, s"$dataDir=$indexRoot")
+    }
   }
 
   test("transparent range predicates stay correct under the rule") {
@@ -162,13 +146,8 @@ class GraftRuleSpec extends AnyFunSuite {
     // prunes nothing — the point is correctness of the rule x Between
     // interaction, not a pruning win
     val df = spark.read.parquet(dataDir).filter(col("user_id") < 3)
-    val expect = {
-      spark.conf.unset(GraftPruneRule.IndexesConf)
-      val e = spark.read.parquet(dataDir).filter(col("user_id") < 3)
-        .select("event_id").collect().map(_.getLong(0)).toSet
-      spark.conf.set(GraftPruneRule.IndexesConf, s"$dataDir=$indexRoot")
-      e
-    }
+    val expect = unregistered(spark.read.parquet(dataDir).filter(col("user_id") < 3)
+      .select("event_id").collect().map(_.getLong(0)).toSet)
     assert(df.select("event_id").collect().map(_.getLong(0)).toSet == expect)
     assert(expect.nonEmpty)
   }
@@ -207,8 +186,7 @@ class GraftRuleSpec extends AnyFunSuite {
     prepared
     val bloomRoot = s"$work/bloom"
     graft.build.BloomIndex.build(spark, dataDir, Seq("event_id"), bloomRoot)
-    spark.conf.set(GraftPruneRule.BloomIndexesConf, s"$dataDir=$bloomRoot")
-    try {
+    withConf(GraftPruneRule.BloomIndexesConf -> s"$dataDir=$bloomRoot") {
       // pick an id that lives in ONE file of the range-partitioned copy
       val probe = spark.read.parquet(dataDir)
         .filter(col("event_type") === "error")
@@ -221,12 +199,8 @@ class GraftRuleSpec extends AnyFunSuite {
       assert(scanFileCount(viaBloom) < full,
         "a bloom-registered EQ must shrink the transparent listing")
       // row-set equivalence against the unregistered scan
-      spark.conf.unset(GraftPruneRule.BloomIndexesConf)
-      spark.conf.unset(GraftPruneRule.IndexesConf)
-      val expect = spark.read.parquet(dataDir)
-        .filter(col("event_id") === lit(probe)).collect().length
-      spark.conf.set(GraftPruneRule.IndexesConf, s"$dataDir=$indexRoot")
-      spark.conf.set(GraftPruneRule.BloomIndexesConf, s"$dataDir=$bloomRoot")
+      val expect = unregistered(spark.read.parquet(dataDir)
+        .filter(col("event_id") === lit(probe)).collect().length)
       assert(viaBloom.collect().length == expect && expect > 0)
       // composition: postings prune the event_type conjunct, bloom the
       // event_id conjunct — the combined listing is no larger than
@@ -248,33 +222,19 @@ class GraftRuleSpec extends AnyFunSuite {
         .filter(col("event_id") === lit(probe) || col("event_id") === lit(probe2))
       assert(scanFileCount(inShape) < full,
         "an all-bloom-covered OR (IN-list shape) must prune")
-      val expectIn = {
-        spark.conf.unset(GraftPruneRule.BloomIndexesConf)
-        spark.conf.unset(GraftPruneRule.IndexesConf)
-        val n = spark.read.parquet(dataDir)
-          .filter(col("event_id") === lit(probe) || col("event_id") === lit(probe2))
-          .collect().length
-        spark.conf.set(GraftPruneRule.IndexesConf, s"$dataDir=$indexRoot")
-        spark.conf.set(GraftPruneRule.BloomIndexesConf, s"$dataDir=$bloomRoot")
-        n
-      }
+      val expectIn = unregistered(spark.read.parquet(dataDir)
+        .filter(col("event_id") === lit(probe) || col("event_id") === lit(probe2))
+        .collect().length)
       assert(inShape.collect().length == expectIn && expectIn >= 2)
       // an EQ OR'd with a leaf the sketches do not cover: a file is
       // dropped only when the postings also exclude the other branch
       // (it can match rows in bloom-negative files)
       val orShape = spark.read.parquet(dataDir)
         .filter(col("event_id") === lit(probe) || col("event_type") === "error")
-      val expectOr = {
-        spark.conf.unset(GraftPruneRule.BloomIndexesConf)
-        spark.conf.unset(GraftPruneRule.IndexesConf)
-        val n = spark.read.parquet(dataDir)
-          .filter(col("event_id") === lit(probe) || col("event_type") === "error")
-          .collect().length
-        spark.conf.set(GraftPruneRule.IndexesConf, s"$dataDir=$indexRoot")
-        spark.conf.set(GraftPruneRule.BloomIndexesConf, s"$dataDir=$bloomRoot")
-        n
-      }
+      val expectOr = unregistered(spark.read.parquet(dataDir)
+        .filter(col("event_id") === lit(probe) || col("event_type") === "error")
+        .collect().length)
       assert(orShape.collect().length == expectOr)
-    } finally spark.conf.unset(GraftPruneRule.BloomIndexesConf)
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import graft.build.GenStore
 import graft.similarity.AnnIndex
 import graft.text.PostingsStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,20 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * appends AFTER the squash (the deadCounts base-generation split),
   * and a head squash restores an untrusted store to plain reads with
   * the clock preserved. */
-class HorizonCompactSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("HorizonCompactSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HorizonCompactSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private lazy val work =
-    java.nio.file.Files.createTempDirectory("horizon").toString
+  private lazy val work = tempDir("horizon")
 
   private def emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
 

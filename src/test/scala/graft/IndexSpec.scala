@@ -2,26 +2,16 @@ package graft
 
 import graft.build.IndexBuilder
 import graft.query.{And, Between, Eq, Or, Pred, PrunedScanner}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end index machinery: build over a multi-file dataset, prune,
   * residual-filter, fall back on staleness — the index-scan ≡ full-scan
   * differential the reference proves with ScanUsingIndexJob. */
-class IndexSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("IndexSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IndexSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private val work = java.nio.file.Files.createTempDirectory("test_idx").toString
+  private val work = tempDir("test_idx")
   private def dataDir = s"$work/data"
   private def indexRoot = s"$work/index"
 

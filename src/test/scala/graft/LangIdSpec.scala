@@ -1,22 +1,13 @@
 package graft
 
 import graft.text.LangId
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Char-n-gram language ID: train on a controlled corpus with disjoint
   * vocabularies, classify held-out docs — mechanics and determinism,
   * independent of the synthetic testdata labels. */
-class LangIdSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("LangIdSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LangIdSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
 

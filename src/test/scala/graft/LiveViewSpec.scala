@@ -10,7 +10,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{DelegateToFileSystem, Path}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -27,19 +27,10 @@ import scala.util.Try
   * file list and lists no directory; a compaction committed at any
   * point of a read leaves its rows unchanged; a filesystem registered
   * only in the session conf serves the whole lifecycle. */
-class LiveViewSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("LiveViewSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LiveViewSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private lazy val work = java.nio.file.Files.createTempDirectory("liveview").toString
+  private lazy val work = tempDir("liveview")
 
   private def emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
 
@@ -75,8 +66,7 @@ class LiveViewSpec extends AnyFunSuite {
   /** The text twin of [[vectorHistory]]: the re-ingest also empties one
     * doc (a sentinel row) and the re-add brings back new text. */
   private def textHistory(dir: String): String = {
-    val sp = spark
-    import sp.implicits._
+    import spark.implicits._
     def docs(ds: Seq[(Long, String)]) = ds.toDF("doc_id", "text")
     PostingsStore.build(docs((0L until 30L).map(i => i -> s"w${i % 7} w${i % 3} common")), dir)
     PostingsStore.append(docs((30L until 40L).map(i => i -> s"w${i % 5} fresh")), dir, newIds = true)
@@ -184,12 +174,8 @@ class LiveViewSpec extends AnyFunSuite {
       if (k == 0) "[null,null]" else s"[$k,${Set(-7L, 3L, 9L)(k)}]")
     def got = df.collect().map(_.toString).toSeq
     assert(got == want)
-    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assert(got == want)
-    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(assert(got == want))
   }
 
   test("one-row tables: writers leave one row per (key, gen), duplicate-id batches included") {
@@ -258,8 +244,7 @@ class LiveViewSpec extends AnyFunSuite {
 
   test("live lists no directory: plain, bounded, full and as-of reads are built from the meta") {
     val flat = s"$work/text_flat"
-    val sp = spark
-    import sp.implicits._
+    import spark.implicits._
     PostingsStore.build(Seq(1L -> "alpha beta", 2L -> "beta").toDF("doc_id", "text"), flat)
     PostingsStore.append(Seq(3L -> "gamma").toDF("doc_id", "text"), flat, newIds = true)
     val reads = Seq[(String, String => DataFrame)](
@@ -323,13 +308,10 @@ class LiveViewSpec extends AnyFunSuite {
   }
 
   test("a filesystem registered only in the session conf serves build, append and read") {
-    val sp = spark
-    import sp.implicits._
-    val confs = Seq("fs.sessfs.impl" -> classOf[SessionFs].getName,
-      "fs.sessfs.impl.disable.cache" -> "true",
-      "fs.AbstractFileSystem.sessfs.impl" -> classOf[SessionAfs].getName)
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    import spark.implicits._
+    withConf("fs.sessfs.impl" -> classOf[SessionFs].getName,
+        "fs.sessfs.impl.disable.cache" -> "true",
+        "fs.AbstractFileSystem.sessfs.impl" -> classOf[SessionAfs].getName) {
       val d = s"sessfs://$work/sessfs_text"
       PostingsStore.build(Seq(1L -> "alpha beta", 2L -> "beta").toDF("doc_id", "text"), d)
       PostingsStore.append(Seq(2L -> "gamma").toDF("doc_id", "text"), d)
@@ -337,7 +319,7 @@ class LiveViewSpec extends AnyFunSuite {
       assert(PostingsStore.live(spark, d).select("doc_id", "term").as[(Long, String)]
         .collect().toSet == Set(2L -> "gamma"))
       assert(rows(view(d, GenTable.Postings)) == rows(view(d, GenTable.Postings, resolveAll = true)))
-    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
   }
 }
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.similarity.Ann
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,16 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    its dups instead of chasing the boundary — recall is still
   *    measured and bounded below to catch regressions.
   */
-class LshNearDupSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("LshNearDupSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LshNearDupSpec extends AnyFunSuite with SparkSpec {
 
   private def pairs(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet

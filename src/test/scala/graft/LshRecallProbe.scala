@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev measurement tool (not a test): per-query exact-hit counts of
@@ -14,12 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object LshRecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("8")
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val emb = Tables.embeddings(spark, s"/root/testdata/$sf")
       val q = emb.filter(col("vec_id") < 3)

@@ -1,24 +1,15 @@
 package graft
 
 import graft.multimodal.{MediaRecord, Multimodal}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Real JDK image codec path: ImageIO decode recovers true dimensions,
   * Graphics2D resize emits a decodable PNG at the scaled dimensions, and
   * non-image payloads fall back to the deterministic stub. */
-class MultimodalSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("MultimodalSpec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends AnyFunSuite with SparkSpec {
 
   /** Fixture datasets live under a fresh directory per run. */
-  private lazy val fixtures = java.nio.file.Files.createTempDirectory("multimodal").toString
+  private lazy val fixtures = tempDir("multimodal")
 
   test("decodeImage recovers the generated dimensions") {
     val png = Multimodal.Codecs.syntheticPng(37, 21, seed = 7L)

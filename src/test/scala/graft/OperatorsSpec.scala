@@ -4,27 +4,17 @@ import graft.dedup.Dedup
 import graft.functions.{TextFunctions, Vectors}
 import graft.similarity.Ann
 import graft.text.TextIndex
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit-level behavior of the dedup / similarity / text operators that
   * the DuckDB gate can't see (recall bounds, edge cases, invariants). */
-class OperatorsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("OperatorsSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OperatorsSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
   /** Fixture datasets live under a fresh directory per run. */
-  private lazy val fixtures = java.nio.file.Files.createTempDirectory("operators").toString
+  private lazy val fixtures = tempDir("operators")
 
   test("wordShingles: fewer than n tokens yields empty, shingles distinct") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,24 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * parquet scan, column pruning in ReadSchema, broadcast joins for
   * small dimensions, TakeOrderedAndProject for top-k (no global sort),
   * and whole-stage codegen over the hot paths. */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("PlanShapeSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // PushedFilters lists get elided at the default 100 chars, which
-    // would make the assertions below pass/fail on string luck
-    .config("spark.sql.maxMetadataStringLength", "1000")
-    // getOrCreate applies builder configs onto a shared session, so an
-    // earlier suite (BucketingSpec) may have left auto-broadcast OFF;
-    // re-pin the default or every unhinted-broadcast assertion becomes
-    // suite-order-dependent
-    .config("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // PushedFilters lists get elided at the default 100 chars, which
+  // would make the assertions below pass/fail on string luck
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.maxMetadataStringLength" -> "1000")(super.withFixture(test))
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -77,7 +64,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("pruned-scan residuals on typed columns reach PushedFilters") {
     import graft.query.{And, Eq, PrunedScanner}
     import graft.build.IndexBuilder
-    val work = java.nio.file.Files.createTempDirectory("test_planresid").toString
+    val work = tempDir("test_planresid")
     Tables.events(spark, sfDir).repartition(2).write.parquet(s"$work/data")
     IndexBuilder.build(spark, s"$work/data", Seq("event_type", "user_id"), s"$work/index")
     val df = PrunedScanner.scan(spark, s"$work/data",
@@ -92,7 +79,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // build a small index, then check the lookup scan carries a
     // partition filter on `column`
     import graft.build.IndexBuilder
-    val work = java.nio.file.Files.createTempDirectory("test_plan").toString
+    val work = tempDir("test_plan")
     Tables.events(spark, sfDir).repartition(2).write.parquet(s"$work/data")
     IndexBuilder.build(spark, s"$work/data", Seq("event_type"), s"$work/index")
     val lookup = IndexBuilder.postings(spark, s"$work/index")
@@ -262,7 +249,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("build-scan path canonicalization is a codegen expression, not a scalar UDF") {
     import graft.build.IndexBuilder
-    val work = java.nio.file.Files.createTempDirectory("test_canon").resolve("data").toString
+    val work = s"${tempDir("test_canon")}/data"
     Tables.events(spark, sfDir).limit(100).write.parquet(work)
     val probe = IndexBuilder.listDataFiles(spark, work).head
     val canon = IndexBuilder.canonicalizeExpr(spark, probe)

@@ -2,7 +2,9 @@ package graft
 
 import graft.build.GenStore
 import graft.text.{PostingsStore, TextIndex}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.DelegateToFileSystem
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,18 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * disappear, emptied docs leave search entirely (the sentinel
   * mechanism); the artifact marker detects source changes; the
   * streaming twin equals the batch path. */
-class PostingsStoreSpec extends AnyFunSuite {
+class PostingsStoreSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("PostingsStoreSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private lazy val work =
-    java.nio.file.Files.createTempDirectory("pstore").toString
+  private lazy val work = tempDir("pstore")
 
   private def docsDF(rows: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._
@@ -181,7 +174,7 @@ class PostingsStoreSpec extends AnyFunSuite {
   }
 
   test("artifact discipline: the fingerprinted marker rebuilds on source change, reuses otherwise") {
-    val corpus = s"$work/p6"
+    val corpus = tempDir("p6")
     val marker = new org.apache.hadoop.fs.Path(
       s"${graft.build.Artifact.root(corpus)}/_META_p6")
     var builds = 0
@@ -363,6 +356,25 @@ class PostingsStoreSpec extends AnyFunSuite {
     assert(liveSet(store) == liveSet(twin))
   }
 
+  test("a deletes stream serves a store on a filesystem registered only in the session conf") {
+    import spark.implicits._
+    val docs = Seq(1L -> "alpha beta", 2L -> "alpha gamma")
+    val delDir = s"$work/delfs_dels"
+    Seq(2L).toDF("doc_id").write.parquet(delDir)
+    val twin = s"$work/delfs_twin"
+    PostingsStore.build(docsDF(docs), twin)
+    PostingsStore.delete(Seq(2L).toDF("doc_id"), twin)
+    withConf("fs.delfs.impl" -> classOf[DeletesSessionFs].getName,
+        "fs.delfs.impl.disable.cache" -> "true",
+        "fs.AbstractFileSystem.delfs.impl" -> classOf[DeletesSessionAfs].getName) {
+      val store = s"delfs://$work/delfs_store"
+      PostingsStore.build(docsDF(docs), store)
+      graft.streaming.IndexMaintenance.runDeletesAvailableNow(
+        spark, delDir, store, s"$work/delfs_ckpt", idCol = "doc_id").awaitTermination()
+      assert(liveSet(store) == liveSet(twin))
+    }
+  }
+
   test("streaming maintenance (AvailableNow) equals the batch path, replays are no-ops") {
     val docsDir = s"$work/stream_docs"
     val store = s"$work/stream_store"
@@ -390,3 +402,14 @@ class PostingsStoreSpec extends AnyFunSuite {
     assert(liveSet(store) == liveSet(b), "a drained re-run must be a no-op")
   }
 }
+
+/** [[graft.query.RaceFs]] under the `delfs` scheme, which only the
+  * deletes-stream session-conf spec registers. */
+class DeletesSessionFs extends graft.query.RaceFs {
+  override def getUri: java.net.URI = java.net.URI.create("delfs:///")
+}
+
+/** [[DeletesSessionFs]] for `FileContext`, which the meta's atomic
+  * rename uses. */
+class DeletesSessionAfs(uri: java.net.URI, conf: Configuration)
+  extends DelegateToFileSystem(uri, new DeletesSessionFs, conf, "delfs", false)

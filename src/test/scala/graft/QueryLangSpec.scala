@@ -2,21 +2,12 @@ package graft
 
 import graft.text.{QueryLang, TextIndex}
 import graft.text.QueryLang._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parser and compiler semantics of the text query language: grammar
   * shape, operator precedence, and every boolean/phrase/field form
   * checked against hand-computed match sets on a fixed corpus. */
-class QueryLangSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("QueryLangSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QueryLangSpec extends AnyFunSuite with SparkSpec {
 
   // doc_id, text, tag — chosen so every operator has both hits and misses
   private def corpus = {

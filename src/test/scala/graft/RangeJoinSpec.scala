@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.RangeJoin
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * semantics: same matches for any bin width, nulls and inverted
   * intervals match nothing, bounds are inclusive, negative coordinates
   * bin correctly (floorDiv, not truncate-toward-zero). */
-class RangeJoinSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("RangeJoinSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangeJoinSpec extends AnyFunSuite with SparkSpec {
 
   import scala.jdk.CollectionConverters._
   import org.apache.spark.sql.Row

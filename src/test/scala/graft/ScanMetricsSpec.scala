@@ -1,7 +1,6 @@
 package graft
 
 import graft.query.ScanMetrics
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,18 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * FilterRecordReader task counters. Also: hive-style day partitions
   * prune at plan time (the reference's YYYY/MM/DD index-collection
   * convention as partition columns). */
-class ScanMetricsSpec extends AnyFunSuite {
+class ScanMetricsSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("ScanMetricsSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val work = java.nio.file.Files.createTempDirectory("test_metrics").toString
+  private val work = tempDir("test_metrics")
 
   test("PruneStats aggregates pruning reports into one summary line") {
     graft.query.PruneStats.reset()

@@ -1,21 +1,12 @@
 package graft
 
 import graft.text.{Similarities, TextIndex}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Registered similarities: BM25 must fix the sum-of-tf pathology (a doc
   * stuffed with a COMMON query term outranking a doc matching the RARE
   * term), and the registry must behave like the analyzer registry. */
-class SimilaritiesSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("SimilaritiesSpec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SimilaritiesSpec extends AnyFunSuite with SparkSpec {
 
   // "common" appears in every doc; "rare" in exactly one. Doc 1 stuffs
   // the common term (tf 4), doc 2 matches the rare term once.

@@ -3,7 +3,6 @@ package graft
 import graft.build.{GenStore, IndexBuilder}
 import graft.query.{Eq, PrunedScanner}
 import graft.streaming.IndexMaintenance
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,18 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the AvailableNow stream indexes exactly the new files, and rebuilt
   * (changed) files are served from their fresh gen — stale postings rows
   * stay inert. */
-class StreamingIndexSpec extends AnyFunSuite {
+class StreamingIndexSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("StreamingIndexSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val work = java.nio.file.Files.createTempDirectory("test_stream").toString
+  private val work = tempDir("test_stream")
   private val dataDir = s"$work/data"
   private val indexRoot = s"$work/index"
 

@@ -2,25 +2,15 @@ package graft
 
 import graft.operators.Skew
 import graft.streaming.{EventRow, EventStreams}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming windowed aggregation (watermark), stateful sessionization,
   * and skew-salting equivalence. */
-class StreamingOpsSpec extends AnyFunSuite {
+class StreamingOpsSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("StreamingOpsSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val work = java.nio.file.Files.createTempDirectory("test_stream_ops").toString
+  private val work = tempDir("test_stream_ops")
 
   test("windowed counts over a file stream match the batch computation") {
     import spark.implicits._

@@ -1,21 +1,12 @@
 package graft
 
 import graft.text.TextIndex
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Positional-postings semantics: conjunctive AND and phrase queries,
   * including the classic edge cases (overlapping occurrences, repeated
   * words in the phrase, single-word phrases, absent terms). */
-class TextPhraseSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("TextPhraseSpec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextPhraseSpec extends AnyFunSuite with SparkSpec {
 
   private lazy val postings = {
     import spark.implicits._

@@ -2,7 +2,7 @@ package graft
 
 import graft.build.{GenStore, GenTable}
 import graft.similarity.{Ann, AnnIndex}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,20 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * EVERY regime, and the PQ point-fetch read through maintained stores
   * stays bit-identical to the corpus-scan rerank. Plus the r17 ADVICE
   * pins: dense PQ codebook ids and coherent duplicate-id coding. */
-class VecStoreSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("VecStoreSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VecStoreSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private lazy val work =
-    java.nio.file.Files.createTempDirectory("vecstore").toString
+  private lazy val work = tempDir("vecstore")
 
   private def emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
   private def isDelta = col("vec_id") % 7 === 6

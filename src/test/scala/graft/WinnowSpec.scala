@@ -1,22 +1,13 @@
 package graft
 
 import graft.dedup.Dedup
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Winnowing fingerprint properties: the MOSS guarantee (a shared
   * substring of length >= k + w - 1 yields a shared fingerprint),
   * density compression vs full k-gram hashing, and the short-document
   * edge cases. */
-class WinnowSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("WinnowSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WinnowSpec extends AnyFunSuite with SparkSpec {
 
   private val K = 8
   private val W = 4

@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.Graft
+import graft.{Graft, SparkSpec}
 import graft.build.IndexBuilder
 import java.io.File
 import org.apache.commons.io.FileUtils
@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataInputStream, FSDataOutp
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Try
@@ -24,17 +24,9 @@ import scala.util.Try
   * build committed at any access of a decision, never cost a matching
   * row, and a filesystem registered only in the session conf serves the
   * whole lifecycle. */
-class DriverPruneSpec extends AnyFunSuite {
+class DriverPruneSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("DriverPruneSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val work = java.nio.file.Files.createTempDirectory("driverprune").toString
+  private val work = tempDir("driverprune")
   private def dataDir = s"$work/data"
   private def indexRoot = s"$work/index"
   private val Columns = Seq("user_id", "event_type", "tag")
@@ -73,15 +65,10 @@ class DriverPruneSpec extends AnyFunSuite {
     s"$work/$name"
   }
 
-  private def withRaceFs[T](body: => T): T = {
-    spark.conf.set("fs.racefs.impl", classOf[RaceFs].getName)
-    spark.conf.set("fs.racefs.impl.disable.cache", "true")
-    try body finally {
-      RaceFs.disarm()
-      spark.conf.unset("fs.racefs.impl")
-      spark.conf.unset("fs.racefs.impl.disable.cache")
+  private def withRaceFs[T](body: => T): T =
+    withConf("fs.racefs.impl" -> classOf[RaceFs].getName, "fs.racefs.impl.disable.cache" -> "true") {
+      try body finally RaceFs.disarm()
     }
-  }
 
   /** Jobs started while `body` runs. A marker job submitted afterwards
     * flushes the listener bus: its start event arrives after every
@@ -314,13 +301,11 @@ class DriverPruneSpec extends AnyFunSuite {
 
   test("a filesystem registered only in the session conf serves build, buildIncremental, compact and a pruned scan") {
     prepared
-    val confs = Seq("fs.idxfs.impl" -> classOf[IndexSessionFs].getName,
-      "fs.idxfs.impl.disable.cache" -> "true",
-      "fs.AbstractFileSystem.idxfs.impl" -> classOf[IndexSessionAfs].getName)
     val data = s"$work/idxfs_data"
     FileUtils.copyDirectory(new File(dataDir), new File(data))
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf("fs.idxfs.impl" -> classOf[IndexSessionFs].getName,
+        "fs.idxfs.impl.disable.cache" -> "true",
+        "fs.AbstractFileSystem.idxfs.impl" -> classOf[IndexSessionAfs].getName) {
       val (d, root) = (s"idxfs://$data", s"idxfs://$work/idxfs_index")
       IndexBuilder.build(spark, d, Columns, root)
       val touched = IndexBuilder.listDataFiles(spark, d).head.path
@@ -332,7 +317,7 @@ class DriverPruneSpec extends AnyFunSuite {
       val (df, report) = PrunedScanner.scanWithReport(spark, d, pred, root)
       assert(report.fallbackFiles == 0 && report.selectedFiles < report.totalFiles)
       assert(ids(df) == fullScanIds(pred))
-    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
   }
 
   test("RangeScan.readPosting serves the live postings through the driver lookup") {
