@@ -36,14 +36,16 @@ object Artifact {
     sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_DIR",
       java.nio.file.Paths.get("target").toAbsolutePath.toString)
 
-  /** Corpus key: readable basename + a hash of the FULL canonical path,
+  /** Corpus key: readable basename + a hash of the FULL qualified path
+    * (its filesystem's `makeQualified`, under the active session's conf),
     * so two corpora that share a directory name (e.g. staging copies)
-    * get distinct artifact trees. */
+    * get distinct artifact trees, and one corpus gets one key whatever
+    * its spelling (`/x`, `file:///x`) or the directory a job starts in. */
   def corpusKey(sfDir: String): String = {
-    val f = new java.io.File(sfDir)
-    val h = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(f.getCanonicalPath))
-    s"${f.getName}_$h"
+    val p = new Path(sfDir)
+    val qualified = p.getFileSystem(Commit.conf(SparkSession.active)).makeQualified(p).toUri
+    val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(qualified.toString))
+    s"${p.getName}_$h"
   }
 
   /** The directory holding `sfDir`'s artifact trees and their markers. */

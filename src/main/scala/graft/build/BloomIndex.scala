@@ -30,24 +30,23 @@ import scala.jdk.CollectionConverters._
   * (descriptor fingerprint mismatch) fall back to a full scan exactly
   * like the postings index.
   *
-  * Layout (the postings index's, `IndexBuilder`'s class doc):
+  * Layout (the postings index's, `IndexBuilder`'s class doc: the meta's
+  * file table gives each file its id, a row is live iff its id is there):
   * {{{
-  * bloomRoot/_INDEX_META                           the commit: descriptors, files
-  * bloomRoot/v=K/blooms/batch=N/part-*.parquet     (file, column, bloom, gen)
+  * bloomRoot/_INDEX_META                           the commit: file table, files
+  * bloomRoot/v=K/blooms/batch=N/part-*.parquet     (file_id, column, bloom)
   * }}}
   *
   * Build = ONE pass over the data: explode (column, value) pairs,
   * aggregate a bloom per (file, column) with [[BloomAgg]] (map-side
   * partials merge with `mergeInPlace`, so the shuffle carries one
-  * sketch per partition, not per row).
+  * sketch per partition, not per row), then name each file by its id.
   */
 object BloomIndex {
 
   /** ~100k expected items x 3% fpp ≈ 90 KB per (file, column) sketch. */
   val DefaultExpectedItems: Long = 100000L
   val DefaultFpp: Double = 0.03
-
-  final case class BloomRow(file: String, column: String, bloom: Array[Byte], gen: Long)
 
   /** Serializable bloom-building UDAF over stringified values. */
   final case class BloomAgg(expectedItems: Long, fpp: Double)
@@ -71,9 +70,9 @@ object BloomIndex {
   /** Build (or refresh) blooms for `columns` over the dataset.
     * INCREMENTAL like the postings index: only files with no fresh
     * descriptor are read (a daily one-file append costs one file's
-    * scan, not the corpus), their bloom rows are committed gen-stamped
-    * as a new batch, and [[readSketches]]' gen filter makes superseded
-    * rows inert. `overwrite` forces a full rebuild into a new version. */
+    * scan, not the corpus), their bloom rows are committed as a new
+    * batch, and a rewritten file's new id leaves its superseded rows
+    * dead. `overwrite` forces a full rebuild into a new version. */
   def build(
       spark: SparkSession,
       dataDir: String,
@@ -85,53 +84,49 @@ object BloomIndex {
       withChecksums: Boolean = false): Unit = {
     require(columns.nonEmpty)
     IndexBuilder.refreshStale(spark, dataDir, columns, bloomRoot, withChecksums,
-        graft.model.IndexType.BloomParquet, overwrite) { (stale, out) =>
+        graft.model.IndexType.BloomParquet, overwrite) { (stale, fileId, out) =>
       val df = spark.read.parquet(stale.map(_.path): _*)
       val kvs = array(columns.map(c =>
         struct(lit(c).as("column"), col(c).cast("string").as("value"))): _*)
-      val canonical = IndexBuilder.canonicalizeExpr(spark, stale.head)
       val bloomAgg = udaf(BloomAgg(expectedItems, fpp))
-      import spark.implicits._
-      val gens = spark.createDataset(stale)
-        .select(col("path").as("file"), col("modificationTime").as("gen"))
-      df.select(explode(kvs).as("kv"),
-          canonical(col("_metadata.file_path")).as("file"))
+      df.select(explode(kvs).as("kv"), col("_metadata.file_path").as("file"))
         .select(col("file"), col("kv.column").as("column"), col("kv.value").as("value"))
         .groupBy("file", "column")
         .agg(bloomAgg(col("value")).as("bloom"))
-        .join(broadcast(gens), "file")
+        .select(fileId(col("file")).as("file_id"), col("column"), col("bloom"))
+        .sortWithinPartitions("column", "file_id")
         .write.mode("overwrite").parquet(out)
     }
   }
 
-  /** Drop bloom rows for deleted files and superseded generations and
-    * rewrite them as a new version — the maintenance twin of
+  /** Drop the dead bloom rows (deleted or rewritten files) and rewrite
+    * the rest as a new version — the maintenance twin of
     * `IndexBuilder.compact` (the append-only build otherwise accumulates
     * a dead ~90 KB sketch per rebuild per column forever). Returns
-    * (rowsBefore, rowsAfter), from the committed files' footers. Same-gen
-    * duplicates (a content-fresh file re-indexed for an added column
-    * re-emits its other columns) are byte-identical — bloom bits are an
-    * order-independent OR — so dropDuplicates is safe. */
+    * (rowsBefore, rowsAfter), from the committed files' footers.
+    * Duplicates under one id (a content-fresh file re-indexed for an
+    * added column re-emits its other columns) are byte-identical — bloom
+    * bits are an order-independent OR — so dropDuplicates is safe. */
   def compact(spark: SparkSession, bloomRoot: String): (Long, Long) =
     IndexBuilder.compactRoot(spark, bloomRoot)(
-      _.dropDuplicates("file", "column", "gen").write.mode("overwrite"))
+      _.dropDuplicates("file_id", "column").write.mode("overwrite"))
 
   /** The sketches of `columns` in the committed files of index `idx`
-    * whose gen is their file's in `gens` (file -> live descriptor gen),
-    * keyed by (file, column) — read on the driver with no Spark job,
-    * `column` pushed to parquet as an IN filter. The pruning decision
-    * (`graft.query.PrunedScanner`) turns them into evidence. A committed
-    * file that is gone throws `FileNotFoundException`. */
+    * whose file id is committed, keyed by (file path, column) — read on
+    * the driver with no Spark job, `column` pushed to parquet as an IN
+    * filter. The pruning decision (`graft.query.PrunedScanner`) turns
+    * them into evidence. A committed file that is gone throws
+    * `FileNotFoundException`. */
   private[graft] def readSketches(spark: SparkSession, idx: IndexBuilder.Root,
-      columns: Set[String], gens: Map[String, Long]): Map[(String, String), BloomFilter] = {
+      columns: Set[String]): Map[(String, String), BloomFilter] = {
     val out = Map.newBuilder[(String, String), BloomFilter]
     val filter = FilterCompat.get(FilterApi.in(FilterApi.binaryColumn("column"),
       columns.map(Binary.fromString).asJava))
     val conf = Commit.conf(spark)
     for (f <- idx.files) IndexBuilder.readFile(conf, new Path(idx.dir, f.path), filter,
         more = true) { g =>
-      val (file, column) = (g.getString("file", 0), g.getString("column", 0))
-      if (columns(column) && gens.get(file).contains(g.getLong("gen", 0)))
+      val column = g.getString("column", 0)
+      for (file <- idx.paths.get(g.getInteger("file_id", 0)) if columns(column))
         out += (file, column) -> BloomFilter.readFrom(
           new java.io.ByteArrayInputStream(g.getBinary("bloom", 0).getBytes))
     }

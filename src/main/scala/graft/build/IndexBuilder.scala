@@ -38,6 +38,7 @@ import scala.jdk.CollectionConverters._
   * read -> explode (column,value) pairs + _metadata block identity
   *      -> groupBy(file, column, value)            // single shuffle
   *      -> agg(MergeIntervals)                     // custom UDAF, map-side partial
+  *      -> file path -> file id                    // once per postings row
   *      -> sortWithinPartitions(column, value)     // parquet min/max friendly
   *      -> write one batch of the postings table, partitioned by column
   * }}}
@@ -52,14 +53,21 @@ import scala.jdk.CollectionConverters._
   * {{{
   * indexRoot/_INDEX_META                                the commit
   * indexRoot/v=K/postings/batch=N/column=<c>/part-*.parquet
-  *                                         (file, value, ranges, gen)
+  *                                         (file_id, value, ranges)
   * }}}
   *
   * The meta ports the `FileIndexDescriptor` sidecar
   * (`elephanttwin.thrift:39-50`): one atomic write records the index
-  * type and format version, per base file its indexed columns and a
-  * freshness fingerprint (length + modification time, and the content
-  * checksum when one was recorded), and every committed postings file.
+  * type and format version, the FILE TABLE — per base file its int id,
+  * its indexed columns and a freshness fingerprint (length +
+  * modification time, and the content checksum when one was recorded)
+  * — and every committed postings file. A file's path is held there
+  * only, as the reference holds it only in its index directory's name
+  * (`AbstractBlockIndexingJob.java:340-357`); rows carry the id. A row
+  * is live iff its id is in the table. A file keeps its id while its
+  * content is fresh and takes a new one, from a counter that never
+  * reuses an id, when it is re-indexed with new content (a
+  * checksum-detected rewrite that kept its mtime included).
   * Query-side code falls back to a full scan for any file whose
   * fingerprint no longer matches (`BlockIndexedFileInputFormat.java:
   * 338-386` semantics), and reads only the files the meta lists. A root
@@ -85,9 +93,11 @@ import scala.jdk.CollectionConverters._
   *    zone (pin UTC everywhere, as this engine's own sessions do) or
   *    timestamp/date lookups render different key strings and prune
   *    matching files. The engine does not record the build zone.
-  *  - File identity is the scheme-less canonical path
-  *    ([[canonicalPath]]): one index serves one filesystem; the
-  *    transparent rule refuses non-default-FS roots for this reason.
+  *  - File identity: a row names its file by id, the file table maps
+  *    the id to the scheme-less canonical path ([[canonicalPath]] of a
+  *    Hadoop path or a caller's string, [[renderedPath]] of a path Spark
+  *    rendered). One index serves one filesystem; the transparent rule
+  *    refuses non-default-FS roots for this reason.
   */
 object IndexBuilder {
 
@@ -104,9 +114,10 @@ object IndexBuilder {
     * freshness rule then verifies it — an mtime-preserving rewrite
     * (distcp -p, touch) is detected as stale instead of silently served
     * (`BlockIndexedFileInputFormat.verifyInputFileCheckSum:368-386`
-    * semantics). */
+    * semantics). `fileId` is the file's id in the file table. */
   final case class DescriptorRow(
       sourcePath: String,
+      fileId: Int,
       length: Long,
       modificationTime: Long,
       columns: Seq[String],
@@ -116,11 +127,13 @@ object IndexBuilder {
       checksum: String = "")
 
   /** An index root's commit: its version, its index type, the
-    * descriptor of every indexed base file by path, and its table's
-    * committed files. */
+    * descriptor of every indexed base file by path (the file table), the
+    * next file id to hand out, and its table's committed files. */
   private[graft] final case class Root(dir: String, version: Long, indexType: String,
-      descriptors: Map[String, DescriptorRow], tables: Map[String, Commit.Table]) {
+      descriptors: Map[String, DescriptorRow], nextId: Int, tables: Map[String, Commit.Table]) {
     def files: Seq[Commit.StoreFile] = tables.values.flatMap(_.files).toSeq
+    /** The path of every committed file id: a row whose id is not here is dead. */
+    lazy val paths: Map[Int, String] = descriptors.values.map(d => d.fileId -> d.sourcePath).toMap
   }
 
   /** The table an index of `indexType` keeps its rows in. */
@@ -135,10 +148,10 @@ object IndexBuilder {
       kv.get("type").filter(_ => kv.get("iver").contains(iv.toString)).map { t =>
         val (src, list) = lines.partition(_.startsWith("src\t"))
         Root(indexRoot, ver, t, src.map { line =>
-          val Array(_, len, mtime, cols, path, sum @ _*) = line.split('\t')
-          path -> DescriptorRow(path, len.toLong, mtime.toLong, cols.split(',').toSeq, t, iv,
-            sum.headOption.getOrElse("length+mtime"), sum.lift(1).getOrElse(""))
-        }.toMap, Commit.tablesOf(list))
+          val Array(_, id, len, mtime, cols, path, sum @ _*) = line.split('\t')
+          path -> DescriptorRow(path, id.toInt, len.toLong, mtime.toLong, cols.split(',').toSeq, t,
+            iv, sum.headOption.getOrElse("length+mtime"), sum.lift(1).getOrElse(""))
+        }.toMap, kv("next").toInt, Commit.tablesOf(list))
       }
     }
 
@@ -146,82 +159,77 @@ object IndexBuilder {
     readRoot(spark, indexRoot).getOrElse(throw new IllegalStateException(
       s"no committed index at $indexRoot (missing ${Commit.metaPath(indexRoot)}): build it first"))
 
-  /** COMMIT `r` ([[Commit.write]]): the index type and format version on
-    * the control line, one `src` line per descriptor (length, mtime,
-    * columns, path, and the checksum pair when one was recorded), then
-    * the file list. An index root keeps no older version. */
+  /** COMMIT `r` ([[Commit.write]]): the index type, format version and
+    * next file id on the control line, the file table as one `src` line
+    * per descriptor (id, length, mtime, columns, path, and the checksum
+    * pair when one was recorded), then the file list. An index root keeps
+    * no older version. */
   private def commit(spark: SparkSession, r: Root): Unit =
     Commit.write(spark, r.dir, r.version,
-      Seq(s"type=${r.indexType}", s"iver=${graft.model.FileIndexDescriptor.CurrentVersion}"),
+      Seq(s"type=${r.indexType}", s"iver=${graft.model.FileIndexDescriptor.CurrentVersion}",
+        s"next=${r.nextId}"),
       r.descriptors.values.toSeq.sortBy(_.sourcePath).map { d =>
-        (Seq("src", d.length, d.modificationTime, d.columns.mkString(","), d.sourcePath) ++
+        (Seq("src", d.fileId, d.length, d.modificationTime, d.columns.mkString(","),
+          d.sourcePath) ++
           (if (d.checksum.isEmpty) Nil else Seq(d.checksumAlgorithm, d.checksum))).mkString("\t")
       } ++ Commit.fileLines(r.tables), keepPrevious = false)
 
-  /** The committed rows of `r`'s table as one relation built from the
-    * meta's file list. */
-  private def rows(spark: SparkSession, r: Root): DataFrame = {
+  /** The committed rows of `r`'s table, dead ones included, as one
+    * relation built from the meta's file list; None when no file of it
+    * is committed. */
+  private def rows(spark: SparkSession, r: Root): Option[DataFrame] = {
     val t = tableOf(r.indexType)
-    r.tables.get(t).fold(spark.emptyDataFrame)(tb => Commit.relation(spark, r.dir,
+    r.tables.get(t).map(tb => Commit.relation(spark, r.dir,
       s"${Commit.version(r.version)}/$t", tb.schema, tb.files).drop("batch"))
   }
 
   /** A new, empty version `ver` of an index of `indexType` at `dir`. */
-  private def newVersion(spark: SparkSession, dir: String, ver: Long, indexType: String): Root = {
+  private def newVersion(spark: SparkSession, dir: String, ver: Long, indexType: String,
+      nextId: Int): Root = {
     Commit.startVersion(spark, dir, ver)
-    Root(dir, ver, indexType, Map.empty, Map.empty)
+    Root(dir, ver, indexType, Map.empty, nextId, Map.empty)
   }
 
   /** Write the next batch of `base` with `write`, given the batch's
     * directory (no commit names it, so a crashed batch's leftover is
-    * overwritten), and commit it with `descriptors`. Returns the commit. */
+    * overwritten), and commit it with the file table `descriptors` and
+    * the id counter `nextId`. Returns the commit. */
   private def commitBatch(spark: SparkSession, base: Root,
-      descriptors: Map[String, DescriptorRow])(write: String => Unit): Root = {
+      descriptors: Map[String, DescriptorRow], nextId: Int)(write: String => Unit): Root = {
     val (table, batch) = (tableOf(base.indexType), base.files.map(_.gen).maxOption.fold(0L)(_ + 1))
     val out = s"${Commit.version(base.version)}/$table/batch=$batch"
     write(s"${base.dir}/$out")
-    val done = base.copy(descriptors = descriptors,
+    val done = base.copy(descriptors = descriptors, nextId = nextId,
       tables = Commit.record(spark, base.dir, base.tables, table, batch, out)._1)
     commit(spark, done)
     done
   }
 
-  /** Canonical file identity used everywhere (postings `file` column,
-    * descriptors, pruning maps): the scheme-less URI path. Hadoop
-    * `Path.toUri` renders `file:/x` while Spark's `_metadata.file_path`
-    * renders `file:///x` — comparing raw strings silently empties every
-    * index lookup. */
+  /** Canonical file identity (the file table's paths, pruning maps) of
+    * a Hadoop `Path` or a caller's string: the scheme-less URI path, so
+    * `file:/x`, `file:///x` and `/x` are one file. */
   def canonicalPath(p: String): String = new Path(p).toUri.getPath
 
-  /** Column-level [[canonicalPath]] for `_metadata.file_path`, WITHOUT a
-    * scalar UDF on the hot path: one filesystem serves one index (engine
-    * invariant), so every rendered path shares a constant
-    * scheme/authority prefix — probe ONE row's rendering, verify it ends
-    * with the known canonical path, and strip the prefix with a
-    * codegen'd substr. If the rendering ever disagrees with the
-    * expectation (exotic URI shapes, encoded characters), fall back to
-    * the exact UDF rather than risk an empty-but-"fresh" index. */
-  private[graft] def canonicalizeExpr(
-      spark: SparkSession, probe: SourceFile): Column => Column = {
-    val rendered =
-      try spark.read.parquet(probe.path)
-        .select(col("_metadata.file_path")).limit(1)
-        .collect().headOption.map(_.getString(0))
-      catch { case _: Exception => None }
-    rendered match {
-      case Some(r) if r.endsWith(probe.path) &&
-          canonicalPath(r) == probe.path =>
-        val prefixLen = r.length - probe.path.length
-        c => c.substr(lit(prefixLen + 1), length(c))
-      case _ =>
-        val exact = udf((p: String) => canonicalPath(p))
-        c => exact(c)
-    }
+  /** [[canonicalPath]] of a path SPARK rendered (`_metadata.file_path`,
+    * `FileIndex.inputFiles`): a URI whose path is URL-encoded
+    * (`file:/a/sp%20ace/x`), which Hadoop's `Path` would read as literal
+    * characters. Decoded exactly. */
+  def renderedPath(rendered: String): String = new java.net.URI(rendered).getPath
+
+  /** THE mapping from a Spark-rendered path to its file id in `ids`
+    * (canonical path -> id), as a column function. A path `ids` does not
+    * hold fails the job: a build whose rows would name no committed file
+    * never commits. */
+  private[graft] def fileIdOf(ids: Map[String, Int]): Column => Column = {
+    val id = udf((rendered: String) => ids.getOrElse(renderedPath(rendered),
+      throw new IllegalStateException(s"$rendered is not a file of this index build")))
+    c => id(c)
   }
 
   /** Enumerate the parquet part-files of a dataset directory (S4:
     * recursive, skipping hidden `.`/`_` entries, as
-    * `util/HdfsUtils.java:78-102` does). */
+    * `util/HdfsUtils.java:78-102` does), in name order, so a build hands
+    * out file ids in an order that does not depend on the filesystem. */
   def listDataFiles(spark: SparkSession, dataDir: String): Seq[SourceFile] = {
     val path = new Path(dataDir)
     val fs = path.getFileSystem(Commit.conf(spark))
@@ -230,7 +238,7 @@ object IndexBuilder {
       if (st.isDirectory) {
         fs.listStatus(p)
           .filterNot(s => s.getPath.getName.startsWith(".") || s.getPath.getName.startsWith("_"))
-          .toIndexedSeq.flatMap(s => walk(s.getPath))
+          .sortBy(_.getPath.getName).toIndexedSeq.flatMap(s => walk(s.getPath))
       } else if (st.getPath.getName.endsWith(".parquet")) {
         Seq(SourceFile(canonicalPath(st.getPath.toString), st.getLen, st.getModificationTime))
       } else Nil
@@ -326,17 +334,6 @@ object IndexBuilder {
         .exists(d => columns.forall(d.columns.contains)))
   }
 
-  /** The postings pipeline for a set of source files: explode (column,
-    * value) pairs + `_metadata` block identity, aggregate with
-    * MergeIntervals, stamp each row with its file's generation (mtime at
-    * build time). The `gen` column makes postings append-only
-    * versionable: a rebuilt file's fresh rows carry the new mtime and
-    * query-side lookups ignore rows whose gen doesn't match the current
-    * descriptor — no in-place deletes needed (parquet is immutable).
-    *
-    * Values are stringified because index keys are strings, as in the
-    * reference (Expression.java:213-221); nulls are not indexed (EQ
-    * never matches null). */
   /** A logical index key: a name plus an `array<string>` of the values
     * each row contributes. Plain columns contribute one value; derived
     * keys (e.g. text tokens for the block-level text index, the
@@ -347,12 +344,21 @@ object IndexBuilder {
   def columnKeys(columns: Seq[String]): IndexKeys =
     columns.map(c => c -> array(col(c).cast("string")))
 
-  private def postingsFor(
+  /** The postings pipeline for a set of source files: explode (column,
+    * value) pairs + `_metadata` block identity, aggregate with
+    * MergeIntervals per Spark-rendered file path, then name each row's
+    * file by its id (`fileId`, [[fileIdOf]]) — once per postings row,
+    * not per data row.
+    *
+    * Values are stringified because index keys are strings, as in the
+    * reference (Expression.java:213-221); nulls are not indexed (EQ
+    * never matches null). */
+  private[graft] def postingsFor(
       spark: SparkSession,
       files: Seq[SourceFile],
+      fileId: Column => Column,
       keys: IndexKeys,
       capBytes: Long): DataFrame = {
-    import spark.implicits._
     val df = spark.read.parquet(files.map(_.path): _*)
     val emptyKv = array().cast("array<struct<column:string,value:string>>")
     val kvArrays = keys.map { case (name, arrCol) =>
@@ -360,16 +366,9 @@ object IndexBuilder {
     }
     val kvs = if (kvArrays.length == 1) kvArrays.head else concat(kvArrays: _*)
     val merge = udaf(MergeIntervals(capBytes))
-    val gens = spark.createDataset(files)
-      .select(col("path").as("file"), col("modificationTime").as("gen"))
-    // canonicalize with the probe-verified prefix-strip expression
-    // (codegen'd; falls back to the exact UDF when the rendering
-    // disagrees — a wrong canonicalization here would empty the gens
-    // join and write an empty-but-"fresh" index)
-    val canonical = canonicalizeExpr(spark, files.head)
     df.select(
         explode(kvs).as("kv"),
-        canonical(col("_metadata.file_path")).as("file"),
+        col("_metadata.file_path").as("file"),
         col("_metadata.file_block_start").as("start"),
         (col("_metadata.file_block_start") + col("_metadata.file_block_length")).as("end"))
       .select(col("kv.column").as("column"), col("kv.value").as("value"),
@@ -377,7 +376,7 @@ object IndexBuilder {
       .filter(col("value").isNotNull)
       .groupBy("column", "value", "file")
       .agg(merge(col("start"), col("end")).as("ranges"))
-      .join(broadcast(gens), "file")
+      .select(fileId(col("file")).as("file_id"), col("value"), col("ranges"), col("column"))
   }
 
   /** The postings table's writer: one directory per column, each sorted
@@ -385,18 +384,19 @@ object IndexBuilder {
   private def postingsWriter(postings: DataFrame): DataFrameWriter[Row] =
     postings
       .repartition(col("column"))
-      .sortWithinPartitions("column", "value", "file")
+      .sortWithinPartitions("column", "value", "file_id")
       .write.mode(SaveMode.Overwrite)
       .partitionBy("column")
 
   private def writePostings(spark: SparkSession, keys: IndexKeys, capBytes: Long)
-      (files: Seq[SourceFile], out: String): Unit =
-    postingsWriter(postingsFor(spark, files, keys, capBytes)).parquet(out)
+      (files: Seq[SourceFile], fileId: Column => Column, out: String): Unit =
+    postingsWriter(postingsFor(spark, files, fileId, keys, capBytes)).parquet(out)
 
   /** One descriptor row per file of an index of type `indexType`
-    * (postings or bloom), with the content checksum when asked. */
-  private[build] def descriptorRows(
-      spark: SparkSession, files: Seq[SourceFile], columns: Seq[String],
+    * (postings or bloom), with its id in `ids` and the content checksum
+    * when asked. */
+  private def descriptorRows(
+      spark: SparkSession, files: Seq[SourceFile], ids: Map[String, Int], columns: Seq[String],
       withChecksums: Boolean, indexType: String): Seq[DescriptorRow] =
     files.map { f =>
       val (alg, sum) =
@@ -407,7 +407,7 @@ object IndexBuilder {
           fsChecksum(fs, p).getOrElse(("md5", contentMd5(fs, p)))
         }
       DescriptorRow(
-        f.path, f.length, f.modificationTime, columns, indexType,
+        f.path, ids(f.path), f.length, f.modificationTime, columns, indexType,
         graft.model.FileIndexDescriptor.CurrentVersion,
         alg, sum)
     }
@@ -449,9 +449,10 @@ object IndexBuilder {
     * files, changed files, or files missing a requested column) and
     * commit their postings as a new batch — the maintenance path the
     * reference runs as skip-if-`hasPreviousIndex` re-submission
-    * (`AbstractBlockIndexingJob.java:249-277, 359-364`). Stale rows for
-    * rebuilt files stay in the postings table; the `gen` stamp makes
-    * them inert at query time. Returns the files (re)indexed. */
+    * (`AbstractBlockIndexingJob.java:249-277, 359-364`). Rows of rebuilt
+    * or deleted files stay in the postings table under an id the file
+    * table no longer holds, dead until [[compact]]. Returns the files
+    * (re)indexed. */
   def buildIncremental(
       spark: SparkSession,
       dataDir: String,
@@ -478,11 +479,17 @@ object IndexBuilder {
     * files of `dataDir` with no verified-fresh descriptor covering
     * `names` (new files, changed files, or files missing a requested
     * name; every file when `overwrite` or when the root holds no index
-    * of `indexType`) are handed to `write` with the directory to write
+    * of `indexType`) are handed to `write` with the mapping of their
+    * rendered paths to file ids ([[fileIdOf]]) and the directory to write
     * their rows to — batch 0 of a new version when `overwrite` or no such
     * index, else the next batch of the live version — and the written
-    * files and the descriptors are committed. Returns those files (Nil,
+    * files and the file table are committed. Returns those files (Nil,
     * and nothing written, when every file is fresh).
+    *
+    * The id rule: a file whose content is verified fresh keeps its id (its
+    * rows stay live); a new file, or one whose content changed, takes the
+    * next id of a counter that never goes back, so no row of earlier
+    * content is ever live again.
     *
     * One VERIFIED freshness decision per file is shared by the staleness
     * split and the column union: using the unverified fingerprint for
@@ -491,10 +498,10 @@ object IndexBuilder {
     * descriptor records the NEW checksum, permanently laundering the
     * staleness into wrong pruning. CONTENT-fresh files re-indexed only
     * for ADDED names keep the union of descriptor columns — their
-    * previous rows are still gen-valid (same mtime), and dropping the
+    * previous rows keep their live id (same content), and dropping the
     * names would silently turn those columns' queries into full scans.
     * Content-STALE files keep nothing: their old rows describe the
-    * previous bytes. */
+    * previous bytes, and their new id leaves those rows dead. */
   private[build] def refreshStale(
       spark: SparkSession,
       dataDir: String,
@@ -502,7 +509,8 @@ object IndexBuilder {
       root: String,
       withChecksums: Boolean,
       indexType: String,
-      overwrite: Boolean = false)(write: (Seq[SourceFile], String) => Unit): Seq[SourceFile] = {
+      overwrite: Boolean = false)
+      (write: (Seq[SourceFile], Column => Column, String) => Unit): Seq[SourceFile] = {
     val files = listDataFiles(spark, dataDir)
     val live = readRoot(spark, root)
     val prev = live.filter(r => !overwrite && r.indexType == indexType)
@@ -516,28 +524,38 @@ object IndexBuilder {
     val stalePaths = stale.map(_.path).toSet
     val kept = existing.values.toSeq
       .filter(d => currentPaths.contains(d.sourcePath) && !stalePaths.contains(d.sourcePath))
-    val refreshed = descriptorRows(spark, stale, Seq.empty, withChecksums, indexType)
+    val (fresh, changed) = stale.partition(f => verifiedFresh(f.path).isDefined)
+    val first = live.fold(0)(_.nextId)
+    val ids = fresh.map(f => f.path -> verifiedFresh(f.path).get.fileId).toMap ++
+      changed.zipWithIndex.map { case (f, i) => f.path -> (first + i) }
+    val refreshed = descriptorRows(spark, stale, ids, Seq.empty, withChecksums, indexType)
       .map { d =>
-        val prevCols = verifiedFresh.getOrElse(d.sourcePath, None)
-          .map(_.columns).getOrElse(Seq.empty)
+        val prevCols = verifiedFresh(d.sourcePath).map(_.columns).getOrElse(Seq.empty)
         d.copy(columns = (prevCols ++ names).distinct)
       }
-    val base = prev.getOrElse(newVersion(spark, root, live.fold(0L)(_.version + 1), indexType))
-    commitBatch(spark, base, (kept ++ refreshed).map(d => d.sourcePath -> d).toMap)(write(stale, _))
+    val base = prev.getOrElse(newVersion(spark, root, live.fold(0L)(_.version + 1), indexType, first))
+    commitBatch(spark, base, (kept ++ refreshed).map(d => d.sourcePath -> d).toMap,
+      first + changed.size)(write(stale, fileIdOf(ids), _))
     stale
   }
 
   /** The postings table as a first-class DataFrame (S5: the reference's
     * index-as-input verification path, `ScanUsingIndexJob.java:218-224`):
-    * the committed files, columns `file, value, ranges, gen, column`. */
-  def postings(spark: SparkSession, indexRoot: String): DataFrame =
-    rows(spark, rootOrThrow(spark, indexRoot))
+    * the live rows of the committed files, each row's file id resolved
+    * to its path through the file table; columns `file, column, value,
+    * ranges`, also when no postings file is committed. */
+  def postings(spark: SparkSession, indexRoot: String): DataFrame = {
+    import spark.implicits._
+    val r = rootOrThrow(spark, indexRoot)
+    rows(spark, r).fold(spark.emptyDataset[graft.model.IndexEntry].toDF())(
+      _.join(broadcast(r.paths.toSeq.toDF("file_id", "file")), "file_id"))
+      .select("file", "column", "value", "ranges")
+  }
 
-  /** One postings row: the byte ranges of `file` that hold `value` of
-    * `column`, stamped with the file's generation at build time, with
-    * the lookup leaves that `value` matches. */
+  /** One live postings row: the byte ranges of `file` that hold `value`
+    * of `column`, with the lookup leaves that `value` matches. */
   final case class Posting(
-      file: String, column: String, value: String, ranges: Seq[Block], gen: Long, leaves: Seq[Pred])
+      file: String, column: String, value: String, ranges: Seq[Block], leaves: Seq[Pred])
 
   /** The postings rows of index `idx` matching any of `leaves`
     * (EQ/BETWEEN), read on the driver with no Spark job — the
@@ -550,8 +568,9 @@ object IndexBuilder {
     * with a BETWEEN leaf is read unfiltered. Every row is re-checked
     * with the exact [[Pred.leafMatches]] before it counts toward
     * `limit`; reading stops once `limit` rows are held, so a caller that
-    * passes `cap + 1` sees an overflow as `cap + 1` rows. Generations
-    * are NOT filtered here.
+    * passes `cap + 1` sees an overflow as `cap + 1` rows. A row counts
+    * only when its file id is committed: that is its liveness, and the
+    * file table gives its path.
     *
     * Nothing is listed: a column with no committed file only holds
     * nulls and contributes no rows. None when a committed file is gone
@@ -578,10 +597,10 @@ object IndexBuilder {
           readFile(conf, new Path(idx.dir, f.path), filter, more = n < limit) { g =>
             val value = g.getString("value", 0)
             val matched = ls.filter(Pred.leafMatches(_, value))
-            if (matched.nonEmpty) {
+            for (file <- idx.paths.get(g.getInteger("file_id", 0)) if matched.nonEmpty) {
               val ranges = listOf(g, "ranges").map(_.getGroup(0, 0))
                 .map(b => Block(b.getLong("start", 0), b.getLong("end", 0)))
-              out += Posting(g.getString("file", 0), c, value, ranges, g.getLong("gen", 0), matched)
+              out += Posting(file, c, value, ranges, matched)
               n += 1
             }
           }
@@ -669,11 +688,11 @@ object IndexBuilder {
       footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
   }
 
-  /** Compact the append-only postings: drop rows for deleted files and
-    * rows whose gen no longer matches the live descriptor (superseded
-    * by a rebuild), and rewrite sorted. Incremental maintenance appends
-    * forever; without periodic compaction the dead rows cost lookup I/O
-    * even though the gen filter keeps them semantically inert. Safe to
+  /** Compact the append-only postings: drop the dead rows (their file
+    * id is no longer in the file table: the file was deleted or
+    * re-indexed with new content), and rewrite sorted. Incremental
+    * maintenance appends forever; without periodic compaction the dead
+    * rows cost lookup I/O even though no lookup serves them. Safe to
     * run any time — the surviving rows are exactly the ones query-side
     * lookups honor. Returns (rowsBefore, rowsAfter), from the committed
     * files' footers.
@@ -685,21 +704,24 @@ object IndexBuilder {
     compactRoot(spark, indexRoot)(postingsWriter)
 
   /** The compaction shared by the postings and bloom roots: `writer`
-    * lays out the rows of `indexRoot` whose (file, gen) is a live
-    * descriptor's as batch 0 of a new version, which is committed.
-    * Returns the committed rows before and after. */
+    * lays out the rows of `indexRoot` whose file id is committed as
+    * batch 0 of a new version, which is committed with the same file
+    * table. Returns the committed rows before and after: (0, 0), and no
+    * commit, when no file is committed. */
   private[build] def compactRoot(spark: SparkSession, indexRoot: String)
       (writer: DataFrame => DataFrameWriter[Row]): (Long, Long) = {
     import spark.implicits._
     val idx = rootOrThrow(spark, indexRoot)
-    val live = idx.descriptors.values.map(d => (d.sourcePath, d.modificationTime)).toSeq
-      .toDF("file", "gen")
-    val before = footerRows(spark, idx)
-    val done = commitBatch(spark, newVersion(spark, indexRoot, idx.version + 1, idx.indexType),
-        idx.descriptors) { out =>
-      writer(rows(spark, idx).join(broadcast(live), Seq("file", "gen"), "left_semi")).parquet(out)
+    rows(spark, idx).fold((0L, 0L)) { all =>
+      val live = idx.paths.keys.toSeq.toDF("file_id")
+      val before = footerRows(spark, idx)
+      val done = commitBatch(spark,
+          newVersion(spark, indexRoot, idx.version + 1, idx.indexType, idx.nextId),
+          idx.descriptors, idx.nextId) { out =>
+        writer(all.join(broadcast(live), "file_id", "left_semi")).parquet(out)
+      }
+      (before, footerRows(spark, done))
     }
-    (before, footerRows(spark, done))
   }
 
   /** The rows of `r`'s committed files, from their parquet footers. */
@@ -714,9 +736,7 @@ object IndexBuilder {
   def postingsTyped(spark: SparkSession, indexRoot: String):
       org.apache.spark.sql.Dataset[graft.model.IndexEntry] = {
     import spark.implicits._
-    postings(spark, indexRoot)
-      .select(col("file"), col("column"), col("value"), col("ranges"))
-      .as[graft.model.IndexEntry]
+    postings(spark, indexRoot).as[graft.model.IndexEntry]
   }
 
   /** A descriptor row as the full sidecar model (thrift

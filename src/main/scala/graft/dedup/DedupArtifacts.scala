@@ -496,11 +496,6 @@ object DedupArtifacts {
   def semBanded(s: SparkSession, sfDir: String): DataFrame =
     semTable(s, sfDir, "sem_banded")
 
-  /** The production-threshold ([[SemProdThreshold]]) pair set over the
-    * planted corpus (id_i, id_j), built through the banded index. */
-  def semPairsProd(s: SparkSession, sfDir: String): DataFrame =
-    semTable(s, sfDir, "sem_pairs_prod")
-
   /** The base subset's internal production-threshold pair set — the
     * persisted state q161's banded incremental merge starts from. */
   def baseSemPairsProd(s: SparkSession, sfDir: String): DataFrame =

@@ -70,5 +70,7 @@ final case class FileIndexDescriptor(
     indexedFields: Seq[IndexedField])
 
 object FileIndexDescriptor {
-  val CurrentVersion = 1
+  /** 2: rows name their file by the id of the meta's file table. A root
+    * of another version reads as no index and is rebuilt. */
+  val CurrentVersion = 2
 }

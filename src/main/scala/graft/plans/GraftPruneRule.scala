@@ -41,7 +41,7 @@ final class GraftPrunedFileIndex(
       .filter(_.files.nonEmpty)
 
   override def inputFiles: Array[String] =
-    underlying.inputFiles.filter(p => !excluded.contains(IndexBuilder.canonicalPath(p)))
+    underlying.inputFiles.filter(p => !excluded.contains(IndexBuilder.renderedPath(p)))
 
   override def refresh(): Unit = underlying.refresh()
 

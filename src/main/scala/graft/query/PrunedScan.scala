@@ -167,16 +167,11 @@ object PrunedScanner extends Logging {
     val postingsLeaves = leaves.filter(_.columns.subsetOf(postingsCols))
     val bloomLeaves = leaves.collect { case e @ Eq(c, _) if bloomCols(c) => e }
     if (postingsLeaves.isEmpty && bloomLeaves.isEmpty) return None
-    // gen must match the live descriptor: rebuilt files leave stale rows
-    // behind (append-only index); a mismatched gen describes a previous
-    // incarnation of the file
-    def live(file: String, gen: Long) = descriptors.get(file).exists(_.modificationTime == gen)
     val postings: Option[Map[(String, Pred), Seq[Block]]] =
       if (postingsLeaves.isEmpty) Some(Map.empty)
       else idx.flatMap(IndexBuilder.lookupPostings(spark, _, postingsLeaves, maxPostings + 1)) match {
         case Some(rows) if rows.length <= maxPostings =>
-          Some(rows.filter(p => live(p.file, p.gen))
-            .flatMap(p => p.leaves.map(l => (p.file, l) -> p.ranges))
+          Some(rows.flatMap(p => p.leaves.map(l => (p.file, l) -> p.ranges))
             .groupBy(_._1)
             .view.mapValues(rs => IntervalOps.normalize(rs.flatMap(_._2)))
             .toMap)
@@ -188,8 +183,7 @@ object PrunedScanner extends Logging {
       }
     val sketches: Option[Map[(String, String), BloomFilter]] =
       if (bloomLeaves.isEmpty) Some(Map.empty)
-      else try idx.map(BloomIndex.readSketches(spark, _, bloomLeaves.map(_.column).toSet,
-          descriptors.view.mapValues(_.modificationTime).toMap))
+      else try idx.map(BloomIndex.readSketches(spark, _, bloomLeaves.map(_.column).toSet))
       catch { case _: java.io.FileNotFoundException =>
         logWarning(s"PrunedScan: blooms of $root lost a committed file — no bloom evidence")
         None
@@ -400,18 +394,14 @@ object PrunedScanner extends Logging {
     val selFiles = sets.flatMap(_._1).distinct
     val valuesDf = spark.createDataset(values).toDF("value")
     val schema = IndexBuilder.dataSchema(spark, dataDir)
-    val canon = selFiles.headOption
-      .map(p => IndexBuilder.canonicalizeExpr(spark,
-        IndexBuilder.SourceFile(p, 0L, 0L)))
-      .getOrElse { val u = udf((p: String) => IndexBuilder.canonicalPath(p))
-        (c: org.apache.spark.sql.Column) => u(c) }
+    val path = udf(IndexBuilder.renderedPath _)
     def read(paths: Seq[String]): DataFrame =
       spark.read.schema(schema).parquet(paths: _*)
     val parts = Seq(
       if (selFiles.isEmpty) None
       else Some(read(selFiles)
         .select(col(column).cast("string").as("value"),
-          canon(col("_metadata.file_path")).as("file"))
+          path(col("_metadata.file_path")).as("file"))
         .join(broadcast(selMembership.toDF("value", "file")), Seq("value", "file"))
         .select("value")),
       if (fallbackFiles.isEmpty) None

@@ -13,25 +13,24 @@ object RangeScan {
 
   /** Rows of the blocks a specific index posting covers — the
     * TestIndexedReader flow: look the value up, read only its ranges.
-    * Honors the LIVE generation only (rows whose gen matches the file's
-    * descriptor), same as every other query path — an incrementally
-    * rebuilt file's stale postings are ignored, not unioned in. */
+    * Honors the live rows only (their file id is committed), same as
+    * every other query path — an incrementally rebuilt file's stale
+    * postings are ignored, not unioned in. */
   def readPosting(
       spark: SparkSession, indexRoot: String,
       file: String, column: String, value: String): DataFrame = {
     import graft.build.IndexBuilder
-    // Postings store canonical (scheme-less) paths; a scheme-qualified
-    // caller path (file:///...) must be canonicalized for BOTH the
-    // descriptor lookup and the postings filter or it matches zero rows.
+    // the file table holds canonical (scheme-less) paths; a
+    // scheme-qualified caller path (file:///...) must be canonicalized
+    // or it matches zero rows
     val canonicalFile = IndexBuilder.canonicalPath(file)
     val idx = IndexBuilder.readRoot(spark, indexRoot).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed index at $indexRoot"))
-    val liveGen = idx.descriptors.get(canonicalFile).map(_.modificationTime)
     val postings = IndexBuilder.lookupPostings(spark, idx, Seq(Eq(column, value)), Int.MaxValue)
       .getOrElse(throw new java.io.FileNotFoundException(
         s"a committed postings file of $indexRoot is gone"))
     val ranges = postings
-      .filter(p => p.file == canonicalFile && liveGen.contains(p.gen))
+      .filter(_.file == canonicalFile)
       .flatMap(_.ranges)
     if (ranges.isEmpty) return spark.read.parquet(file).limit(0)
     val df = spark.read.parquet(file)

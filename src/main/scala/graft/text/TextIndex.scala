@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Full-text indexing and retrieval as DataFrame programs — the Spark
@@ -57,12 +57,6 @@ object TextIndex {
       buildPostings(docs, idCol, column).withColumn("field", lit(fieldName))
     }.reduce(_ unionByName _)
   }
-
-  /** Persist postings sorted by term (parquet min/max-prunable lookups). */
-  def writePostings(postings: DataFrame, path: String): Unit =
-    postings.repartition(col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(path)
 
   /** Disjunctive (Lucene default-OR) match: postings rows for any query
     * term. */

@@ -560,16 +560,16 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val idx = s"$work/ivf_fuzz"
     def rv() = Array.fill(4)(rnd.nextFloat() * 2 - 1)
     var nextFresh = 100L
-    val liveGen = scala.collection.mutable.Map[Long, Long]()
+    val latestGen = scala.collection.mutable.Map[Long, Long]()
     val base = (0L until 20L).map(i => (i, rv())).toDF("vec_id", "embedding")
     AnnIndex.buildIvf(base, idx, nlist = 4, lloydIters = 0)
-    (0L until 20L).foreach(liveGen(_) = 0L)
+    (0L until 20L).foreach(latestGen(_) = 0L)
     for (step <- 1 to 6) {
       // three batch shapes, all contract-legal: declared-new ids
       // (newIds = true), pure upserts, and MIXED new+existing under an
       // undeclared append (the conservative default)
       val fresh = rnd.nextInt(3)
-      val existing = () => liveGen.keys.toSeq(rnd.nextInt(liveGen.size))
+      val existing = () => latestGen.keys.toSeq(rnd.nextInt(latestGen.size))
       val (ids, newIds) = fresh match {
         case 0 => val s = (nextFresh until nextFresh + 4).toSeq; nextFresh += 4
           (s, true)
@@ -579,10 +579,10 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       }
       AnnIndex.appendIvf(
         ids.map(i => (i, rv())).toDF("vec_id", "embedding"), idx, newIds = newIds)
-      ids.foreach(liveGen(_) = step.toLong)
+      ids.foreach(latestGen(_) = step.toLong)
       val view = AnnIndex.ivfAssignments(spark, idx).collect()
         .map(r => r.getLong(0) -> r.getLong(2)).toMap
-      assert(view == liveGen.toMap,
+      assert(view == latestGen.toMap,
         s"step $step (newIds=$newIds): live gens diverged from the history")
       val full = rows3(AnnIndex.ivfAssignments(spark, idx))
       assert(full == rows3(AnnIndex.ivfAssignments(spark, idx, resolveAll = true)),
@@ -598,7 +598,7 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       // out of the live counters, so the signal equals the true live
       // append-row fraction at every step — no ≤2x band
       val st = GenStore.staleness(spark, idx)
-      val expSt = liveGen.count(_._2 > 0L).toDouble / liveGen.size
+      val expSt = latestGen.count(_._2 > 0L).toDouble / latestGen.size
       assert(math.abs(st - expSt) < 1e-9,
         s"step $step: staleness $st != exact live append fraction $expSt")
     }
@@ -611,8 +611,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     def rv() = Array.fill(4)(rnd.nextFloat() * 2 - 1)
     var nextFresh = 100L
     val content = scala.collection.mutable.Map[Long, Array[Float]]()
-    val liveGen = scala.collection.mutable.Map[Long, Long]()
-    (0L until 20L).foreach { i => content(i) = rv(); liveGen(i) = 0L }
+    val latestGen = scala.collection.mutable.Map[Long, Long]()
+    (0L until 20L).foreach { i => content(i) = rv(); latestGen(i) = 0L }
     AnnIndex.buildBanded(content.toSeq.toDF("vec_id", "embedding"), idx,
       nPlanes = 8, bands = 4, seed = 1L)
     for (step <- 1 to 6) {
@@ -644,9 +644,9 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       // exact staleness on the multi-row structure too: every id
       // carries `bands` rows per generation, so the live append-row
       // fraction is the live append-ID fraction
-      delta.foreach { case (i, _) => liveGen(i) = step.toLong }
+      delta.foreach { case (i, _) => latestGen(i) = step.toLong }
       val st = GenStore.staleness(spark, idx)
-      val expSt = liveGen.count(_._2 > 0L).toDouble / liveGen.size
+      val expSt = latestGen.count(_._2 > 0L).toDouble / latestGen.size
       assert(math.abs(st - expSt) < 1e-9,
         s"step $step: banded staleness $st != exact live append fraction $expSt")
     }

@@ -105,21 +105,37 @@ class ArtifactSpec extends AnyFunSuite with SparkSpec {
   test("fingerprint and ensure serve a corpus under a filesystem registered only in the session conf") {
     val local = corpus(s"$work/f/sfX", "sf0.001", "documents")
     val f = s"artfs://$local"
-    try withConf("fs.artfs.impl" -> classOf[ArtifactSessionFs].getName,
+    withConf("fs.artfs.impl" -> classOf[ArtifactSessionFs].getName,
         "fs.artfs.impl.disable.cache" -> "true") {
-      val fp = Artifact.fingerprint(spark, s"$f/documents.parquet")
-      assert(fp == Artifact.fingerprint(spark, s"$local/documents.parquet"))
-      var builds = 0
-      def copy(): String = Artifact.ensure(spark, f, "docs_copy", fp) { d =>
-        builds += 1
-        Tables.documents(spark, f).write.parquet(d)
+      try {
+        val fp = Artifact.fingerprint(spark, s"$f/documents.parquet")
+        assert(fp == Artifact.fingerprint(spark, s"$local/documents.parquet"))
+        var builds = 0
+        def copy(): String = Artifact.ensure(spark, f, "docs_copy", fp) { d =>
+          builds += 1
+          Tables.documents(spark, f).write.parquet(d)
+        }
+        val dir = copy()
+        assert(copy() == dir && builds == 1, "an unchanged fingerprint must reuse the copy")
+        assert(rows(spark.read.parquet(dir)) == rows(Tables.documents(spark, local)))
       }
-      val dir = copy()
-      assert(copy() == dir && builds == 1, "an unchanged fingerprint must reuse the copy")
-      assert(rows(spark.read.parquet(dir)) == rows(Tables.documents(spark, local)))
+      // keyed by the artfs path, so outside every temporary directory
+      finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(Artifact.root(f)))
     }
-    // keyed by the artfs path, so outside every temporary directory
-    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(Artifact.root(f)))
+  }
+
+  test("a corpus key is a function of the qualified path, never of the working directory") {
+    val dir = s"$work/g/sfX"
+    assert(Artifact.corpusKey(s"file://$dir") == Artifact.corpusKey(dir))
+    assert(Artifact.corpusKey(s"file://$dir").startsWith("sfX_"))
+    withConf("fs.artfs.impl" -> classOf[ArtifactSessionFs].getName,
+        "fs.artfs.impl.disable.cache" -> "true") {
+      // the working directory joined with the scheme-qualified spelling
+      // is another (local) corpus, not this one
+      val cwd = System.getProperty("user.dir")
+      assert(Artifact.corpusKey(s"artfs://$dir") != Artifact.corpusKey(s"$cwd/artfs:$dir"))
+      assert(Artifact.corpusKey(s"artfs://$dir") != Artifact.corpusKey(dir))
+    }
   }
 }
 

@@ -247,20 +247,28 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("build-scan path canonicalization is a codegen expression, not a scalar UDF") {
+  test("the build maps file paths to ids once per postings row, after the aggregation") {
     import graft.build.IndexBuilder
-    val work = s"${tempDir("test_canon")}/data"
-    Tables.events(spark, sfDir).limit(100).write.parquet(work)
-    val probe = IndexBuilder.listDataFiles(spark, work).head
-    val canon = IndexBuilder.canonicalizeExpr(spark, probe)
-    val df = spark.read.parquet(work)
-      .select(canon(col("_metadata.file_path")).as("file")).distinct()
-    // exact: expression agrees with the driver-side function on real paths
-    val got = df.collect().map(_.getString(0)).toSet
-    assert(got == IndexBuilder.listDataFiles(spark, work).map(_.path).toSet)
-    // and no ScalaUDF anywhere in the plan (probe verified the prefix)
-    val p = plan(df)
-    assert(!p.contains("UDF"), s"expected UDF-free canonicalization:\n$p")
+    val work = s"${tempDir("test_file_ids")}/data"
+    Tables.events(spark, sfDir).limit(100).repartition(3).write.parquet(work)
+    val files = IndexBuilder.listDataFiles(spark, work)
+    val ids = files.map(_.path).zipWithIndex.toMap
+    val df = IndexBuilder.postingsFor(spark, files, IndexBuilder.fileIdOf(ids),
+      IndexBuilder.columnKeys(Seq("event_type")), IndexBuilder.DefaultCapBytes)
+    // exact: every file's rows carry its id
+    assert(df.select("file_id").distinct().collect().map(_.getInt(0)).toSet == ids.values.toSet)
+    // the mapping UDF runs in or above the final aggregation: one call
+    // per postings row, never one per data row
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val physical = df.queryExecution.sparkPlan
+    val mapping = physical.collect {
+      case n if n.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) => n
+    }
+    assert(mapping.nonEmpty && mapping.forall(_.collectFirst {
+      case a: BaseAggregateExec if a.aggregateExpressions.forall(_.mode == Final) => a
+    }.isDefined), s"expected the id UDF at or above the final aggregation:\n$physical")
   }
 
   test("bucketed join reads both fact sides without an exchange on the key") {

@@ -92,11 +92,11 @@ class StreamingIndexSpec extends AnyFunSuite with SparkSpec {
     // incremental rebuild picks up the changed file (appends new gen)
     assert(IndexBuilder.buildIncremental(spark, dir2, Seq("kind"), idx2).nonEmpty)
 
-    // postings now hold BOTH gens for the file…
-    val postingRows = IndexBuilder.postings(spark, idx2)
-      .filter(col("value") === "old2").count()
-    assert(postingRows == 1, "stale gen row should still exist in the table")
-    // …but queries only honor the live gen: old2 is gone, newkind found
+    // the old content's row is dead: its file id left the file table,
+    // so the live postings no longer hold it (compaction below drops it
+    // from the committed files)
+    assert(IndexBuilder.postings(spark, idx2).filter(col("value") === "old2").count() == 0)
+    // queries only honor live rows: old2 is gone, newkind found
     val (gone, _) = PrunedScanner.scanWithReport(spark, dir2, Eq("kind", "old2"), idx2)
     assert(gone.count() == 0)
     val (found, report) = PrunedScanner.scanWithReport(spark, dir2, Eq("kind", "newkind"), idx2)
@@ -108,7 +108,7 @@ class StreamingIndexSpec extends AnyFunSuite with SparkSpec {
     assert(rowsAfter < rowsBefore, s"expected dead rows dropped: $rowsBefore -> $rowsAfter")
     assert(IndexBuilder.postings(spark, idx2)
       .filter(col("value") === "old2").count() == 0,
-      "stale-gen row must be gone after compaction")
+      "the dead row must stay out of the live postings after compaction")
     val (found2, report2) = PrunedScanner.scanWithReport(spark, dir2, Eq("kind", "newkind"), idx2)
     assert(found2.select("id").as[Long].collect().toSet == Set(9L))
     assert(report2.fallbackFiles == 0)

@@ -98,13 +98,13 @@ class DriverPruneSpec extends AnyFunSuite with SparkSpec {
       Between("user_id", Some(BigDecimal(5)), Some(BigDecimal(7)), loInc = true, hiInc = false),
       Eq("event_type", "absent"))
     val got = IndexBuilder.lookupPostings(spark, committed(indexRoot), leaves, Int.MaxValue).get
-      .map(p => (p.file, p.column, p.value, p.ranges, p.gen)).toSet
+      .map(p => (p.file, p.column, p.value, p.ranges)).toSet
     import spark.implicits._
     val want = IndexBuilder.postings(spark, indexRoot)
-      .select("file", "column", "value", "ranges", "gen")
-      .as[(String, String, String, Seq[graft.intervals.Block], Long)]
+      .select("file", "column", "value", "ranges")
+      .as[(String, String, String, Seq[graft.intervals.Block])]
       .collect()
-      .filter { case (_, c, v, _, _) => leaves.exists(l => l.columns == Set(c) && Pred.leafMatches(l, v)) }
+      .filter { case (_, c, v, _) => leaves.exists(l => l.columns == Set(c) && Pred.leafMatches(l, v)) }
       .toSet
     assert(want.nonEmpty && got == want)
     // the limit stops the read
